@@ -1,16 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // Untimed warmup: open every table once (footer reads, codec + codegen
     // JIT) so the first timed query doesn't absorb session start-up costs.
     Seq("lineitem", "orders", "customer", "nation", "documents", "embeddings")
@@ -30,32 +22,15 @@ object Bench {
     // Optional query-name args restrict the run (same contract as Verify):
     // `runMain graft.Bench q_heavy_hitters` times just that query. The
     // driver invokes with no args — full sweep, contract unchanged.
-    val only = args.toSet
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = Harness.select(args.toSeq).map { name =>
       def timed(): (Double, Option[String]) = {
         val t0 = System.nanoTime()
         // noop sink forces full evaluation of every column (count() would let
-        // Catalyst prune the query down to a row count). The withMaterialized
-        // bracket releases the localCheckpoint blocks a dedup/LSH/ANN query
-        // creates as soon as its run finishes — without it 60+ queries'
-        // checkpoints pile up in the block manager and the whole tail of the
-        // bench pays their memory pressure (measured: ~3x inflation on the
-        // heavy queries by the end of a full pass).
+        // Catalyst prune the query down to a row count)
         val err =
           try {
-            graft.pipeline.Dedup.withMaterialized {
-              // AdaptiveGate (engine heuristic, shared with Verify): derive
-              // the final action's AQE/partition settings from the plan's
-              // input size instead of running every query at the session
-              // constant — see graft.core.AdaptiveGate.
-              val df = fn(spark, sfDir)
-              graft.core.AdaptiveGate.withGatedExecution(df) {
-                df.write.format("noop").mode("overwrite").save()
-              }
-            }
+            Harness.runQuery(spark, name, sfDir)(
+              _.write.format("noop").mode("overwrite").save())
             None
           }
           catch { case e: Throwable =>
@@ -115,8 +90,8 @@ object Bench {
     val errJson = if (errs.isEmpty) "" else errs.mkString(""","errors":{""", ",", "}")
     // the record documents its own measurement protocol (r11 — so a
     // round-over-round comparison always knows what it is reading); the
-    // committed round record is the per-query min over TWO full sweeps
-    // (tools/bench_min.py), which this field then reflects
+    // committed round record is the per-query min over N full sweeps
+    // (tools/bench_record.py), which this field then reflects
     val protocol = "one-JVM full sweep, min of 2-3 runs per query (3rd for " +
       "sub-500ms or >1.5x-variance rows), inter-query System.gc"
     // Full record (raw doubles + per-run arrays + protocol) — persisted file
@@ -141,7 +116,7 @@ object Bench {
       val target = sys.env.get("SPARK_GRAFT_BENCH_OUT")
         .map(java.nio.file.Paths.get(_))
         .getOrElse {
-          val kind = if (only.isEmpty) "sweep" else "partial"
+          val kind = if (args.isEmpty) "sweep" else "partial"
           // millis + pid: two sweeps launched in the same second must not
           // overwrite each other (the clobber class this file keeps hitting)
           java.nio.file.Paths.get("bench_out",

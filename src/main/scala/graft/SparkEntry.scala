@@ -1,11 +1,8 @@
 package graft
 
-import graft.core.Fuser.TimestampCol
 import graft.ops.Resampler
 import graft.ops.Resampler.ResampleOptions
-import graft.sources.FrameSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -20,466 +17,257 @@ object SparkEntry {
     Resampler.resample(Queries.fuseMerge(spark, "/root/testdata/sf0.001"), "1h",
       opts = ResampleOptions(ffillKeys = Seq("value"), tieCols = Seq("event_id")))
 
-  /** One entry per implemented operator from SURVEY.md §2 (+ pipeline ops). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // fusion / reference surface
-    "q_fuse_merge"       -> (Queries.fuseMerge _),
-    "q_fuse_rename"      -> (Queries.fuseRename _),
-    "q_time_filter"      -> (Queries.timeFilter _),
-    "q_ts_convert"       -> (Queries.tsConvert _),
-    "q_minmax_ts"        -> (Queries.minmaxTs _),
-    "q_resample_1h"      -> ((s: SparkSession, d: String) => Queries.resample(s, d, "1h")),
-    "q_resample_1d"      -> ((s: SparkSession, d: String) => Queries.resample(s, d, "1d")),
-    "q_resample_keyed"   -> (Queries.resampleKeyed _),
-    "q_resample_window"  -> (Queries.resampleWindow _),
-    "q_ffill"            -> (Queries.ffill _),
-    // dedup
-    "q_dedup_exact"      -> (Queries.dedupExact _),
-    "q_dedup_normalized" -> (Queries.dedupNormalized _),
-    "q_dedup_jaccard"    -> (Queries.dedupJaccard _),
-    "q_dup_spans"        -> (Queries.dupSpans _),
-    "q_dup_matrix"       -> (Queries.dupMatrix _),
-    "q_dedup_minhash"    -> (Queries.dedupMinhash _),
-    "q_simhash"          -> (Queries.simhash _),
-    "q_simhash_neardup"  -> (Queries.simhashNearDup _),
-    "q_dedup_clusters"   -> (Queries.dedupClusters _),
-    "q_dup_sizes"        -> (Queries.dupSizes _),
-    "q_dedup_keep"       -> (Queries.dedupKeep _),
-    "q_curate"           -> (Queries.curate _),
-    // text analysis
-    "q_text_quality"     -> (Queries.textQuality _),
-    "q_lang_id"          -> (Queries.langId _),
-    "q_token_stats"      -> (Queries.tokenStats _),
-    "q_token_bpe"        -> (Queries.tokenBpe _),
-    "q_bpe_merges"       -> (Queries.bpeMerges _),
-    "q_rank_grid_table"  -> (Queries.quantileGridTable _),
-    "q_bpe_encode"       -> (Queries.bpeEncode _),
-    "q_bpe_bytes_merges" -> (Queries.bpeBytesMerges _),
-    "q_bpe_bytes_encode" -> (Queries.bpeBytesEncode _),
-    "q_bm25_model"       -> (Queries.bm25Model _),
-    "q_bm25_topk"        -> (Queries.bm25TopK _),
-    "q_hybrid_rrf"       -> (Queries.hybridRrf _),
-    "q_bm25_index"       -> (Queries.bm25IndexSearch _),
-    "q_bm25_multi"       -> (Queries.bm25Multi _),
-    "q_bm25_incr"        -> (Queries.bm25Incr _),
-    "q_phrase_search"    -> (Queries.phraseSearch _),
-    "q_collocations"     -> (Queries.collocations _),
-    "q_embed_prefix_recall" -> (Queries.embedPrefixRecall _),
-    "q_proximity_incr"   -> (Queries.proximityIncr _),
-    "q_proximity_indexed" -> (Queries.proximityIndexed _),
-    "q_proximity_search" -> (Queries.proximitySearch _),
-    "q_pagerank"         -> (Queries.pagerank _),
-    "q_pagerank_incr"    -> (Queries.pagerankIncr _),
-    "q_graph_components" -> (Queries.graphComponents _),
-    "q_components_incr"  -> (Queries.graphComponentsIncr _),
-    "q_ppr"              -> (Queries.ppr _),
-    "q_token_entropy"    -> (Queries.tokenEntropy _),
-    "q_burstiness"       -> (Queries.burstiness _),
-    "q_event_paths"      -> (Queries.eventPaths _),
-    "q_cluster_sample"   -> (Queries.clusterSample _),
-    "q_triangles"        -> (Queries.triangleCounts _),
-    "q_degree_dist"      -> (Queries.degreeDist _),
-    "q_link_predict"     -> (Queries.linkPredict _),
-    "q_random_walks"     -> (Queries.randomWalks _),
-    "q_walk_pairs"       -> (Queries.walkPairs _),
-    "q_kcore"            -> (Queries.kCore _),
-    "q_hard_negatives"   -> (Queries.hardNegatives _),
-    "q_knn_graph"        -> (Queries.knnGraph _),
-    "q_bfs_hops"         -> (Queries.bfsHops _),
-    "q_k_anonymity"      -> (Queries.kAnonymity _),
-    "q_k_anon_ladder"    -> (Queries.kAnonLadder _),
-    "q_k_anon_incr"      -> (Queries.kAnonIncr _),
-    "q_l_diversity"      -> (Queries.lDiversity _),
-    "q_generalize"       -> (Queries.generalize _),
-    "q_generalize_chosen" -> (Queries.generalizeChosen _),
-    "q_pii_risk"         -> (Queries.piiRisk _),
-    "q_line_dedup"       -> (Queries.lineDedup _),
-    "q_line_dedup_incr"  -> (Queries.lineDedupIncr _),
-    "q_mmr_rerank"       -> (Queries.mmrRerank _),
-    "q_quality_reg"      -> (Queries.qualityReg _),
-    "q_split_safe"       -> (Queries.splitSafe _),
-    "q_bpe_compression"  -> (Queries.bpeCompression _),
-    "q_quality_reg_score" -> (Queries.qualityRegScore _),
-    "q_fingerprint"      -> (Queries.fingerprint _),
-    "q_fingerprint_rolling" -> (Queries.fingerprintRolling _),
-    "q_scrub"            -> (Queries.scrub _),
-    "q_html_strip"       -> (Queries.htmlStrip _),
-    "q_normalize"        -> (Queries.normalize _),
-    "q_ngram_freq"       -> (Queries.ngramFreq _),
-    "q_vocab_coverage"   -> (Queries.vocabCoverage _),
-    "q_sample_stratified" -> (Queries.sampleStratified _),
-    "q_split"            -> (Queries.splitAssign _),
-    "q_split_exact"      -> (Queries.splitExact _),
-    "q_pack_budget"      -> (Queries.packBudget _),
-    "q_chunk"            -> (Queries.chunk _),
-    "q_contamination"    -> (Queries.contamination _),
-    "q_repetition"       -> (Queries.repetition _),
-    "q_weighted_sample"  -> (Queries.weightedSample _),
-    "q_mix_sources"      -> (Queries.mixSources _),
-    "q_dsir_weights"     -> (Queries.dsirWeights _),
-    "q_bigram_lm"        -> (Queries.bigramLm _),
-    "q_mix_temperature"  -> (Queries.mixTemperature _),
-    // similarity
-    "q_ann_topk"         -> (Queries.annTopK _),
-    "q_ann_threshold"    -> (Queries.annThreshold _),
-    "q_ann_lsh"          -> (Queries.annLsh _),
-    "q_ivf_centroids"    -> (Queries.ivfCentroids _),
-    "q_ivf_cells"        -> (Queries.ivfCells _),
-    "q_ivf_purity"       -> (Queries.ivfPurity _),
-    "q_semdedup_pairs"   -> (Queries.semdedupPairs _),
-    "q_semdedup_keep"    -> (Queries.semdedupKeep _),
-    "q_semdedup_incr"    -> (Queries.semdedupIncr _),
-    "q_ann_ivf"          -> (Queries.annIvf _),
-    "q_ann_ivf_probe"    -> (Queries.annIvfProbe _),
-    "q_pq_codebooks"     -> (Queries.pqCodebooks _),
-    "q_pq_codes"         -> (Queries.pqCodes _),
-    "q_pq_encode_incr"   -> (Queries.pqEncodeIncr _),
-    "q_ann_pq"           -> (Queries.annPq _),
-    "q_ann_ivfpq"        -> (Queries.annIvfPq _),
-    "q_pqr_codebooks"    -> (Queries.pqrCodebooks _),
-    "q_pqr_codes"        -> (Queries.pqrCodes _),
-    "q_ann_ivfpq_r"      -> (Queries.annIvfPqResidual _),
-    "q_pqr_prod_codebooks" -> (Queries.pqrProdCodebooks _),
-    "q_pqr_prod_codes"   -> (Queries.pqrProdCodes _),
-    "q_ann_ivfpq_prod"   -> (Queries.annIvfPqProd _),
-    // multimodal
-    "q_multimodal_meta"  -> (Queries.multimodalMeta _),
-    "q_multimodal_feats" -> (Queries.multimodalFeatures _),
-    "q_audio_decode"     -> (Queries.audioDecode _),
-    // relational / temporal joins (beyond-reference capabilities)
-    "q_asof_join"        -> (Queries.asofJoin _),
-    "q_asof_forward"     -> (Queries.asofForward _),
-    "q_asof_nearest"     -> (Queries.asofNearest _),
-    "q_salted_join"      -> (Queries.saltedJoinQ _),
-    "q_range_join"       -> (Queries.rangeJoin _),
-    "q_sessionize"       -> (Queries.sessionize _),
-    "q_rolling_mean"     -> (Queries.rollingMean _),
-    "q_rolling_corr"     -> (Queries.rollingCorr _),
-    "q_rolling_slope"    -> (Queries.rollingSlope _),
-    "q_sliding_agg"      -> (Queries.slidingAgg _),
-    "q_interp_grid"      -> (Queries.interpGrid _),
-    "q_ohlc"             -> (Queries.ohlc _),
-    "q_twap"             -> (Queries.twap _),
-    "q_vwap"             -> (Queries.vwapBars _),
-    "q_drawdown"         -> (Queries.drawdown _),
-    "q_cusum"            -> (Queries.cusum _),
-    "q_cusum_online"     -> (Queries.cusumOnline _),
-    "q_xcorr_lags"       -> (Queries.xcorrLags _),
-    "q_embed_dim_stats"  -> (Queries.embedDimStats _),
-    "q_embed_cov"        -> (Queries.embedCov _),
-    "q_embed_pca"        -> (Queries.embedPca _),
-    "q_embed_pca_proj"   -> (Queries.embedPcaProj _),
-    "q_embed_pca_topk"   -> (Queries.embedPcaTopk _),
-    "q_embed_whiten"     -> (Queries.embedWhiten _),
-    "q_embed_group_drift" -> (Queries.embedGroupDrift _),
-    "q_embed_robust"     -> (Queries.embedRobust _),
-    "q_embed_rank_grid"  -> (Queries.embedRankGrid _),
-    "q_embed_rank_norm"  -> (Queries.embedRankNorm _),
-    "q_bpe_pairs"        -> (Queries.bpePairs _),
-    "q_spearman"         -> (Queries.spearman _),
-    "q_funnel"           -> (Queries.funnel _),
-    "q_funnel_window"    -> (Queries.funnelWindow _),
-    "q_retention"        -> (Queries.retention _),
-    "q_outliers_mad"     -> (Queries.outliersMad _),
-    "q_profile"          -> (Queries.profile _),
-    "q_cooccur"          -> (Queries.cooccur _),
-    "q_source_drift"     -> (Queries.sourceDrift _),
-    "q_drift_incr"       -> (Queries.driftIncr _),
-    "q_active_users"     -> (Queries.activeUsers _),
-    "q_stickiness"       -> (Queries.stickiness _),
-    "q_transitions"      -> (Queries.transitions _),
-    "q_rolling_band"     -> (Queries.rollingBand _),
-    "q_gaps"             -> (Queries.gapReport _),
-    "q_interval_join"    -> (Queries.intervalJoin _),
-    "q_outliers"         -> (Queries.outliers _),
-    "q_winsorize"        -> (Queries.winsorized _),
-    "q_winsorize_stats"  -> (Queries.winsorizedStats _),
-    "q_zorder"           -> (Queries.zorder _),
-    "q_hilbert"          -> (Queries.hilbert _),
-    "q_zorder3"          -> (Queries.zorder3 _),
-    "q_cube"             -> (Queries.cubeTypes _),
-    "q_debounce"         -> (Queries.debounceQ _),
-    "q_ewma"             -> (Queries.ewmaQ _),
-    "q_autocorr"         -> (Queries.autocorr _),
-    "q_trend"            -> (Queries.trend _),
-    "q_domain_quota"     -> (Queries.domainQuota _),
-    "q_url_extract"      -> (Queries.urlExtract _),
-    "q_url_canonical"    -> (Queries.urlCanonical _),
-    "q_dup_containment"  -> (Queries.dupContainment _),
-    "q_snapshot_diff"    -> (Queries.snapshotDiff _),
-    "q_ngram_novelty"    -> (Queries.ngramNovelty _),
-    "q_topk_per_key"     -> (Queries.topkPerKey _),
-    "q_pivot_types"      -> (Queries.pivotTypes _),
-    "q_histogram"        -> (Queries.histogram _),
-    "q_decile"           -> (Queries.deciles _),
-    "q_quantile_transform" -> (Queries.quantileTransform _),
-    "q_term_lift"        -> (Queries.termLift _),
-    "q_approx_intersect" -> (Queries.approxIntersect _),
-    "q_gif_frames"       -> (Queries.gifFrames _),
-    "q_video_frames"     -> (Queries.videoFrames _),
-    "q_video_meta"       -> (Queries.videoMeta _),
-    "q_image_neardup"    -> (Queries.imageNearDup _),
-    "q_image_dedup_keep" -> (Queries.imageDedupKeep _),
-    "q_image_dedup_incr" -> (Queries.imageDedupIncr _),
-    "q_image_curate"     -> (Queries.imageCurate _),
-    "q_exif_meta"        -> (Queries.exifMeta _),
-    "q_video_neardup"    -> (Queries.videoNearDup _),
-    "q_video_curate"     -> (Queries.videoCurate _),
-    "q_audio_neardup"    -> (Queries.audioNearDup _),
-    "q_audio_curate"     -> (Queries.audioCurate _),
-    "q_gps_exposure"     -> (Queries.gpsExposure _),
-    "q_percentiles"      -> (Queries.percentiles _),
-    "q1_agg"             -> (Queries.q1Agg _),
-    "q_rollup"           -> (Queries.rollup _),
-    "q_distinct"         -> (Queries.distinctCounts _),
-    "q_join_enrich"      -> (Queries.joinEnrich _),
-    // sketches (approximate profiling with exact certificates)
-    "q_approx_distinct"  -> (Queries.approxDistinct _),
-    "q_sketch_union"     -> (Queries.sketchUnion _),
-    "q_bloom_probe"      -> (Queries.bloomProbe _),
-    "q_tfidf"            -> (Queries.tfidf _),
-    "q_unigram_score"    -> (Queries.unigram _),
-    "q_layout_window"    -> (Queries.layoutWindow _),
-    "q_dedup_incremental" -> (Queries.dedupIncremental _),
-    "q_dedup_incr_near"  -> (Queries.dedupIncrNear _),
-    "q_dup_ngram_frac"   -> (Queries.dupNgramFrac _),
-    "q_json_extract"     -> (Queries.jsonExtract _),
-    "q_quality_filter"   -> (Queries.qualityFilter _),
-    "q_heavy_hitters"    -> (Queries.heavyHitters _),
-    "q_approx_percentiles" -> (Queries.approxPercentiles _)
-  )
-
-  /** DuckDB oracle SQL per query (same column names + ORDER BY as the Spark
-    * side). As of round 5 EVERY query has an oracle — `q_ivf_centroids`
-    * (the trained k-means artifact) carries an invariant oracle over its
-    * own dump rather than a re-derivation, and everything derived from it
-    * is fully re-derived ([[Queries.ivfCentroidsSql]]).
-    *
-    * `__VERIFY_OUT__` inside a SQL string is replaced by [[Verify]] with
-    * the dump directory, letting an oracle re-derive a query from another
-    * query's exported parquet (IVF cells from centroids, top-k from cells).
+  /** One inventory query: its Spark build over a scale-factor directory and
+    * the DuckDB oracle SQL that must reproduce it (same column names and
+    * ORDER BY). `__VERIFY_OUT__` inside the SQL is replaced by [[Verify]]
+    * with the dump directory, letting an oracle re-derive a query from
+    * another query's exported parquet (IVF cells from centroids, top-k from
+    * cells). Every query has an oracle; `q_ivf_centroids` (the trained
+    * k-means artifact) carries an invariant oracle over its own dump
+    * ([[Queries.ivfCentroidsSql]]).
     */
-  def oracleSql: Map[String, String] = Map(
-    "q_fuse_merge"      -> Queries.fuseMergeSql,
-    "q_fuse_rename"     -> Queries.fuseRenameSql,
-    "q_time_filter"     -> Queries.timeFilterSql,
-    "q_ts_convert"      -> Queries.tsConvertSql,
-    "q_minmax_ts"       -> Queries.minmaxTsSql,
-    "q_resample_1h"     -> Queries.resampleSql(3600000L),
-    "q_resample_1d"     -> Queries.resampleSql(86400000L),
-    "q_resample_keyed"  -> Queries.resampleKeyedSql,
-    "q_resample_window" -> Queries.resampleWindowSql,
-    "q_ffill"           -> Queries.ffillSql,
-    "q_dedup_exact"     -> Queries.dedupExactSql,
-    "q_dedup_normalized" -> Queries.dedupNormalizedSql,
-    "q_dedup_jaccard"   -> Queries.dedupJaccardSql,
-    "q_dup_spans"       -> Queries.dupSpansSql,
-    "q_dup_matrix"      -> Queries.dupMatrixSql,
-    "q_text_quality"    -> Queries.textQualitySql,
-    "q_lang_id"         -> Queries.langIdSql,
-    "q_token_stats"     -> Queries.tokenStatsSql,
-    "q_token_bpe"       -> Queries.tokenBpeSql,
-    "q_bpe_merges"      -> Queries.bpeMergesSql,
-    "q_rank_grid_table" -> Queries.quantileGridTableSql,
-    "q_bpe_encode"      -> Queries.bpeEncodeSql,
-    "q_bpe_bytes_merges" -> Queries.bpeBytesMergesSql,
-    "q_bpe_bytes_encode" -> Queries.bpeBytesEncodeSql,
-    "q_bm25_model"      -> Queries.bm25ModelSql,
-    "q_bm25_topk"       -> Queries.bm25TopKSql,
-    "q_hybrid_rrf"      -> Queries.hybridRrfSql,
+  final case class QueryDef(
+      name: String, build: (SparkSession, String) => DataFrame, oracleSql: String)
+
+  /** Every query, declared once: one entry per implemented operator from
+    * SURVEY.md §2 (+ pipeline ops).
+    */
+  lazy val queryDefs: Seq[QueryDef] = {
+    import Queries._
+    Seq(
+    // fusion / reference surface
+    QueryDef("q_fuse_merge", fuseMerge, fuseMergeSql),
+    QueryDef("q_fuse_rename", fuseRename, fuseRenameSql),
+    QueryDef("q_time_filter", timeFilter, timeFilterSql),
+    QueryDef("q_ts_convert", tsConvert, tsConvertSql),
+    QueryDef("q_minmax_ts", minmaxTs, minmaxTsSql),
+    QueryDef("q_resample_1h", (s, d) => resample(s, d, "1h"), resampleSql(3600000L)),
+    QueryDef("q_resample_1d", (s, d) => resample(s, d, "1d"), resampleSql(86400000L)),
+    QueryDef("q_resample_keyed", resampleKeyed, resampleKeyedSql),
+    QueryDef("q_resample_window", resampleWindow, resampleWindowSql),
+    QueryDef("q_ffill", ffill, ffillSql),
+    // dedup
+    QueryDef("q_dedup_exact", dedupExact, dedupExactSql),
+    QueryDef("q_dedup_normalized", dedupNormalized, dedupNormalizedSql),
+    QueryDef("q_dedup_jaccard", dedupJaccard, dedupJaccardSql),
+    QueryDef("q_dup_spans", dupSpans, dupSpansSql),
+    QueryDef("q_dup_matrix", dupMatrix, dupMatrixSql),
+    QueryDef("q_dedup_minhash", dedupMinhash, dedupMinhashSql),
+    QueryDef("q_simhash", simhash, simhashSql),
+    QueryDef("q_simhash_neardup", simhashNearDup, simhashNearDupSql),
+    QueryDef("q_dedup_clusters", dedupClusters, dedupClustersSql),
+    QueryDef("q_dup_sizes", dupSizes, dupSizesSql),
+    QueryDef("q_dedup_keep", dedupKeep, dedupKeepSql),
+    QueryDef("q_curate", curate, curateSql),
+    // text analysis
+    QueryDef("q_text_quality", textQuality, textQualitySql),
+    QueryDef("q_lang_id", langId, langIdSql),
+    QueryDef("q_token_stats", tokenStats, tokenStatsSql),
+    QueryDef("q_token_bpe", tokenBpe, tokenBpeSql),
+    QueryDef("q_bpe_merges", bpeMerges, bpeMergesSql),
+    QueryDef("q_rank_grid_table", quantileGridTable, quantileGridTableSql),
+    QueryDef("q_bpe_encode", bpeEncode, bpeEncodeSql),
+    QueryDef("q_bpe_bytes_merges", bpeBytesMerges, bpeBytesMergesSql),
+    QueryDef("q_bpe_bytes_encode", bpeBytesEncode, bpeBytesEncodeSql),
+    QueryDef("q_bm25_model", bm25Model, bm25ModelSql),
+    QueryDef("q_bm25_topk", bm25TopK, bm25TopKSql),
+    QueryDef("q_hybrid_rrf", hybridRrf, hybridRrfSql),
     // the index face must produce the scan face's answer — same oracle
-    "q_bm25_index"      -> Queries.bm25TopKSql,
-    "q_bm25_multi"      -> Queries.bm25MultiSql,
+    QueryDef("q_bm25_index", bm25IndexSearch, bm25TopKSql),
+    QueryDef("q_bm25_multi", bm25Multi, bm25MultiSql),
     // append == full rebuild exactly, so the whole-corpus oracle applies
-    "q_bm25_incr"       -> Queries.bm25TopKSql,
-    "q_phrase_search"   -> Queries.phraseSearchSql,
-    "q_collocations"    -> Queries.collocationsSql,
-    "q_embed_prefix_recall" -> Queries.embedPrefixRecallSql,
-    "q_proximity_incr"  -> Queries.proximityIncrSql,
-    "q_proximity_indexed" -> Queries.proximityIndexedSql,
-    "q_proximity_search" -> Queries.proximitySearchSql,
-    "q_pagerank"        -> Queries.pagerankSql,
-    "q_pagerank_incr"   -> Queries.pagerankIncrSql,
-    "q_graph_components" -> Queries.graphComponentsSql,
+    QueryDef("q_bm25_incr", bm25Incr, bm25TopKSql),
+    QueryDef("q_phrase_search", phraseSearch, phraseSearchSql),
+    QueryDef("q_collocations", collocations, collocationsSql),
+    QueryDef("q_embed_prefix_recall", embedPrefixRecall, embedPrefixRecallSql),
+    QueryDef("q_proximity_incr", proximityIncr, proximityIncrSql),
+    QueryDef("q_proximity_indexed", proximityIndexed, proximityIndexedSql),
+    QueryDef("q_proximity_search", proximitySearch, proximitySearchSql),
+    QueryDef("q_pagerank", pagerank, pagerankSql),
+    QueryDef("q_pagerank_incr", pagerankIncr, pagerankIncrSql),
+    QueryDef("q_graph_components", graphComponents, graphComponentsSql),
     // the incremental fold is EXACT, so the batch oracle applies verbatim
-    "q_components_incr" -> Queries.graphComponentsSql,
-    "q_ppr"             -> Queries.pprSql,
-    "q_token_entropy"   -> Queries.tokenEntropySql,
-    "q_burstiness"      -> Queries.burstinessSql,
-    "q_event_paths"     -> Queries.eventPathsSql,
-    "q_cluster_sample"  -> Queries.clusterSampleSql,
-    "q_triangles"       -> Queries.triangleCountsSql,
-    "q_degree_dist"     -> Queries.degreeDistSql,
-    "q_link_predict"    -> Queries.linkPredictSql,
-    "q_random_walks"    -> Queries.randomWalksSql,
-    "q_walk_pairs"      -> Queries.walkPairsSql,
-    "q_kcore"           -> Queries.kCoreSql,
-    "q_hard_negatives"  -> Queries.hardNegativesSql,
-    "q_knn_graph"       -> Queries.knnGraphSql,
-    "q_bfs_hops"        -> Queries.bfsHopsSql,
-    "q_k_anonymity"     -> Queries.kAnonymitySql,
-    "q_k_anon_ladder"   -> Queries.kAnonLadderSql,
-    "q_k_anon_incr"     -> Queries.kAnonIncrSql,
-    "q_l_diversity"     -> Queries.lDiversitySql,
-    "q_generalize"      -> Queries.generalizeSql,
-    "q_generalize_chosen" -> Queries.generalizeChosenSql,
-    "q_pii_risk"        -> Queries.piiRiskSql,
-    "q_line_dedup"      -> Queries.lineDedupSql,
-    "q_line_dedup_incr" -> Queries.lineDedupIncrSql,
-    "q_mmr_rerank"      -> Queries.mmrRerankSql,
-    "q_quality_reg"     -> Queries.qualityRegSql,
-    "q_split_safe"      -> Queries.splitSafeSql,
-    "q_bpe_compression" -> Queries.bpeCompressionSql,
-    "q_quality_reg_score" -> Queries.qualityRegScoreSql,
-    "q_fingerprint"     -> Queries.fingerprintSql,
-    "q_fingerprint_rolling" -> Queries.fingerprintRollingSql,
-    "q_scrub"           -> Queries.scrubSql,
-    "q_html_strip"      -> Queries.htmlStripSql,
-    "q_normalize"       -> Queries.normalizeSql,
-    "q_ngram_freq"      -> Queries.ngramFreqSql,
-    "q_vocab_coverage"  -> Queries.vocabCoverageSql,
-    "q_sample_stratified" -> Queries.sampleStratifiedSql,
-    "q_split"           -> Queries.splitAssignSql,
-    "q_split_exact"     -> Queries.splitExactSql,
-    "q_pack_budget"     -> Queries.packBudgetSql,
-    "q_chunk"           -> Queries.chunkSql,
-    "q_contamination"   -> Queries.contaminationSql,
-    "q_repetition"      -> Queries.repetitionSql,
-    "q_weighted_sample" -> Queries.weightedSampleSql,
-    "q_mix_sources"     -> Queries.mixSourcesSql,
-    "q_dsir_weights"    -> Queries.dsirWeightsSql,
-    "q_bigram_lm"       -> Queries.bigramLmSql,
-    "q_mix_temperature" -> Queries.mixTemperatureSql,
-    "q_ann_topk"        -> Queries.annTopKSql,
-    "q_ann_threshold"   -> Queries.annThresholdSql,
-    "q_ann_lsh"         -> Queries.annLshSql,
-    "q_ivf_centroids"   -> Queries.ivfCentroidsSql,
-    "q_ivf_cells"       -> Queries.ivfCellsSql,
-    "q_ivf_purity"      -> Queries.ivfPuritySql,
-    "q_semdedup_pairs"  -> Queries.semdedupPairsSql,
-    "q_semdedup_keep"   -> Queries.semdedupKeepSql,
-    "q_semdedup_incr"   -> Queries.semdedupIncrSql,
-    "q_ann_ivf"         -> Queries.annIvfSql,
-    "q_ann_ivf_probe"   -> Queries.annIvfProbeSql,
-    "q_pq_codebooks"    -> Queries.pqCodebooksSql,
-    "q_pq_codes"        -> Queries.pqCodesSql,
-    "q_pq_encode_incr"  -> Queries.pqEncodeIncrSql,
-    "q_ann_pq"          -> Queries.annPqSql,
-    "q_ann_ivfpq"       -> Queries.annIvfPqSql,
-    "q_pqr_codebooks"   -> Queries.pqrCodebooksSql,
-    "q_pqr_codes"       -> Queries.pqrCodesSql,
-    "q_ann_ivfpq_r"     -> Queries.annIvfPqResidualSql,
-    "q_pqr_prod_codebooks" -> Queries.pqrProdCodebooksSql,
-    "q_pqr_prod_codes"  -> Queries.pqrProdCodesSql,
-    "q_ann_ivfpq_prod"  -> Queries.annIvfPqProdSql,
-    "q_dedup_minhash"   -> Queries.dedupMinhashSql,
-    "q_simhash"         -> Queries.simhashSql,
-    "q_simhash_neardup" -> Queries.simhashNearDupSql,
-    "q_dedup_clusters"  -> Queries.dedupClustersSql,
-    "q_dup_sizes"       -> Queries.dupSizesSql,
-    "q_dedup_keep"      -> Queries.dedupKeepSql,
-    "q_curate"          -> Queries.curateSql,
-    "q_multimodal_meta" -> Queries.multimodalMetaSql,
-    "q_multimodal_feats" -> Queries.multimodalFeaturesSql,
-    "q_audio_decode"    -> Queries.audioDecodeSql,
-    "q_asof_join"       -> Queries.asofJoinSql,
-    "q_asof_forward"    -> Queries.asofForwardSql,
-    "q_asof_nearest"    -> Queries.asofNearestSql,
-    "q_salted_join"     -> Queries.saltedJoinSql,
-    "q_range_join"      -> Queries.rangeJoinSql,
-    "q_sessionize"      -> Queries.sessionizeSql,
-    "q_rolling_mean"    -> Queries.rollingMeanSql,
-    "q_rolling_corr"    -> Queries.rollingCorrSql,
-    "q_rolling_slope"   -> Queries.rollingSlopeSql,
-    "q_sliding_agg"     -> Queries.slidingAggSql,
-    "q_interp_grid"     -> Queries.interpGridSql,
-    "q_ohlc"            -> Queries.ohlcSql,
-    "q_twap"            -> Queries.twapSql,
-    "q_vwap"            -> Queries.vwapBarsSql,
-    "q_drawdown"        -> Queries.drawdownSql,
-    "q_cusum"           -> Queries.cusumSql,
-    "q_cusum_online"    -> Queries.cusumOnlineSql,
-    "q_xcorr_lags"      -> Queries.xcorrLagsSql,
-    "q_embed_dim_stats" -> Queries.embedDimStatsSql,
-    "q_embed_cov"       -> Queries.embedCovSql,
-    "q_embed_pca"       -> Queries.embedPcaSql,
-    "q_embed_pca_proj"  -> Queries.embedPcaProjSql,
-    "q_embed_pca_topk"  -> Queries.embedPcaTopkSql,
-    "q_embed_whiten"    -> Queries.embedWhitenSql,
-    "q_embed_group_drift" -> Queries.embedGroupDriftSql,
-    "q_embed_robust"    -> Queries.embedRobustSql,
-    "q_embed_rank_grid" -> Queries.embedRankGridSql,
-    "q_embed_rank_norm" -> Queries.embedRankNormSql,
-    "q_bpe_pairs"       -> Queries.bpePairsSql,
-    "q_spearman"        -> Queries.spearmanSql,
-    "q_funnel"          -> Queries.funnelSql,
-    "q_funnel_window"   -> Queries.funnelWindowSql,
-    "q_retention"       -> Queries.retentionSql,
-    "q_outliers_mad"    -> Queries.outliersMadSql,
-    "q_profile"         -> Queries.profileSql,
-    "q_cooccur"         -> Queries.cooccurSql,
-    "q_source_drift"    -> Queries.sourceDriftSql,
-    "q_drift_incr"      -> Queries.driftIncrSql,
-    "q_active_users"    -> Queries.activeUsersSql,
-    "q_stickiness"      -> Queries.stickinessSql,
-    "q_transitions"     -> Queries.transitionsSql,
-    "q_rolling_band"    -> Queries.rollingBandSql,
-    "q_gaps"            -> Queries.gapReportSql,
-    "q_interval_join"   -> Queries.intervalJoinSql,
-    "q_outliers"        -> Queries.outliersSql,
-    "q_winsorize"       -> Queries.winsorizedSql,
-    "q_winsorize_stats" -> Queries.winsorizedStatsSql,
-    "q_zorder"          -> Queries.zorderSql,
-    "q_hilbert"         -> Queries.hilbertSql,
-    "q_zorder3"         -> Queries.zorder3Sql,
-    "q_cube"            -> Queries.cubeTypesSql,
-    "q_debounce"        -> Queries.debounceSql,
-    "q_ewma"            -> Queries.ewmaSql,
-    "q_autocorr"        -> Queries.autocorrSql,
-    "q_trend"           -> Queries.trendSql,
-    "q_domain_quota"    -> Queries.domainQuotaSql,
-    "q_url_extract"     -> Queries.urlExtractSql,
-    "q_url_canonical"   -> Queries.urlCanonicalSql,
-    "q_dup_containment" -> Queries.dupContainmentSql,
-    "q_snapshot_diff"   -> Queries.snapshotDiffSql,
-    "q_ngram_novelty"   -> Queries.ngramNoveltySql,
-    "q_topk_per_key"    -> Queries.topkPerKeySql,
-    "q_pivot_types"     -> Queries.pivotTypesSql,
-    "q_histogram"       -> Queries.histogramSql,
-    "q_decile"          -> Queries.decilesSql,
-    "q_quantile_transform" -> Queries.quantileTransformSql,
-    "q_term_lift"       -> Queries.termLiftSql,
-    "q_approx_intersect" -> Queries.approxIntersectSql,
-    "q_gif_frames"      -> Queries.gifFramesSql,
-    "q_video_frames"    -> Queries.videoFramesSql,
-    "q_video_meta"      -> Queries.videoMetaSql,
-    "q_image_neardup"   -> Queries.imageNearDupSql,
-    "q_image_dedup_keep" -> Queries.imageDedupKeepSql,
-    "q_image_dedup_incr" -> Queries.imageDedupIncrSql,
-    "q_image_curate"    -> Queries.imageCurateSql,
-    "q_exif_meta"       -> Queries.exifMetaSql,
-    "q_video_neardup"   -> Queries.videoNearDupSql,
-    "q_video_curate"    -> Queries.videoCurateSql,
-    "q_audio_neardup"   -> Queries.audioNearDupSql,
-    "q_audio_curate"    -> Queries.audioCurateSql,
-    "q_gps_exposure"    -> Queries.gpsExposureSql,
-    "q_percentiles"     -> Queries.percentilesSql,
-    "q1_agg"            -> Queries.q1AggSql,
-    "q_rollup"          -> Queries.rollupSql,
-    "q_distinct"        -> Queries.distinctCountsSql,
-    "q_join_enrich"     -> Queries.joinEnrichSql,
-    "q_approx_distinct" -> Queries.approxDistinctSql,
-    "q_sketch_union"    -> Queries.sketchUnionSql,
-    "q_bloom_probe"     -> Queries.bloomProbeSql,
-    "q_tfidf"           -> Queries.tfidfSql,
-    "q_unigram_score"   -> Queries.unigramSql,
-    "q_layout_window"   -> Queries.layoutWindowSql,
-    "q_dedup_incremental" -> Queries.dedupIncrementalSql,
-    "q_dedup_incr_near" -> Queries.dedupIncrNearSql,
-    "q_dup_ngram_frac"  -> Queries.dupNgramFracSql,
-    "q_json_extract"    -> Queries.jsonExtractSql,
-    "q_quality_filter"  -> Queries.qualityFilterSql,
-    "q_heavy_hitters"   -> Queries.heavyHittersSql,
-    "q_approx_percentiles" -> Queries.approxPercentilesSql
-  )
+    QueryDef("q_components_incr", graphComponentsIncr, graphComponentsSql),
+    QueryDef("q_ppr", ppr, pprSql),
+    QueryDef("q_token_entropy", tokenEntropy, tokenEntropySql),
+    QueryDef("q_burstiness", burstiness, burstinessSql),
+    QueryDef("q_event_paths", eventPaths, eventPathsSql),
+    QueryDef("q_cluster_sample", clusterSample, clusterSampleSql),
+    QueryDef("q_triangles", triangleCounts, triangleCountsSql),
+    QueryDef("q_degree_dist", degreeDist, degreeDistSql),
+    QueryDef("q_link_predict", linkPredict, linkPredictSql),
+    QueryDef("q_random_walks", randomWalks, randomWalksSql),
+    QueryDef("q_walk_pairs", walkPairs, walkPairsSql),
+    QueryDef("q_kcore", kCore, kCoreSql),
+    QueryDef("q_hard_negatives", hardNegatives, hardNegativesSql),
+    QueryDef("q_knn_graph", knnGraph, knnGraphSql),
+    QueryDef("q_bfs_hops", bfsHops, bfsHopsSql),
+    QueryDef("q_k_anonymity", kAnonymity, kAnonymitySql),
+    QueryDef("q_k_anon_ladder", kAnonLadder, kAnonLadderSql),
+    QueryDef("q_k_anon_incr", kAnonIncr, kAnonIncrSql),
+    QueryDef("q_l_diversity", lDiversity, lDiversitySql),
+    QueryDef("q_generalize", generalize, generalizeSql),
+    QueryDef("q_generalize_chosen", generalizeChosen, generalizeChosenSql),
+    QueryDef("q_pii_risk", piiRisk, piiRiskSql),
+    QueryDef("q_line_dedup", lineDedup, lineDedupSql),
+    QueryDef("q_line_dedup_incr", lineDedupIncr, lineDedupIncrSql),
+    QueryDef("q_mmr_rerank", mmrRerank, mmrRerankSql),
+    QueryDef("q_quality_reg", qualityReg, qualityRegSql),
+    QueryDef("q_split_safe", splitSafe, splitSafeSql),
+    QueryDef("q_bpe_compression", bpeCompression, bpeCompressionSql),
+    QueryDef("q_quality_reg_score", qualityRegScore, qualityRegScoreSql),
+    QueryDef("q_fingerprint", fingerprint, fingerprintSql),
+    QueryDef("q_fingerprint_rolling", fingerprintRolling, fingerprintRollingSql),
+    QueryDef("q_scrub", scrub, scrubSql),
+    QueryDef("q_html_strip", htmlStrip, htmlStripSql),
+    QueryDef("q_normalize", normalize, normalizeSql),
+    QueryDef("q_ngram_freq", ngramFreq, ngramFreqSql),
+    QueryDef("q_vocab_coverage", vocabCoverage, vocabCoverageSql),
+    QueryDef("q_sample_stratified", sampleStratified, sampleStratifiedSql),
+    QueryDef("q_split", splitAssign, splitAssignSql),
+    QueryDef("q_split_exact", splitExact, splitExactSql),
+    QueryDef("q_pack_budget", packBudget, packBudgetSql),
+    QueryDef("q_chunk", chunk, chunkSql),
+    QueryDef("q_contamination", contamination, contaminationSql),
+    QueryDef("q_repetition", repetition, repetitionSql),
+    QueryDef("q_weighted_sample", weightedSample, weightedSampleSql),
+    QueryDef("q_mix_sources", mixSources, mixSourcesSql),
+    QueryDef("q_dsir_weights", dsirWeights, dsirWeightsSql),
+    QueryDef("q_bigram_lm", bigramLm, bigramLmSql),
+    QueryDef("q_mix_temperature", mixTemperature, mixTemperatureSql),
+    // similarity
+    QueryDef("q_ann_topk", annTopK, annTopKSql),
+    QueryDef("q_ann_threshold", annThreshold, annThresholdSql),
+    QueryDef("q_ann_lsh", annLsh, annLshSql),
+    QueryDef("q_ivf_centroids", ivfCentroids, ivfCentroidsSql),
+    QueryDef("q_ivf_cells", ivfCells, ivfCellsSql),
+    QueryDef("q_ivf_purity", ivfPurity, ivfPuritySql),
+    QueryDef("q_semdedup_pairs", semdedupPairs, semdedupPairsSql),
+    QueryDef("q_semdedup_keep", semdedupKeep, semdedupKeepSql),
+    QueryDef("q_semdedup_incr", semdedupIncr, semdedupIncrSql),
+    QueryDef("q_ann_ivf", annIvf, annIvfSql),
+    QueryDef("q_ann_ivf_probe", annIvfProbe, annIvfProbeSql),
+    QueryDef("q_pq_codebooks", pqCodebooks, pqCodebooksSql),
+    QueryDef("q_pq_codes", pqCodes, pqCodesSql),
+    QueryDef("q_pq_encode_incr", pqEncodeIncr, pqEncodeIncrSql),
+    QueryDef("q_ann_pq", annPq, annPqSql),
+    QueryDef("q_ann_ivfpq", annIvfPq, annIvfPqSql),
+    QueryDef("q_pqr_codebooks", pqrCodebooks, pqrCodebooksSql),
+    QueryDef("q_pqr_codes", pqrCodes, pqrCodesSql),
+    QueryDef("q_ann_ivfpq_r", annIvfPqResidual, annIvfPqResidualSql),
+    QueryDef("q_pqr_prod_codebooks", pqrProdCodebooks, pqrProdCodebooksSql),
+    QueryDef("q_pqr_prod_codes", pqrProdCodes, pqrProdCodesSql),
+    QueryDef("q_ann_ivfpq_prod", annIvfPqProd, annIvfPqProdSql),
+    // multimodal
+    QueryDef("q_multimodal_meta", multimodalMeta, multimodalMetaSql),
+    QueryDef("q_multimodal_feats", multimodalFeatures, multimodalFeaturesSql),
+    QueryDef("q_audio_decode", audioDecode, audioDecodeSql),
+    // relational / temporal joins (beyond-reference capabilities)
+    QueryDef("q_asof_join", asofJoin, asofJoinSql),
+    QueryDef("q_asof_forward", asofForward, asofForwardSql),
+    QueryDef("q_asof_nearest", asofNearest, asofNearestSql),
+    QueryDef("q_salted_join", saltedJoinQ, saltedJoinSql),
+    QueryDef("q_range_join", rangeJoin, rangeJoinSql),
+    QueryDef("q_sessionize", sessionize, sessionizeSql),
+    QueryDef("q_rolling_mean", rollingMean, rollingMeanSql),
+    QueryDef("q_rolling_corr", rollingCorr, rollingCorrSql),
+    QueryDef("q_rolling_slope", rollingSlope, rollingSlopeSql),
+    QueryDef("q_sliding_agg", slidingAgg, slidingAggSql),
+    QueryDef("q_interp_grid", interpGrid, interpGridSql),
+    QueryDef("q_ohlc", ohlc, ohlcSql),
+    QueryDef("q_twap", twap, twapSql),
+    QueryDef("q_vwap", vwapBars, vwapBarsSql),
+    QueryDef("q_drawdown", drawdown, drawdownSql),
+    QueryDef("q_cusum", cusum, cusumSql),
+    QueryDef("q_cusum_online", cusumOnline, cusumOnlineSql),
+    QueryDef("q_xcorr_lags", xcorrLags, xcorrLagsSql),
+    QueryDef("q_embed_dim_stats", embedDimStats, embedDimStatsSql),
+    QueryDef("q_embed_cov", embedCov, embedCovSql),
+    QueryDef("q_embed_pca", embedPca, embedPcaSql),
+    QueryDef("q_embed_pca_proj", embedPcaProj, embedPcaProjSql),
+    QueryDef("q_embed_pca_topk", embedPcaTopk, embedPcaTopkSql),
+    QueryDef("q_embed_whiten", embedWhiten, embedWhitenSql),
+    QueryDef("q_embed_group_drift", embedGroupDrift, embedGroupDriftSql),
+    QueryDef("q_embed_robust", embedRobust, embedRobustSql),
+    QueryDef("q_embed_rank_grid", embedRankGrid, embedRankGridSql),
+    QueryDef("q_embed_rank_norm", embedRankNorm, embedRankNormSql),
+    QueryDef("q_bpe_pairs", bpePairs, bpePairsSql),
+    QueryDef("q_spearman", spearman, spearmanSql),
+    QueryDef("q_funnel", funnel, funnelSql),
+    QueryDef("q_funnel_window", funnelWindow, funnelWindowSql),
+    QueryDef("q_retention", retention, retentionSql),
+    QueryDef("q_outliers_mad", outliersMad, outliersMadSql),
+    QueryDef("q_profile", profile, profileSql),
+    QueryDef("q_cooccur", cooccur, cooccurSql),
+    QueryDef("q_source_drift", sourceDrift, sourceDriftSql),
+    QueryDef("q_drift_incr", driftIncr, driftIncrSql),
+    QueryDef("q_active_users", activeUsers, activeUsersSql),
+    QueryDef("q_stickiness", stickiness, stickinessSql),
+    QueryDef("q_transitions", transitions, transitionsSql),
+    QueryDef("q_rolling_band", rollingBand, rollingBandSql),
+    QueryDef("q_gaps", gapReport, gapReportSql),
+    QueryDef("q_interval_join", intervalJoin, intervalJoinSql),
+    QueryDef("q_outliers", outliers, outliersSql),
+    QueryDef("q_winsorize", winsorized, winsorizedSql),
+    QueryDef("q_winsorize_stats", winsorizedStats, winsorizedStatsSql),
+    QueryDef("q_zorder", zorder, zorderSql),
+    QueryDef("q_hilbert", hilbert, hilbertSql),
+    QueryDef("q_zorder3", zorder3, zorder3Sql),
+    QueryDef("q_cube", cubeTypes, cubeTypesSql),
+    QueryDef("q_debounce", debounceQ, debounceSql),
+    QueryDef("q_ewma", ewmaQ, ewmaSql),
+    QueryDef("q_autocorr", autocorr, autocorrSql),
+    QueryDef("q_trend", trend, trendSql),
+    QueryDef("q_domain_quota", domainQuota, domainQuotaSql),
+    QueryDef("q_url_extract", urlExtract, urlExtractSql),
+    QueryDef("q_url_canonical", urlCanonical, urlCanonicalSql),
+    QueryDef("q_dup_containment", dupContainment, dupContainmentSql),
+    QueryDef("q_snapshot_diff", snapshotDiff, snapshotDiffSql),
+    QueryDef("q_ngram_novelty", ngramNovelty, ngramNoveltySql),
+    QueryDef("q_topk_per_key", topkPerKey, topkPerKeySql),
+    QueryDef("q_pivot_types", pivotTypes, pivotTypesSql),
+    QueryDef("q_histogram", histogram, histogramSql),
+    QueryDef("q_decile", deciles, decilesSql),
+    QueryDef("q_quantile_transform", quantileTransform, quantileTransformSql),
+    QueryDef("q_term_lift", termLift, termLiftSql),
+    QueryDef("q_approx_intersect", approxIntersect, approxIntersectSql),
+    QueryDef("q_gif_frames", gifFrames, gifFramesSql),
+    QueryDef("q_video_frames", videoFrames, videoFramesSql),
+    QueryDef("q_video_meta", videoMeta, videoMetaSql),
+    QueryDef("q_image_neardup", imageNearDup, imageNearDupSql),
+    QueryDef("q_image_dedup_keep", imageDedupKeep, imageDedupKeepSql),
+    QueryDef("q_image_dedup_incr", imageDedupIncr, imageDedupIncrSql),
+    QueryDef("q_image_curate", imageCurate, imageCurateSql),
+    QueryDef("q_exif_meta", exifMeta, exifMetaSql),
+    QueryDef("q_video_neardup", videoNearDup, videoNearDupSql),
+    QueryDef("q_video_curate", videoCurate, videoCurateSql),
+    QueryDef("q_audio_neardup", audioNearDup, audioNearDupSql),
+    QueryDef("q_audio_curate", audioCurate, audioCurateSql),
+    QueryDef("q_gps_exposure", gpsExposure, gpsExposureSql),
+    QueryDef("q_percentiles", percentiles, percentilesSql),
+    QueryDef("q1_agg", q1Agg, q1AggSql),
+    QueryDef("q_rollup", rollup, rollupSql),
+    QueryDef("q_distinct", distinctCounts, distinctCountsSql),
+    QueryDef("q_join_enrich", joinEnrich, joinEnrichSql),
+    // sketches (approximate profiling with exact certificates)
+    QueryDef("q_approx_distinct", approxDistinct, approxDistinctSql),
+    QueryDef("q_sketch_union", sketchUnion, sketchUnionSql),
+    QueryDef("q_bloom_probe", bloomProbe, bloomProbeSql),
+    QueryDef("q_tfidf", tfidf, tfidfSql),
+    QueryDef("q_unigram_score", unigram, unigramSql),
+    QueryDef("q_layout_window", layoutWindow, layoutWindowSql),
+    QueryDef("q_dedup_incremental", dedupIncremental, dedupIncrementalSql),
+    QueryDef("q_dedup_incr_near", dedupIncrNear, dedupIncrNearSql),
+    QueryDef("q_dup_ngram_frac", dupNgramFrac, dupNgramFracSql),
+    QueryDef("q_json_extract", jsonExtract, jsonExtractSql),
+    QueryDef("q_quality_filter", qualityFilter, qualityFilterSql),
+    QueryDef("q_heavy_hitters", heavyHitters, heavyHittersSql),
+    QueryDef("q_approx_percentiles", approxPercentiles, approxPercentilesSql)
+    )
+  }
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    queryDefs.map(d => d.name -> d.build).toMap
+
+  lazy val oracleSql: Map[String, String] = queryDefs.map(d => d.name -> d.oracleSql).toMap
 }

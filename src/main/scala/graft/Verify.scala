@@ -1,26 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
+    val spark = Harness.session()
+    new java.io.File(outDir).mkdirs()
     // optional extra args: restrict the dump to these queries (local
     // iteration only — the driver always passes exactly two args)
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (only.nonEmpty && !only.contains(name)) ()
-      else {
+    Harness.select(args.drop(2).toSeq).foreach { name =>
       // Remove any previous dump FIRST: a query that fails mid-run must
       // leave no stale parquet behind, or a rerun into the same outDir
       // would let the parity gate silently pass on last run's results.
@@ -30,22 +19,13 @@ object Verify {
         Files.walk(dest).iterator().asScala.toSeq.reverse
           .foreach(p => Files.deleteIfExists(p))
       }
-      // withMaterialized: release each query's localCheckpoint blocks once
-      // its dump is written, so 60+ queries' checkpoints don't accumulate
-      // in the block manager across the pass (same bracket as Bench).
-      // AdaptiveGate: same input-size-derived execution gate as the bench
-      // (graft.core.AdaptiveGate), so the dumped results are produced under
-      // the exact configuration the bench times — the parity gate then
-      // covers the gated plans too.
-      try graft.pipeline.Dedup.withMaterialized {
-        val df = fn(spark, sfDir)
-        graft.core.AdaptiveGate.withGatedExecution(df) {
-          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        }
-      }
+      // the bench's run path, so the dumped results are produced under the
+      // exact configuration the bench times and the parity gate covers the
+      // gated plans too
+      try Harness.runQuery(spark, name, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -51,6 +51,10 @@ object AdaptiveGate {
   private val envOff: Boolean =
     sys.env.get("SPARK_GRAFT_ADAPTIVE_GATE").contains("off")
 
+  private def parseBytes(v: String): Long =
+    v.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"$ThresholdKey must be a whole number of bytes, got '$v'"))
+
   /** True iff the static single-partition plan is already optimal for
     * `df`'s final action (see object doc).
     */
@@ -58,7 +62,7 @@ object AdaptiveGate {
     if (envOff) return false
     val spark = df.sparkSession
     val threshold = BigInt(
-      spark.conf.getOption(ThresholdKey).map(_.toLong).getOrElse(
+      spark.conf.getOption(ThresholdKey).map(parseBytes).getOrElse(
         spark.sessionState.conf.getConf(
           org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)))
     // the analyzed plan is computed eagerly at Dataset construction, so

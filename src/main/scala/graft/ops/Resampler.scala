@@ -175,13 +175,6 @@ object Resampler {
     if (opts.sorted) out.orderBy(col(tsCol)) else out
   }
 
-  /** Convenience: resample preserving the engine's column order with the
-    * internal provenance column retained or dropped.
-    */
-  def resampleKeys(df: DataFrame, interval: String, ffillKeys: Seq[String],
-      tieCols: Seq[String] = Nil): DataFrame =
-    resample(df, interval, opts = ResampleOptions(ffillKeys = ffillKeys, tieCols = tieCols))
-
   /** Per-key resample: an independent tumbling grid per key group (the
     * 100 TB shape — resampling a million symbols is a million independent
     * small grids, not one giant one). Same boundary semantics as

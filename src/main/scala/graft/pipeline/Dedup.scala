@@ -595,12 +595,6 @@ object Dedup {
   def simhashDf(df: DataFrame, textCol: String, idCol: String): DataFrame =
     simhashLongDf(df, textCol, idCol)
 
-  /** SimHash near-dup groups: docs with identical simhash. */
-  def simhashGroups(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    simhashDf(df, textCol, idCol)
-      .groupBy(col("simhash"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_count"))
-
   /** Signed-long SimHash signature — the canonical form ([[simhashDf]]
     * delegates here); bit operations and cross-engine comparison both want
     * the signed BIGINT.

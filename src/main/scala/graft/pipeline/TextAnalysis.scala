@@ -145,13 +145,6 @@ object TextAnalysis {
           roundTo))
   }
 
-  /** Count of whole-word occurrences of `word` (case-insensitive). The word
-    * is regex-quoted and lowercased to match the lowered text.
-    */
-  def wordHits(text: Column, word: String): Column =
-    regexp_count(lower(text),
-      lit("\\b" + java.util.regex.Pattern.quote(word.toLowerCase) + "\\b")).cast("long")
-
   /** Count of whole-word hits from a word list — native single-pass scan
     * ([[graft.functions.WordListHits]]), exactly equivalent to the oracle's
     * `regexp_count(lower(text), '\b(w1|...|wN)\b')` for `\w`-only word lists

@@ -141,13 +141,6 @@ object SourceLoader {
     first
   }
 
-  /** Read just the header of a CSV directory (names only — a one-line driver
-    * probe, no data scan) to support positional type lists
-    * (classes.py:125-131).
-    */
-  def csvHeader(spark: SparkSession, path: String): Seq[String] =
-    actualCsvHeader(spark, listSourceFiles(spark, path, "csv").head)
-
   /** Zip a positional type list against the header names → StructType. */
   def zipPositional(header: Seq[String], types: Seq[DataType]): StructType = {
     require(header.length == types.length,
@@ -332,18 +325,6 @@ object SourceLoader {
         lit(s"parquetRowId: scanned file not in the listing of $path: "),
         col("_metadata.file_name")))).otherwise(fileIdx)
     checked * lit(1L << 40) + col("_metadata.row_index")
-  }
-
-  /** Header/shape validation of an already-loaded frame: loaded columns must
-    * match the declared schema's names. (The load path validates the on-disk
-    * header itself via [[validateHeaders]]; this remains for frames built
-    * outside [[load]].)
-    */
-  def validateHeader(df: DataFrame, expected: StructType): Unit = {
-    val got  = df.columns.toSet
-    val want = expected.fieldNames.toSet
-    require(got == want,
-      s"Source columns ${got.mkString(",")} do not match declared ${want.mkString(",")}")
   }
 
   /** Per-source global start/end event time (S8, reference

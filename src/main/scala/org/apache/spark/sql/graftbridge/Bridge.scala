@@ -46,9 +46,9 @@ object Bridge {
 
   /** Rebuild a Dataset from its logical plan so a NEW QueryExecution is
     * created under the CURRENT session conf — how an action (write) sees a
-    * conf change made after the frame was constructed. Dev tooling
-    * (PlanDump) uses this to print the plan a gated action actually runs;
-    * no query path calls it.
+    * conf change made after the frame was constructed. `graft.Dev plan`
+    * and `AdaptiveGateSpec` use this to see the plan a gated action
+    * actually runs; no query path calls it.
     */
   def reanalyze(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

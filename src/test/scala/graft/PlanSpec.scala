@@ -621,7 +621,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("scan/exchange budgets: the audited chain plans can't silently grow") {
-    // the ReuseCheck/ExplainCheck dev mains promoted to a failing gate
+    // plan inspection promoted to a failing gate
     // (r9 verdict item 7): each chain's physical plan is pinned to its
     // audited resource ceiling — an extra FileScan means a descent
     // stopped sharing its source (a checkpoint or reuse regressed), an

@@ -77,13 +77,32 @@ class AdaptiveGateSpec extends SparkTestBase {
     val plain = df.collect().toSeq
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     var partsInside: String = null
+    // df's QueryExecution was compiled (AQE on) by the collect above; a
+    // fresh one built inside the gate is what a gated action really runs
+    var gatedPlan: org.apache.spark.sql.execution.SparkPlan = null
     val gated = AdaptiveGate.withGatedExecution(df) {
       partsInside = spark.conf.get("spark.sql.shuffle.partitions")
-      df.collect().toSeq
+      val fresh = org.apache.spark.sql.graftbridge.Bridge.reanalyze(df)
+      val rows = fresh.collect().toSeq
+      gatedPlan = fresh.queryExecution.executedPlan
+      rows
     }
     assert(partsInside == "1", "gate must derive a single partition")
+    assert(gatedPlan.find(
+      _.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]).isEmpty,
+      gatedPlan.toString)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == prevParts)
     assert(spark.conf.get("spark.sql.adaptive.enabled", "true") == "true")
     assert(gated == plain)
+  }
+
+  test("a malformed threshold fails naming its key and value") {
+    spark.conf.set("spark.graft.adaptive.smallPlanBytes", "12MB-ish")
+    try {
+      val e = intercept[IllegalArgumentException](
+        AdaptiveGate.staticPlanSufficient(tinyFrame.filter(col("id") > 1)))
+      assert(e.getMessage.contains("spark.graft.adaptive.smallPlanBytes"), e.getMessage)
+      assert(e.getMessage.contains("12MB-ish"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.adaptive.smallPlanBytes")
   }
 }
