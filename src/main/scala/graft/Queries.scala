@@ -390,7 +390,9 @@ object Queries {
 
   // ----------------------------------------------------------- forward fill
 
-  /** W1: engine forward fill over the fused stream (scalable two-phase). */
+  /** W1: engine forward fill over the fused stream (one sort, per-partition
+    * carry); the final orderBy reuses the fill's sort.
+    */
   def ffill(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val src = events(spark, dir).select(
@@ -6288,7 +6290,7 @@ object Queries {
   /** Per-type quantile transform ([[graft.functions.SearchSorted]] against
     * a trained percentile grid): every value mapped to its empirical
     * quantile bucket — the rank-normalization preconditioner (monotone,
-    * outlier-proof) on the SearchSorted/ForwardFill bucketing machinery.
+    * outlier-proof) on the SearchSorted bucketing machinery.
     *
     * Scale shape: the grid is a BOUNDED artifact (|keys| × ≤19 doubles),
     * folded back as per-type literals into one codegen'd O(log splits)

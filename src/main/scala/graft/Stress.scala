@@ -90,7 +90,7 @@ object Stress {
     val b0 = graft.time.Intervals.nextBoundary(tMin, "1s", initialize = true)
     val expectedGrid = Math.floorDiv(tMax - b0, 1000L) + 2L
 
-    // 3. Two-phase forward fill over the fused stream (every column).
+    // 3. Partitioned forward fill over the fused stream (every column).
     val filled = ForwardFill.partitioned(fused, Seq("price", "quote"), TimestampCol,
       Seq(col("exsym_lookup"), col("__rowid")))
     val filledRows = timed("ffill", filled)

@@ -1,8 +1,12 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.DataType
 
 /** Forward fill: replace nulls with the most recent non-null value in event
   * order (W1, reference `_forward_fill_dataframe` core.py:1034-1072).
@@ -11,17 +15,18 @@ import org.apache.spark.sql.functions._
   *
   *  - [[global]]: one `last(col, ignoreNulls).over(orderBy...)` window. Exact
   *    and simple, but an unpartitioned window sorts everything into a single
-  *    task — fine up to a few million rows, wrong at 100 TB.
+  *    task. It stays as the oracle the specs compare [[partitioned]] against.
   *
-  *  - [[partitioned]]: the scalable two-phase algorithm. Rows are bucketed by
-  *    range over the order column; phase 1 fills within buckets (parallel
-  *    windows partitioned by bucket); phase 2 computes each bucket's last
-  *    non-null per column (a small aggregate), forward-fills *that* across
-  *    buckets (window over ~thousands of bucket rows, cheap), broadcasts it
-  *    back, and patches the rows still null after phase 1 (the leading nulls
-  *    of each bucket). This is the distributed analog of the reference's
-  *    cross-chunk seeding (`last_row_vals`, core.py:1043-1071), expressed as
-  *    pure DataFrame transforms so Catalyst/AQE keep optimizing around it.
+  *  - [[partitioned]]: the reference's chunk seeding, run on the partitions
+  *    of one global sort. The reference fills each chunk of the merged stream
+  *    and seeds the next chunk with the previous one's last values
+  *    (`last_row_vals`, core.py:1043-1071). Here the chunks are the range
+  *    partitions of one `orderBy`: a small job collects each partition's last
+  *    non-null value per column, the driver folds those into a carry-in per
+  *    partition, and a single sequential pass per partition fills nulls from
+  *    a running carry. Both passes read the same shuffle output, so the input
+  *    is sorted once, and the result declares that sort's partitioning and
+  *    ordering, so a later `orderBy` on the same keys is free.
   */
 object ForwardFill {
 
@@ -36,109 +41,87 @@ object ForwardFill {
     }
   }
 
-  /** Quantile-derived bucket bounds for [[partitioned]]: `numBuckets - 1`
-    * interior split points from `approxQuantile` (one narrow pass over the
-    * order column, nulls ignored), deduplicated — a heavy repeated value
-    * collapses its splits, yielding fewer but still balanced buckets. Uniform
-    * value-range bucketing would concentrate a bursty distribution (90% of
-    * events in 1% of the time span) into a couple of buckets, each a single
-    * window task; quantile bounds keep every bucket near `rows/numBuckets`
-    * regardless of the distribution.
+  /** The last non-null value seen per fill column, in one partition's row
+    * order. Values are copied with `InternalRow.copyValue`: strings, structs,
+    * arrays and maps read from a sorted row point into buffers the next row
+    * reuses.
     */
-  private[graft] def bucketBounds(
-      df: DataFrame, orderCol: String, numBuckets: Int): Array[Double] = {
-    val probes = (1 until numBuckets).map(_.toDouble / numBuckets).toArray
-    // NaN keys are excluded from the bounds (they would corrupt the
-    // quantile sketch); search_sorted buckets them LAST, matching Spark's
-    // sort order (NaN greater than every double).
-    df.select(col(orderCol).cast("double").as(orderCol))
-      .filter(!isnan(col(orderCol)))
-      .stat.approxQuantile(orderCol, probes, 0.001)
-      .distinct.sorted
+  private final class Carry(ordinals: Array[Int], types: Array[DataType],
+      val values: Array[Any]) {
+
+    /** Take `row`'s non-null fill values; true iff one of its nulls can be
+      * filled from the carry.
+      */
+    def absorb(row: InternalRow): Boolean = {
+      var fillable = false
+      var j = 0
+      while (j < ordinals.length) {
+        val i = ordinals(j)
+        if (!row.isNullAt(i)) values(j) = InternalRow.copyValue(row.get(i, types(j)))
+        else if (values(j) != null) fillable = true
+        j += 1
+      }
+      fillable
+    }
+
+    /** `row` with its fill-column nulls replaced from the carry, written into
+      * `out` (reused: the scan above projects each row before the next).
+      */
+    def patch(row: InternalRow, all: Array[DataType], out: GenericInternalRow): InternalRow = {
+      var i = 0
+      while (i < all.length) {
+        out.update(i, if (row.isNullAt(i)) null else row.get(i, all(i)))
+        i += 1
+      }
+      var j = 0
+      while (j < ordinals.length) {
+        if (row.isNullAt(ordinals(j))) out.update(ordinals(j), values(j))
+        j += 1
+      }
+      out
+    }
   }
 
-  /** Bucket id from sorted split bounds: number of splits <= value, via the
-    * native O(log splits) [[graft.functions.SearchSorted]] binary search (a
-    * chained when-sum over 255 splits measured ~30x slower at 40M rows).
-    * Null order keys sort first in global() (nulls-first asc); bucket -1
-    * gives them the same position here.
-    */
-  private def bucketCol(orderCol: String, splits: Array[Double]): Column = {
-    val v = col(orderCol).cast("double")
-    val idx =
-      if (splits.isEmpty) lit(0L)
-      else graft.functions.SearchSorted.searchSorted(v, splits)
-    when(col(orderCol).isNull, lit(-1L)).otherwise(idx)
-  }
-
-  /** Scalable forward fill. `orderCol` must be numeric (e.g. epoch millis or
-    * a dense index); `tieCols` complete the total order within equal
-    * `orderCol` values. `numBuckets` should be >= the executor parallelism.
+  /** Scalable forward fill over the total order `orderCol` then `tieCols`
+    * (ascending, nulls first, the order [[global]] uses). The result has
+    * `df`'s columns.
     *
-    * The input lineage is descended twice, but the bucket-bounds descent
-    * reads ONLY the order column — parquet column pruning makes it a narrow
-    * scan — so the extra cost at scale is a fraction of one full pass
-    * (verified via `.explain`: the wide window pass appears exactly once in
-    * the plan).
+    * Jobs: the sort's own (range sampling, and the shuffle map stage when
+    * adaptive execution is on) plus one that returns at most one row per
+    * partition. The fill itself runs lazily in the result's actions, reusing
+    * the sort's shuffle output.
     */
   def partitioned(
       df: DataFrame,
       fillCols: Seq[String],
       orderCol: String,
-      tieCols: Seq[Column] = Nil,
-      numBuckets: Int = 256): DataFrame = {
-    if (df.isEmpty) return df
-    val bCol = bucketCol(orderCol, bucketBounds(df, orderCol, numBuckets))
+      tieCols: Seq[Column] = Nil): DataFrame = {
+    val sorted = df.orderBy(col(orderCol) +: tieCols: _*)
+    val schema = sorted.schema
+    val all = schema.fields.map(_.dataType)
+    val ordinals = fillCols.map(schema.fieldIndex).toArray
+    val types = ordinals.map(all(_))
+    val empty = () => new Array[Any](ordinals.length)
 
-    // Bucket summaries straight from the input (narrow, column-pruned scan):
-    // the last non-null value per bucket per column == the same summary
-    // computed from a within-bucket-filled frame, so no second wide pass is
-    // needed. max_by skips rows whose ordering key is null, which encodes
-    // "last NON-NULL".
-    val ordKey = struct(col(orderCol) +: tieCols: _*)
-    val sumAggs = fillCols.map { c =>
-      max_by(col(c), when(col(c).isNotNull, ordKey)).as(s"__lv_$c")
+    // each partition's last non-null values, then the carry-in per partition:
+    // partition p starts from the last non-null values of partitions < p
+    val (rows, lasts) = Bridge.withSqlExecution(sorted, "forwardFill") {
+      val rows = sorted.queryExecution.toRdd
+      (rows, rows.mapPartitions { it =>
+        val c = new Carry(ordinals, types, empty())
+        it.foreach(c.absorb)
+        Iterator.single(c.values)
+      }.collect())
     }
-    val summaries = df.withColumn("__ffb", bCol)
-      .groupBy(col("__ffb"))
-      .agg(sumAggs.head, sumAggs.tail: _*)
+    val carryIn = lasts.scanLeft(empty()) { (in, last) =>
+      in.indices.map(j => if (last(j) != null) last(j) else in(j)).toArray
+    }
 
-    // Cross-bucket carry: forward-fill the summaries shifted one bucket, so
-    // bucket b sees only the carry-in from buckets < b. The summaries are
-    // <= numBuckets rows — collected and filled driver-side (bounded, like
-    // the resampler's slice map) instead of an unpartitioned window, so no
-    // stage anywhere funnels data-sized input into one task.
-    val spark   = df.sparkSession
-    val sumRows = summaries.collect().sortBy(_.getLong(0))
-    val carryRows = new Array[org.apache.spark.sql.Row](sumRows.length)
-    val lastSeen  = scala.collection.mutable.ArrayBuffer.fill[Any](fillCols.length)(null)
-    for (i <- sumRows.indices) {
-      carryRows(i) = org.apache.spark.sql.Row.fromSeq(
-        sumRows(i).getLong(0) +: lastSeen.toSeq)
-      for (j <- fillCols.indices) {
-        val v = sumRows(i).get(j + 1)
-        if (v != null) lastSeen(j) = v
-      }
-    }
-    val sumSchema = summaries.schema
-    val carrySchema = org.apache.spark.sql.types.StructType(
-      sumSchema.head +: fillCols.zipWithIndex.map { case (c, j) =>
-        sumSchema(j + 1).copy(name = s"__carry_$c")
-      })
-    val carry = spark.createDataFrame(
-      java.util.Arrays.asList(carryRows: _*), carrySchema)
-
-    // Single wide pass: within-bucket windows (parallel across executors),
-    // then patch each bucket's leading nulls from the broadcast carry-in.
-    val wIn = Window.partitionBy(col("__ffb"))
-      .orderBy(col(orderCol) +: tieCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val filled = fillCols.foldLeft(df.withColumn("__ffb", bCol)) { (d, c) =>
-      d.withColumn(c, last(col(c), ignoreNulls = true).over(wIn))
-    }
-    val joined = filled.join(broadcast(carry), Seq("__ffb"), "left")
-    fillCols.foldLeft(joined) { (d, c) =>
-      d.withColumn(c, coalesce(col(c), col(s"__carry_$c")))
-    }.drop("__ffb" +: fillCols.map(c => s"__carry_$c"): _*)
+    val filled = rows.mapPartitionsWithIndex({ (p, it) =>
+      val c = new Carry(ordinals, types, carryIn(p).clone())
+      val out = new GenericInternalRow(all.length)
+      it.map(r => if (c.absorb(r)) c.patch(r, all, out) else r)
+    }, preservesPartitioning = true)
+    Bridge.sortedFrame(sorted, filled)
   }
 }

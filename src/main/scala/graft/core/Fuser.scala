@@ -97,20 +97,21 @@ object Fuser {
   /** Load + fuse path-based sources. Parquet sources without a declared
     * `secondarySortCol` get a recompute-stable file-order row id attached
     * (see `SourceLoader.parquetRowId`) so the fused tie order is
-    * deterministic across actions and task retries.
+    * deterministic across actions and task retries. Each source is listed
+    * once: the row id reuses the load's ordered file list.
     */
   def fuse(spark: SparkSession, specs: Seq[SourceSpec], opts: FuseOptions): FuseResult =
     fuseFrames(
       specs.map { s =>
-        var df = SourceLoader.load(spark, s)
-        if (s.secondarySortCol.isEmpty && s.format == "parquet")
+        val (loaded, files) = SourceLoader.loadListed(spark, s)
+        var df = loaded
+        // A partitioned layout (no flat file list) keeps the legacy id.
+        if (s.secondarySortCol.isEmpty && s.format == "parquet" && files.nonEmpty)
           // Narrow catch: only the known unresolvable-`_metadata` case
-          // (forceSchema/partitioned loads project it away) falls back to the
-          // legacy id — any OTHER analysis failure (e.g. a column conflict),
-          // a bad regex or an FS failure must propagate, not silently demote
-          // the determinism guarantee.
-          try df = df.withColumn(RowIdCol, SourceLoader.parquetRowId(spark, s.path,
-            s.fileSortRegex, s.fileSortIdx))
+          // (forceSchema loads project it away) falls back to the legacy
+          // id — any OTHER analysis failure (e.g. a column conflict) must
+          // propagate, not silently demote the determinism guarantee.
+          try df = df.withColumn(RowIdCol, SourceLoader.parquetRowId(s.path, files))
           catch {
             case e: org.apache.spark.sql.AnalysisException
                 if e.getMessage.contains("_metadata") ||
@@ -209,16 +210,16 @@ object Fuser {
     startTs.foreach(s => fused = fused.filter(col(TimestampCol) >= lit(s)))
     endTs.foreach(e => fused = fused.filter(col(TimestampCol) <= lit(e)))
 
-    // Global chronological order with deterministic tiebreak (M4).
-    fused = fused.orderBy(col(TimestampCol), col(SourceIdCol), col(RowIdCol))
-
-    // Engine-level forward fill of real rows (W1, reference core.py:481-482).
+    // Global chronological order with deterministic tiebreak (M4). With
+    // engine-level forward fill of real rows (W1, reference core.py:481-482)
+    // the fill runs that sort itself and declares it, so the orderBy after
+    // it plans no exchange and no sort.
     if (opts.forwardFillData) {
       val fillCols = fused.columns.filterNot(Set(TimestampCol, SourceIdCol, RowIdCol)).toSeq
       fused = ForwardFill.partitioned(fused, fillCols, TimestampCol,
         Seq(col(SourceIdCol), col(RowIdCol)))
-        .orderBy(col(TimestampCol), col(SourceIdCol), col(RowIdCol))
     }
+    fused = fused.orderBy(col(TimestampCol), col(SourceIdCol), col(RowIdCol))
 
     if (opts.removeInternalCols)
       fused = fused.drop(SourceIdCol, RowIdCol)

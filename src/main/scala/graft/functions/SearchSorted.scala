@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * the value: the bucket index of `value` in the partition induced by the
   * sorted split points (numpy's `searchsorted(side='right')`).
   *
-  * Exists because quantile-derived bucketing (ForwardFill) needs a per-row
-  * bucket id against up to ~256 split points: a chained
+  * Exists because quantile-derived bucketing (e.g. `Queries.quantileTransform`)
+  * needs a per-row bucket id against a sorted split grid: a chained
   * `when(v >= s0, 1) + when(v >= s1, 1) + ...` column is O(splits) CaseWhen
   * nodes evaluated per row — measured ~30x slower end-to-end at 40M rows —
   * while this is one codegen'd O(log splits) binary search over a constant

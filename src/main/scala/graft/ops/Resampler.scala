@@ -131,9 +131,9 @@ object Resampler {
     // range-partitioned into `coverageBuckets` equal slices: lead() runs
     // within each slice (parallel windows), and each slice's final row chains
     // to the next non-empty slice's first k, a per-slice scalar collected from
-    // a narrow ts-only descent (<= coverageBuckets rows — the same bounded
-    // two-phase carry `ForwardFill.partitioned` uses, with no unpartitioned
-    // window anywhere).
+    // a narrow ts-only descent (<= coverageBuckets rows, folded on the
+    // driver like `ForwardFill.partitioned`'s per-partition carry-in, with no
+    // unpartitioned window anywhere).
     val sliceWidth = kEnd / opts.coverageBuckets + 1
     val sliceExpr  = expr(s"__k div $sliceWidth")
 

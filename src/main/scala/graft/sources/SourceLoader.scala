@@ -152,7 +152,25 @@ object SourceLoader {
     * PER FILE (the reference's probe/sampling semantics, datasources.py:230
     * — each file contributes its first `num_rows` rows), not globally.
     */
-  def load(spark: SparkSession, spec: SourceSpec): DataFrame = loadFull(spark, spec)
+  def load(spark: SparkSession, spec: SourceSpec): DataFrame = loadListed(spark, spec)._1
+
+  /** [[load]], plus the ordered file list the frame reads, from the one
+    * listing of the source. The list is empty for a partitioned parquet
+    * layout, which Spark's partition discovery reads instead.
+    */
+  private[graft] def loadListed(spark: SparkSession, spec: SourceSpec): (DataFrame, Seq[String]) = {
+    val listed = scala.util.Try(listSourceFiles(spark, spec.path, spec.format))
+    if (spec.format == "parquet" && spec.schema.isEmpty && !spec.forceSchema &&
+        listed.isFailure && hasSubdirs(spark, spec.path))
+      // Partitioned/nested layout (e.g. date=.../part-*.parquet): delegate to
+      // Spark's partition discovery; per-file validation and the file-order
+      // row id don't apply here.
+      (perFileCap(spark.read.parquet(spec.path), spec), Nil)
+    else {
+      val files = specFiles(spec, listed.get)
+      (readFiles(spark, spec, files), files)
+    }
+  }
 
   /** Per-file row cap for parquet scans: `_metadata.row_index` is the row's
     * physical position in its file, so one metadata filter expresses
@@ -161,12 +179,11 @@ object SourceLoader {
   private def perFileCap(df: DataFrame, spec: SourceSpec): DataFrame =
     spec.numRows.map(n => df.filter(col("_metadata.row_index") < n)).getOrElse(df)
 
-  /** The spec's file list: listed, and narrowed by `fileSortRegex` when set
+  /** The spec's file list: the listing, narrowed by `fileSortRegex` when set
     * (files without a sort key are excluded from processing entirely, like
     * the reference's `sort_data` — never loaded with an undefined order).
     */
-  private def specFiles(spark: SparkSession, spec: SourceSpec): Seq[String] = {
-    val listed = listSourceFiles(spark, spec.path, spec.format)
+  private def specFiles(spec: SourceSpec, listed: Seq[String]): Seq[String] =
     spec.fileSortRegex match {
       case Some(r) =>
         val ordered = orderFiles(listed, r, spec.fileSortIdx)
@@ -175,7 +192,6 @@ object SourceLoader {
         ordered
       case None => listed
     }
-  }
 
   /** True when `path` is a directory containing subdirectories (a partitioned
     * / nested parquet layout that directory listing can't flatten).
@@ -187,16 +203,9 @@ object SourceLoader {
       fs.listStatus(p).exists(_.isDirectory)
   }
 
-  private def loadFull(spark: SparkSession, spec: SourceSpec): DataFrame = spec.format match {
-    case "parquet" if spec.schema.isEmpty && !spec.forceSchema &&
-        scala.util.Try(listSourceFiles(spark, spec.path, "parquet")).isFailure &&
-        hasSubdirs(spark, spec.path) =>
-      // Partitioned/nested layout (e.g. date=.../part-*.parquet): delegate to
-      // Spark's partition discovery; per-file validation and the file-order
-      // row id don't apply here.
-      perFileCap(spark.read.parquet(spec.path), spec)
+  private def readFiles(
+      spark: SparkSession, spec: SourceSpec, files: Seq[String]): DataFrame = spec.format match {
     case "parquet" =>
-      val files = specFiles(spark, spec)
       spec.schema match {
         case Some(s) if spec.forceSchema =>
           // Cast to the declared schema (reference datasources.py:394-395).
@@ -215,7 +224,6 @@ object SourceLoader {
         case _ => perFileCap(spark.read.parquet(files: _*), spec)
       }
     case "csv" =>
-      val files = specFiles(spark, spec)
       // PERMISSIVE mode gives per-cell null fallback for malformed typed
       // values — subsuming the reference's whole-file re-infer retry
       // (datasources.py:253-263) without ever masking a validation error.
@@ -264,7 +272,6 @@ object SourceLoader {
       // parse (Jackson skips unrequested fields) and pins types; without
       // one, Spark samples the files to infer. PERMISSIVE mirrors the CSV
       // branch: malformed lines null out instead of failing the job.
-      val files = specFiles(spark, spec)
       val base = spark.read.option("mode", "PERMISSIVE")
       val read = spec.schema match {
         case Some(s) => base.schema(s).json(files: _*)
@@ -304,15 +311,11 @@ object SourceLoader {
     * depends on runtime partition layout. It is also monotone in (file order,
     * row order), reproducing the reference's concat order
     * (core.py:467-470) as a sort tiebreaker. Files are keyed by name
-    * (unique within a source directory).
+    * (unique within a source directory). `files` is the source's ordered
+    * file list as [[loadListed]] returns it; `path` names the source in the
+    * error raised for a scanned file missing from it.
     */
-  def parquetRowId(
-      spark: SparkSession,
-      path: String,
-      fileSortRegex: Option[String] = None,
-      fileSortIdx: Int = 0): org.apache.spark.sql.Column = {
-    val listed = listSourceFiles(spark, path, "parquet")
-    val files  = fileSortRegex.map(orderFiles(listed, _, fileSortIdx)).getOrElse(listed)
+  def parquetRowId(path: String, files: Seq[String]): org.apache.spark.sql.Column = {
     val idx: Map[String, Long] = files.zipWithIndex.map { case (f, i) =>
       new Path(f).getName -> i.toLong
     }.toMap

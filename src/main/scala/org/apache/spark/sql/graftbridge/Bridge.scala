@@ -55,6 +55,53 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(session, df.queryExecution.logical)
   }
 
+  /** Run `body`, which executes `df`'s plan outside a Dataset action (e.g.
+    * jobs over `df.queryExecution.toRdd`), as one SQL execution of that
+    * plan, as `Dataset.checkpoint` does: listeners and the UI then see its
+    * jobs and planning phases.
+    */
+  def withSqlExecution[T](df: org.apache.spark.sql.DataFrame, name: String)(body: => T): T =
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+      df.queryExecution, Some(name))(body)
+
+  /** Wrap `rdd` as a frame that declares `sorted`'s global order. `sorted`
+    * must be a `df.orderBy(...)` and `rdd` must hold its rows partition for
+    * partition and in order, with the same columns (e.g. a per-partition map
+    * over `sorted.queryExecution.toRdd`). The `LogicalRDD` leaf states the
+    * sort's range partitioning and output ordering on fresh attributes, as
+    * `Dataset.checkpoint` does, so a later `orderBy` on the same keys plans
+    * no exchange and no sort, and `toLocalIterator` walks the rows in order.
+    */
+  def sortedFrame(
+      sorted: org.apache.spark.sql.DataFrame,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeMap, SortOrder}
+    val session = sorted.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val qe = sorted.queryExecution
+    val order = qe.analyzed match {
+      case s: org.apache.spark.sql.catalyst.plans.logical.Sort if s.global => s.order
+      case p => throw new IllegalArgumentException(
+        s"sortedFrame: expected a global sort, got ${p.nodeName}")
+    }
+    val fresh = qe.analyzed.output.map(_.newInstance())
+    val rename = AttributeMap(qe.analyzed.output.zip(fresh))
+    val ordering = order.map(_.transform {
+      case a: org.apache.spark.sql.catalyst.expressions.Attribute => rename.getOrElse(a, a)
+    }.asInstanceOf[SortOrder])
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      session,
+      new org.apache.spark.sql.execution.LogicalRDD(
+        fresh, rdd,
+        org.apache.spark.sql.catalyst.plans.physical.RangePartitioning(
+          ordering, rdd.getNumPartitions),
+        ordering, isStreaming = false, stream = None)(
+        session,
+        Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
+          qe.optimizedPlan.stats.sizeInBytes)),
+        None))
+  }
+
   /** Stamp a just-checkpointed frame's `LogicalRDD` with the hash
     * partitioning its rows PHYSICALLY have.
     *

@@ -26,9 +26,12 @@ class SparkEntrySpec extends SparkTestBase {
   test("Harness.runQuery matches a plain collect and releases its checkpoints") {
     assumeTestData(dir)
     def cachedRdds = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    // a forward-filled frame is an RDD leaf too, but not a checkpoint
     def hasCheckpointLeaf(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.analyzed.collectLeaves()
-        .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+      df.queryExecution.analyzed.collectLeaves().exists {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.isCheckpointed
+        case _ => false
+      }
     for ((q, checkpointed) <- Seq("q_ffill" -> false, "q_dedup_clusters" -> true)) {
       val plain = pipeline.Dedup.withMaterialized(
         SparkEntry.queries(q)(spark, dir).collect().map(_.toString).sorted.toSeq)

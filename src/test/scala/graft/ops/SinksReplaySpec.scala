@@ -58,4 +58,45 @@ class SinksReplaySpec extends SparkTestBase {
     assert(status == Replay.ForceStop)
     assert(n == 10)
   }
+
+  test("replay of a forward-filled fuse walks the range partitions in order") {
+    import graft.core.{ForwardFill, Fuser}
+    import graft.core.Fuser.{FuseOptions, RowIdCol, SourceIdCol, TimestampCol}
+    import graft.sources.FrameSource
+    import org.apache.spark.sql.functions.col
+    val rnd = new scala.util.Random(3)
+    def source(name: String) = FrameSource(
+      (0 until 1500).map { i =>
+        (rnd.nextInt(20000).toLong, i.toLong,
+         if (rnd.nextDouble() < 0.3) Some(rnd.nextInt(100).toDouble) else None,
+         if (rnd.nextDouble() < 0.1) Some(s"$name$i") else None)
+      }.toDF("ts", "seq", "price", "tag").repartition(3),
+      name, "ts", secondarySortCol = Some("seq"))
+    val sources = Seq(source("trades"), source("quotes"))
+
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val prior = keys.map(spark.conf.get)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try {
+      val filled = Fuser.fuseFrames(sources, FuseOptions(forwardFillData = true)).df
+      assert(filled.queryExecution.toRdd.getNumPartitions == 8)
+      val replayed = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
+      var lastTs = Long.MinValue
+      val status = Replay.replay(filled) { (ts, row) =>
+        assert(ts >= lastTs, s"timestamp $ts after $lastTs")
+        lastTs = ts
+        replayed += row.toSeq
+      }
+      assert(status == Replay.Ok)
+
+      val fused = Fuser.fuseFrames(sources, FuseOptions(keepRowId = true)).df
+      val order = Seq(col(TimestampCol), col(SourceIdCol), col(RowIdCol))
+      val fillCols = fused.columns.filterNot(Set(TimestampCol, SourceIdCol, RowIdCol)).toSeq
+      val expected = ForwardFill.global(fused, fillCols, order)
+        .orderBy(order: _*).drop(RowIdCol).collect().map(_.toSeq).toSeq
+      assert(replayed.size == 3000)
+      assert(replayed.toSeq == expected)
+    } finally keys.zip(prior).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 }
