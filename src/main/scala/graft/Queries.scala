@@ -331,8 +331,8 @@ object Queries {
        |  SELECT unnest(generate_series(0, (CASE WHEN t1 >= b0 THEN (t1 - b0) // $stepMs ELSE -1 END) + 1)) AS k, b0
        |  FROM params
        |), ev_k AS (
-       |  -- one whole row per bucket, tie-broken like the engine's
-       |  -- max_by(struct(...), (t, event_id)) — per-field arg_max could tear
+       |  -- one whole row per bucket, the last in (t, event_id) order as the
+       |  -- engine's sorted pass emits it — per-field arg_max could tear
        |  -- fields from different tied rows
        |  SELECT k, event_id, user_id, value FROM (
        |    SELECT ((t - b0 + $stepMs) // $stepMs) AS k, event_id, user_id, value,

@@ -31,9 +31,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    where runtime stats beat static estimates: the checkpointed dedup
   *    pair family regresses 1.3x under a static plan while every
   *    file-leaf class improves (0.5-0.9x). Checkpoint plans stay adaptive.
-  *    A `ForwardFill.partitioned` result is such a leaf too, so `q_ffill`'s
-  *    final action is gate-exempt; its sort already ran while the frame was
-  *    built.
+  *    A [[SortedScan]] result (`ForwardFill.partitioned`, the global
+  *    `Resampler.resample`) is such a leaf too, so the final actions of
+  *    `q_ffill`, `q_resample_1h`, `q_resample_1d` and `q_resample_window`
+  *    are gate-exempt; their sort already ran while the frame was built.
   *  - Each [[Generate]] multiplies the size estimate by 8 (explodes grow
   *    rows past the leaf estimate; conservative, so expansion near the
   *    threshold errs toward keeping AQE on).

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.DataType
 
 /** Forward fill: replace nulls with the most recent non-null value in event
@@ -17,16 +16,9 @@ import org.apache.spark.sql.types.DataType
   *    and simple, but an unpartitioned window sorts everything into a single
   *    task. It stays as the oracle the specs compare [[partitioned]] against.
   *
-  *  - [[partitioned]]: the reference's chunk seeding, run on the partitions
-  *    of one global sort. The reference fills each chunk of the merged stream
-  *    and seeds the next chunk with the previous one's last values
-  *    (`last_row_vals`, core.py:1043-1071). Here the chunks are the range
-  *    partitions of one `orderBy`: a small job collects each partition's last
-  *    non-null value per column, the driver folds those into a carry-in per
-  *    partition, and a single sequential pass per partition fills nulls from
-  *    a running carry. Both passes read the same shuffle output, so the input
-  *    is sorted once, and the result declares that sort's partitioning and
-  *    ordering, so a later `orderBy` on the same keys is free.
+  *  - [[partitioned]]: the reference's chunk seeding (`last_row_vals`,
+  *    core.py:1043-1071), where the chunks are the range partitions of one
+  *    [[SortedScan]]: each starts from the last non-null values before it.
   */
 object ForwardFill {
 
@@ -83,45 +75,37 @@ object ForwardFill {
   }
 
   /** Scalable forward fill over the total order `orderCol` then `tieCols`
-    * (ascending, nulls first, the order [[global]] uses). The result has
-    * `df`'s columns.
+    * (ascending, nulls first, the order [[global]] uses), as a
+    * [[SortedScan]]. The result has `df`'s columns.
     *
-    * Jobs: the sort's own (range sampling, and the shuffle map stage when
-    * adaptive execution is on) plus one that returns at most one row per
-    * partition. The fill itself runs lazily in the result's actions, reusing
-    * the sort's shuffle output.
+    * Jobs: the sort's own plus one that returns at most one row per
+    * partition. The fill itself runs lazily in the result's actions.
     */
   def partitioned(
       df: DataFrame,
       fillCols: Seq[String],
       orderCol: String,
       tieCols: Seq[Column] = Nil): DataFrame = {
-    val sorted = df.orderBy(col(orderCol) +: tieCols: _*)
-    val schema = sorted.schema
-    val all = schema.fields.map(_.dataType)
-    val ordinals = fillCols.map(schema.fieldIndex).toArray
+    val all = df.schema.fields.map(_.dataType)
+    val ordinals = fillCols.map(df.schema.fieldIndex).toArray
     val types = ordinals.map(all(_))
     val empty = () => new Array[Any](ordinals.length)
 
-    // each partition's last non-null values, then the carry-in per partition:
-    // partition p starts from the last non-null values of partitions < p
-    val (rows, lasts) = Bridge.withSqlExecution(sorted, "forwardFill") {
-      val rows = sorted.queryExecution.toRdd
-      (rows, rows.mapPartitions { it =>
-        val c = new Carry(ordinals, types, empty())
-        it.foreach(c.absorb)
-        Iterator.single(c.values)
-      }.collect())
+    SortedScan(df, col(orderCol) +: tieCols, "forwardFill") { it =>
+      // the partition's last non-null values
+      val c = new Carry(ordinals, types, empty())
+      it.foreach(c.absorb)
+      c.values
+    } { lasts =>
+      // partition p starts from the last non-null values of partitions < p
+      val carryIn = lasts.scanLeft(empty()) { (in, last) =>
+        in.indices.map(j => if (last(j) != null) last(j) else in(j)).toArray
+      }
+      (p, it) => {
+        val c = new Carry(ordinals, types, carryIn(p).clone())
+        val out = new GenericInternalRow(all.length)
+        it.map(r => if (c.absorb(r)) c.patch(r, all, out) else r)
+      }
     }
-    val carryIn = lasts.scanLeft(empty()) { (in, last) =>
-      in.indices.map(j => if (last(j) != null) last(j) else in(j)).toArray
-    }
-
-    val filled = rows.mapPartitionsWithIndex({ (p, it) =>
-      val c = new Carry(ordinals, types, carryIn(p).clone())
-      val out = new GenericInternalRow(all.length)
-      it.map(r => if (c.absorb(r)) c.patch(r, all, out) else r)
-    }, preservesPartitioning = true)
-    Bridge.sortedFrame(sorted, filled)
   }
 }

@@ -1,15 +1,19 @@
 package graft.ops
 
+import graft.core.SortedScan
 import graft.time.Intervals
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType}
 
 import java.time.{ZoneId, ZoneOffset}
 
 /** Tumbling-grid resampler with last-value sampling, gap fill and selective
-  * forward fill — the reference's `BatchEveryIntervalHandler.process/finalize`
-  * (classes.py:589-637) re-expressed as one distributed DataFrame transform.
+  * forward fill: the reference's `BatchEveryIntervalHandler.process/finalize`
+  * (classes.py:589-637).
   *
   * Semantics (derived from the reference's event loop; SURVEY §2.4):
   *
@@ -27,10 +31,10 @@ import java.time.{ZoneId, ZoneOffset}
   *    `ffillKeys`, which carry the last real event's values
   *    (classes.py:608-623).
   *
-  * Scale shape: one `groupBy(bucket)` (map-side combined `max_by`), a
-  * broadcast-range join onto the grid, and a bucketed forward fill — no
-  * global single-partition window, no driver-side row loop. The grid size is
-  * `(max_ts - min_ts)/step`, bounded by the time span, not the data volume.
+  * Scale shape: the global [[resample]] runs the reference's loop on each
+  * partition of one [[SortedScan]]; all a partition needs from the others is
+  * the next one's first bucket. No window, no aggregation shuffle, no
+  * driver-side row loop. [[resampleByKey]] runs independent grids per key.
   */
 object Resampler {
 
@@ -40,29 +44,18 @@ object Resampler {
       tz: ZoneId = ZoneOffset.UTC,
       /** Tiebreak columns completing the event order for equal timestamps. */
       tieCols: Seq[String] = Nil,
-      /** Range buckets for the coverage window of the global [[resample]]
-        * (parallelism of the gap-span computation; keyed resample doesn't
-        * need it). Should be >= executor parallelism.
-        */
-      coverageBuckets: Int = 256,
-      /** Emit rows in a total order (global: by boundary; keyed: by key then
-        * boundary). The total order costs a full range-shuffle + sort of the
-        * resampled grid as the FINAL stage — at a fine grid that sort
-        * dominates the whole job (measured: the 1s-grid stress stage is
-        * sort-bound). Set false when the consumer re-shuffles anyway
-        * (writes partitioned output, joins, aggregates): rows then stay on
-        * their coverage partitions, ascending by boundary within each
-        * coverage slice (global) / within each key run (keyed), with no
-        * cross-partition order guarantee.
+      /** [[resampleByKey]] only: emit rows ordered by key then boundary, at
+        * the cost of a final range shuffle and sort. Set false when the
+        * consumer re-shuffles anyway: rows then stay ascending by boundary
+        * within each key run. The global [[resample]] ignores it: its output
+        * is ordered by boundary at no cost.
         */
       sorted: Boolean = true)
 
   /** Max elements per materialized `sequence()` array in the gap-span
-    * explode. A single `sequence(k, kend)` materializes the WHOLE span as
-    * one in-memory array before exploding — a year-long quiet gap on a
-    * 100 ms grid would be a 300M-element allocation (and sequence() caps at
-    * 2³¹). Chunking explodes bounded arrays: an outer explode over chunk
-    * indices, an inner one over ≤ ChunkSize grid points.
+    * explode of [[resampleByKey]] and [[Interpolate]]: one `sequence(k,
+    * kend)` would materialize a whole year-long 100 ms gap (300M elements).
+    * Chunking explodes ≤ ChunkSize grid points per array.
     */
   private val ChunkSize = 65536L
 
@@ -78,101 +71,80 @@ object Resampler {
           least(col(toCol), col("__chunk") * lit(ChunkSize) + lit(ChunkSize - 1)))))
       .drop("__chunk")
 
-  /** Resample `df` to the `interval` grid. `tsCol` must be epoch-ms Long.
-    * Output schema = input schema with `tsCol` holding the grid boundary;
-    * rows ordered by boundary when `opts.sorted` (see [[ResampleOptions]]).
+  /** Resample `df` to the `interval` grid. `tsCol` must hold epoch ms.
+    * Output: `tsCol` (Long, the grid boundary) first, then `df`'s other
+    * columns, all nullable; rows ordered by boundary. Jobs: the sort's own
+    * plus one that returns two timestamps per partition.
     */
   def resample(
       df: DataFrame,
       interval: String,
       tsCol: String = graft.core.Fuser.TimestampCol,
       opts: ResampleOptions = ResampleOptions()): DataFrame = {
-
     val step = Intervals.toMillis(interval)
-
-    val bounds = df.agg(min(col(tsCol)), max(col(tsCol))).head()
-    if (bounds.isNullAt(0)) return df.limit(0)
-    val (t0, t1) = (bounds.getLong(0), bounds.getLong(1))
-
-    val b0 = Intervals.nextBoundary(t0, interval, initialize = true, opts.tz)
-    // Boundaries emitted in the normal loop: all B_k <= t1.
-    val kNormMax = Math.floorDiv(t1 - b0, step) // may be -1 if t1 < b0
-    // Tail flush adds the first boundary strictly after t1.
-    val kEnd = if (opts.processBatchEnd) kNormMax + 1 else kNormMax
-    if (kEnd < 0) return df.limit(0)
-
     val dataCols = df.columns.filterNot(_ == tsCol).toSeq
+    val in = df.filter(col(tsCol).isNotNull) // a null timestamp never emits
+      .select(col(tsCol).cast(LongType).as(tsCol) +: dataCols.map(col): _*)
+    val types = in.schema.fields.map(_.dataType)
+    val fill = in.columns.map(opts.ffillKeys.contains)
 
-    // Each event reports to the first boundary strictly after it:
-    // k = floorDiv(ts - b0, step) + 1, in pure integer math (pmod keeps the
-    // remainder non-negative so the division floors rather than truncates).
-    val delta = col(tsCol) - lit(b0)
-    val kExpr = ((delta - pmod(delta, lit(step))) / lit(step)).cast("long") + lit(1L)
+    SortedScan(in, (tsCol +: opts.tieCols).map(col), "resample", nullable = dataCols) { it =>
+      // the partition's first and last timestamps
+      val ts = it.map(_.getLong(0))
+      Option.when(ts.hasNext)(ts.next()).map(first => (first, ts.foldLeft(first)((_, t) => t)))
+    } { spans =>
+      // B0 follows the first event, so that event's bucket is 0; kEnd is the
+      // last bucket emitted (-1: none)
+      val seen = spans.flatten
+      val (b0, kEnd) = seen.headOption.fold((0L, -1L)) { case (t0, _) =>
+        val b0 = Intervals.nextBoundary(t0, interval, initialize = true, opts.tz)
+        (b0, Math.floorDiv(seen.last._2 - b0, step) + (if (opts.processBatchEnd) 1 else 0))
+      }
+      // partition p emits the buckets before the next non-empty partition's
+      // first one, so a bucket split across partitions is the later one's
+      val stops = spans.scanRight(kEnd + 1) { (span, after) =>
+        span.fold(after)(s => math.min(Intervals.boundaryIndexFor(s._1, b0, step), kEnd + 1))
+      }.tail
+      (p, it) => new Walk(it, types, fill, b0, step, stops(p))
+    }
+  }
 
-    // Last event per bucket, totally ordered by (ts, tieCols). One shuffle,
-    // with map-side partial max_by. This is the ONLY descent over the input.
-    val ordKey = struct((col(tsCol) +: opts.tieCols.map(col)): _*)
-    val lastPerK = df
-      .withColumn("__k", kExpr)
-      .filter(col("__k") <= lit(kEnd)) // events past the last boundary never emit
-      .groupBy(col("__k"))
-      .agg(max_by(struct(dataCols.map(col): _*), ordKey).as("__row"))
+  /** One partition's forward pass over rows sorted by timestamp (column 0):
+    * for each bucket below `stop`, its last row, then a gap row for each empty
+    * bucket before the next one. A long gap allocates nothing.
+    */
+  private final class Walk(rows: Iterator[InternalRow], types: Array[DataType],
+      fill: Array[Boolean], b0: Long, step: Long, stop: Long) extends Iterator[InternalRow] {
+    private var head: InternalRow = null // the next bucket's first row, or null
+    private var headK = stop
+    private var gap: GenericInternalRow = null
+    private var k, end = 0L // gap rows for buckets k until end
+    seek()
 
-    // Each non-empty bucket covers the grid span up to (exclusive) the next
-    // non-empty bucket; exploding that span generates its real row plus all
-    // its gap rows, each carrying the covering row for the ffill keys — the
-    // reference's prev_msg verbatim (a null ffill-key value in the covering
-    // row stays null on the gap rows, classes.py:608-623).
-    //
-    // "Next non-empty bucket" is a lead() over bucket order. Running it as one
-    // global window would serialize every non-empty bucket into a single task
-    // — at a fine grid (the reference's flagship is 100 ms) non-empty buckets
-    // ≈ event count, so that window is a scale-killer. Instead the k-space is
-    // range-partitioned into `coverageBuckets` equal slices: lead() runs
-    // within each slice (parallel windows), and each slice's final row chains
-    // to the next non-empty slice's first k, a per-slice scalar collected from
-    // a narrow ts-only descent (<= coverageBuckets rows, folded on the
-    // driver like `ForwardFill.partitioned`'s per-partition carry-in, with no
-    // unpartitioned window anywhere).
-    val sliceWidth = kEnd / opts.coverageBuckets + 1
-    val sliceExpr  = expr(s"__k div $sliceWidth")
+    private def seek(): Unit = {
+      head = if (rows.hasNext) rows.next() else null
+      headK = if (head == null) stop else Intervals.boundaryIndexFor(head.getLong(0), b0, step)
+      if (headK >= stop) { head = null; headK = stop }
+    }
 
-    // First non-empty k per slice (narrow scan: only tsCol survives pruning).
-    val sliceFirst = df
-      .select(kExpr.as("__k"))
-      .filter(col("__k") <= lit(kEnd))
-      .groupBy(sliceExpr.as("__slice"))
-      .agg(min(col("__k")).as("__first"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._1)
-    // slice -> first non-empty k of the NEXT non-empty slice
-    val nextFirst: Map[Long, Long] =
-      sliceFirst.zip(sliceFirst.drop(1)).map { case ((s, _), (_, f)) => s -> f }.toMap
-    val carryNext: Column =
-      if (nextFirst.isEmpty) lit(null).cast("long")
-      else element_at(typedLit(nextFirst), col("__slice"))
+    def hasNext: Boolean = k < end || head != null
 
-    val wLead = Window.partitionBy(col("__slice")).orderBy(col("__k"))
-    // flatten the covering struct BEFORE the chunked explode: Catalyst's
-    // nested-field extraction cannot be pushed through stacked generators
-    // (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND), and flat columns dodge it
-    val withKend = lastPerK
-      .withColumn("__slice", sliceExpr)
-      .withColumn("__kend",
-        coalesce(lead(col("__k"), 1).over(wLead), carryNext, lit(kEnd + 1L)) - 1L)
-      .select(col("__k") +: col("__kend") +:
-        dataCols.map(c => col(s"__row.$c").as(c)): _*)
-    val covered = chunkedExplode("__k", "__kend", "__kc")(withKend)
-
-    val isReal = col("__kc") === col("__k")
-    val out = covered.select(
-      (lit(b0) + col("__kc") * lit(step)).as(tsCol) +:
-      dataCols.map { c =>
-        if (opts.ffillKeys.contains(c)) col(c)
-        else when(isReal, col(c)).as(c)
-      }: _*)
-    if (opts.sorted) out.orderBy(col(tsCol)) else out
+    def next(): InternalRow =
+      if (k < end) { gap.setLong(0, b0 + k * step); k += 1; gap }
+      else {
+        // copy each row before reading the next: a sorted row's buffer is reused
+        val bucket = headK
+        var last = head.copy()
+        seek()
+        while (headK == bucket) { last = head.copy(); seek() }
+        k = bucket + 1
+        end = headK
+        if (k < end) gap = new GenericInternalRow(Array.tabulate[Any](types.length) { i =>
+          if (fill(i) && !last.isNullAt(i)) last.get(i, types(i)) else null
+        })
+        last.setLong(0, b0 + bucket * step)
+        last
+      }
   }
 
   /** Per-key resample: an independent tumbling grid per key group (the
@@ -251,8 +223,9 @@ object Resampler {
            first(col("__b0")).as("__b0"), first(col("__kend")).as("__kend"))
 
     val wLead = Window.partitionBy(keys: _*).orderBy(col("__k"))
-    // flatten before the chunked explode (see the global path's note on
-    // nested-field extraction vs stacked generators)
+    // flatten the struct before the chunked explode: Catalyst cannot push
+    // nested-field extraction through stacked generators
+    // (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
     val withKcend = lastPerK
       .withColumn("__kcend", coalesce(lead(col("__k"), 1).over(wLead) - 1L, col("__kend")))
       .select(keys ++ Seq(col("__k"), col("__kcend"), col("__b0")) ++

@@ -71,10 +71,13 @@ object Bridge {
     * sort's range partitioning and output ordering on fresh attributes, as
     * `Dataset.checkpoint` does, so a later `orderBy` on the same keys plans
     * no exchange and no sort, and `toLocalIterator` walks the rows in order.
+    * The columns named in `nullable` are declared nullable whatever
+    * `sorted` says, for an `rdd` that writes nulls into them.
     */
   def sortedFrame(
       sorted: org.apache.spark.sql.DataFrame,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow])
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      nullable: Seq[String] = Nil)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeMap, SortOrder}
     val session = sorted.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -84,7 +87,9 @@ object Bridge {
       case p => throw new IllegalArgumentException(
         s"sortedFrame: expected a global sort, got ${p.nodeName}")
     }
-    val fresh = qe.analyzed.output.map(_.newInstance())
+    val fresh = qe.analyzed.output.map { a =>
+      if (nullable.contains(a.name)) a.newInstance().withNullability(true) else a.newInstance()
+    }
     val rename = AttributeMap(qe.analyzed.output.zip(fresh))
     val ordering = order.map(_.transform {
       case a: org.apache.spark.sql.catalyst.expressions.Attribute => rename.getOrElse(a, a)

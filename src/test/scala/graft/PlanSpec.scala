@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.SimpleMode
+import org.apache.spark.sql.execution.{QueryExecution, SimpleMode}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** Plan-shape regression guards: the scale properties claimed in README
   * (pushdown, single descents, broadcasts) asserted against the actual
@@ -15,11 +19,37 @@ class PlanSpec extends SparkTestBase {
     SparkEntry.queries(q)(spark, dir).queryExecution.explainString(SimpleMode)
   }
 
+  /** The SQL execution that scans a global resample's source. The resample
+    * returns a `LogicalRDD` leaf: its sort, and the scan under it, run while
+    * the frame is built, as one execution named "resample" (`SortedScan`).
+    */
+  private def resampleExecution(q: String): QueryExecution = {
+    assumeTestData(dir)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "resample") seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries(q)(spark, dir)
+      eventually(timeout(60.seconds)) { assert(seen.size == 1, s"$q: resample executions") }
+    } finally spark.listenerManager.unregister(listener)
+    seen.peek()
+  }
+
+  /** The physical plan that execution ran (under AQE, its final plan). */
+  private def resamplePlan(q: String): String = resampleExecution(q).executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+    case p => p.toString
+  }
+
   test("time-filter bounds reach the parquet scan (PushedFilters)") {
     // not just the dedicated filter query: ANY windowed query sourced from
     // eventsBetween must prune row groups at the scan
-    for (q <- Seq("q_time_filter", "q_resample_window")) {
-      val plan = planOf(q)
+    for ((q, plan) <- Seq("q_time_filter" -> planOf("q_time_filter"),
+        "q_resample_window" -> resamplePlan("q_resample_window"))) {
       assert("PushedFilters: \\[[^\\]]*GreaterThanOrEqual\\(ts,".r.findFirstIn(plan).isDefined,
         s"$q:\n$plan")
     }
@@ -63,9 +93,9 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("resample main plan descends the source exactly once") {
-    // the coverage-carry pre-job is a separate narrow (ts-only) descent,
-    // executed at plan-build; the returned plan itself stays single-scan
-    val plan = planOf("q_resample_1h")
+    // the sort and the per-partition summary job read one scan; the
+    // returned frame is a leaf over that sort's output
+    val plan = resamplePlan("q_resample_1h")
     assert("FileScan parquet".r.findAllIn(plan).length == 1, plan)
   }
 
@@ -73,8 +103,9 @@ class PlanSpec extends SparkTestBase {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     assumeTestData(dir)
     for (q <- Seq("q_resample_1h", "q_resample_1d", "q_resample_keyed")) {
-      val df = SparkEntry.queries(q)(spark, dir)
-      val bad = df.queryExecution.optimizedPlan.collect {
+      val qe = if (q == "q_resample_keyed") SparkEntry.queries(q)(spark, dir).queryExecution
+               else resampleExecution(q)
+      val bad = qe.optimizedPlan.collect {
         case w: LWindow if w.partitionSpec.isEmpty => w
       }
       assert(bad.isEmpty, s"$q has unpartitioned windows:\n${bad.mkString("\n")}")
@@ -631,6 +662,7 @@ class PlanSpec extends SparkTestBase {
     assumeTestData(dir)
     val budgets = Seq(
       // q -> (max FileScan parquet, max Exchange)
+      // (q_resample_1h: the plan of its own sort execution, resamplePlan)
       ("q_resample_1h",    1, 3),
       ("q_resample_keyed", 2, 5),
       ("q_curate",         1, 7),
@@ -744,8 +776,9 @@ class PlanSpec extends SparkTestBase {
       ("q_bpe_bytes_merges",    0, 1),
       ("q_bpe_bytes_encode",    2, 4))
     for ((q, maxScans, maxExch) <- budgets) {
-      val plan = SparkEntry.queries(q)(spark, dir).queryExecution
-        .executedPlan.toString
+      val plan =
+        if (q == "q_resample_1h") resamplePlan(q)
+        else SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
       val scans = "FileScan parquet".r.findAllIn(plan).length
       val exch  = "(?<!Reused)Exchange ".r.findAllIn(plan).length
       assert(scans <= maxScans,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +12,40 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   /** Skip (not fail) when the driver-generated fixtures are absent. */
   def assumeTestData(dir: String): Unit =
     assume(new java.io.File(dir).isDirectory, s"fixture dir $dir not present")
+
+  /** Run `body` with the session confs in `conf` set, restoring them after. */
+  def withConf[T](conf: Map[String, String])(body: => T): T = {
+    val prior = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Adaptive execution off, 8 shuffle partitions. */
+  val aqeOff: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "8")
+
+  /** The two modes a partition-boundary case runs in. With AQE on, the
+    * coalescing floor is one byte so the coalesced reads still hold several
+    * partitions.
+    */
+  val partitionModes: Seq[(String, Map[String, String])] = Seq(
+    "AQE on" -> Map("spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1"),
+    "AQE off, 8 partitions" -> aqeOff)
+
+  /** One test per partition mode, named `name [mode]`. */
+  def inBothModes(name: String)(body: => Unit): Unit =
+    partitionModes.foreach { case (mode, conf) => test(s"$name [$mode]")(withConf(conf)(body)) }
+
+  /** Rows per partition of `df`, in partition order. */
+  def partitionSizes(df: DataFrame): Seq[Int] =
+    df.queryExecution.toRdd.mapPartitions(it => Iterator.single(it.size)).collect().toSeq
+
+  /** Run `body` once in each partition mode, inside one test. */
+  def inEachMode(body: => Unit): Unit =
+    partitionModes.foreach { case (mode, conf) => withClue(s"[$mode] ")(withConf(conf)(body)) }
 
   /** Run `body` against a genuinely new SparkSession built with
     * GraftExtensions (extensions only apply at build time), restoring the

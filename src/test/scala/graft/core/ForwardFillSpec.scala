@@ -2,7 +2,6 @@ package graft.core
 
 import graft.SparkTestBase
 import org.apache.spark.SparkEnv
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -11,33 +10,6 @@ import org.apache.spark.sql.functions._
 class ForwardFillSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
-
-  private val aqeOff = Map(
-    "spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "8")
-
-  /** The two modes each partition-boundary case runs in. With AQE on, the
-    * coalescing floor is one byte so the coalesced reads still hold several
-    * partitions.
-    */
-  private val modes = Seq(
-    "AQE on" -> Map("spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.shuffle.partitions" -> "8",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1"),
-    "AQE off, 8 partitions" -> aqeOff)
-
-  private def withConf[T](conf: Map[String, String])(body: => T): T = {
-    val prior = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
-  private def inBothModes(name: String)(body: => Unit): Unit =
-    modes.foreach { case (mode, conf) => test(s"$name [$mode]")(withConf(conf)(body)) }
-
-  /** Rows per partition of a filled frame, in partition order. */
-  private def partitionSizes(df: DataFrame): Seq[Int] =
-    df.queryExecution.toRdd.mapPartitions(it => Iterator.single(it.size)).collect().toSeq
 
   test("global fill matches reference semantics (core.py:1034-1072)") {
     val df = Seq(
@@ -85,10 +57,13 @@ class ForwardFillSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val g = ForwardFill.global(df, Seq("x"), Seq(col("ts"), col("id")))
       .orderBy(col("ts").asc_nulls_first, col("id"))
       .collect().map(r => (Option(r.get(0)), Option(r.get(1)), r.getLong(2)))
-    val p = ForwardFill.partitioned(df, Seq("x"), "ts", tieCols = Seq(col("id")))
-      .orderBy(col("ts").asc_nulls_first, col("id"))
-      .collect().map(r => (Option(r.get(0)), Option(r.get(1)), r.getLong(2)))
-    assert(g.toSeq == p.toSeq)
+    inEachMode {
+      val filled = ForwardFill.partitioned(df, Seq("x"), "ts", tieCols = Seq(col("id")))
+      assert(partitionSizes(filled).count(_ > 0) > 1)
+      val p = filled.orderBy(col("ts").asc_nulls_first, col("id"))
+        .collect().map(r => (Option(r.get(0)), Option(r.get(1)), r.getLong(2)))
+      assert(g.toSeq == p.toSeq)
+    }
   }
 
   test("bursty distribution: range partitions stay balanced and fill stays exact") {
@@ -129,19 +104,23 @@ class ForwardFillSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       rows.map(r => (r.getLong(2), Option(r.get(1)))).toSeq
     val g = render(ForwardFill.global(df, Seq("x"), Seq(col("ts"), col("id")))
       .orderBy(col("ts"), col("id")).collect())
-    val p = render(ForwardFill.partitioned(df, Seq("x"), "ts",
-      tieCols = Seq(col("id")))
-      .orderBy(col("ts"), col("id")).collect())
-    assert(g == p)
+    inEachMode {
+      val filled = ForwardFill.partitioned(df, Seq("x"), "ts", tieCols = Seq(col("id")))
+      assert(partitionSizes(filled).count(_ > 0) > 1)
+      assert(render(filled.orderBy(col("ts"), col("id")).collect()) == g)
+    }
   }
 
   test("partitioned fill with long all-null stretches crossing buckets") {
     // Only the first row non-null: every partition after the first must carry it.
     val data = (0 until 1000).map(i => (i.toLong, if (i == 0) Some(42.0) else None))
-    val df   = data.toDF("ts", "x")
-    val out = ForwardFill.partitioned(df, Seq("x"), "ts")
-      .orderBy("ts").collect()
-    assert(out.forall(_.getDouble(1) == 42.0))
+    val df   = data.toDF("ts", "x").repartition(4)
+    inEachMode {
+      val filled = ForwardFill.partitioned(df, Seq("x"), "ts")
+      assert(partitionSizes(filled).count(_ > 0) > 1)
+      val out = filled.orderBy("ts").collect()
+      assert(out.length == 1000 && out.forall(_.getDouble(1) == 42.0))
+    }
   }
 
   // ---- partition-boundary cases, each run with AQE on and off

@@ -3,74 +3,86 @@ package graft.ops
 import graft.SparkTestBase
 import graft.time.Intervals
 import graft.ops.Resampler.ResampleOptions
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Randomized equivalence: [[Resampler.resample]] vs a direct row-by-row
   * simulation of the reference's event loop
   * (`BatchEveryIntervalHandler.process/finalize`, classes.py:589-637).
   * The golden fixtures pin four specific datasets; this pins the semantics
-  * over random gap patterns, duplicate timestamps and null values.
+  * over random gap patterns, duplicate timestamps and null values. The
+  * global cases run with several partitions, adaptive execution on and off,
+  * so buckets and gaps cross partition boundaries.
   */
 class ResamplerPropsSpec extends SparkTestBase {
 
   import spark.implicits._
 
+  private type Event = (Option[Long], Option[Double], Long) // (ts, value, id)
+  private type Out = (Long, Option[Double], Option[Long])
+
   /** The reference loop: at each boundary B emit the last event with ts < B —
     * full row when it lies within [B - step, B), else a gap row that is null
     * everywhere except the ffill keys, which carry the last event's values.
-    * Boundaries run from nextBoundary(t0) while B <= t1, plus one tail flush.
+    * Boundaries run from nextBoundary(t0) while B <= t1, plus one tail flush
+    * when `batchEnd`. Events without a timestamp never emit.
     */
-  private def simulate(
-      events: Seq[(Long, Option[Double], Long)], // (ts, value, id)
-      interval: String,
-      ffillValue: Boolean): Seq[(Long, Option[Double], Option[Long])] = {
+  private def simulate(events: Seq[Event], interval: String, batchEnd: Boolean = true): Seq[Out] = {
     val step   = Intervals.toMillis(interval)
-    val sorted = events.sortBy(e => (e._1, e._3))
-    val t0     = sorted.head._1
-    val t1     = sorted.map(_._1).max
-    val b0     = Intervals.nextBoundary(t0, interval, initialize = true)
-    val kMax   = Math.floorDiv(t1 - b0, step) + 1 // incl. tail flush
+    val sorted = events.collect { case (Some(ts), v, id) => (ts, v, id) }.sortBy(e => (e._1, e._3))
+    if (sorted.isEmpty) return Nil
+    val b0     = Intervals.nextBoundary(sorted.head._1, interval, initialize = true)
+    val kMax   = Math.floorDiv(sorted.last._1 - b0, step) + (if (batchEnd) 1 else 0)
+    var i = 0 // sorted(i) is the first event at or after the boundary
     (0L to kMax).map { k =>
-      val b    = b0 + k * step
-      val prev = sorted.takeWhile(_._1 < b).lastOption
-      prev match {
-        case Some((ts, v, id)) if ts >= b - step =>
-          (b, v, Some(id))                        // real row
-        case Some((_, v, _)) =>
-          (b, if (ffillValue) v else None, None)  // gap row
-        case None => (b, None, None)              // before first event
+      val b = b0 + k * step
+      while (i < sorted.length && sorted(i)._1 < b) i += 1
+      sorted(i - 1) match {
+        case (ts, v, id) if ts >= b - step => (b, v, Some(id)) // real row
+        case (_, v, _)                     => (b, v, None)     // gap row
       }
     }
   }
 
-  private def run(seed: Int, interval: String, n: Int, spanMs: Long): Unit = {
+  private def events(seed: Int, n: Int, spanMs: Long): Seq[Event] = {
     val rnd = new scala.util.Random(seed)
-    val events = (0 until n).map { i =>
+    (0 until n).map { i =>
       val ts = 1600000000000L + (rnd.nextDouble() * spanMs).toLong
       val v  = if (rnd.nextInt(5) == 0) None else Some(rnd.nextInt(1000).toDouble)
-      (ts, v, i.toLong)
+      (Some(ts), v, i.toLong)
     }
-    val df = events.toDF("__timestamp", "value", "id")
-    val got = Resampler.resample(df, interval,
-      opts = ResampleOptions(ffillKeys = Seq("value"), tieCols = Seq("id"),
-        coverageBuckets = 7)) // small buckets → cross-slice carries exercised
-      .collect()
-      .map(r => (r.getLong(0),
-        Option(r.get(r.fieldIndex("value"))).map(_.asInstanceOf[Double]),
-        Option(r.get(r.fieldIndex("id"))).map(_.asInstanceOf[Long])))
-      .toSeq
-    val want = simulate(events, interval, ffillValue = true)
-    assert(got == want,
-      s"seed=$seed interval=$interval: first diff at ${got.zip(want).indexWhere(p => p._1 != p._2)}")
+  }
+
+  private def rows(out: DataFrame): Seq[Out] = out.collect().map(r => (r.getLong(0),
+    Option(r.get(r.fieldIndex("value"))).map(_.asInstanceOf[Double]),
+    Option(r.get(r.fieldIndex("id"))).map(_.asInstanceOf[Long]))).toSeq
+
+  /** Resample `evs` and compare with the simulation; more than one partition
+    * must emit rows.
+    */
+  private def check(evs: Seq[Event], interval: String, batchEnd: Boolean = true): Unit = {
+    val df = evs.toDF("__timestamp", "value", "id").repartition(5)
+    val out = Resampler.resample(df, interval, opts = ResampleOptions(
+      ffillKeys = Seq("value"), tieCols = Seq("id"), processBatchEnd = batchEnd))
+    assert(partitionSizes(out).count(_ > 0) > 1)
+    val (got, want) = (rows(out), simulate(evs, interval, batchEnd))
+    assert(got == want, s"interval=$interval: first diff at " +
+      s"${got.zip(want).indexWhere(p => p._1 != p._2)} of ${got.length} vs ${want.length}")
   }
 
   test("matches the reference event loop on random dense streams") {
-    run(seed = 1, interval = "10s", n = 200, spanMs = 3600000L)   // ~2 events/bucket
-    run(seed = 2, interval = "1m", n = 150, spanMs = 3600000L)
+    inEachMode {
+      check(events(seed = 1, n = 200, spanMs = 3600000L), "10s") // ~2 events/bucket
+      check(events(seed = 2, n = 150, spanMs = 3600000L), "1m")
+    }
   }
 
   test("matches on sparse streams full of gaps") {
-    run(seed = 3, interval = "1s", n = 40, spanMs = 3600000L)     // ~1% buckets hit
-    run(seed = 4, interval = "100l", n = 30, spanMs = 600000L)
+    inEachMode {
+      check(events(seed = 3, n = 40, spanMs = 3600000L), "1s") // ~1% buckets hit
+      check(events(seed = 4, n = 30, spanMs = 600000L), "100l")
+    }
   }
 
   test("keyed resample matches the per-key simulation on random streams") {
@@ -90,7 +102,7 @@ class ResamplerPropsSpec extends SparkTestBase {
         Option(r.get(r.fieldIndex("id"))).map(_.asInstanceOf[Long])))
       .sortBy(t => (t._1, t._2)).toSeq
     val want = events.groupBy(_._1).toSeq.flatMap { case (k, evs) =>
-      simulate(evs.map(e => (e._2, e._3, e._4)), "10s", ffillValue = true)
+      simulate(evs.map(e => (Some(e._2), e._3, e._4)), "10s")
         .map { case (b, v, id) => (k, b, v, id) }
     }.sortBy(t => (t._1, t._2))
     assert(got == want,
@@ -99,19 +111,68 @@ class ResamplerPropsSpec extends SparkTestBase {
 
   test("matches with heavy timestamp ties") {
     val rnd = new scala.util.Random(9)
-    val events = (0 until 120).map { i =>
+    val evs = (0 until 120).map { i =>
       // only 20 distinct timestamps → 6-way ties on average
-      val ts = 1600000000000L + rnd.nextInt(20) * 7000L
-      (ts, Some(i.toDouble): Option[Double], i.toLong)
+      (Some(1600000000000L + rnd.nextInt(20) * 7000L), Some(i.toDouble), i.toLong)
     }
-    val df = events.toDF("__timestamp", "value", "id")
-    val got = Resampler.resample(df, "5s",
-      opts = ResampleOptions(ffillKeys = Seq("value"), tieCols = Seq("id")))
-      .collect()
-      .map(r => (r.getLong(0),
-        Option(r.get(r.fieldIndex("value"))).map(_.asInstanceOf[Double]),
-        Option(r.get(r.fieldIndex("id"))).map(_.asInstanceOf[Long])))
-      .toSeq
-    assert(got == simulate(events, "5s", ffillValue = true))
+    inEachMode(check(evs, "5s"))
+  }
+
+  inBothModes("a bucket split across a partition boundary is emitted once") {
+    // 3000 events in at most 4 one-hour buckets: with more non-empty sort
+    // partitions than buckets, some bucket's rows span two partitions
+    val evs = events(seed = 5, n = 3000, spanMs = 3 * 3600000L)
+    val sorted = evs.toDF("__timestamp", "value", "id").orderBy("__timestamp", "id")
+    val buckets = evs.flatMap(_._1).map(_ / 3600000L).distinct.size
+    assert(partitionSizes(sorted).count(_ > 0) > buckets)
+    check(evs, "1h")
+  }
+
+  inBothModes("a gap longer than ChunkSize is emitted in full") {
+    // two bursts 7000 s apart on a 100 ms grid: a 70k-point gap
+    val near = events(seed = 6, n = 40, spanMs = 5000L)
+    val far = events(seed = 7, n = 40, spanMs = 5000L)
+      .map(e => (e._1.map(_ + 7000000L), e._2, e._3 + 40))
+    check(near ++ far, "100l")
+  }
+
+  inBothModes("processBatchEnd = false drops the tail flush") {
+    check(events(seed = 8, n = 150, spanMs = 600000L), "10s", batchEnd = false)
+    check(events(seed = 9, n = 40, spanMs = 3600000L), "1s", batchEnd = false)
+  }
+
+  inBothModes("empty input: no rows, same columns") {
+    val literal = Seq.empty[Event].toDF("__timestamp", "value", "id")
+    val filtered = spark.range(100).select(col("id").as("__timestamp"),
+      col("id").cast("double").as("value"), col("id")).repartition(3).filter(col("id") < 0)
+    for (df <- Seq(literal, filtered)) {
+      val out = Resampler.resample(df, "1s",
+        opts = ResampleOptions(ffillKeys = Seq("value"), tieCols = Seq("id")))
+      assert(out.schema.map(f => (f.name, f.dataType)) ==
+        Seq("__timestamp" -> LongType, "value" -> DoubleType, "id" -> LongType))
+      assert(out.collect().isEmpty)
+      assert(out.orderBy("__timestamp").count() == 0)
+    }
+  }
+
+  inBothModes("events without a timestamp never emit") {
+    val rnd = new scala.util.Random(10)
+    val evs = events(seed = 11, n = 300, spanMs = 600000L)
+      .map(e => if (rnd.nextInt(6) == 0) e.copy(_1 = None) else e)
+    assert(evs.exists(_._1.isEmpty))
+    check(evs, "5s")
+  }
+
+  inBothModes("gap rows are null in columns the input declares non-nullable") {
+    val evs = events(seed = 12, n = 60, spanMs = 600000L)
+    val df = evs.map(e => (e._1.get, e._2.getOrElse(0.0), e._3))
+      .toDF("__timestamp", "value", "id").repartition(5)
+    assert(!df.schema("id").nullable && !df.schema("value").nullable)
+    val out = Resampler.resample(df, "1s", opts = ResampleOptions(tieCols = Seq("id")))
+    val gaps = simulate(evs, "1s").count(_._3.isEmpty)
+    assert(gaps > 0)
+    assert(out.schema("id").nullable && out.schema("value").nullable)
+    assert(out.filter(col("id").isNull).count() == gaps)
+    assert(out.filter(col("value").isNull).count() == gaps)
   }
 }
