@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.sources.{FrameSource, SourceLoader, SourceSpec}
+import graft.sources.{FrameSource, NoValidFilesException, SourceLoader, SourceSpec, Span}
 import graft.time.EpochTime
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,11 +15,15 @@ import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
   *
   * {{{ sources.map(normalize).reduce(unionByName).filter(window).orderBy(ts, ties) }}}
   *
-  * Catalyst pushes the time-window filter into the scans (parquet row-group
-  * skipping = the reference's file pruning, core.py:790-810), and the global
-  * `orderBy` compiles to a RangePartitioning exchange + per-partition external
-  * sort — a k-way merge distributed across executors, with spilling, which is
-  * exactly what the reference's chunk scheduler approximates on one machine.
+  * The reference's source and file pruning (core.py:145-213, 790-810)
+  * happens before Spark sees a file: `fuse` bounds each file from metadata
+  * read on the driver (parquet footer statistics, the first rows of
+  * `fileSortRegex`-ordered CSV files) and hands Spark only the files that
+  * may hold rows in the window. The window filter then drops the remaining
+  * out-of-window rows. The global `orderBy` compiles to a RangePartitioning
+  * exchange + per-partition external sort — a k-way merge distributed
+  * across executors, with spilling, which is exactly what the reference's
+  * chunk scheduler approximates on one machine.
   */
 object Fuser {
 
@@ -94,17 +98,35 @@ object Fuser {
       .sortBy(_.descriptor).toSeq
   }
 
-  /** Load + fuse path-based sources. Parquet sources without a declared
-    * `secondarySortCol` get a recompute-stable file-order row id attached
-    * (see `SourceLoader.parquetRowId`) so the fused tie order is
-    * deterministic across actions and task retries. Each source is listed
-    * once: the row id reuses the load's ordered file list.
+  /** Load + fuse path-based sources. Each source is planned from file
+    * metadata read once on the driver: parquet schemas come from footers
+    * (no schema-inference job), and with a window only the files that may
+    * hold a row in it are scanned (see `SourceLoader.loadListed`). A source
+    * with no file in the window contributes an empty frame with its schema,
+    * so the fused columns and renames do not depend on the window; if no
+    * source has one, this raises `NoValidFilesException` (the reference's
+    * `NOVALIDFILESTOPROCESS`). Under `dedupOverlaps` every file is read,
+    * since which duplicate survives may depend on out-of-window rows.
+    *
+    * Parquet sources without a declared `secondarySortCol` get a
+    * recompute-stable file-order row id attached (see
+    * `SourceLoader.parquetRowId`) so the fused tie order is deterministic
+    * across actions and task retries. It indexes the full ordered listing,
+    * not the scanned files, so ids do not depend on the window.
     */
-  def fuse(spark: SparkSession, specs: Seq[SourceSpec], opts: FuseOptions): FuseResult =
+  def fuse(spark: SparkSession, specs: Seq[SourceSpec], opts: FuseOptions): FuseResult = {
+    val (startTs, endTs) = window(opts)
+    val span =
+      if (opts.dedupOverlaps) Span.All
+      else Span(startTs.getOrElse(Long.MinValue), endTs.getOrElse(Long.MaxValue))
+    val loaded = specs.map(s => s -> SourceLoader.loadListed(spark, s, span))
+    if (loaded.forall(_._2.outOfWindow))
+      throw new NoValidFilesException(
+        s"no file of ${specs.map(_.descriptor).mkString(", ")} holds rows in the window " +
+          s"[${startTs.getOrElse("open")}, ${endTs.getOrElse("open")}]")
     fuseFrames(
-      specs.map { s =>
-        val (loaded, files) = SourceLoader.loadListed(spark, s)
-        var df = loaded
+      loaded.map { case (s, SourceLoader.Listed(loadedDf, files, _)) =>
+        var df = loadedDf
         // A partitioned layout (no flat file list) keeps the legacy id.
         if (s.secondarySortCol.isEmpty && s.format == "parquet" && files.nonEmpty)
           // Narrow catch: only the known unresolvable-`_metadata` case
@@ -122,6 +144,16 @@ object Fuser {
           secondarySortCol = s.secondarySortCol)
       },
       opts)
+  }
+
+  /** The fuse window's epoch-ms bounds, both inclusive. */
+  private def window(opts: FuseOptions): (Option[Long], Option[Long]) = {
+    val startTs = opts.procStart.map(EpochTime.toEpochMillis)
+    val endTs   = opts.procEnd.map(EpochTime.toEpochMillis)
+    for (s <- startTs; e <- endTs)
+      require(s < e, s"procstart ($s) must be before procend ($e) — reference core.py:179-201")
+    (startTs, endTs)
+  }
 
   /** Normalize one source: drop columns (P1), convert + rename the timestamp
     * column to `__timestamp` epoch-ms Long (P2/P4), stamp provenance (P3) and
@@ -202,11 +234,11 @@ object Fuser {
     // row per (source, row id).
     if (opts.dedupOverlaps) fused = fused.dropDuplicates(SourceIdCol, RowIdCol)
 
-    // Time-window filter (P5/M5/M6): Catalyst pushes this into every scan.
-    val startTs = opts.procStart.map(EpochTime.toEpochMillis)
-    val endTs   = opts.procEnd.map(EpochTime.toEpochMillis)
-    for (s <- startTs; e <- endTs)
-      require(s < e, s"procstart ($s) must be before procend ($e) — reference core.py:179-201")
+    // Time-window filter (P5). `fuse` scans only the files that meet the
+    // window (M5/M6); this drops the rows outside it. It reaches a parquet
+    // scan as a pushed filter only where the stored column is the epoch-ms
+    // Long itself; CSV and converted columns are filtered after the scan.
+    val (startTs, endTs) = window(opts)
     startTs.foreach(s => fused = fused.filter(col(TimestampCol) >= lit(s)))
     endTs.foreach(e => fused = fused.filter(col(TimestampCol) <= lit(e)))
 

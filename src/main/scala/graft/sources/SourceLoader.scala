@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,11 +29,15 @@ final class NoValidFilesException(what: String)
   * `input_file_name()` is available for provenance diagnostics.
   *
   * Driver-side work is bounded by the FILE COUNT, never row count: the
-  * listing and the one-line header probes match the reference's own
-  * per-file planning cost (core.py:738-783) and stay trivial for the
-  * "directory of daily/hourly files" layout both engines target. A
-  * 100k-file source would want a distributed listing — out of scope, as
-  * documented in the reference too.
+  * listing, the CSV header-and-first-row probes and the parquet footer
+  * reads match the reference's own per-file planning cost
+  * (core.py:738-783) and stay trivial for the "directory of daily/hourly
+  * files" layout both engines target. The footers give parquet sources
+  * their schema without Spark's schema-inference job, and, with a fuse
+  * window, they and the CSV first rows bound each file so that only files
+  * in the window are scanned (the reference's M5/M6). A 100k-file source
+  * would want a distributed listing — out of scope, as documented in the
+  * reference too.
   */
 object SourceLoader {
 
@@ -94,7 +100,14 @@ object SourceLoader {
     * as a CSV header. Quoted fields are unquoted; separators inside quotes are
     * not supported in the header row (neither engine needs them).
     */
-  def actualCsvHeader(spark: SparkSession, file: String, sep: Char = ','): Seq[String] = {
+  def actualCsvHeader(spark: SparkSession, file: String, sep: Char = ','): Seq[String] =
+    csvHead(spark, file, sep)._1
+
+  /** [[actualCsvHeader]], plus the file's first data row (the first line
+    * after the header that is not blank, as Spark's CSV reader skips blank
+    * lines), from the same open.
+    */
+  private def csvHead(spark: SparkSession, file: String, sep: Char): (Seq[String], Option[String]) = {
     val conf  = spark.sparkContext.hadoopConfiguration
     val fs    = FileSystem.get(new URI(file), conf)
     val path  = new Path(file)
@@ -109,9 +122,10 @@ object SourceLoader {
       // fields so a trailing separator fails loudly instead of mis-zipping.
       // The separator is regex-quoted: split() takes a regex, so '|' or '.'
       // separators would otherwise split on every character.
-      line.stripPrefix("\uFEFF")
+      val header = line.stripPrefix("\uFEFF")
         .split(java.util.regex.Pattern.quote(sep.toString), -1).toSeq
         .map(_.trim.stripPrefix("\"").stripSuffix("\""))
+      (header, Iterator.continually(rd.readLine()).takeWhile(_ != null).find(_.trim.nonEmpty))
     } finally rd.close()
   }
 
@@ -119,17 +133,18 @@ object SourceLoader {
     * core.py:949-980): every file's ACTUAL header must carry exactly the
     * declared column names, and all files must agree on order (Spark binds a
     * CSV schema positionally, so a silently reordered file would misbind
-    * columns — fail fast instead). Returns the on-disk column order.
+    * columns — fail fast instead). Returns the on-disk column order and each
+    * file's first data row, read in the same open.
     */
   def validateHeaders(
       spark: SparkSession,
       files: Seq[String],
-      declared: Option[Seq[String]]): Seq[String] = {
-    val first = actualCsvHeader(spark, files.head)
+      declared: Option[Seq[String]]): (Seq[String], Seq[Option[String]]) = {
+    val heads = files.map(csvHead(spark, _, ','))
+    val first = heads.head._1
     require(first.distinct.length == first.length,
       s"source header has duplicate column names: ${first.mkString(",")}")
-    files.tail.foreach { f =>
-      val h = actualCsvHeader(spark, f)
+    files.zip(heads).tail.foreach { case (f, (h, _)) =>
       require(h == first,
         s"file $f header (${h.mkString(",")}) differs from ${files.head} (${first.mkString(",")})")
     }
@@ -138,7 +153,7 @@ object SourceLoader {
         s"source header (${first.mkString(",")}) does not match declared schema " +
           s"(${want.mkString(",")})")
     }
-    first
+    (first, heads.map(_._2))
   }
 
   /** Zip a positional type list against the header names → StructType. */
@@ -152,23 +167,40 @@ object SourceLoader {
     * PER FILE (the reference's probe/sampling semantics, datasources.py:230
     * — each file contributes its first `num_rows` rows), not globally.
     */
-  def load(spark: SparkSession, spec: SourceSpec): DataFrame = loadListed(spark, spec)._1
+  def load(spark: SparkSession, spec: SourceSpec): DataFrame = loadListed(spark, spec).df
 
-  /** [[load]], plus the ordered file list the frame reads, from the one
-    * listing of the source. The list is empty for a partitioned parquet
-    * layout, which Spark's partition discovery reads instead.
+  /** A loaded source: its frame, its ordered file list from the one listing
+    * of the source, and the files of that list the frame scans. Both lists
+    * are empty for a partitioned parquet layout, which Spark's partition
+    * discovery reads instead.
     */
-  private[graft] def loadListed(spark: SparkSession, spec: SourceSpec): (DataFrame, Seq[String]) = {
+  private[graft] final case class Listed(df: DataFrame, files: Seq[String], scanned: Seq[String]) {
+
+    /** True when the listing has files but none can hold a row in the window. */
+    def outOfWindow: Boolean = files.nonEmpty && scanned.isEmpty
+  }
+
+  /** [[load]], planned against an epoch-ms event-time `window` (both ends
+    * inclusive). Only files whose metadata says they may hold a row in the
+    * window are handed to Spark; see [[FileSpans]] for what bounds a file.
+    * A frame with no file in the window is empty and keeps its schema. The
+    * window itself is not applied: the caller filters the rows.
+    */
+  private[graft] def loadListed(
+      spark: SparkSession, spec: SourceSpec, window: Span = Span.All): Listed = {
     val listed = scala.util.Try(listSourceFiles(spark, spec.path, spec.format))
     if (spec.format == "parquet" && spec.schema.isEmpty && !spec.forceSchema &&
         listed.isFailure && hasSubdirs(spark, spec.path))
       // Partitioned/nested layout (e.g. date=.../part-*.parquet): delegate to
       // Spark's partition discovery; per-file validation and the file-order
       // row id don't apply here.
-      (perFileCap(spark.read.parquet(spec.path), spec), Nil)
+      Listed(perFileCap(spark.read.parquet(spec.path), spec), Nil, Nil)
     else {
       val files = specFiles(spec, listed.get)
-      (readFiles(spark, spec, files), files)
+      // a converted timestamp's window says nothing about the raw column
+      val (df, scanned) = readFiles(spark, spec, files,
+        if (spec.tsConvert.isDefined) Span.All else window)
+      Listed(df, files, scanned)
     }
   }
 
@@ -203,11 +235,39 @@ object SourceLoader {
       fs.listStatus(p).exists(_.isDirectory)
   }
 
-  private def readFiles(
-      spark: SparkSession, spec: SourceSpec, files: Seq[String]): DataFrame = spec.format match {
+  /** Read `files` (in order) as the spec's frame, handing Spark only those
+    * that may hold a row in `window`; returns the frame and those files.
+    */
+  private def readFiles(spark: SparkSession, spec: SourceSpec, files: Seq[String], window: Span)
+      : (DataFrame, Seq[String]) = spec.format match {
     case "parquet" =>
-      spec.schema match {
-        case Some(s) if spec.forceSchema =>
+      // Schemas come from footers read on the driver, never from Spark's
+      // inference job; the same footers bound the files when pruning.
+      val pruning = window != Span.All
+      val forced = if (spec.forceSchema) spec.schema else None
+      val schemaFiles = GraftFooters.schemaFiles(spark, files)
+      val footerFiles = if (pruning || forced.isDefined) files else schemaFiles
+      val footers = footerFiles.zip(GraftFooters.read(spark, footerFiles)).toMap
+      def fileSchema(f: String): Option[StructType] =
+        footers(f).map(GraftFooters.fileSchema(spark, f, _))
+      val schema = forced.getOrElse(
+        GraftFooters.inferSchema(spark, schemaFiles.map(f => f -> footers(f))))
+      val kept = if (!pruning) files else {
+        val zone = DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+        val readType = schema.find(_.name == spec.timestampCol).map(_.dataType)
+        files.filter { f =>
+          // a file whose own type differs is cast on load: keep it
+          val spans = for {
+            t      <- readType
+            footer <- footers(f)
+            if fileSchema(f).flatMap(_.find(_.name == spec.timestampCol)).map(_.dataType).contains(t)
+            s      <- FileSpans.parquet(footer, spec.timestampCol, t, zone)
+          } yield s
+          spans.forall(_.exists(_.meets(window)))
+        }
+      }
+      val df = forced match {
+        case Some(s) =>
           // Cast to the declared schema (reference datasources.py:394-395).
           // Files in one source directory may drift (e.g. an all-null column
           // written int64 in one file, double in another) — the directory
@@ -217,12 +277,14 @@ object SourceLoader {
           // scans still run distributed.
           def castTo(df: DataFrame): DataFrame =
             df.select(s.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-          files.map { f =>
-            val one = castTo(spark.read.parquet(f))
+          if (kept.isEmpty) castTo(spark.read.schema(s).parquet())
+          else kept.map { f =>
+            val one = castTo(spark.read.schema(fileSchema(f).getOrElse(s)).parquet(f))
             spec.numRows.map(one.limit).getOrElse(one)
           }.reduce(_.unionByName(_))
-        case _ => perFileCap(spark.read.parquet(files: _*), spec)
+        case None => perFileCap(spark.read.schema(schema).parquet(kept: _*), spec)
       }
+      (df, kept)
     case "csv" =>
       // PERMISSIVE mode gives per-cell null fallback for malformed typed
       // values — subsuming the reference's whole-file re-infer retry
@@ -230,16 +292,28 @@ object SourceLoader {
       val base = spark.read
         .option("header", spec.hasHeader.toString)
         .option("mode", "PERMISSIVE")
-      val actual: Option[Seq[String]] =
+      val heads: Option[(Seq[String], Seq[Option[String]])] =
         if (spec.hasHeader)
           Some(validateHeaders(spark, files, spec.schema.map(_.fieldNames.toSeq)))
         else None
+      val actual = heads.map(_._1)
       val resolved: Option[StructType] = spec.schema.orElse {
         spec.positionalTypes.map { ts =>
           zipPositional(actual.getOrElse(
             throw new IllegalArgumentException(
               "positional types require a header row to zip against")), ts)
         }
+      }
+      // Bound each file by its first data row only where that row's time is
+      // exactly the loaded one (a declared Long), and only under the
+      // chronological contract of `fileSortRegex`.
+      val kept = heads match {
+        case Some((hdr, firstRows)) if window != Span.All && spec.fileSortRegex.isDefined &&
+            resolved.exists(_.find(_.name == spec.timestampCol).exists(_.dataType == LongType)) =>
+          val idx = hdr.indexOf(spec.timestampCol)
+          val spans = FileSpans.csv(firstRows.map(_.flatMap(FileSpans.csvLong(_, idx, hdr.length))))
+          files.zip(spans).collect { case (f, sp) if sp.meets(window) => f }
+        case _ => files
       }
       def readCsv(fs: Seq[String]): DataFrame = resolved match {
         case Some(s) =>
@@ -259,13 +333,14 @@ object SourceLoader {
           // No declared types: infer (reference warns, classes.py:137-143).
           base.option("inferSchema", "true").csv(fs: _*)
       }
-      spec.numRows match {
+      val df = spec.numRows match {
         // per-file cap: CSV has no physical row index, so read each file
         // separately under the SAME bound schema and union the capped heads
         // (numRows is a probe-style knob — small n, few files)
-        case Some(n) => files.map(f => readCsv(Seq(f)).limit(n)).reduce(_.unionByName(_))
-        case None    => readCsv(files)
+        case Some(n) if kept.nonEmpty => kept.map(f => readCsv(Seq(f)).limit(n)).reduce(_.unionByName(_))
+        case _       => readCsv(kept)
       }
+      (df, kept)
     case "jsonl" =>
       // JSON lines (beyond-reference): fields bind BY NAME, so none of the
       // CSV positional machinery applies. A declared schema both prunes the
@@ -277,7 +352,7 @@ object SourceLoader {
         case Some(s) => base.schema(s).json(files: _*)
         case None    => base.json(files: _*)
       }
-      spec.numRows match {
+      val df = spec.numRows match {
         case Some(n) => files.map(f =>
           (spec.schema match {
             case Some(s) => base.schema(s).json(f)
@@ -285,6 +360,7 @@ object SourceLoader {
           }).limit(n)).reduce(_.unionByName(_))
         case None => read
       }
+      (df, files)
     case other => throw new IllegalArgumentException(s"Unknown source format: $other")
   }
 
@@ -331,9 +407,10 @@ object SourceLoader {
   }
 
   /** Per-source global start/end event time (S8, reference
-    * classes.py:182-196): one `agg(min,max)` — served from parquet footer
-    * stats when available, instead of the reference's manual head/tail file
-    * probes (core.py:738-872, datasources.py:266-318).
+    * classes.py:182-196): one `agg(min,max)` aggregation job over `df`, in
+    * place of the reference's manual head/tail file probes (core.py:738-872,
+    * datasources.py:266-318). Fuse-time file pruning does not use it; it
+    * reads file metadata on the driver instead (see [[FileSpans]]).
     */
   def timeBounds(df: DataFrame, tsCol: String): (Long, Long) = {
     val row = df.agg(min(col(tsCol)), max(col(tsCol))).head()

@@ -38,6 +38,11 @@ import org.apache.spark.sql.types.StructType
   *                         `file_sort_regex`, datasources.py:189-212); used
   *                         for the deterministic row-id's file order. Files
   *                         without a match are skipped, like the reference.
+  *                         Setting it states the reference's chronological
+  *                         contract: in this order each file's rows start at
+  *                         its first data row and end at or before the next
+  *                         file's first row. A windowed `Fuser.fuse` relies
+  *                         on it to skip CSV files by their first rows.
   * @param fileSortIdx      which regex match within the filename is the sort
   *                         key (reference `file_sort_idx`)
   */

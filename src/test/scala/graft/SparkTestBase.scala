@@ -47,6 +47,45 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   def inEachMode(body: => Unit): Unit =
     partitionModes.foreach { case (mode, conf) => withClue(s"[$mode] ")(withConf(conf)(body)) }
 
+  /** Run `body` and count the Spark jobs it starts (by a job group set for
+    * it). A marker job run afterwards flushes the listener bus, which
+    * delivers events in order.
+    */
+  def jobsRun[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-run-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == group) jobs.incrementAndGet()
+          else if (g == s"$group-flush") flushed.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not flush")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Write `df` as the one parquet file `file` (a Spark write to a scratch
+    * directory, whose single part file is moved into place).
+    */
+  def writeParquetFile(df: DataFrame, file: java.nio.file.Path): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_pqfile").resolve("out")
+    df.coalesce(1).write.parquet(tmp.toString)
+    val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.createDirectories(file.getParent)
+    java.nio.file.Files.move(part.toPath, file)
+  }
+
   /** Run `body` against a genuinely new SparkSession built with
     * GraftExtensions (extensions only apply at build time), restoring the
     * shared session afterwards and never stopping the shared context.

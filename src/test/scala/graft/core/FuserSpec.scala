@@ -161,4 +161,130 @@ class FuserSpec extends SparkTestBase {
     val byFile = ids.groupBy(_ >> 40)
     assert(byFile.size == 2, s"expected 2 file groups, got $byFile")
   }
+
+  // ---- source and file pruning (M5/M6) --------------------------------------
+  // Two sources of three ordered day-files each: parquet `p` (pruned by its
+  // footer statistics) and gzip CSV `c` (pruned by first rows). Both carry
+  // `price` and `sym`, so those columns are collision-renamed.
+
+  private val csvSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "ts BIGINT, price DOUBLE, sym STRING")
+
+  private lazy val pruneRoot: String = {
+    val root = java.nio.file.Files.createTempDirectory("graft_prune")
+    Seq(1 -> Seq(1000L, 1500L, 2000L), 2 -> Seq(2000L, 2500L, 2900L), 3 -> Seq(3000L, 3500L))
+      .foreach { case (d, ts) =>
+        writeParquetFile(ts.map(t => (t, t / 100.0, s"p$t")).toDF("ts", "price", "sym"),
+          root.resolve(s"p/p_$d.parquet"))
+      }
+    java.nio.file.Files.createDirectories(root.resolve("c"))
+    Seq(1 -> Seq(1100L, 1600L, 2000L), 2 -> Seq(2000L, 2600L), 3 -> Seq(3100L, 3600L))
+      .foreach { case (d, ts) =>
+        val out = new java.util.zip.GZIPOutputStream(
+          java.nio.file.Files.newOutputStream(root.resolve(s"c/c_$d.csv.gz")))
+        out.write(("ts,price,sym\n" + ts.map(t => s"$t,${t / 100.0},c$t\n").mkString).getBytes("UTF-8"))
+        out.close()
+      }
+    root.toString
+  }
+
+  private def pruneSpecs(
+      regex: Option[String] = Some("\\d+"),
+      conv: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = None) = Seq(
+    graft.sources.SourceSpec(s"$pruneRoot/p", "parquet", "p", "ts",
+      fileSortRegex = regex, tsConvert = conv),
+    graft.sources.SourceSpec(s"$pruneRoot/c", "csv", "c", "ts", schema = Some(csvSchema),
+      fileSortRegex = regex, tsConvert = conv))
+
+  private def scanned(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+
+  private val allFiles = Set("p_1.parquet", "p_2.parquet", "p_3.parquet",
+    "c_1.csv.gz", "c_2.csv.gz", "c_3.csv.gz")
+
+  /** Fuse over [s, e] and check it against the fuse of every file filtered
+    * to [s, e] afterwards: same columns, same rows in the same order.
+    * Returns the windowed frame.
+    */
+  private def windowMatches(
+      specs: Seq[graft.sources.SourceSpec], s: Long, e: Long,
+      opts: FuseOptions = FuseOptions()): org.apache.spark.sql.DataFrame = {
+    val win = Fuser.fuse(spark, specs, opts.copy(procStart = Some(s), procEnd = Some(e))).df
+    val all = Fuser.fuse(spark, specs, opts).df.filter(col(TimestampCol).between(s, e))
+    assert(win.columns.toSeq == all.columns.toSeq)
+    // CSV row ids follow the scan layout, so the rows compare without ids
+    val rows = (d: org.apache.spark.sql.DataFrame) => d.drop(Fuser.RowIdCol).collect().toSeq
+    assert(rows(win) == rows(all))
+    win
+  }
+
+  test("pruning: a window inside one file scans only that file of each source") {
+    val df = windowMatches(pruneSpecs(), 1200L, 1700L)
+    assert(scanned(df) == Set("p_1.parquet", "c_1.csv.gz"))
+    assert(df.count() == 2)
+  }
+
+  test("pruning: a window starting at a file's first time keeps the file before it") {
+    // p_1 and c_1 both end with a row at 2000, the first time of p_2 and c_2
+    val df = windowMatches(pruneSpecs(), 2000L, 2400L)
+    assert(scanned(df) == Set("p_1.parquet", "p_2.parquet", "c_1.csv.gz", "c_2.csv.gz"))
+    assert(df.filter(col(TimestampCol) === 2000L).count() == 4)
+  }
+
+  test("pruning: a window outside every file raises NoValidFilesException") {
+    val opts = FuseOptions(procStart = Some(0L), procEnd = Some(500L))
+    intercept[graft.sources.NoValidFilesException](Fuser.fuse(spark, pruneSpecs(), opts))
+    val status = graft.ops.Replay.withSources {
+      Fuser.fuse(spark, pruneSpecs(), opts)
+      graft.ops.Replay.Ok
+    }
+    assert(status == graft.ops.Replay.NoValidFilesToProcess)
+  }
+
+  test("pruning: a source with no file in the window keeps its renamed columns") {
+    // [1000, 1050] holds p_1's first row; every CSV file starts later
+    val res = Fuser.fuse(spark, pruneSpecs(),
+      FuseOptions(procStart = Some(1000L), procEnd = Some(1050L)))
+    assert(scanned(res.df) == Set("p_1.parquet"))
+    assert(res.renames == Map("price" -> Seq("price||p", "price||c"), "sym" -> Seq("sym||p", "sym||c")))
+    val df = windowMatches(pruneSpecs(), 1000L, 1050L)
+    assert(df.columns.toSet.contains("sym||c"))
+    assert(df.count() == 1)
+  }
+
+  test("pruning: none without fileSortRegex (CSV), under dedupOverlaps, or with tsConvert") {
+    val csvFiles = Set("c_1.csv.gz", "c_2.csv.gz", "c_3.csv.gz")
+    // without an order the CSV first rows bound nothing; parquet statistics
+    // do not need one
+    val unordered = windowMatches(pruneSpecs(regex = None), 1200L, 1700L)
+    assert(scanned(unordered) == csvFiles + "p_1.parquet")
+    val dedup = windowMatches(pruneSpecs(), 1200L, 1700L, FuseOptions(dedupOverlaps = true))
+    assert(scanned(dedup) == allFiles)
+    val converted = windowMatches(pruneSpecs(conv = Some(c => c)), 1200L, 1700L)
+    assert(scanned(converted) == allFiles)
+  }
+
+  test("pruning: row ids index the full listing, not the scanned files") {
+    // [2500, 3200] leaves p_1 out; p_2's ids must still carry file index 1
+    val opts = FuseOptions(keepRowId = true)
+    val df = windowMatches(pruneSpecs(), 2500L, 3200L, opts)
+    assert(!scanned(df).contains("p_1.parquet"))
+    val pq = (d: org.apache.spark.sql.DataFrame) =>
+      d.filter(col(SourceIdCol) === 0).select(TimestampCol, Fuser.RowIdCol).collect().toSeq
+    val all = Fuser.fuse(spark, pruneSpecs(), opts).df
+      .filter(col(TimestampCol).between(2500L, 3200L))
+    assert(pq(df) == pq(all))
+    assert(pq(df).map(_.getLong(1) >> 40).toSet == Set(1L, 2L))
+  }
+
+  test("fuse over parquet sources runs no Spark job before its action") {
+    val specs = Seq(
+      graft.sources.SourceSpec(s"$pruneRoot/p", "parquet", "p", "ts", fileSortRegex = Some("\\d+")),
+      graft.sources.SourceSpec(s"$pruneRoot/p", "parquet", "q", "ts"))
+    for (opts <- Seq(FuseOptions(), FuseOptions(procStart = Some(1200L), procEnd = Some(2400L)))) {
+      val (res, jobs) = jobsRun(Fuser.fuse(spark, specs, opts))
+      assert(jobs == 0, s"$opts")
+      assert(res.df.count() == (if (opts.procStart.isEmpty) 16 else 6))
+    }
+  }
 }

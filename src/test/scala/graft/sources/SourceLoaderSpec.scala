@@ -1,7 +1,12 @@
 package graft.sources
 
 import graft.SparkTestBase
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.execution.datasources.parquet.{GraftFooters, ParquetUtils}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+
+import java.net.URI
 
 import java.nio.file.{Files, Paths}
 
@@ -278,5 +283,106 @@ class SourceLoaderSpec extends SparkTestBase {
     assert(SourceLoader.friendlyType("bool") == BooleanType)
     assert(SourceLoader.friendlyType("datetime") == TimestampType)
     intercept[IllegalArgumentException](SourceLoader.friendlyType("complex"))
+  }
+
+  // ---- parquet schemas from driver-side footers --------------------------
+
+  /** The schema a parquet source loads with equals what `spark.read.parquet`
+    * infers over the same files, both as the raw inferred schema (Spark's
+    * own inference, which runs a job) and as the loaded frame's schema.
+    */
+  private def assertSchemaParity(dir: String): Unit = {
+    val files = SourceLoader.listSourceFiles(spark, dir, "parquet")
+    val touched = GraftFooters.schemaFiles(spark, files)
+    val fromFooters = GraftFooters.inferSchema(spark, touched.zip(GraftFooters.read(spark, touched)))
+    val fs = FileSystem.get(new URI(dir), spark.sparkContext.hadoopConfiguration)
+    val inferred = ParquetUtils.inferSchema(spark, Map.empty,
+      files.map(f => fs.getFileStatus(new Path(f)))).get
+    assert(fromFooters == inferred)
+    assert(SourceLoader.load(spark, SourceSpec(dir, descriptor = "s", timestampCol = "ts")).schema ==
+      spark.read.parquet(files: _*).schema)
+  }
+
+  /** One parquet file written by parquet-mr from a message-type schema, so
+    * `required` fields stay non-nullable.
+    */
+  private def writeMessage(file: java.nio.file.Path, schema: String, rows: Seq[Seq[Any]]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val mt = org.apache.parquet.schema.MessageTypeParser.parseMessageType(schema)
+    val w = ExampleParquetWriter.builder(new org.apache.parquet.io.LocalOutputFile(file))
+      .withType(mt).build()
+    val groups = new SimpleGroupFactory(mt)
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      r.zipWithIndex.foreach {
+        case (v: Long, i)   => g.add(i, v)
+        case (v: Double, i) => g.add(i, v)
+        case (v: String, i) => g.add(i, v)
+        case (null, _)      => ()
+        case (v, _)         => throw new IllegalArgumentException(s"unsupported value $v")
+      }
+      w.write(g)
+    } finally w.close()
+  }
+
+  test("footer schema matches inference: a plain source") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft_schema_plain").resolve("src")
+    writeParquetFile(Seq((1000L, 1.5, "a")).toDF("ts", "price", "sym"), d.resolve("day_1.parquet"))
+    writeParquetFile(Seq((2000L, 2.5, "b")).toDF("ts", "price", "sym"), d.resolve("day_2.parquet"))
+    assertSchemaParity(d.toString)
+  }
+
+  test("footer schema matches inference: a second file adds a nullable column, with and without mergeSchema") {
+    val d = Files.createTempDirectory("graft_schema_grow").resolve("src")
+    Files.createDirectories(d)
+    writeMessage(d.resolve("a.parquet"),
+      "message m { required int64 ts; required double price; }", Seq(Seq[Any](1000L, 1.5)))
+    writeMessage(d.resolve("b.parquet"),
+      "message m { required int64 ts; required double price; optional binary note (UTF8); }",
+      Seq(Seq[Any](2000L, 2.5, "x"), Seq[Any](3000L, 3.5, null)))
+    assertSchemaParity(d.toString)
+    withConf(Map("spark.sql.parquet.mergeSchema" -> "true")) {
+      assertSchemaParity(d.toString)
+      val df = SourceLoader.load(spark, SourceSpec(d.toString, descriptor = "s", timestampCol = "ts"))
+      assert(df.columns.toSeq == Seq("ts", "price", "note"))
+      assert(df.orderBy("ts").collect().map(r => Option(r.getString(2))).toSeq ==
+        Seq(None, Some("x"), None))
+    }
+  }
+
+  test("footer schema matches inference: Spark row metadata with a TimestampNTZ column") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft_schema_ntz").resolve("src")
+    val t = java.time.LocalDateTime.parse("2024-03-01T12:00:00")
+    writeParquetFile(Seq((1000L, t, BigDecimal("1.25"))).toDF("ts", "at", "amount"),
+      d.resolve("day_1.parquet"))
+    val footer = GraftFooters.read(spark, SourceLoader.listSourceFiles(spark, d.toString, "parquet")).head.get
+    assert(footer.getFileMetaData.getKeyValueMetaData.containsKey(
+      "org.apache.spark.sql.parquet.row.metadata"))
+    assertSchemaParity(d.toString)
+    assert(SourceLoader.load(spark, SourceSpec(d.toString, descriptor = "s", timestampCol = "ts"))
+      .schema("at").dataType == TimestampNTZType)
+  }
+
+  test("forceSchema parquet: per-file footer schemas, no job before the first action") {
+    import spark.implicits._
+    // `v` drifts: int64, double, int32 across the three files
+    val d = Files.createTempDirectory("graft_force_drift").resolve("src")
+    writeParquetFile(Seq((1000L, 1L), (1500L, 2L)).toDF("ts", "v"), d.resolve("f_1.parquet"))
+    writeParquetFile(Seq((2000L, 2.5)).toDF("ts", "v"), d.resolve("f_2.parquet"))
+    writeParquetFile(Seq((3000L, 7)).toDF("ts", "v"), d.resolve("f_3.parquet"))
+    val schema = StructType(Seq(StructField("ts", LongType), StructField("v", DoubleType)))
+    val spec = SourceSpec(d.toString, descriptor = "p", timestampCol = "ts",
+      schema = Some(schema), forceSchema = true, fileSortRegex = Some("\\d+"))
+    val (df, jobs) = jobsRun(SourceLoader.load(spark, spec))
+    assert(jobs == 0)
+    // the rows each file gives when Spark infers its schema
+    val expected = SourceLoader.listSourceFiles(spark, d.toString, "parquet").map { f =>
+      spark.read.parquet(f).select(col("ts"), col("v").cast(DoubleType).as("v"))
+    }.reduce(_.unionByName(_))
+    assert(df.schema == expected.schema)
+    assert(df.orderBy("ts").collect().toSeq == expected.orderBy("ts").collect().toSeq)
   }
 }
