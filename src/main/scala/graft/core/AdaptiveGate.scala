@@ -1,8 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LeafNode}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.internal.SQLConf
 
 /** Input-size-derived execution gate for the final consuming action of a
   * query (guide §2: make partitioning scale-adaptive — derive from input
@@ -44,10 +45,23 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `spark.graft.adaptive.smallPlanBytes`), so production-size inputs keep
   * AQE on unconditionally and the gate moves with the same knob that
   * governs AQE's own partition sizing.
+  *
+  * The gate, [[gated]], runs a query's final action with a static
+  * one-partition plan ([[withGatedExecution]]). [[coalescesToOne]] narrows
+  * it for [[SortedScan]], which sorts an input as one partition
+  * (`repartition(1).sortWithinPartitions`, with no range sampling job and
+  * no summary job) only where adaptive execution would have coalesced a
+  * range sort of it into one partition anyway. Under Spark's default
+  * `coalescePartitions.parallelismFirst` that is a shuffle under
+  * `coalescePartitions.minPartitionSize` (1 MB), not one advisory
+  * partition: a larger range sort keeps about one partition per core.
+  *
+  * `SPARK_GRAFT_ADAPTIVE_GATE=off` turns both off.
   */
 object AdaptiveGate {
 
   private val ThresholdKey = "spark.graft.adaptive.smallPlanBytes"
+  private val AqeKey = "spark.sql.adaptive.enabled"
 
   /** Ops escape hatch (and the A/B lever for measuring the gate itself):
     * SPARK_GRAFT_ADAPTIVE_GATE=off makes the gate a no-op everywhere.
@@ -62,13 +76,59 @@ object AdaptiveGate {
   /** True iff the static single-partition plan is already optimal for
     * `df`'s final action (see object doc).
     */
-  def staticPlanSufficient(df: DataFrame): Boolean = {
-    if (envOff) return false
+  def staticPlanSufficient(df: DataFrame): Boolean =
+    effectiveBytes(df).exists(_ < threshold(df.sparkSession))
+
+  /** True iff adaptive execution is on and `df` fits one advisory
+    * partition by [[staticPlanSufficient]].
+    */
+  def gated(df: DataFrame): Boolean = aqeOn(df.sparkSession) && staticPlanSufficient(df)
+
+  /** True iff [[gated]] holds and `df`'s size estimate is also under
+    * [[oneCoalescedPartitionBytes]], so adaptive execution would coalesce a
+    * range sort of `df` into one partition. The estimate is the leaves'
+    * stored size; a shuffle of them is larger (the benchmark's fuse: 0.53 MB
+    * of files, 1.06 MB of shuffle), so an input just under the bound loses
+    * at most a few partitions of about 1 MB each.
+    */
+  def coalescesToOne(df: DataFrame): Boolean = {
     val spark = df.sparkSession
-    val threshold = BigInt(
-      spark.conf.getOption(ThresholdKey).map(parseBytes).getOrElse(
-        spark.sessionState.conf.getConf(
-          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)))
+    aqeOn(spark) && effectiveBytes(df).exists(b =>
+      b < threshold(spark) && b < oneCoalescedPartitionBytes(spark))
+  }
+
+  /** The shuffle size under which adaptive execution coalesces a shuffle
+    * into one partition. With `coalescePartitions.parallelismFirst` on
+    * (Spark's default) it aims for `coalescePartitions.minPartitionNum`
+    * partitions (default: the default parallelism) of at least
+    * `coalescePartitions.minPartitionSize` each, so with more than one
+    * partition aimed for, only a shuffle under `minPartitionSize` ends in
+    * one; otherwise a shuffle under the advisory size does. Zero when
+    * coalescing is off.
+    */
+  private def oneCoalescedPartitionBytes(spark: SparkSession): Long = {
+    val conf = spark.sessionState.conf
+    val minNum =
+      if (!conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) 1
+      else conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM)
+        .getOrElse(spark.sparkContext.defaultParallelism)
+    val minSize = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    if (!conf.getConf(SQLConf.COALESCE_PARTITIONS_ENABLED)) 0L
+    else if (minNum > 1) minSize
+    else math.max(minSize, conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+  }
+
+  private def aqeOn(spark: SparkSession): Boolean = spark.conf.get(AqeKey, "true") == "true"
+
+  private def threshold(spark: SparkSession): BigInt = BigInt(
+    spark.conf.getOption(ThresholdKey).map(parseBytes).getOrElse(
+      spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)))
+
+  /** `df`'s leaf size estimate with the explode allowance; `None` when the
+    * gate is off or `df` reads a checkpoint (see object doc).
+    */
+  private def effectiveBytes(df: DataFrame): Option[BigInt] = {
+    if (envOff) return None
     // the analyzed plan is computed eagerly at Dataset construction, so
     // this walk adds no planning work to the timed action
     val plan = df.queryExecution.analyzed
@@ -89,8 +149,7 @@ object AdaptiveGate {
         case _ => below
       }
     }
-    val effective = bytes * BigInt(8).pow(genDepth(plan))
-    !ckpt && effective < threshold
+    Option.when(!ckpt)(bytes * BigInt(8).pow(genDepth(plan)))
   }
 
   /** Run `body` (the action consuming `df`) under the gate; the session
@@ -102,18 +161,16 @@ object AdaptiveGate {
     */
   def withGatedExecution[T](df: DataFrame)(body: => T): T = {
     val spark = df.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
     val partKey = "spark.sql.shuffle.partitions"
-    val gate = spark.conf.get(aqeKey, "true") == "true" && staticPlanSufficient(df)
-    if (!gate) body
+    if (!gated(df)) body
     else {
       val prevParts = spark.conf.get(partKey)
-      spark.conf.set(aqeKey, "false")
+      spark.conf.set(AqeKey, "false")
       // the whole input fits one advisory partition (gate precondition),
       // so the derived static width is one
       spark.conf.set(partKey, "1")
       try body finally {
-        spark.conf.set(aqeKey, "true")
+        spark.conf.set(AqeKey, "true")
         spark.conf.set(partKey, prevParts)
       }
     }

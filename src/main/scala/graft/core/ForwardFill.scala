@@ -78,8 +78,11 @@ object ForwardFill {
     * (ascending, nulls first, the order [[global]] uses), as a
     * [[SortedScan]]. The result has `df`'s columns.
     *
-    * Jobs: the sort's own plus one that returns at most one row per
-    * partition. The fill itself runs lazily in the result's actions.
+    * Jobs: the [[SortedScan]]'s. An input that adaptive execution would
+    * coalesce into one partition is sorted as one partition whose fill
+    * starts from no carry, with no job but the sort's; a range sort's
+    * summary job returns at most one row per partition. The fill itself
+    * runs lazily in the result's actions.
     */
   def partitioned(
       df: DataFrame,

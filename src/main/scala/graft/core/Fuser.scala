@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
 
+import scala.collection.immutable.ListMap
+
 /** The fusion engine: merge N heterogeneous time-series sources into one
   * globally time-ordered stream.
   *
@@ -126,19 +128,14 @@ object Fuser {
           s"[${startTs.getOrElse("open")}, ${endTs.getOrElse("open")}]")
     fuseFrames(
       loaded.map { case (s, SourceLoader.Listed(loadedDf, files, _)) =>
-        var df = loadedDf
-        // A partitioned layout (no flat file list) keeps the legacy id.
-        if (s.secondarySortCol.isEmpty && s.format == "parquet" && files.nonEmpty)
-          // Narrow catch: only the known unresolvable-`_metadata` case
-          // (forceSchema loads project it away) falls back to the legacy
-          // id — any OTHER analysis failure (e.g. a column conflict) must
-          // propagate, not silently demote the determinism guarantee.
-          try df = df.withColumn(RowIdCol, SourceLoader.parquetRowId(s.path, files))
-          catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getMessage.contains("_metadata") ||
-                   Option(e.getCondition).exists(_.contains("UNRESOLVED_COLUMN")) => ()
-          }
+        // A partitioned layout (no flat file list) keeps the legacy id, and
+        // so does a frame that cannot reach its scan's `_metadata` (a
+        // forceSchema load projects it away).
+        val df =
+          if (s.secondarySortCol.isEmpty && s.format == "parquet" && files.nonEmpty &&
+              loadedDf.queryExecution.analyzed.metadataOutput.exists(_.name == "_metadata"))
+            loadedDf.withColumn(RowIdCol, SourceLoader.parquetRowId(s.path, files))
+          else loadedDf
         FrameSource(df, s.descriptor, s.timestampCol,
           tsConvert = s.tsConvert, removeCols = s.removeCols,
           secondarySortCol = s.secondarySortCol)
@@ -157,20 +154,22 @@ object Fuser {
 
   /** Normalize one source: drop columns (P1), convert + rename the timestamp
     * column to `__timestamp` epoch-ms Long (P2/P4), stamp provenance (P3) and
-    * a deterministic per-source row id.
+    * a deterministic per-source row id. Each step is one bulk `drop`,
+    * `withColumnsRenamed` or `withColumns`, so a source is analyzed once per
+    * step rather than once per column.
     */
   private def normalize(src: FrameSource, id: Int): DataFrame = {
     var df = src.df
     if (src.removeCols.nonEmpty) df = df.drop(src.removeCols: _*)
     // Per-source user renames (P2, reference core.py:969-970).
-    src.renameCols.foreach { case (from, to) => df = df.withColumnRenamed(from, to) }
+    if (src.renameCols.nonEmpty) df = df.withColumnsRenamed(src.renameCols)
 
     val tsName = src.timestampCol
     df = src.tsConvert match {
       case Some(f) =>
         // Preserve the original column as `__<col>` (reference core.py:942-945).
-        df.withColumn(s"__$tsName", col(tsName))
-          .withColumn(tsName, f(col(tsName)).cast(LongType))
+        df.withColumns(ListMap(s"__$tsName" -> col(tsName),
+          tsName -> f(col(tsName)).cast(LongType)))
       case None =>
         df.schema(tsName).dataType match {
           case TimestampType | TimestampNTZType =>
@@ -189,8 +188,7 @@ object Fuser {
       .orElse(if (df.columns.contains(RowIdCol)) Some(col(RowIdCol).cast(LongType)) else None)
       .getOrElse(monotonically_increasing_id())
     df.withColumnRenamed(tsName, TimestampCol)
-      .withColumn(SourceIdCol, lit(id))
-      .withColumn(RowIdCol, rowId)
+      .withColumns(ListMap(SourceIdCol -> lit(id), RowIdCol -> rowId))
   }
 
   /** Fuse DataFrame sources (the core API). */
@@ -218,11 +216,12 @@ object Fuser {
         .groupBy(identity).map { case (c, xs) => c -> xs.length }
       val colliding = colCounts.filter(_._2 > 1).keySet
       normalized = normalized.zip(sources).map { case (df, src) =>
-        df.columns.filter(colliding).foldLeft(df) { (d, c) =>
+        val renamed = df.columns.filter(colliding).map { c =>
           val newName = s"$c${opts.separator}${src.descriptor}"
           renames += (c -> (renames.getOrElse(c, Seq.empty) :+ newName))
-          d.withColumnRenamed(c, newName)
+          c -> newName
         }
+        if (renamed.isEmpty) df else df.withColumnsRenamed(renamed.toMap)
       }
     }
 

@@ -73,8 +73,10 @@ object Resampler {
 
   /** Resample `df` to the `interval` grid. `tsCol` must hold epoch ms.
     * Output: `tsCol` (Long, the grid boundary) first, then `df`'s other
-    * columns, all nullable; rows ordered by boundary. Jobs: the sort's own
-    * plus one that returns two timestamps per partition.
+    * columns, all nullable; rows ordered by boundary. Jobs: the
+    * [[SortedScan]]'s, whose summary job (a range sort left with more than
+    * one partition) returns two timestamps per partition. A sort left
+    * with one partition takes B0 and the grid's end from its own rows.
     */
   def resample(
       df: DataFrame,
@@ -87,63 +89,96 @@ object Resampler {
       .select(col(tsCol).cast(LongType).as(tsCol) +: dataCols.map(col): _*)
     val types = in.schema.fields.map(_.dataType)
     val fill = in.columns.map(opts.ffillKeys.contains)
+    // B0 follows the first event, so that event's bucket is 0
+    val origin = (t0: Long) => Intervals.nextBoundary(t0, interval, initialize = true, opts.tz)
+    // 1 when the last event's bucket is emitted (the tail flush), else 0
+    val flush = if (opts.processBatchEnd) 1L else 0L
 
     SortedScan(in, (tsCol +: opts.tieCols).map(col), "resample", nullable = dataCols) { it =>
       // the partition's first and last timestamps
       val ts = it.map(_.getLong(0))
       Option.when(ts.hasNext)(ts.next()).map(first => (first, ts.foldLeft(first)((_, t) => t)))
     } { spans =>
-      // B0 follows the first event, so that event's bucket is 0; kEnd is the
-      // last bucket emitted (-1: none)
-      val seen = spans.flatten
-      val (b0, kEnd) = seen.headOption.fold((0L, -1L)) { case (t0, _) =>
-        val b0 = Intervals.nextBoundary(t0, interval, initialize = true, opts.tz)
-        (b0, Math.floorDiv(seen.last._2 - b0, step) + (if (opts.processBatchEnd) 1 else 0))
+      if (spans.isEmpty) {
+        // the sort's only partition: B0 from its first row; the grid stops
+        // after its last row's bucket, or on it without the tail flush
+        (_, it) => {
+          val rows = it.buffered
+          if (!rows.hasNext) Iterator.empty
+          else new Walk(rows, types, fill, origin(rows.head.getLong(0)), step,
+            Long.MaxValue, _ + flush)
+        }
+      } else {
+        // kEnd is the last bucket emitted (-1: none)
+        val seen = spans.flatten
+        val (b0, kEnd) = seen.headOption.fold((0L, -1L)) { case (t0, _) =>
+          val b0 = origin(t0)
+          (b0, Math.floorDiv(seen.last._2 - b0, step) + flush)
+        }
+        // partition p emits the buckets before the next non-empty partition's
+        // first one, so a bucket split across partitions is the later one's
+        val stops = spans.scanRight(kEnd + 1) { (span, after) =>
+          span.fold(after)(s => math.min(Intervals.boundaryIndexFor(s._1, b0, step), kEnd + 1))
+        }.tail
+        (p, it) => new Walk(it, types, fill, b0, step, stops(p), _ => stops(p))
       }
-      // partition p emits the buckets before the next non-empty partition's
-      // first one, so a bucket split across partitions is the later one's
-      val stops = spans.scanRight(kEnd + 1) { (span, after) =>
-        span.fold(after)(s => math.min(Intervals.boundaryIndexFor(s._1, b0, step), kEnd + 1))
-      }.tail
-      (p, it) => new Walk(it, types, fill, b0, step, stops(p))
     }
   }
 
   /** One partition's forward pass over rows sorted by timestamp (column 0):
     * for each bucket below `stop`, its last row, then a gap row for each empty
-    * bucket before the next one. A long gap allocates nothing.
+    * bucket before the next one; rows in buckets from `stop` on are a later
+    * partition's. Where the rows end, `stop` becomes `stopAtEnd` of the last
+    * row's bucket, so a bucket is read to its end, and the first row after
+    * it, before its row is emitted. A long gap allocates nothing.
     */
   private final class Walk(rows: Iterator[InternalRow], types: Array[DataType],
-      fill: Array[Boolean], b0: Long, step: Long, stop: Long) extends Iterator[InternalRow] {
-    private var head: InternalRow = null // the next bucket's first row, or null
-    private var headK = stop
+      fill: Array[Boolean], b0: Long, step: Long, private var stop: Long,
+      stopAtEnd: Long => Long) extends Iterator[InternalRow] {
+    private var head: InternalRow = null // the first row after `last`'s bucket, or null
+    private var headK = 0L
+    private var last: InternalRow = null // the last row of bucket `lastK`, to emit next
+    private var lastK = 0L
     private var gap: GenericInternalRow = null
     private var k, end = 0L // gap rows for buckets k until end
     seek()
+    scan()
 
     private def seek(): Unit = {
       head = if (rows.hasNext) rows.next() else null
-      headK = if (head == null) stop else Intervals.boundaryIndexFor(head.getLong(0), b0, step)
-      if (headK >= stop) { head = null; headK = stop }
+      if (head != null) headK = Intervals.boundaryIndexFor(head.getLong(0), b0, step)
     }
 
-    def hasNext: Boolean = k < end || head != null
+    /** Read the bucket `head` opens to its end, into `last`; null when the
+      * bucket is at or after `stop`.
+      */
+    private def scan(): Unit = {
+      last = null
+      if (head != null && headK < stop) {
+        // copy each row before reading the next: a sorted row's buffer is reused
+        lastK = headK
+        last = head.copy()
+        seek()
+        while (head != null && headK == lastK) { last = head.copy(); seek() }
+        if (head == null) stop = stopAtEnd(lastK)
+        if (lastK >= stop) last = null
+      }
+    }
+
+    def hasNext: Boolean = k < end || last != null
 
     def next(): InternalRow =
       if (k < end) { gap.setLong(0, b0 + k * step); k += 1; gap }
       else {
-        // copy each row before reading the next: a sorted row's buffer is reused
-        val bucket = headK
-        var last = head.copy()
-        seek()
-        while (headK == bucket) { last = head.copy(); seek() }
-        k = bucket + 1
-        end = headK
+        val row = last
+        k = lastK + 1
+        end = if (head == null) stop else math.min(headK, stop)
         if (k < end) gap = new GenericInternalRow(Array.tabulate[Any](types.length) { i =>
-          if (fill(i) && !last.isNullAt(i)) last.get(i, types(i)) else null
+          if (fill(i) && !row.isNullAt(i)) row.get(i, types(i)) else null
         })
-        last.setLong(0, b0 + bucket * step)
-        last
+        row.setLong(0, b0 + lastK * step)
+        scan()
+        row
       }
   }
 

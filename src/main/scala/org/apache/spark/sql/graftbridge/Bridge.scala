@@ -65,12 +65,15 @@ object Bridge {
       df.queryExecution, Some(name))(body)
 
   /** Wrap `rdd` as a frame that declares `sorted`'s global order. `sorted`
-    * must be a `df.orderBy(...)` and `rdd` must hold its rows partition for
-    * partition and in order, with the same columns (e.g. a per-partition map
-    * over `sorted.queryExecution.toRdd`). The `LogicalRDD` leaf states the
-    * sort's range partitioning and output ordering on fresh attributes, as
-    * `Dataset.checkpoint` does, so a later `orderBy` on the same keys plans
-    * no exchange and no sort, and `toLocalIterator` walks the rows in order.
+    * must be a `df.orderBy(...)`, or a
+    * `df.repartition(1).sortWithinPartitions(...)` (one partition, declared
+    * as a range partitioning into one), and `rdd` must hold its rows
+    * partition for partition and in order, with the same columns (e.g. a
+    * per-partition map over `sorted.queryExecution.toRdd`). The `LogicalRDD`
+    * leaf states the sort's range partitioning and output ordering on fresh
+    * attributes, as `Dataset.checkpoint` does, so a later `orderBy` on the
+    * same keys plans no exchange and no sort, and `toLocalIterator` walks
+    * the rows in order.
     * The columns named in `nullable` are declared nullable whatever
     * `sorted` says, for an `rdd` that writes nulls into them.
     */
@@ -80,12 +83,14 @@ object Bridge {
       nullable: Seq[String] = Nil)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeMap, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
     val session = sorted.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val qe = sorted.queryExecution
     val order = qe.analyzed match {
-      case s: org.apache.spark.sql.catalyst.plans.logical.Sort if s.global => s.order
+      case s: Sort if s.global => s.order
+      case Sort(o, false, Repartition(1, true, _), _) => o
       case p => throw new IllegalArgumentException(
-        s"sortedFrame: expected a global sort, got ${p.nodeName}")
+        s"sortedFrame: expected a global sort or a one-partition sort, got ${p.nodeName}")
     }
     val fresh = qe.analyzed.output.map { a =>
       if (nullable.contains(a.name)) a.newInstance().withNullability(true) else a.newInstance()

@@ -45,13 +45,24 @@ class PlanSpec extends SparkTestBase {
     case p => p.toString
   }
 
+  /** Run `body` once per sort shape a global resample can take: the
+    * one-partition sort of a source under the coalescing floor (sf0.001,
+    * the gate at its default) and the range sort (the gate pinned off).
+    */
+  private def inEachSortShape(body: String => Unit): Unit =
+    for ((shape, conf) <- Seq("one-partition sort" -> Map.empty[String, String],
+        "range sort" -> Map("spark.graft.adaptive.smallPlanBytes" -> "0")))
+      withConf(conf)(body(shape))
+
   test("time-filter bounds reach the parquet scan (PushedFilters)") {
     // not just the dedicated filter query: ANY windowed query sourced from
     // eventsBetween must prune row groups at the scan
-    for ((q, plan) <- Seq("q_time_filter" -> planOf("q_time_filter"),
-        "q_resample_window" -> resamplePlan("q_resample_window"))) {
-      assert("PushedFilters: \\[[^\\]]*GreaterThanOrEqual\\(ts,".r.findFirstIn(plan).isDefined,
-        s"$q:\n$plan")
+    val pushed = "PushedFilters: \\[[^\\]]*GreaterThanOrEqual\\(ts,".r
+    val plan = planOf("q_time_filter")
+    assert(pushed.findFirstIn(plan).isDefined, s"q_time_filter:\n$plan")
+    inEachSortShape { shape =>
+      val plan = resamplePlan("q_resample_window")
+      assert(pushed.findFirstIn(plan).isDefined, s"q_resample_window, $shape:\n$plan")
     }
   }
 
@@ -95,8 +106,23 @@ class PlanSpec extends SparkTestBase {
   test("resample main plan descends the source exactly once") {
     // the sort and the per-partition summary job read one scan; the
     // returned frame is a leaf over that sort's output
+    inEachSortShape { shape =>
+      val plan = resamplePlan("q_resample_1h")
+      assert("FileScan parquet".r.findAllIn(plan).length == 1, s"$shape:\n$plan")
+    }
+  }
+
+  test("gated resample plan: one exchange, into one partition") {
+    // the sf0.001 source is under the coalescing floor, so the resample
+    // sorts it as one partition: no range exchange, no sampling job
     val plan = resamplePlan("q_resample_1h")
-    assert("FileScan parquet".r.findAllIn(plan).length == 1, plan)
+    assert("(?<!Reused)Exchange ".r.findAllIn(plan).length == 1, plan)
+    assert(plan.contains("Exchange SinglePartition"), plan)
+    // with the gate pinned off the same source is range-sorted
+    withConf(Map("spark.graft.adaptive.smallPlanBytes" -> "0")) {
+      val range = resamplePlan("q_resample_1h")
+      assert(range.contains("Exchange rangepartitioning"), range)
+    }
   }
 
   test("resample windows are all partitioned (no single-task coverage window)") {
@@ -775,16 +801,19 @@ class PlanSpec extends SparkTestBase {
       // word join + per-doc agg + output sort
       ("q_bpe_bytes_merges",    0, 1),
       ("q_bpe_bytes_encode",    2, 4))
-    for ((q, maxScans, maxExch) <- budgets) {
-      val plan =
-        if (q == "q_resample_1h") resamplePlan(q)
-        else SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+    def check(q: String, maxScans: Int, maxExch: Int, plan: String): Unit = {
       val scans = "FileScan parquet".r.findAllIn(plan).length
       val exch  = "(?<!Reused)Exchange ".r.findAllIn(plan).length
       assert(scans <= maxScans,
         s"$q: $scans scans > audited $maxScans\n$plan")
       assert(exch <= maxExch,
         s"$q: $exch exchanges > audited $maxExch\n$plan")
+    }
+    for ((q, maxScans, maxExch) <- budgets) {
+      if (q == "q_resample_1h")
+        inEachSortShape(shape => check(s"$q, $shape", maxScans, maxExch, resamplePlan(q)))
+      else check(q, maxScans, maxExch,
+        SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString)
     }
   }
 }

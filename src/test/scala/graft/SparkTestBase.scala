@@ -25,15 +25,34 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   val aqeOff: Map[String, String] = Map(
     "spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "8")
 
-  /** The two modes a partition-boundary case runs in. With AQE on, the
-    * coalescing floor is one byte so the coalesced reads still hold several
-    * partitions.
+  /** Adaptive execution on and 8 shuffle partitions. */
+  private val aqeOn: Map[String, String] = Map("spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.shuffle.partitions" -> "8")
+
+  /** The modes a partition-boundary case runs in. "AQE on" pins the
+    * adaptive gate's threshold to zero, so `SortedScan` range-sorts a small
+    * input as it does a large one, and sets a coalescing floor of one byte,
+    * so the coalesced reads of the sort still hold several partitions. In
+    * the gated mode the gate and the floor are at their defaults, and a
+    * small input is sorted as one partition.
     */
   val partitionModes: Seq[(String, Map[String, String])] = Seq(
-    "AQE on" -> Map("spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.shuffle.partitions" -> "8",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1"),
-    "AQE off, 8 partitions" -> aqeOff)
+    "AQE on" -> (aqeOn ++ Map("spark.graft.adaptive.smallPlanBytes" -> "0",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1")),
+    "AQE off, 8 partitions" -> aqeOff,
+    "gated, one partition" -> aqeOn)
+
+  /** True under the session conf of the gated partition mode. */
+  def gatedMode: Boolean =
+    spark.conf.get("spark.sql.adaptive.enabled") == "true" &&
+      spark.conf.getOption("spark.graft.adaptive.smallPlanBytes").isEmpty
+
+  /** A small `SortedScan` result has exactly one partition in the gated
+    * mode, and more than one partition holding rows in the range modes.
+    */
+  def assertSortPartitions(df: DataFrame): Unit =
+    if (gatedMode) assert(partitionSizes(df).length == 1)
+    else assert(partitionSizes(df).count(_ > 0) > 1)
 
   /** One test per partition mode, named `name [mode]`. */
   def inBothModes(name: String)(body: => Unit): Unit =
@@ -52,17 +71,35 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     * delivers events in order.
     */
   def jobsRun[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (out, jobs, _) = jobsAndInputRecords(body)
+    (out, jobs)
+  }
+
+  /** [[jobsRun]], also counting the input records the tasks of those jobs
+    * read (listener task metrics: the rows a scan delivers).
+    */
+  def jobsAndInputRecords[T](body: => T): (T, Int, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageCompleted, SparkListenerStageSubmitted}
     val sc = spark.sparkContext
     val group = s"jobs-run-${java.util.UUID.randomUUID}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val flushed = new java.util.concurrent.CountDownLatch(1)
+    def inGroup(props: java.util.Properties): Option[String] =
+      Option(props).map(_.getProperty("spark.jobGroup.id"))
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+        inGroup(e.properties).foreach { g =>
           if (g == group) jobs.incrementAndGet()
           else if (g == s"$group-flush") flushed.countDown()
         }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (inGroup(e.properties).contains(group)) stages.add(e.stageInfo.stageId)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId))
+          records.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
     }
     sc.addSparkListener(listener)
     try {
@@ -71,7 +108,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       sc.setJobGroup(s"$group-flush", "flush")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not flush")
-      (out, jobs.get)
+      (out, jobs.get, records.get)
     } finally sc.removeSparkListener(listener)
   }
 

@@ -59,7 +59,7 @@ class ForwardFillSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       .collect().map(r => (Option(r.get(0)), Option(r.get(1)), r.getLong(2)))
     inEachMode {
       val filled = ForwardFill.partitioned(df, Seq("x"), "ts", tieCols = Seq(col("id")))
-      assert(partitionSizes(filled).count(_ > 0) > 1)
+      assertSortPartitions(filled)
       val p = filled.orderBy(col("ts").asc_nulls_first, col("id"))
         .collect().map(r => (Option(r.get(0)), Option(r.get(1)), r.getLong(2)))
       assert(g.toSeq == p.toSeq)
@@ -106,7 +106,7 @@ class ForwardFillSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       .orderBy(col("ts"), col("id")).collect())
     inEachMode {
       val filled = ForwardFill.partitioned(df, Seq("x"), "ts", tieCols = Seq(col("id")))
-      assert(partitionSizes(filled).count(_ > 0) > 1)
+      assertSortPartitions(filled)
       assert(render(filled.orderBy(col("ts"), col("id")).collect()) == g)
     }
   }
@@ -117,7 +117,7 @@ class ForwardFillSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val df   = data.toDF("ts", "x").repartition(4)
     inEachMode {
       val filled = ForwardFill.partitioned(df, Seq("x"), "ts")
-      assert(partitionSizes(filled).count(_ > 0) > 1)
+      assertSortPartitions(filled)
       val out = filled.orderBy("ts").collect()
       assert(out.length == 1000 && out.forall(_.getDouble(1) == 42.0))
     }
@@ -149,7 +149,7 @@ class ForwardFillSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       .orderBy("ts").collect().toSeq
     withSortSpills {
       val filled = ForwardFill.partitioned(df, Seq("s", "st"), "ts")
-      assert(partitionSizes(filled).count(_ > 0) > 1)
+      assertSortPartitions(filled)
       assert(filled.orderBy("ts").collect().toSeq == g)
     }
   }
@@ -161,7 +161,7 @@ class ForwardFillSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
     val df = data.toDF("ts", "x", "z").repartition(5)
     val filled = ForwardFill.partitioned(df, Seq("x", "z"), "ts")
-    assert(partitionSizes(filled).count(_ > 0) > 1)
+    assertSortPartitions(filled)
     val out = filled.orderBy("ts").collect()
     assert(out.toSeq ==
       ForwardFill.global(df, Seq("x", "z"), Seq(col("ts"))).orderBy("ts").collect().toSeq)

@@ -139,6 +139,33 @@ class FuserSpec extends SparkTestBase {
     assert(res.df.first().getAs[Long](TimestampCol) == 1577836800000L)
   }
 
+  test("fused column names and order: every normalize step and the collision rename") {
+    val iso = Seq(("2023-11-04T15:22:00.091Z", 1.0, 7L)).toDF("str_iso_timestamp", "Price", "Syn_id")
+    val native = Seq((java.sql.Timestamp.valueOf("2020-01-01 00:00:00"), 2.0, "x"))
+      .toDF("ts", "bid", "note")
+    val sources = Seq(
+      FrameSource(trades, "trades", "Timestamp", renameCols = Map("Price" -> "Px")),
+      FrameSource(iso, "iso", "str_iso_timestamp",
+        tsConvert = Some(c => unix_millis(to_timestamp(c)))),
+      FrameSource(spread, "spread", "Timestamp", removeCols = Seq("ask"),
+        secondarySortCol = Some("Syn_id")),
+      FrameSource(native, "native", "ts"))
+    val res = Fuser.fuseFrames(sources, FuseOptions(keepRowId = true))
+    assert(res.df.columns.toSeq == Seq(TimestampCol, "Px", "Syn_id||trades", SourceIdCol,
+      "__rowid", "Price", "Syn_id||iso", "__str_iso_timestamp", "bid||spread", "Syn_id||spread",
+      "bid||native", "note"))
+    assert(res.renames == Map("Syn_id" -> Seq("Syn_id||trades", "Syn_id||iso", "Syn_id||spread"),
+      "bid" -> Seq("bid||spread", "bid||native")))
+    // the parquet source's row id is attached before normalize, the CSV
+    // source's after it
+    val fused = (specs: Seq[graft.sources.SourceSpec]) =>
+      Fuser.fuse(spark, specs, FuseOptions(keepRowId = true)).df.columns.toSeq
+    assert(fused(pruneSpecs()) == Seq(TimestampCol, "price||p", "sym||p", "__rowid",
+      SourceIdCol, "price||c", "sym||c"))
+    assert(fused(pruneSpecs().reverse) == Seq(TimestampCol, "price||c", "sym||c", SourceIdCol,
+      "__rowid", "price||p", "sym||p"))
+  }
+
   test("parquet sources get a recompute-stable row id: identical order across actions") {
     // Intra-millisecond ties across two files: without a stable tiebreaker,
     // two actions on the same plan may disagree (M4 determinism).
@@ -160,6 +187,19 @@ class FuserSpec extends SparkTestBase {
     assert(ids.distinct.length == ids.length)
     val byFile = ids.groupBy(_ >> 40)
     assert(byFile.size == 2, s"expected 2 file groups, got $byFile")
+  }
+
+  test("a forceSchema parquet source, whose projection hides `_metadata`, keeps the legacy row id") {
+    val d = java.nio.file.Files.createTempDirectory("graft_force_rowid").resolve("src")
+    writeParquetFile(Seq((1000L, 1L), (1000L, 2L)).toDF("t", "v"), d.resolve("f_1.parquet"))
+    writeParquetFile(Seq((2000L, 3.5)).toDF("t", "v"), d.resolve("f_2.parquet"))
+    val spec = graft.sources.SourceSpec(path = d.toString, format = "parquet",
+      descriptor = "s", timestampCol = "t", fileSortRegex = Some("\\d+"), forceSchema = true,
+      schema = Some(org.apache.spark.sql.types.StructType.fromDDL("t BIGINT, v DOUBLE")))
+    val rows = Fuser.fuse(spark, Seq(spec), FuseOptions(keepRowId = true)).df.collect()
+    assert(rows.map(_.getAs[Double]("v")).toSeq.sorted == Seq(1.0, 2.0, 3.5))
+    val ids = rows.map(_.getAs[Long](Fuser.RowIdCol))
+    assert(ids.distinct.length == 3)
   }
 
   // ---- source and file pruning (M5/M6) --------------------------------------

@@ -1,0 +1,150 @@
+package graft.core
+
+import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
+
+/** The jobs [[SortedScan]] runs while a frame is built, and the order it
+  * declares. An input adaptive execution would coalesce into one partition
+  * (under the coalescing floor, 1 MB by default) is sorted as one
+  * partition: only the shuffle map stage runs, scanning the source once.
+  * Any other input is range-sorted: the sampling job, map stage and
+  * summary job run; no summary job runs for a sort that ends up with one
+  * partition.
+  */
+class SortedScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
+
+  private val rows = 3000
+
+  /** A parquet source of `rows` rows in 4 files, keys out of order. */
+  private lazy val source: DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sortedscan").resolve("src")
+    spark.range(rows).select(((col("id") * 7919) % rows).as("ts"), col("id").as("v"))
+      .repartition(4).write.parquet(dir.toString)
+    spark.read.parquet(dir.toString)
+  }
+
+  private val gateOff = Map("spark.graft.adaptive.smallPlanBytes" -> "0")
+
+  /** Scan `source` by `ts` with an identity pass; also returns the length
+    * of the summary array `pass` got (-1: not called).
+    */
+  private def scan(df: DataFrame = source): (DataFrame, Int) = {
+    var got = -1
+    val out = SortedScan(df, Seq(col("ts")), "sortedScanSpec")(_.size) { summaries =>
+      got = summaries.length
+      (_, it) => it
+    }
+    (out, got)
+  }
+
+  private def sortedRows: Seq[Row] = source.orderBy("ts").collect().toSeq
+
+  test("input under the coalescing floor: one job, and the source is scanned once") {
+    withConf(Map("spark.sql.adaptive.enabled" -> "true")) {
+      assert(AdaptiveGate.coalescesToOne(source))
+      val ((out, summaries), jobs, read) = jobsAndInputRecords(scan())
+      assert(jobs == 1, "the shuffle map stage only")
+      assert(read == rows)
+      assert(summaries == 0)
+      assert(partitionSizes(out) == Seq(rows))
+      val (collected, actionJobs, actionRead) = jobsAndInputRecords(out.collect().toSeq)
+      assert(collected == sortedRows)
+      assert(actionJobs == 1 && actionRead == 0, "the action reads the shuffle, not the source")
+    }
+  }
+
+  test("gate off: range sampling, shuffle map stage and summary job") {
+    withConf(gateOff ++ Map("spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1")) {
+      assert(!AdaptiveGate.gated(source))
+      val ((out, summaries), jobs, read) = jobsAndInputRecords(scan())
+      assert(jobs == 3)
+      assert(read == 2 * rows, "the sampling job scans the source too")
+      val sizes = partitionSizes(out)
+      assert(sizes.length > 1 && summaries == sizes.length)
+      assert(out.collect().toSeq == sortedRows)
+    }
+  }
+
+  test("gated, but above the coalescing floor: the range sort keeps its partitions") {
+    withConf(Map("spark.sql.adaptive.enabled" -> "true", "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1024")) {
+      assert(AdaptiveGate.gated(source) && !AdaptiveGate.coalescesToOne(source))
+      val ((out, summaries), jobs, read) = jobsAndInputRecords(scan())
+      assert(jobs == 3)
+      assert(read == 2 * rows)
+      val sizes = partitionSizes(out)
+      assert(sizes.length > 1 && summaries == sizes.length)
+      assert(out.collect().toSeq == sortedRows)
+    }
+  }
+
+  test("the coalescing floor follows the coalescing confs") {
+    val on = Map("spark.sql.adaptive.enabled" -> "true")
+    // one partition aimed for: the floor is the advisory size
+    withConf(on + ("spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")) {
+      assert(AdaptiveGate.coalescesToOne(source))
+    }
+    withConf(on ++ Map("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1024",
+        "spark.sql.adaptive.coalescePartitions.minPartitionNum" -> "1")) {
+      assert(AdaptiveGate.coalescesToOne(source))
+    }
+    withConf(on + ("spark.sql.adaptive.coalescePartitions.enabled" -> "false")) {
+      assert(AdaptiveGate.gated(source) && !AdaptiveGate.coalescesToOne(source))
+    }
+  }
+
+  test("an adaptively coalesced one-partition range sort runs no summary job") {
+    withConf(gateOff ++ Map("spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "8")) {
+      val ((out, summaries), jobs, _) = jobsAndInputRecords(scan())
+      assert(jobs == 2, "range sampling and the shuffle map stage")
+      assert(summaries == 0)
+      assert(partitionSizes(out) == Seq(rows))
+      assert(out.collect().toSeq == sortedRows)
+    }
+  }
+
+  test("adaptive execution off: the gate is off") {
+    withConf(aqeOff) {
+      assert(!AdaptiveGate.gated(source) && !AdaptiveGate.coalescesToOne(source))
+      val ((out, summaries), jobs, _) = jobsAndInputRecords(scan())
+      assert(jobs == 2, "range sampling and the summary job")
+      assert(summaries == partitionSizes(out).length && summaries > 1)
+    }
+  }
+
+  inBothModes("rows in order; a later orderBy on the same keys plans no exchange and no sort") {
+    val (out, summaries) = scan()
+    assert(summaries == (if (gatedMode) 0 else partitionSizes(out).length))
+    val sorted = out.orderBy("ts")
+    assert(sorted.collect().toSeq == sortedRows)
+    val plan = sorted.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
+    assert(collect(plan) { case s: SortExec => s }.isEmpty, plan.toString)
+  }
+
+  inBothModes("empty input: no rows, same schema") {
+    val (out, _) = scan(source.filter(col("ts") < 0))
+    assert(out.collect().isEmpty)
+    assert(out.schema == source.schema)
+  }
+
+  test("a one-partition sort declares one range partition") {
+    withConf(Map("spark.sql.adaptive.enabled" -> "true")) {
+      val (out, _) = scan()
+      import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+      out.queryExecution.analyzed match {
+        case l: org.apache.spark.sql.execution.LogicalRDD =>
+          assert(l.outputPartitioning.isInstanceOf[RangePartitioning])
+          assert(l.outputPartitioning.numPartitions == 1)
+        case p => fail(s"expected a LogicalRDD leaf, got ${p.nodeName}")
+      }
+    }
+  }
+}

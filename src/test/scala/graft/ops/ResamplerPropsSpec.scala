@@ -7,13 +7,16 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import java.time.{ZoneId, ZoneOffset}
+
 /** Randomized equivalence: [[Resampler.resample]] vs a direct row-by-row
   * simulation of the reference's event loop
   * (`BatchEveryIntervalHandler.process/finalize`, classes.py:589-637).
   * The golden fixtures pin four specific datasets; this pins the semantics
   * over random gap patterns, duplicate timestamps and null values. The
-  * global cases run with several partitions, adaptive execution on and off,
-  * so buckets and gaps cross partition boundaries.
+  * global cases run range-sorted into several partitions, adaptive
+  * execution on and off, so buckets and gaps cross partition boundaries,
+  * and gated into one partition, which takes its grid from its own rows.
   */
 class ResamplerPropsSpec extends SparkTestBase {
 
@@ -28,11 +31,12 @@ class ResamplerPropsSpec extends SparkTestBase {
     * Boundaries run from nextBoundary(t0) while B <= t1, plus one tail flush
     * when `batchEnd`. Events without a timestamp never emit.
     */
-  private def simulate(events: Seq[Event], interval: String, batchEnd: Boolean = true): Seq[Out] = {
+  private def simulate(events: Seq[Event], interval: String, batchEnd: Boolean = true,
+      tz: ZoneId = ZoneOffset.UTC): Seq[Out] = {
     val step   = Intervals.toMillis(interval)
     val sorted = events.collect { case (Some(ts), v, id) => (ts, v, id) }.sortBy(e => (e._1, e._3))
     if (sorted.isEmpty) return Nil
-    val b0     = Intervals.nextBoundary(sorted.head._1, interval, initialize = true)
+    val b0     = Intervals.nextBoundary(sorted.head._1, interval, initialize = true, tz)
     val kMax   = Math.floorDiv(sorted.last._1 - b0, step) + (if (batchEnd) 1 else 0)
     var i = 0 // sorted(i) is the first event at or after the boundary
     (0L to kMax).map { k =>
@@ -58,15 +62,20 @@ class ResamplerPropsSpec extends SparkTestBase {
     Option(r.get(r.fieldIndex("value"))).map(_.asInstanceOf[Double]),
     Option(r.get(r.fieldIndex("id"))).map(_.asInstanceOf[Long]))).toSeq
 
+  private def resample(evs: Seq[Event], interval: String, batchEnd: Boolean = true,
+      tz: ZoneId = ZoneOffset.UTC): DataFrame =
+    Resampler.resample(evs.toDF("__timestamp", "value", "id").repartition(5), interval,
+      opts = ResampleOptions(ffillKeys = Seq("value"), tieCols = Seq("id"),
+        processBatchEnd = batchEnd, tz = tz))
+
   /** Resample `evs` and compare with the simulation; more than one partition
-    * must emit rows.
+    * must emit rows, or, gated, the one partition holds them all.
     */
-  private def check(evs: Seq[Event], interval: String, batchEnd: Boolean = true): Unit = {
-    val df = evs.toDF("__timestamp", "value", "id").repartition(5)
-    val out = Resampler.resample(df, interval, opts = ResampleOptions(
-      ffillKeys = Seq("value"), tieCols = Seq("id"), processBatchEnd = batchEnd))
-    assert(partitionSizes(out).count(_ > 0) > 1)
-    val (got, want) = (rows(out), simulate(evs, interval, batchEnd))
+  private def check(evs: Seq[Event], interval: String, batchEnd: Boolean = true,
+      tz: ZoneId = ZoneOffset.UTC): Unit = {
+    val out = resample(evs, interval, batchEnd, tz)
+    assertSortPartitions(out)
+    val (got, want) = (rows(out), simulate(evs, interval, batchEnd, tz))
     assert(got == want, s"interval=$interval: first diff at " +
       s"${got.zip(want).indexWhere(p => p._1 != p._2)} of ${got.length} vs ${want.length}")
   }
@@ -120,11 +129,12 @@ class ResamplerPropsSpec extends SparkTestBase {
 
   inBothModes("a bucket split across a partition boundary is emitted once") {
     // 3000 events in at most 4 one-hour buckets: with more non-empty sort
-    // partitions than buckets, some bucket's rows span two partitions
+    // partitions than buckets, some bucket's rows span two partitions (in
+    // the range modes; the gated mode sorts them as one partition)
     val evs = events(seed = 5, n = 3000, spanMs = 3 * 3600000L)
     val sorted = evs.toDF("__timestamp", "value", "id").orderBy("__timestamp", "id")
     val buckets = evs.flatMap(_._1).map(_ / 3600000L).distinct.size
-    assert(partitionSizes(sorted).count(_ > 0) > buckets)
+    if (!gatedMode) assert(partitionSizes(sorted).count(_ > 0) > buckets)
     check(evs, "1h")
   }
 
@@ -134,6 +144,13 @@ class ResamplerPropsSpec extends SparkTestBase {
     val far = events(seed = 7, n = 40, spanMs = 5000L)
       .map(e => (e._1.map(_ + 7000000L), e._2, e._3 + 40))
     check(near ++ far, "100l")
+  }
+
+  inBothModes("a day grid in a non-UTC zone starts from the first event's local midnight") {
+    // five days across the 2020-11-01 fall-back in New York
+    val evs = events(seed = 13, n = 400, spanMs = 5 * 86400000L)
+      .map(e => e.copy(_1 = e._1.map(_ + 4000000000L)))
+    check(evs, "1d", tz = ZoneId.of("America/New_York"))
   }
 
   inBothModes("processBatchEnd = false drops the tail flush") {
@@ -174,5 +191,27 @@ class ResamplerPropsSpec extends SparkTestBase {
     assert(out.schema("id").nullable && out.schema("value").nullable)
     assert(out.filter(col("id").isNull).count() == gaps)
     assert(out.filter(col("value").isNull).count() == gaps)
+  }
+
+  test("one partition and the range path give the same rows on each edge case") {
+    val ny = ZoneId.of("America/New_York")
+    val rnd = new scala.util.Random(14)
+    val cases: Seq[(String, Seq[Event], String, Boolean, ZoneId)] = Seq(
+      ("no tail flush", events(seed = 8, n = 150, spanMs = 600000L), "10s", false, ZoneOffset.UTC),
+      ("empty", Nil, "1s", true, ZoneOffset.UTC),
+      ("null timestamps", events(seed = 11, n = 300, spanMs = 600000L)
+        .map(e => if (rnd.nextInt(6) == 0) e.copy(_1 = None) else e), "5s", true, ZoneOffset.UTC),
+      ("day grid in New York", events(seed = 13, n = 400, spanMs = 5 * 86400000L)
+        .map(e => e.copy(_1 = e._1.map(_ + 4000000000L))), "1d", false, ny),
+      ("70k-point gap", events(seed = 6, n = 40, spanMs = 5000L) ++
+        events(seed = 7, n = 40, spanMs = 5000L)
+          .map(e => (e._1.map(_ + 7000000L), e._2, e._3 + 40)), "100l", true, ZoneOffset.UTC))
+    val (range, gated) = (partitionModes.toMap.apply("AQE on"),
+      partitionModes.toMap.apply("gated, one partition"))
+    for ((name, evs, interval, batchEnd, tz) <- cases) withClue(s"$name: ") {
+      val one = withConf(gated)(rows(resample(evs, interval, batchEnd, tz)))
+      assert(one == withConf(range)(rows(resample(evs, interval, batchEnd, tz))))
+      assert(one == simulate(evs, interval, batchEnd, tz))
+    }
   }
 }
