@@ -80,7 +80,9 @@ object ForwardFill {
     *
     * Jobs: the [[SortedScan]]'s. An input that adaptive execution would
     * coalesce into one partition is sorted as one partition whose fill
-    * starts from no carry, with no job but the sort's; a range sort's
+    * starts from no carry, with no job but the sort's, and stays one
+    * partition (not sliced: a `toLocalIterator` over it, as in
+    * [[graft.ops.Replay]], runs one job per partition); a range sort's
     * summary job returns at most one row per partition. The fill itself
     * runs lazily in the result's actions.
     */

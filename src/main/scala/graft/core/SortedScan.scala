@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -21,27 +21,55 @@ import scala.reflect.ClassTag
   * rows, lazily, in the result's actions. A sort that ends up with one
   * partition (the one-partition sort, or a range sort that adaptive
   * execution coalesced into one) runs no summary job: `pass` gets an empty
-  * array and its one partition takes what it needs from its own rows. The
-  * rows emitted must have `df`'s columns, in `order`; the result declares
-  * the sort's partitioning and ordering, so a later `orderBy` on the same
-  * keys is free, and declares the columns in `nullable` nullable.
+  * array and its one partition takes what it needs from its own rows.
   *
-  * Jobs, run as one SQL execution `name`: for a one-partition sort, the
-  * shuffle map stage under adaptive execution, which scans the input once;
-  * otherwise the sort's range sampling, its shuffle map stage under
-  * adaptive execution, and the summary job unless one partition is left.
+  * With a [[Slicing]], the sort's map stage also observes its `extent`
+  * aggregates over the input, and the one-partition sort may be emitted as
+  * up to k ordered slices instead, k the default parallelism, so the
+  * result's actions run on several cores: each slice re-reads the sort's
+  * one partition and keeps its own part. The sort's shuffle is then read
+  * once per slice; the path runs only under the coalescing floor, where
+  * that is small.
+  *
+  * The rows emitted must have `df`'s columns, in `order`; the result
+  * declares the sort's range partitioning and ordering, so a later `orderBy`
+  * on the same keys is free, and declares the columns in `nullable`
+  * nullable.
+  *
+  * Jobs, run as one SQL execution `name`: for a one-partition sort, sliced
+  * or not, the shuffle map stage under adaptive execution, which scans the
+  * input once; otherwise the sort's range sampling, its shuffle map stage
+  * under adaptive execution, and the summary job unless one partition is
+  * left.
   */
 object SortedScan {
+
+  /** Emit a one-partition sort as ordered slices. `extent` are aggregates
+    * over every input row, observed in the sort's map stage;
+    * `slices(extent, k)` returns, for each of at most k slices, what it
+    * emits from all the sorted rows, slice `i`'s rows ordering after slice
+    * `i - 1`'s. With fewer than two the sort stays one partition, and
+    * `pass` runs on it.
+    */
+  final case class Slicing(
+      extent: Seq[Column],
+      slices: (Row, Int) => Seq[Iterator[InternalRow] => Iterator[InternalRow]])
 
   def apply[S: ClassTag](
       df: DataFrame,
       order: Seq[Column],
       name: String,
-      nullable: Seq[String] = Nil)(
+      nullable: Seq[String] = Nil,
+      slicing: Option[Slicing] = None)(
       summarize: Iterator[InternalRow] => S)(
       pass: Array[S] => (Int, Iterator[InternalRow]) => Iterator[InternalRow]): DataFrame = {
+    val oneSort = AdaptiveGate.coalescesToOne(df)
+    val sliced = slicing.filter(_ => oneSort)
+    // a unique name: the input may hold other scans' observations
+    val observation = s"$name.extent.${java.util.UUID.randomUUID}"
     val sorted =
-      if (AdaptiveGate.coalescesToOne(df)) df.repartition(1).sortWithinPartitions(order: _*)
+      if (oneSort) sliced.fold(df)(s => Bridge.observeUnsorted(df, observation, s.extent))
+        .repartition(1).sortWithinPartitions(order: _*)
       else df.orderBy(order: _*)
     val (rows, summaries) = Bridge.withSqlExecution(sorted, name) {
       val rows = sorted.queryExecution.toRdd
@@ -49,7 +77,14 @@ object SortedScan {
         if (rows.getNumPartitions <= 1) Array.empty[S]
         else rows.mapPartitions(it => Iterator.single(summarize(it))).collect())
     }
-    Bridge.sortedFrame(sorted,
-      rows.mapPartitionsWithIndex(pass(summaries), preservesPartitioning = true), nullable)
+    // the map stage has run (a one-partition sort runs only under adaptive
+    // execution); an input the optimizer found empty observes nothing
+    val slices = sliced.toSeq.flatMap(s =>
+      sorted.queryExecution.observedMetrics.get(observation).toSeq
+        .flatMap(s.slices(_, rows.sparkContext.defaultParallelism)))
+    val out =
+      if (slices.length > 1) rows.sparkContext.union(slices.map(f => rows.mapPartitions(f)))
+      else rows.mapPartitionsWithIndex(pass(summaries), preservesPartitioning = true)
+    Bridge.sortedFrame(sorted, out, nullable)
   }
 }

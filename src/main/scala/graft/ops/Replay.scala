@@ -41,7 +41,11 @@ object Replay {
   }
 
   /** Replay `df` (already ordered) into `process(ts, row)`. Returns the final
-    * status. `tsCol` must be epoch-ms Long.
+    * status. `tsCol` must be epoch-ms Long. Runs one job per partition of
+    * `df`: one for a [[graft.core.ForwardFill]] result under the coalescing
+    * floor, but one per grid slice for a [[Resampler.resample]] result
+    * there (up to the default parallelism), each re-reading the resample's
+    * sort.
     */
   def replay(
       df: DataFrame,

@@ -33,8 +33,10 @@ import java.time.{ZoneId, ZoneOffset}
   *
   * Scale shape: the global [[resample]] runs the reference's loop on each
   * partition of one [[SortedScan]]; all a partition needs from the others is
-  * the next one's first bucket. No window, no aggregation shuffle, no
-  * driver-side row loop. [[resampleByKey]] runs independent grids per key.
+  * the next one's first bucket (or, on a one-partition sort emitted as grid
+  * slices, the grid's extent and the last event before each slice). No
+  * window, no aggregation shuffle, no driver-side row loop.
+  * [[resampleByKey]] runs independent grids per key.
   */
 object Resampler {
 
@@ -59,6 +61,14 @@ object Resampler {
     */
   private val ChunkSize = 65536L
 
+  /** The fewest grid rows given a slice of their own: a one-partition sort
+    * emits its grid of `n` rows as `min(k, n / SliceRows)` slices, k the
+    * default parallelism, and stays one partition below two. Each slice
+    * costs a task that re-reads and sorts the whole partition, which pays
+    * only where the sink's encode of the slice outweighs it.
+    */
+  private[ops] val SliceRows = 8192L
+
   /** Two-level bounded explode of the inclusive range [fromCol, toCol] into
     * `outCol`, preserving all other columns. Shared with [[Interpolate]].
     */
@@ -75,8 +85,15 @@ object Resampler {
     * Output: `tsCol` (Long, the grid boundary) first, then `df`'s other
     * columns, all nullable; rows ordered by boundary. Jobs: the
     * [[SortedScan]]'s, whose summary job (a range sort left with more than
-    * one partition) returns two timestamps per partition. A sort left
-    * with one partition takes B0 and the grid's end from its own rows.
+    * one partition) returns two timestamps per partition. A one-partition
+    * sort's map stage also observes the first and last timestamps, and a
+    * grid of `n` rows is emitted as `s = min(k, n / SliceRows)` slices, k
+    * the default parallelism: slice `i` emits buckets `[i·n/s, (i+1)·n/s)`
+    * from its own re-read of the sorted partition, so a fine grid is
+    * written from several cores (and a `toLocalIterator` over it, as in
+    * [[Replay]], runs s jobs). A coarser grid stays one partition, which,
+    * like a range sort that adaptive execution coalesced into one, takes
+    * B0 and the grid's end from its own rows.
     */
   def resample(
       df: DataFrame,
@@ -93,8 +110,24 @@ object Resampler {
     val origin = (t0: Long) => Intervals.nextBoundary(t0, interval, initialize = true, opts.tz)
     // 1 when the last event's bucket is emitted (the tail flush), else 0
     val flush = if (opts.processBatchEnd) 1L else 0L
+    // the last bucket emitted, from the first and last timestamps
+    val lastBucket = (b0: Long, t1: Long) => Math.floorDiv(t1 - b0, step) + flush
 
-    SortedScan(in, (tsCol +: opts.tieCols).map(col), "resample", nullable = dataCols) { it =>
+    // a one-partition sort's grid of n rows, cut into one slice per
+    // SliceRows rows, at most k
+    val slicing = SortedScan.Slicing(Seq(min(col(tsCol)), max(col(tsCol))), (extent, k) =>
+      if (extent.isNullAt(0)) Nil
+      else {
+        val b0 = origin(extent.getLong(0))
+        val n = lastBucket(b0, extent.getLong(1)) + 1
+        val s = math.min(k.toLong, n / SliceRows)
+        (0L until s).map { i =>
+          val (lo, hi) = (n * i / s, n * (i + 1) / s)
+          (it: Iterator[InternalRow]) => new Walk(it, types, fill, b0, step, lo, hi, _ => hi)
+        }
+      })
+    SortedScan(in, (tsCol +: opts.tieCols).map(col), "resample", nullable = dataCols,
+        slicing = Some(slicing)) { it =>
       // the partition's first and last timestamps
       val ts = it.map(_.getLong(0))
       Option.when(ts.hasNext)(ts.next()).map(first => (first, ts.foldLeft(first)((_, t) => t)))
@@ -105,7 +138,7 @@ object Resampler {
         (_, it) => {
           val rows = it.buffered
           if (!rows.hasNext) Iterator.empty
-          else new Walk(rows, types, fill, origin(rows.head.getLong(0)), step,
+          else new Walk(rows, types, fill, origin(rows.head.getLong(0)), step, 0L,
             Long.MaxValue, _ + flush)
         }
       } else {
@@ -113,27 +146,29 @@ object Resampler {
         val seen = spans.flatten
         val (b0, kEnd) = seen.headOption.fold((0L, -1L)) { case (t0, _) =>
           val b0 = origin(t0)
-          (b0, Math.floorDiv(seen.last._2 - b0, step) + flush)
+          (b0, lastBucket(b0, seen.last._2))
         }
         // partition p emits the buckets before the next non-empty partition's
         // first one, so a bucket split across partitions is the later one's
         val stops = spans.scanRight(kEnd + 1) { (span, after) =>
           span.fold(after)(s => math.min(Intervals.boundaryIndexFor(s._1, b0, step), kEnd + 1))
         }.tail
-        (p, it) => new Walk(it, types, fill, b0, step, stops(p), _ => stops(p))
+        (p, it) => new Walk(it, types, fill, b0, step, 0L, stops(p), _ => stops(p))
       }
     }
   }
 
   /** One partition's forward pass over rows sorted by timestamp (column 0):
-    * for each bucket below `stop`, its last row, then a gap row for each empty
-    * bucket before the next one; rows in buckets from `stop` on are a later
-    * partition's. Where the rows end, `stop` becomes `stopAtEnd` of the last
-    * row's bucket, so a bucket is read to its end, and the first row after
-    * it, before its row is emitted. A long gap allocates nothing.
+    * for each bucket from `start` and below `stop`, its last row, then a gap
+    * row for each empty bucket before the next one. Rows in buckets before
+    * `start` are an earlier slice's: the last of them seeds the gap rows
+    * before the first row emitted. Rows in buckets from `stop` on are a
+    * later partition's. Where the rows end, `stop` becomes `stopAtEnd` of
+    * the last row's bucket, so a bucket is read to its end, and the first
+    * row after it, before its row is emitted. A long gap allocates nothing.
     */
   private final class Walk(rows: Iterator[InternalRow], types: Array[DataType],
-      fill: Array[Boolean], b0: Long, step: Long, private var stop: Long,
+      fill: Array[Boolean], b0: Long, step: Long, start: Long, private var stop: Long,
       stopAtEnd: Long => Long) extends Iterator[InternalRow] {
     private var head: InternalRow = null // the first row after `last`'s bucket, or null
     private var headK = 0L
@@ -142,11 +177,29 @@ object Resampler {
     private var gap: GenericInternalRow = null
     private var k, end = 0L // gap rows for buckets k until end
     seek()
+    if (head != null && headK < start) {
+      // copy each row before reading the next: a sorted row's buffer is reused
+      var before = head.copy()
+      seek()
+      while (head != null && headK < start) { before = head.copy(); seek() }
+      openGaps(before, start)
+    }
     scan()
 
     private def seek(): Unit = {
       head = if (rows.hasNext) rows.next() else null
       if (head != null) headK = Intervals.boundaryIndexFor(head.getLong(0), b0, step)
+    }
+
+    /** Gap rows from bucket `from` until the next row's bucket, carrying
+      * `row`'s fill values.
+      */
+    private def openGaps(row: InternalRow, from: Long): Unit = {
+      k = from
+      end = if (head == null) stop else math.min(headK, stop)
+      if (k < end) gap = new GenericInternalRow(Array.tabulate[Any](types.length) { i =>
+        if (fill(i) && !row.isNullAt(i)) row.get(i, types(i)) else null
+      })
     }
 
     /** Read the bucket `head` opens to its end, into `last`; null when the
@@ -155,7 +208,6 @@ object Resampler {
     private def scan(): Unit = {
       last = null
       if (head != null && headK < stop) {
-        // copy each row before reading the next: a sorted row's buffer is reused
         lastK = headK
         last = head.copy()
         seek()
@@ -171,11 +223,7 @@ object Resampler {
       if (k < end) { gap.setLong(0, b0 + k * step); k += 1; gap }
       else {
         val row = last
-        k = lastK + 1
-        end = if (head == null) stop else math.min(headK, stop)
-        if (k < end) gap = new GenericInternalRow(Array.tabulate[Any](types.length) { i =>
-          if (fill(i) && !row.isNullAt(i)) row.get(i, types(i)) else null
-        })
+        openGaps(row, lastK + 1)
         row.setLong(0, b0 + lastK * step)
         scan()
         row

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators: exact, n-gram Jaccard, MinHash+LSH and SimHash.
@@ -817,8 +817,9 @@ object Dedup {
     * aggregation, zero driver-synchronized rounds, any diameter. The pair
     * set is checkpointed FIRST (near-dup pair lineages — shingle joins,
     * banded LSH — are the expensive part; the probe must not re-run
-    * them), then one approx_count_distinct over the checkpoint decides
-    * the regime (a resource decision needs no exactness; same gate value
+    * them), and a distinct-id estimate observed in the checkpoint's own
+    * job (the union of one HLL sketch per endpoint column) decides the
+    * regime (a resource decision needs no exactness; same gate value
     * and memory math as Graph: ~16-32 B/id in the merged buffer, ≈32 MB
     * at the 2²⁰ default). Union-by-min roots every component at its
     * minimum member, so the output CONTRACT — every paired id labeled
@@ -839,12 +840,15 @@ object Dedup {
     // the output regime-dependent, against the identical-on-both-paths
     // contract. No near-dup pair producer emits null endpoints; a caller
     // feeding them gets the one defensible reading (no pair, no row).
+    // the regime probe is observed in the checkpoint's own job: one HLL
+    // sketch per endpoint column, unioned (no second execution)
+    val probe = Observation()
     val half = materializeOnce(pairs.select(col(idACol).cast("long").as("src"),
       col(idBCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull))
-    val nApprox = half
-      .select(explode(array(col("src"), col("dst"))).as("id"))
-      .agg(approx_count_distinct(col("id")).as("n")).head().getLong(0)
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .observe(probe, hll_sketch_estimate(hll_union(
+        hll_sketch_agg(col("src")), hll_sketch_agg(col("dst")))).as("n")))
+    val nApprox = probe.get("n").asInstanceOf[Long]
     if (nApprox <= unionFindNodeLimit) {
       return half
         .agg(graft.functions.PairComponents.pairComponents(

@@ -64,13 +64,38 @@ object Bridge {
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
       df.queryExecution, Some(name))(body)
 
+  /** `df.observe(name, metrics)` for a caller that repartitions the result.
+    * The sorts at `df`'s top, under deterministic projections and filters,
+    * are dropped first: the optimizer drops them under a repartition, but
+    * not through an observation between the two (a fused input's range
+    * sort would otherwise run, sampling job and all, before the
+    * repartition).
+    */
+  def observeUnsorted(
+      df: org.apache.spark.sql.DataFrame,
+      name: String,
+      metrics: Seq[Column]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort}
+    def strip(p: LogicalPlan): LogicalPlan = p match {
+      case s: Sort => strip(s.child)
+      case p: Project if p.projectList.forall(_.deterministic) => p.copy(child = strip(p.child))
+      case f: Filter if f.condition.deterministic => f.copy(child = strip(f.child))
+      case other => other
+    }
+    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    org.apache.spark.sql.classic.Dataset.ofRows(session, strip(df.queryExecution.analyzed))
+      .observe(name, metrics.head, metrics.tail: _*)
+  }
+
   /** Wrap `rdd` as a frame that declares `sorted`'s global order. `sorted`
     * must be a `df.orderBy(...)`, or a
-    * `df.repartition(1).sortWithinPartitions(...)` (one partition, declared
-    * as a range partitioning into one), and `rdd` must hold its rows
-    * partition for partition and in order, with the same columns (e.g. a
-    * per-partition map over `sorted.queryExecution.toRdd`). The `LogicalRDD`
-    * leaf states the sort's range partitioning and output ordering on fresh
+    * `df.repartition(1).sortWithinPartitions(...)` (one partition), and
+    * `rdd` must hold its rows in order, with the same columns: partition
+    * for partition (e.g. a per-partition map over
+    * `sorted.queryExecution.toRdd`), or, for a one-partition sort, as k
+    * ordered slices, partition i holding rows that all order after
+    * partition i - 1's. The `LogicalRDD` leaf states a range partitioning
+    * into `rdd`'s partitions and the sort's output ordering on fresh
     * attributes, as `Dataset.checkpoint` does, so a later `orderBy` on the
     * same keys plans no exchange and no sort, and `toLocalIterator` walks
     * the rows in order.

@@ -118,6 +118,13 @@ class PlanSpec extends SparkTestBase {
     val plan = resamplePlan("q_resample_1h")
     assert("(?<!Reused)Exchange ".r.findAllIn(plan).length == 1, plan)
     assert(plan.contains("Exchange SinglePartition"), plan)
+    // a 1-second grid of the same source is emitted as one slice per core,
+    // declared as range partitions: ordering the result again plans no
+    // exchange and no sort
+    val sliced = Queries.resample(spark, dir, "1s")
+    assert(sliced.queryExecution.toRdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    val again = sliced.orderBy("__timestamp").queryExecution.executedPlan.toString
+    assert(!again.contains("Exchange") && !again.contains("Sort "), again)
     // with the gate pinned off the same source is range-sorted
     withConf(Map("spark.graft.adaptive.smallPlanBytes" -> "0")) {
       val range = resamplePlan("q_resample_1h")

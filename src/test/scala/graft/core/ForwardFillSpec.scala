@@ -154,6 +154,19 @@ class ForwardFillSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("gated: the fill stays one partition, so a replay of it runs one job") {
+    val df = (0 until 2000).map(i => (i.toLong, if (i % 7 == 0) Some(i.toDouble) else None))
+      .toDF("ts", "x").repartition(5)
+    withConf(Map("spark.sql.adaptive.enabled" -> "true")) {
+      val filled = ForwardFill.partitioned(df, Seq("x"), "ts")
+      assert(filled.queryExecution.toRdd.getNumPartitions == 1)
+      var n = 0
+      val (status, jobs) = jobsRun(graft.ops.Replay.replay(filled, "ts")((_, _) => n += 1))
+      assert(status == graft.ops.Replay.Ok && n == 2000)
+      assert(jobs == 1)
+    }
+  }
+
   inBothModes("leading all-null partitions and an all-null column") {
     val data = (0 until 2000).map { i =>
       (i.toLong, if (i >= 1300 && (i - 1300) % 97 == 0) Some(i.toDouble) else None,

@@ -2,6 +2,7 @@ package graft.core
 
 import graft.SparkTestBase
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -13,7 +14,8 @@ import org.apache.spark.sql.functions._
   * partition: only the shuffle map stage runs, scanning the source once.
   * Any other input is range-sorted: the sampling job, map stage and
   * summary job run; no summary job runs for a sort that ends up with one
-  * partition.
+  * partition. A sliced one-partition sort observes its extent in the same
+  * map stage, and its k slices each read the sort's shuffle.
   */
 class SortedScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
@@ -54,6 +56,64 @@ class SortedScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       val (collected, actionJobs, actionRead) = jobsAndInputRecords(out.collect().toSeq)
       assert(collected == sortedRows)
       assert(actionJobs == 1 && actionRead == 0, "the action reads the shuffle, not the source")
+    }
+  }
+
+  /** Scan `source` by `ts` emitted as slices of the key range: slice `i`
+    * of `k` keeps the rows with keys in `[lo + i·n/k, lo + (i+1)·n/k)`,
+    * from the observed extent `[lo, lo + n)`.
+    */
+  private def sliced(df: DataFrame = source): DataFrame =
+    SortedScan(df, Seq(col("ts")), "sortedScanSpec", slicing = Some(SortedScan.Slicing(
+        Seq(min(col("ts")), max(col("ts"))), { (extent, k) =>
+      val (lo, n) = (extent.getLong(0), extent.getLong(1) - extent.getLong(0) + 1)
+      Seq.tabulate(k)(i => (it: Iterator[InternalRow]) => it.filter { r =>
+        val t = r.getLong(0) - lo
+        t >= n * i / k && t < n * (i + 1) / k
+      })
+    })))(_ => ())(_ => (_, it) => it)
+
+  test("sliced, under the coalescing floor: one map stage, and the slices read only the shuffle") {
+    withConf(Map("spark.sql.adaptive.enabled" -> "true")) {
+      val (out, jobs, read) = jobsAndInputRecords(sliced())
+      assert(jobs == 1, "the shuffle map stage only")
+      assert(read == rows, "the source is scanned once")
+      val k = spark.sparkContext.defaultParallelism
+      assert(k > 1 && partitionSizes(out) == Seq.fill(k)(rows / k))
+      val (collected, actionJobs, actionRead) = jobsAndInputRecords(out.collect().toSeq)
+      assert(collected == sortedRows)
+      assert(actionJobs == 1 && actionRead == 0, "the slices read the shuffle, not the source")
+      import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+      out.queryExecution.analyzed match {
+        case l: org.apache.spark.sql.execution.LogicalRDD =>
+          assert(l.outputPartitioning == RangePartitioning(l.outputOrdering, k))
+        case p => fail(s"expected a LogicalRDD leaf, got ${p.nodeName}")
+      }
+      val plan = out.orderBy("ts").queryExecution.executedPlan
+      assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
+      assert(collect(plan) { case s: SortExec => s }.isEmpty, plan.toString)
+    }
+  }
+
+  test("sliced: a sort at the input's top is dropped, as under a plain repartition") {
+    withConf(Map("spark.sql.adaptive.enabled" -> "true")) {
+      val ordered = source.orderBy(col("ts").desc).filter(col("v") >= 0)
+      assert(AdaptiveGate.coalescesToOne(ordered))
+      val (out, jobs, read) = jobsAndInputRecords(sliced(ordered))
+      assert(jobs == 1, "the shuffle map stage only: no range sampling for the input's sort")
+      assert(read == rows)
+      assert(out.collect().toSeq == sortedRows)
+    }
+  }
+
+  test("slicing leaves the range sort as it is") {
+    withConf(gateOff ++ Map("spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1")) {
+      val (out, jobs, _) = jobsAndInputRecords(sliced())
+      assert(jobs == 3)
+      assert(partitionSizes(out).count(_ > 0) > 1, "the range sort's partitions, not slices")
+      assert(out.collect().toSeq == sortedRows)
     }
   }
 

@@ -90,6 +90,20 @@ class PairComponentsSpec extends SparkTestBase {
     assert(loop === gated)
   }
 
+  test("Dedup.clusters probes its regime in the checkpoint's own job") {
+    // 5 distinct ids: the probe (an HLL estimate, exact at this size) is
+    // observed while the pairs are checkpointed, so the aggregate regime
+    // runs no job but the checkpoint's; one id fewer allowed takes the loop
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L)
+    val (agg, aggJobs) = jobsRun(graft.pipeline.Dedup.clusters(pairs, unionFindNodeLimit = 5))
+    assert(aggJobs == 1, "the checkpoint only")
+    assert(agg.as[(Long, Long)].collect().toMap === want)
+    val (loop, loopJobs) = jobsRun(graft.pipeline.Dedup.clusters(pairs, unionFindNodeLimit = 4))
+    assert(loopJobs > 1, "the label propagation loop")
+    assert(loop.as[(Long, Long)].collect().toMap === want)
+  }
+
   test("agrees with Dedup.clusters label propagation on a random graph") {
     val rnd = new scala.util.Random(42)
     val edges = Seq.fill(200)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))

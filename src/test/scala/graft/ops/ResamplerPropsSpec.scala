@@ -16,7 +16,10 @@ import java.time.{ZoneId, ZoneOffset}
   * over random gap patterns, duplicate timestamps and null values. The
   * global cases run range-sorted into several partitions, adaptive
   * execution on and off, so buckets and gaps cross partition boundaries,
-  * and gated into one partition, which takes its grid from its own rows.
+  * and gated into one partition, which emits a fine grid as slices of it,
+  * so buckets and gaps cross slice boundaries too. The edge cases
+  * also run as a range sort that adaptive execution coalesces into one
+  * partition, which takes its grid from its own rows.
   */
 class ResamplerPropsSpec extends SparkTestBase {
 
@@ -68,13 +71,32 @@ class ResamplerPropsSpec extends SparkTestBase {
       opts = ResampleOptions(ffillKeys = Seq("value"), tieCols = Seq("id"),
         processBatchEnd = batchEnd, tz = tz))
 
-  /** Resample `evs` and compare with the simulation; more than one partition
-    * must emit rows, or, gated, the one partition holds them all.
+  /** Gated, the one-partition sort is emitted as `s = min(k, n /
+    * SliceRows)` grid slices (k the default parallelism, n the grid's
+    * rows), slice i holding the boundaries `[i·n/s, (i+1)·n/s)`, so each is
+    * an ascending contiguous run, none is emitted twice, and their
+    * concatenation is the grid; with `s` under two, as one partition. In
+    * the range modes more than one partition must emit rows.
     */
+  private def assertPartitions(out: DataFrame, interval: String): Unit =
+    if (!gatedMode) assertSortPartitions(out)
+    else {
+      val slices = out.queryExecution.toRdd
+        .mapPartitions(it => Iterator.single(it.map(_.getLong(0)).toVector)).collect().toSeq
+      val n = slices.map(_.length.toLong).sum
+      val s = math.min(spark.sparkContext.defaultParallelism.toLong, n / Resampler.SliceRows)
+      if (s < 2) assert(slices.length == 1)
+      else assert(slices.map(_.length.toLong) == (0L until s).map(i => n * (i + 1) / s - n * i / s))
+      val grid = slices.flatten
+      val step = Intervals.toMillis(interval)
+      assert(grid == grid.indices.map(grid.head + _ * step))
+    }
+
+  /** Resample `evs`, check its partitions and compare with the simulation. */
   private def check(evs: Seq[Event], interval: String, batchEnd: Boolean = true,
       tz: ZoneId = ZoneOffset.UTC): Unit = {
     val out = resample(evs, interval, batchEnd, tz)
-    assertSortPartitions(out)
+    assertPartitions(out, interval)
     val (got, want) = (rows(out), simulate(evs, interval, batchEnd, tz))
     assert(got == want, s"interval=$interval: first diff at " +
       s"${got.zip(want).indexWhere(p => p._1 != p._2)} of ${got.length} vs ${want.length}")
@@ -84,6 +106,8 @@ class ResamplerPropsSpec extends SparkTestBase {
     inEachMode {
       check(events(seed = 1, n = 200, spanMs = 3600000L), "10s") // ~2 events/bucket
       check(events(seed = 2, n = 150, spanMs = 3600000L), "1m")
+      // a grid of 40k buckets, cut into slices (gated) between events
+      check(events(seed = 16, n = 20000, spanMs = 4000000L), "100l")
     }
   }
 
@@ -91,6 +115,8 @@ class ResamplerPropsSpec extends SparkTestBase {
     inEachMode {
       check(events(seed = 3, n = 40, spanMs = 3600000L), "1s") // ~1% buckets hit
       check(events(seed = 4, n = 30, spanMs = 600000L), "100l")
+      // 36k buckets: gated, most slices start in a gap
+      check(events(seed = 17, n = 300, spanMs = 3600000L), "100l")
     }
   }
 
@@ -130,7 +156,8 @@ class ResamplerPropsSpec extends SparkTestBase {
   inBothModes("a bucket split across a partition boundary is emitted once") {
     // 3000 events in at most 4 one-hour buckets: with more non-empty sort
     // partitions than buckets, some bucket's rows span two partitions (in
-    // the range modes; the gated mode sorts them as one partition)
+    // the range modes; the gated mode sorts them as one partition and
+    // slices the grid by bucket)
     val evs = events(seed = 5, n = 3000, spanMs = 3 * 3600000L)
     val sorted = evs.toDF("__timestamp", "value", "id").orderBy("__timestamp", "id")
     val buckets = evs.flatMap(_._1).map(_ / 3600000L).distinct.size
@@ -153,9 +180,23 @@ class ResamplerPropsSpec extends SparkTestBase {
     check(evs, "1d", tz = ZoneId.of("America/New_York"))
   }
 
+  inBothModes("a grid with fewer buckets than slices") {
+    // 2 or 3 one-hour buckets, 1 or 2 without the tail flush, and a single
+    // event: gated, some of the slices are empty (a range sort of so few
+    // rows may leave one partition holding them, so only the gated
+    // partitions are checked)
+    for (evs <- Seq(events(seed = 15, n = 5, spanMs = 3600000L),
+        Seq((Some(1600000000000L), Some(1.0), 0L))); batchEnd <- Seq(true, false)) {
+      val out = resample(evs, "1h", batchEnd)
+      if (gatedMode) assertPartitions(out, "1h")
+      assert(rows(out) == simulate(evs, "1h", batchEnd))
+    }
+  }
+
   inBothModes("processBatchEnd = false drops the tail flush") {
     check(events(seed = 8, n = 150, spanMs = 600000L), "10s", batchEnd = false)
     check(events(seed = 9, n = 40, spanMs = 3600000L), "1s", batchEnd = false)
+    check(events(seed = 18, n = 400, spanMs = 3600000L), "100l", batchEnd = false)
   }
 
   inBothModes("empty input: no rows, same columns") {
@@ -198,19 +239,37 @@ class ResamplerPropsSpec extends SparkTestBase {
     val rnd = new scala.util.Random(14)
     val cases: Seq[(String, Seq[Event], String, Boolean, ZoneId)] = Seq(
       ("no tail flush", events(seed = 8, n = 150, spanMs = 600000L), "10s", false, ZoneOffset.UTC),
+      ("sliced, no tail flush", events(seed = 18, n = 400, spanMs = 3600000L), "100l", false,
+        ZoneOffset.UTC),
       ("empty", Nil, "1s", true, ZoneOffset.UTC),
       ("null timestamps", events(seed = 11, n = 300, spanMs = 600000L)
         .map(e => if (rnd.nextInt(6) == 0) e.copy(_1 = None) else e), "5s", true, ZoneOffset.UTC),
       ("day grid in New York", events(seed = 13, n = 400, spanMs = 5 * 86400000L)
         .map(e => e.copy(_1 = e._1.map(_ + 4000000000L))), "1d", false, ny),
+      ("sliced day grid in New York", events(seed = 19, n = 300, spanMs = 20000L * 86400000L),
+        "1d", false, ny),
       ("70k-point gap", events(seed = 6, n = 40, spanMs = 5000L) ++
         events(seed = 7, n = 40, spanMs = 5000L)
-          .map(e => (e._1.map(_ + 7000000L), e._2, e._3 + 40)), "100l", true, ZoneOffset.UTC))
+          .map(e => (e._1.map(_ + 7000000L), e._2, e._3 + 40)), "100l", true, ZoneOffset.UTC),
+      ("fewer buckets than slices", events(seed = 15, n = 5, spanMs = 3600000L), "1h", true,
+        ZoneOffset.UTC))
     val (range, gated) = (partitionModes.toMap.apply("AQE on"),
       partitionModes.toMap.apply("gated, one partition"))
+    // a range sort that adaptive execution coalesces into one partition (the
+    // default floor), which takes B0 and the grid's end from its own rows
+    val coalesced = range + ("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1MB")
     for ((name, evs, interval, batchEnd, tz) <- cases) withClue(s"$name: ") {
-      val one = withConf(gated)(rows(resample(evs, interval, batchEnd, tz)))
+      val one = withConf(gated) {
+        val out = resample(evs, interval, batchEnd, tz)
+        assertPartitions(out, interval)
+        rows(out)
+      }
       assert(one == withConf(range)(rows(resample(evs, interval, batchEnd, tz))))
+      assert(one == withConf(coalesced) {
+        val out = resample(evs, interval, batchEnd, tz)
+        assert(partitionSizes(out).length <= 1, "coalesced into one partition")
+        rows(out)
+      })
       assert(one == simulate(evs, interval, batchEnd, tz))
     }
   }

@@ -99,4 +99,23 @@ class SinksReplaySpec extends SparkTestBase {
       assert(replayed.toSeq == expected)
     } finally keys.zip(prior).foreach { case (k, v) => spark.conf.set(k, v) }
   }
+
+  test("replay of a gated resample runs one job per grid slice") {
+    // under the coalescing floor the resample sorts as one partition; a
+    // grid of n rows is emitted as min(k, n / SliceRows) slices (k the
+    // default parallelism), and toLocalIterator runs a job for each
+    val events = (0 until 1000).map(i => (1600000000000L + i * 1000L, i.toDouble))
+      .toDF("__timestamp", "price").repartition(3)
+    withConf(Map("spark.sql.adaptive.enabled" -> "true")) {
+      val k = spark.sparkContext.defaultParallelism
+      for ((interval, slices) <- Seq("1s" -> 1, "10l" -> k)) withClue(s"$interval: ") {
+        val out = Resampler.resample(events, interval)
+        val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+        val (status, jobs) = jobsRun(Replay.replay(out)((ts, _) => seen += ts))
+        assert(status == Replay.Ok)
+        assert(seen.toSeq == out.collect().map(_.getLong(0)).toSeq)
+        assert(jobs == slices)
+      }
+    }
+  }
 }
