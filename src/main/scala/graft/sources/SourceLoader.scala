@@ -1,16 +1,16 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources.parquet.GraftFooters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import java.io.{BufferedReader, InputStreamReader}
-import java.net.URI
 import java.nio.charset.StandardCharsets
+import scala.reflect.ClassTag
 
 /** Raised when a source directory holds no loadable data files — callers can
   * map it to the reference's `NOVALIDFILESTOPROCESS` replay status
@@ -19,14 +19,22 @@ import java.nio.charset.StandardCharsets
 final class NoValidFilesException(what: String)
   extends RuntimeException(s"no valid files to process: $what")
 
-/** Loads a [[SourceSpec]] into a DataFrame.
+/** Plans and loads a [[SourceSpec]].
   *
   * Spark-first reimagining of the reference's `CSVSrc`/`ParquetSrc`
   * (datasources.py:215-440): one `spark.read` over the source's file list
   * replaces the per-file loop; Hadoop codecs replace the gzip magic-byte
   * sniffing. File enumeration order (datasources.py:189-212) is irrelevant to
-  * correctness here because the fused stream is globally sorted;
-  * `input_file_name()` is available for provenance diagnostics.
+  * correctness here because the fused stream is globally sorted.
+  *
+  * Planning a source ([[loadListed]]) yields its files and how to read
+  * them: a [[FileRead]] (format, read schema, reader options) for a plain
+  * file scan, or a frame of its own for a source that needs a per-file read
+  * path (`forceSchema`, a CSV or JSON `numRows`, a partitioned layout, an
+  * inferred CSV or JSON schema). `Fuser.fuse` reads the kept files of all
+  * sources with equal `FileRead`s through one scan, telling their rows
+  * apart by `_metadata.file_path` ([[byFile]]); [[load]] reads one source
+  * alone.
   *
   * Driver-side work is bounded by the FILE COUNT, never row count: the
   * listing, the CSV header-and-first-row probes and the parquet footer
@@ -59,8 +67,8 @@ object SourceLoader {
     * or missing directory raises [[NoValidFilesException]].
     */
   def listSourceFiles(spark: SparkSession, path: String, format: String): Seq[String] = {
-    val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
     val p  = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val statuses =
       if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.listStatus(p)
       else Option(fs.globStatus(p)).getOrElse(Array.empty)
@@ -101,17 +109,17 @@ object SourceLoader {
     * not supported in the header row (neither engine needs them).
     */
   def actualCsvHeader(spark: SparkSession, file: String, sep: Char = ','): Seq[String] =
-    csvHead(spark, file, sep)._1
+    csvHead(spark, new CompressionCodecFactory(spark.sparkContext.hadoopConfiguration), file, sep)._1
 
   /** [[actualCsvHeader]], plus the file's first data row (the first line
     * after the header that is not blank, as Spark's CSV reader skips blank
-    * lines), from the same open.
+    * lines), from the same open. `codecs` is shared by a source's files.
     */
-  private def csvHead(spark: SparkSession, file: String, sep: Char): (Seq[String], Option[String]) = {
-    val conf  = spark.sparkContext.hadoopConfiguration
-    val fs    = FileSystem.get(new URI(file), conf)
+  private def csvHead(spark: SparkSession, codecs: CompressionCodecFactory, file: String, sep: Char)
+      : (Seq[String], Option[String]) = {
     val path  = new Path(file)
-    val codec = Option(new CompressionCodecFactory(conf).getCodec(path))
+    val fs    = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val codec = Option(codecs.getCodec(path))
     val raw   = fs.open(path)
     val in    = codec.map(_.createInputStream(raw)).getOrElse(raw)
     val rd    = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
@@ -140,7 +148,8 @@ object SourceLoader {
       spark: SparkSession,
       files: Seq[String],
       declared: Option[Seq[String]]): (Seq[String], Seq[Option[String]]) = {
-    val heads = files.map(csvHead(spark, _, ','))
+    val codecs = new CompressionCodecFactory(spark.sparkContext.hadoopConfiguration)
+    val heads = files.map(csvHead(spark, codecs, _, ','))
     val first = heads.head._1
     require(first.distinct.length == first.length,
       s"source header has duplicate column names: ${first.mkString(",")}")
@@ -167,14 +176,52 @@ object SourceLoader {
     * PER FILE (the reference's probe/sampling semantics, datasources.py:230
     * — each file contributes its first `num_rows` rows), not globally.
     */
-  def load(spark: SparkSession, spec: SourceSpec): DataFrame = loadListed(spark, spec).df
+  def load(spark: SparkSession, spec: SourceSpec): DataFrame = {
+    val listed = loadListed(spark, spec)
+    listed.read.fold(identity, _.frame(spark, listed.scanned))
+  }
 
-  /** A loaded source: its frame, its ordered file list from the one listing
-    * of the source, and the files of that list the frame scans. Both lists
-    * are empty for a partitioned parquet layout, which Spark's partition
-    * discovery reads instead.
+  /** How `spark.read` reads a source's files: the format, the schema handed
+    * to the reader (a CSV's in its files' column order), the reader options
+    * and a per-file row cap (a parquet `numRows`, a `_metadata.row_index`
+    * filter). `columns` is the source's column order. Sources whose reads
+    * agree on all but `columns` ([[sharesScanWith]]) read each file the
+    * same way, so one scan can serve them all.
     */
-  private[graft] final case class Listed(df: DataFrame, files: Seq[String], scanned: Seq[String]) {
+  private[graft] final case class FileRead(
+      format: String,
+      schema: StructType,
+      options: Map[String, String],
+      rowCap: Option[Int],
+      columns: Seq[String]) {
+
+    def sharesScanWith(o: FileRead): Boolean =
+      format == o.format && schema == o.schema && options == o.options && rowCap == o.rowCap
+
+    /** One scan of `files`, in the reader's column order. */
+    def scan(spark: SparkSession, files: Seq[String]): DataFrame = {
+      val df = spark.read.format(format).schema(schema).options(options).load(files: _*)
+      rowCap.fold(df)(n => df.filter(col("_metadata.row_index") < n))
+    }
+
+    /** [[scan]], in the source's column order. */
+    def frame(spark: SparkSession, files: Seq[String]): DataFrame = {
+      val df = scan(spark, files)
+      if (schema.fieldNames.toSeq == columns) df else df.select(columns.map(column): _*)
+    }
+  }
+
+  /** The column named `name`, read literally (no dots or backticks parsed). */
+  private[graft] def column(name: String): Column = col(s"`${name.replace("`", "``")}`")
+
+  /** A planned source: its ordered file list from the one listing of the
+    * source, the files of that list to scan, and how to read them: a
+    * [[FileRead]], or the source's own frame where it needs a per-file read
+    * path or schema inference. Both lists are empty for a partitioned
+    * parquet layout, which Spark's partition discovery reads instead.
+    */
+  private[graft] final case class Listed(
+      files: Seq[String], scanned: Seq[String], read: Either[DataFrame, FileRead]) {
 
     /** True when the listing has files but none can hold a row in the window. */
     def outOfWindow: Boolean = files.nonEmpty && scanned.isEmpty
@@ -182,9 +229,9 @@ object SourceLoader {
 
   /** [[load]], planned against an epoch-ms event-time `window` (both ends
     * inclusive). Only files whose metadata says they may hold a row in the
-    * window are handed to Spark; see [[FileSpans]] for what bounds a file.
-    * A frame with no file in the window is empty and keeps its schema. The
-    * window itself is not applied: the caller filters the rows.
+    * window are kept for the scan; see [[FileSpans]] for what bounds a file.
+    * A source with no file in the window reads empty and keeps its schema.
+    * The window itself is not applied: the caller filters the rows.
     */
   private[graft] def loadListed(
       spark: SparkSession, spec: SourceSpec, window: Span = Span.All): Listed = {
@@ -194,13 +241,13 @@ object SourceLoader {
       // Partitioned/nested layout (e.g. date=.../part-*.parquet): delegate to
       // Spark's partition discovery; per-file validation and the file-order
       // row id don't apply here.
-      Listed(perFileCap(spark.read.parquet(spec.path), spec), Nil, Nil)
+      Listed(Nil, Nil, Left(perFileCap(spark.read.parquet(spec.path), spec)))
     else {
       val files = specFiles(spec, listed.get)
       // a converted timestamp's window says nothing about the raw column
-      val (df, scanned) = readFiles(spark, spec, files,
+      val (read, scanned) = readFiles(spark, spec, files,
         if (spec.tsConvert.isDefined) Span.All else window)
-      Listed(df, files, scanned)
+      Listed(files, scanned, read)
     }
   }
 
@@ -229,17 +276,17 @@ object SourceLoader {
     * / nested parquet layout that directory listing can't flatten).
     */
   private def hasSubdirs(spark: SparkSession, path: String): Boolean = {
-    val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
     val p  = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.getFileStatus(p).isDirectory &&
       fs.listStatus(p).exists(_.isDirectory)
   }
 
-  /** Read `files` (in order) as the spec's frame, handing Spark only those
-    * that may hold a row in `window`; returns the frame and those files.
+  /** How to read `files` (in order) as the spec's frame, and those of them
+    * that may hold a row in `window`, the files to scan.
     */
   private def readFiles(spark: SparkSession, spec: SourceSpec, files: Seq[String], window: Span)
-      : (DataFrame, Seq[String]) = spec.format match {
+      : (Either[DataFrame, FileRead], Seq[String]) = spec.format match {
     case "parquet" =>
       // Schemas come from footers read on the driver, never from Spark's
       // inference job; the same footers bound the files when pruning.
@@ -266,7 +313,7 @@ object SourceLoader {
           spans.forall(_.exists(_.meets(window)))
         }
       }
-      val df = forced match {
+      val read = forced match {
         case Some(s) =>
           // Cast to the declared schema (reference datasources.py:394-395).
           // Files in one source directory may drift (e.g. an all-null column
@@ -276,22 +323,20 @@ object SourceLoader {
           // Sources have few files; the per-file plan union is cheap and the
           // scans still run distributed.
           def castTo(df: DataFrame): DataFrame =
-            df.select(s.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-          if (kept.isEmpty) castTo(spark.read.schema(s).parquet())
+            df.select(s.fields.map(f => column(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+          Left(if (kept.isEmpty) castTo(spark.read.schema(s).parquet())
           else kept.map { f =>
             val one = castTo(spark.read.schema(fileSchema(f).getOrElse(s)).parquet(f))
             spec.numRows.map(one.limit).getOrElse(one)
-          }.reduce(_.unionByName(_))
-        case None => perFileCap(spark.read.schema(schema).parquet(kept: _*), spec)
+          }.reduce(_.unionByName(_)))
+        case None => Right(FileRead("parquet", schema, Map.empty, spec.numRows, schema.fieldNames.toSeq))
       }
-      (df, kept)
+      (read, kept)
     case "csv" =>
       // PERMISSIVE mode gives per-cell null fallback for malformed typed
       // values — subsuming the reference's whole-file re-infer retry
       // (datasources.py:253-263) without ever masking a validation error.
-      val base = spark.read
-        .option("header", spec.hasHeader.toString)
-        .option("mode", "PERMISSIVE")
+      val options = Map("header" -> spec.hasHeader.toString, "mode" -> "PERMISSIVE")
       val heads: Option[(Seq[String], Seq[Option[String]])] =
         if (spec.hasHeader)
           Some(validateHeaders(spark, files, spec.schema.map(_.fieldNames.toSeq)))
@@ -315,52 +360,42 @@ object SourceLoader {
           files.zip(spans).collect { case (f, sp) if sp.meets(window) => f }
         case _ => files
       }
-      def readCsv(fs: Seq[String]): DataFrame = resolved match {
-        case Some(s) =>
-          actual match {
-            case Some(hdr) =>
-              // Bind the schema in the FILE's column order (Spark binds CSV
-              // schemas positionally), then project back to declared order —
-              // the by-name binding the reference gets from Polars dtype
-              // dicts (classes.py:133-171).
-              val byName = s.fields.map(f => f.name -> f).toMap
-              base.schema(StructType(hdr.map(byName(_)))).csv(fs: _*)
-                .select(s.fieldNames.map(col).toSeq: _*)
-            case None =>
-              base.schema(s).csv(fs: _*)
-          }
-        case None =>
-          // No declared types: infer (reference warns, classes.py:137-143).
-          base.option("inferSchema", "true").csv(fs: _*)
+      // Bind the schema in the FILE's column order (Spark binds CSV schemas
+      // positionally); the frame projects back to declared order — the
+      // by-name binding the reference gets from Polars dtype dicts
+      // (classes.py:133-171).
+      val declared = resolved.map { s =>
+        val byName = s.fields.map(f => f.name -> f).toMap
+        FileRead("csv", actual.fold(s)(hdr => StructType(hdr.map(byName(_)))), options, None,
+          s.fieldNames.toSeq)
       }
-      val df = spec.numRows match {
+      // No declared types: infer (reference warns, classes.py:137-143).
+      def readCsv(fs: Seq[String]): DataFrame = declared.fold(
+        spark.read.options(options).option("inferSchema", "true").csv(fs: _*))(_.frame(spark, fs))
+      val read = (declared, spec.numRows) match {
+        case (Some(r), None) => Right(r)
         // per-file cap: CSV has no physical row index, so read each file
         // separately under the SAME bound schema and union the capped heads
         // (numRows is a probe-style knob — small n, few files)
-        case Some(n) if kept.nonEmpty => kept.map(f => readCsv(Seq(f)).limit(n)).reduce(_.unionByName(_))
-        case _       => readCsv(kept)
+        case (_, Some(n)) if kept.nonEmpty => Left(kept.map(f => readCsv(Seq(f)).limit(n)).reduce(_.unionByName(_)))
+        case _ => Left(readCsv(kept))
       }
-      (df, kept)
+      (read, kept)
     case "jsonl" =>
       // JSON lines (beyond-reference): fields bind BY NAME, so none of the
       // CSV positional machinery applies. A declared schema both prunes the
       // parse (Jackson skips unrequested fields) and pins types; without
       // one, Spark samples the files to infer. PERMISSIVE mirrors the CSV
       // branch: malformed lines null out instead of failing the job.
-      val base = spark.read.option("mode", "PERMISSIVE")
-      val read = spec.schema match {
-        case Some(s) => base.schema(s).json(files: _*)
-        case None    => base.json(files: _*)
+      val options = Map("mode" -> "PERMISSIVE")
+      def readJson(fs: Seq[String]): DataFrame = spec.schema.fold(
+        spark.read.options(options).json(fs: _*))(spark.read.options(options).schema(_).json(fs: _*))
+      val read = (spec.schema, spec.numRows) match {
+        case (Some(s), None) => Right(FileRead("json", s, options, None, s.fieldNames.toSeq))
+        case (_, Some(n))    => Left(files.map(f => readJson(Seq(f)).limit(n)).reduce(_.unionByName(_)))
+        case (None, None)    => Left(readJson(files))
       }
-      val df = spec.numRows match {
-        case Some(n) => files.map(f =>
-          (spec.schema match {
-            case Some(s) => base.schema(s).json(f)
-            case None    => base.json(f)
-          }).limit(n)).reduce(_.unionByName(_))
-        case None => read
-      }
-      (df, files)
+      (read, files)
     case other => throw new IllegalArgumentException(s"Unknown source format: $other")
   }
 
@@ -379,31 +414,38 @@ object SourceLoader {
     }.sortBy(_._2).map(_._1)
   }
 
-  /** Deterministic per-source row id for parquet sources: sorted-file index
-    * in the high bits, `_metadata.row_index` (the physical row position in
-    * its file) in the low 40 bits. Both inputs are functions of the files
-    * alone, so the id is stable across task retries, plan re-optimization and
-    * repeated actions — unlike `monotonically_increasing_id`, whose value
-    * depends on runtime partition layout. It is also monotone in (file order,
-    * row order), reproducing the reference's concat order
-    * (core.py:467-470) as a sort tiebreaker. Files are keyed by name
-    * (unique within a source directory). `files` is the source's ordered
-    * file list as [[loadListed]] returns it; `path` names the source in the
-    * error raised for a scanned file missing from it.
+  /** Deterministic per-source row id for parquet sources: the file's index
+    * in its source's ordered listing in the high bits, `_metadata.row_index`
+    * (the physical row position in its file) in the low 40 bits. Both inputs
+    * are functions of the files alone, so the id is stable across task
+    * retries, plan re-optimization and repeated actions — unlike
+    * `monotonically_increasing_id`, whose value depends on runtime partition
+    * layout. It is also monotone in (file order, row order), reproducing the
+    * reference's concat order (core.py:467-470) as a sort tiebreaker.
+    * `listings` holds each source's path and its ordered file list as
+    * [[loadListed]] returns it, for every source of one scan; files are
+    * keyed by full path (see [[byFile]]).
     */
-  def parquetRowId(path: String, files: Seq[String]): org.apache.spark.sql.Column = {
-    val idx: Map[String, Long] = files.zipWithIndex.map { case (f, i) =>
-      new Path(f).getName -> i.toLong
-    }.toMap
-    // A scanned file missing from the listing (added between list and scan,
-    // or duplicate basenames across glob dirs) must fail fast — a silent
-    // null id would quietly demote the stable-tiebreak guarantee.
-    val fileIdx = element_at(typedLit(idx), col("_metadata.file_name"))
-    val checked = when(fileIdx.isNull,
-      raise_error(concat(
-        lit(s"parquetRowId: scanned file not in the listing of $path: "),
-        col("_metadata.file_name")))).otherwise(fileIdx)
-    checked * lit(1L << 40) + col("_metadata.row_index")
+  def parquetRowId(listings: Seq[(String, Seq[String])]): Column = {
+    val fileIdx = byFile(
+      listings.flatMap { case (_, files) => files.zipWithIndex.map { case (f, i) => f -> i.toLong } },
+      listings.map(_._1).mkString(", "))
+    fileIdx * lit(1L << 40) + col("_metadata.row_index")
+  }
+
+  /** The value `values` gives the file each scanned row comes from, looked
+    * up by `_metadata.file_path`, the file's full path as Spark URL-encodes
+    * it. A scanned file missing from `values` (added between list and scan)
+    * fails fast: a silent null would quietly demote what the value stands
+    * for (a source id, a stable tiebreak). `what` names the sources in the
+    * error.
+    */
+  private[graft] def byFile[T: ClassTag](values: Seq[(String, T)], what: String): Column = {
+    val path = col("_metadata.file_path")
+    val v = element_at(map_from_arrays(lit(values.map(f => new Path(f._1).toUri.toString).toArray),
+      lit(values.map(_._2).toArray)), path)
+    when(v.isNull, raise_error(concat(lit(s"scanned file not in the listing of $what: "), path)))
+      .otherwise(v)
   }
 
   /** Per-source global start/end event time (S8, reference

@@ -44,6 +44,32 @@ object Bridge {
       case _ => df
     }
 
+  /** `cols` of `df.filter(cond)`, where the named `lets` are computed once
+    * per row below `cols`, which may read them.
+    */
+  final case class Select(
+      df: org.apache.spark.sql.DataFrame, cond: Option[Column], lets: Seq[Column], cols: Seq[Column])
+
+  /** The union of `inputs`: one `Union` of one `Project` per input, whose
+    * `cols` (named) line up by position. The plan is analyzed once, where
+    * building it from `Dataset` calls analyzes every filter and select, and
+    * folding `Dataset.union` the growing union once per input.
+    */
+  def unionOfSelects(inputs: Seq[Select]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, Union}
+    val session = inputs.head.df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val plans = inputs.map { in =>
+      val child = in.df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
+      val filtered = in.cond.fold(child)(c => Filter(session.expression(c), child))
+      val withLets =
+        if (in.lets.isEmpty) filtered
+        else Project(child.output ++ in.lets.map(session.toRichColumn(_).named), filtered)
+      Project(in.cols.map(session.toRichColumn(_).named), withLets)
+    }
+    org.apache.spark.sql.classic.Dataset.ofRows(session,
+      if (plans.length == 1) plans.head else Union(plans))
+  }
+
   /** Rebuild a Dataset from its logical plan so a NEW QueryExecution is
     * created under the CURRENT session conf — how an action (write) sees a
     * conf change made after the frame was constructed. `graft.Dev plan`

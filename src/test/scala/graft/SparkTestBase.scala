@@ -112,6 +112,13 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The file scans of `df`'s executed plan, adaptive execution unwrapped. */
+  def fileScans(df: DataFrame): Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+
   /** Write `df` as the one parquet file `file` (a Spark write to a scratch
     * directory, whose single part file is moved into place).
     */

@@ -327,4 +327,168 @@ class FuserSpec extends SparkTestBase {
       assert(res.df.count() == (if (opts.procStart.isEmpty) 16 else 6))
     }
   }
+
+  test("fuseFrames builds one Union: four frames are its four children") {
+    val frames = Seq(trades, spread, trades.withColumn("extra", lit(1)), spread.drop("ask"))
+    val res = Fuser.fuseFrames(frames.zipWithIndex.map { case (df, i) =>
+      FrameSource(df, s"f$i", "Timestamp") })
+    val unions = res.df.queryExecution.analyzed.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+    }
+    assert(unions.map(_.children.length) == Seq(4))
+    assert(res.df.count() == 12)
+  }
+
+  // ---- scan groups ------------------------------------------------------------
+
+  private def writeCsv(file: java.nio.file.Path, text: String): Unit = {
+    java.nio.file.Files.createDirectories(file.getParent)
+    val raw = java.nio.file.Files.newOutputStream(file)
+    val out = if (file.toString.endsWith(".gz")) new java.util.zip.GZIPOutputStream(raw) else raw
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  private val fuseSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "ts BIGINT, symbol STRING, price DOUBLE, size INT")
+
+  /** Rows of source `s` in file `d`: times `d`000 + 100·k + 10·s (no two
+    * rows of one source share a time; some sources share times).
+    */
+  private def fuseRows(s: Int, d: Int, n: Int = 4) =
+    (0 until n).map(k => (d * 1000L + 100L * k + 10L * (s % 2), s"S$s-$d-$k", s + d + k / 10.0, 10 * d + k))
+
+  /** The benchmark's shape, two day-files each: parquet `s0`, `s1` and gzip
+    * CSV `s2`, `s3` of one schema, and a parquet `late` of that schema whose
+    * only file is after every window used here. The sources of each format
+    * share a scan.
+    */
+  private lazy val groupRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_groups")
+    for (s <- 0 to 3; d <- 1 to 2) {
+      val rows = fuseRows(s, d)
+      if (s < 2) writeParquetFile(rows.toDF("ts", "symbol", "price", "size"),
+        root.resolve(s"s$s/s${s}_$d.parquet"))
+      else writeCsv(root.resolve(s"s$s/s${s}_$d.csv.gz"),
+        "ts,symbol,price,size\n" + rows.map(r => r.productIterator.mkString(",") + "\n").mkString)
+    }
+    writeParquetFile(fuseRows(4, 9).toDF("ts", "symbol", "price", "size"), root.resolve("late/late_9.parquet"))
+    // one file each for the sources that read on their own
+    writeCsv(root.resolve("reordered/r_1.csv"),
+      "symbol,size,price,ts\n" + fuseRows(5, 1).map(r => s"${r._2},${r._4},${r._3},${r._1}\n").mkString)
+    writeParquetFile(fuseRows(6, 2).map(r => (r._1, r._2, r._4)).toDF("ts", "symbol", "price"),
+      root.resolve("forced/f_2.parquet"))
+    writeParquetFile(fuseRows(7, 1).map(r => (java.time.Instant.ofEpochMilli(r._1).toString, r._3))
+      .toDF("iso", "price"), root.resolve("converted/c_1.parquet"))
+    writeCsv(root.resolve("capped/k_2.csv"),
+      "ts,symbol,price,size\n" + fuseRows(8, 2).map(r => r.productIterator.mkString(",") + "\n").mkString)
+    writeCsv(root.resolve("inferred/i_1.csv"),
+      "ts,symbol,price\n" + fuseRows(9, 1).map(r => s"${r._1},${r._2},${r._3}\n").mkString)
+    root
+  }
+
+  private def groupSpec(name: String, format: String = "parquet", descriptor: Option[String] = None) =
+    graft.sources.SourceSpec(groupRoot.resolve(name).toString, format, descriptor.getOrElse(name), "ts",
+      schema = if (format == "csv") Some(fuseSchema) else None, fileSortRegex = Some("\\d+"))
+
+  /** The four benchmark-shaped sources, with a `removeCols` and a
+    * `secondarySortCol` that leave them in their scans.
+    */
+  private def benchShaped = Seq(groupSpec("s0"), groupSpec("s1").copy(removeCols = Seq("size")),
+    groupSpec("s2", "csv"), groupSpec("s3", "csv").copy(secondarySortCol = Some("size")))
+
+  /** Sources that each read through a scan of their own. */
+  private def ownScans = Seq(
+    groupSpec("reordered", "csv"),
+    groupSpec("forced").copy(forceSchema = true,
+      schema = Some(org.apache.spark.sql.types.StructType.fromDDL("ts BIGINT, symbol STRING, price DOUBLE"))),
+    groupSpec("converted").copy(timestampCol = "iso", tsConvert = Some(c => unix_millis(to_timestamp(c)))),
+    groupSpec("capped", "csv").copy(numRows = Some(3)),
+    groupSpec("inferred", "csv").copy(schema = None),
+    groupSpec("s0", descriptor = Some("s0 again")))
+
+  private val groupWindow = FuseOptions(procStart = Some(1200L), procEnd = Some(2250L))
+
+  test("scan groups: the benchmark's four sources read through 2 scans, the window pushed to parquet") {
+    val df = Fuser.fuse(spark, benchShaped, groupWindow).df
+    val scans = fileScans(df)
+    assert(scans.length == 2)
+    val pq = scans.filter(_.relation.fileFormat.toString == "Parquet")
+    assert(pq.length == 1)
+    val pushed = pq.head.metadata("PushedFilters")
+    assert(pushed.contains("GreaterThanOrEqual(ts,1200)") && pushed.contains("LessThanOrEqual(ts,2250)"), pushed)
+    assert(scans.map(_.relation.location.inputFiles.length).sum == 8)
+    // `late`, with no file in the window, joins the parquet scan and adds none
+    assert(fileScans(Fuser.fuse(spark, benchShaped :+ groupSpec("late"), groupWindow).df).length == 2)
+  }
+
+  test("scan groups: a source with its own read path gets one scan of its own") {
+    ownScans.foreach { own =>
+      withClue(own.descriptor) {
+        assert(fileScans(Fuser.fuse(spark, benchShaped :+ own, groupWindow).df).length == 3)
+      }
+    }
+  }
+
+  test("scan groups: the fuse equals fuseFrames over each source loaded alone") {
+    val specs = benchShaped ++ Seq(groupSpec("late")) ++ ownScans
+    val alone = specs.map(s => FrameSource(graft.sources.SourceLoader.load(spark, s), s.descriptor,
+      s.timestampCol, tsConvert = s.tsConvert, removeCols = s.removeCols,
+      secondarySortCol = s.secondarySortCol))
+    val windows = Seq(FuseOptions(), groupWindow)
+    val modes = Seq(FuseOptions(), FuseOptions(forwardFillData = true), FuseOptions(dedupOverlaps = true))
+    for (w <- windows; m <- modes) {
+      val opts = m.copy(procStart = w.procStart, procEnd = w.procEnd)
+      withClue(s"$opts: ") {
+        val fused = Fuser.fuse(spark, specs, opts)
+        val frames = Fuser.fuseFrames(alone, opts)
+        // a filled frame reads its scans inside the fill's sort
+        if (!opts.forwardFillData) assert(fileScans(fused.df).length == 8)
+        assert(fused.df.schema.map(f => f.name -> f.dataType) == frames.df.schema.map(f => f.name -> f.dataType))
+        assert(fused.renames == frames.renames)
+        val rows = fused.df.collect().toSeq
+        assert(rows == frames.df.collect().toSeq)
+        assert(rows.length == (if (w.procStart.isEmpty) 63 else 37))
+      }
+    }
+  }
+
+  test("scan groups: sources in directories of identical file names, or a name with a space") {
+    val root = java.nio.file.Files.createTempDirectory("graft_paths")
+    val dirs = Seq("a", "b", "with space")
+    for ((dir, s) <- dirs.zipWithIndex; d <- 1 to 2)
+      writeParquetFile(fuseRows(s, d).toDF("ts", "symbol", "price", "size"), root.resolve(s"$dir/f_$d.parquet"))
+    val specs = dirs.map(d => graft.sources.SourceSpec(root.resolve(d).toString, "parquet", d, "ts",
+      fileSortRegex = Some("\\d+")))
+    val res = Fuser.fuse(spark, specs, FuseOptions(keepRowId = true, mergeColNames = Seq("symbol")))
+    assert(fileScans(res.df).length == 1)
+    val rows = res.df.select(SourceIdCol, "symbol", Fuser.RowIdCol).collect()
+    assert(rows.length == 24)
+    rows.foreach { r =>
+      // symbol S<source>-<day>-<k>: the source id, the file index and the
+      // row position all come from the file the row was read from
+      val Array(s, d, k) = r.getString(1).drop(1).split("-").map(_.toInt)
+      assert(r.getInt(0) == s, r)
+      assert(r.getLong(2) == ((d - 1).toLong << 40) + k, r)
+    }
+  }
+
+  test("a window on a stored timestamp is pushed to the parquet scan") {
+    import java.time.Instant
+    val s = Instant.parse("2024-01-01T00:00:00Z")
+    val e = Instant.parse("2024-01-02T00:00:00Z")
+    val at = Seq(s.minusNanos(1000), s, e.plusNanos(999000), e.plusMillis(1))
+    val root = java.nio.file.Files.createTempDirectory("graft_stored_ts")
+    val rows = at.zipWithIndex.map { case (t, i) => (java.sql.Timestamp.from(t), i) }.toDF("ts", "i")
+    writeParquetFile(rows, root.resolve("ltz/t_1.parquet"))
+    writeParquetFile(rows.withColumn("ts", col("ts").cast("timestamp_ntz")), root.resolve("ntz/t_1.parquet"))
+    val opts = FuseOptions(procStart = Some(s.toEpochMilli), procEnd = Some(e.toEpochMilli))
+    for ((dir, pushed) <- Seq("ltz" -> true, "ntz" -> false)) withClue(dir) {
+      val df = Fuser.fuse(spark, Seq(graft.sources.SourceSpec(root.resolve(dir).toString, "parquet", dir, "ts")),
+        opts).df
+      assert(df.select("i").collect().map(_.getInt(0)).toSeq == Seq(1, 2))
+      val filters = fileScans(df).map(_.metadata("PushedFilters")).mkString
+      assert(filters.contains("GreaterThanOrEqual(ts,") == pushed, filters)
+      assert(filters.contains("LessThan(ts,") == pushed, filters)
+    }
+  }
 }
