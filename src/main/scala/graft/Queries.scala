@@ -220,8 +220,7 @@ object Queries {
   /** The layout write is deterministic per data dir, so write it once per
     * JVM and let repeat invocations (Bench runs every query at least twice)
     * measure what the OPERATOR's read path claims at scale: the pruned
-    * window read. The full-table write cost is benchmarked separately
-    * (`graft.Stress` stage `layout_write`).
+    * window read. The full-table write cost is not part of this query.
     */
   private val layoutCache = scala.collection.concurrent.TrieMap.empty[String, String]
 

@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   * cosine top-10, at the SAME trained configuration the query surface
   * uses (`nCells = n/128`, 8×16 codebooks — [[Queries]]' loadOrTrain
   * parameters). The corpus is L2-normalized first so inner product ≡
-  * cosine — the PQ family's documented contract (Stress pins the same
-  * normalization before its ADC stages).
+  * cosine — the PQ family's documented contract.
   *
   * Usage: `runMain graft.RecallBench [dataDir]` against a
   * [[CrossoverGen]] dir (200k × 64-dim embeddings with planted
@@ -30,16 +29,16 @@ object RecallBench {
 
     // fixture 1 — the CrossoverGen corpus: hash-UNIFORM vectors, the
     // structureless regime where cell pruning has nothing to exploit
-    // (neighbors are near-orthogonal, cells arbitrary — Stress documents
-    // the same collapse); recorded as the honest degenerate bound
+    // (neighbors are near-orthogonal, cells arbitrary); recorded as the
+    // honest degenerate bound
     val raw = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
     runFixture(spark, "uniform", raw)
 
-    // fixture 2 — planted cluster structure (the Stress ivf_probe_recall
-    // shape at 64 dims): vector = its cluster's deterministic center +
-    // small per-vector noise — the geometry real embedding corpora have
-    // and the one IVF's cell pruning exploits
+    // fixture 2 — planted cluster structure (256 clusters at 64 dims):
+    // vector = its cluster's deterministic center + small per-vector
+    // noise — the geometry real embedding corpora have and the one IVF's
+    // cell pruning exploits
     val nVecs = 200000L
     val cluster = pmod(col("id"), lit(256L))
     val planted = spark.range(nVecs).select(
@@ -96,10 +95,9 @@ object RecallBench {
     }
 
     // ADC@100 candidates + exact cosine re-rank → top-10: the documented
-    // production composition for fine ranking (Stress pq_rerank_twins —
-    // plain ADC ties under code collision, so its top-10 is arbitrary
-    // among same-cell members; the re-rank recovers the true order for
-    // every generated candidate)
+    // production composition for fine ranking (plain ADC ties under code
+    // collision, so its top-10 is arbitrary among same-cell members; the
+    // re-rank recovers the true order for every generated candidate)
     def rerank(cand: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       val rq = queries.select(col("vec_id").as("query_id"),
         col("embedding").as("__rq"))

@@ -158,6 +158,12 @@ object AdaptiveGate {
     * only the final consuming action sees the gate, which keeps the
     * join-heavy post-checkpoint plans (where AQE demonstrably earns its
     * sync cost) on the adaptive path.
+    *
+    * Not reentrant: when the gate fires it sets `spark.sql.adaptive.enabled`
+    * and `spark.sql.shuffle.partitions` on the SHARED session and restores
+    * them when `body` returns, so every other action on that session in
+    * between runs under the gate's settings too. Concurrent actions on one
+    * session must not use it; the mains call it from one thread only.
     */
   def withGatedExecution[T](df: DataFrame)(body: => T): T = {
     val spark = df.sparkSession

@@ -167,9 +167,10 @@ object BpeTokenCount {
   /** Static kernel invoked from generated code — named away from the
     * expression's own `eval(InternalRow)`: an instance method of the same
     * name SUPPRESSES the Scala static forwarder, and Janino then cannot
-    * resolve the companion call (caught by the Stress volume run as a
-    * codegen compile fallback; the [[TokenStats.evalTokenStats]] naming
-    * convention exists for exactly this reason). */
+    * resolve the companion call (once caught by a `graft.Stress` volume
+    * run as a codegen compile fallback, now pinned by `CodegenCompileSpec`;
+    * the [[TokenStats.evalTokenStats]] naming convention exists for
+    * exactly this reason). */
   def evalCounts(text: UTF8String,
       model: MergeModel): org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
     val s = text.toString

@@ -79,8 +79,9 @@ object NearestCentroid {
     * which suppresses the companion's static forwarder for any method
     * also called `eval` — Janino then only sees the instance overloads
     * and the generated call fails to compile, silently demoting every
-    * user of this kernel to the interpreted path (caught in a Stress run
-    * via the logged CompileException).
+    * user of this kernel to the interpreted path (once caught in a
+    * `graft.Stress` run via the logged CompileException, now pinned by
+    * `CodegenCompileSpec`).
     */
   def nearest(vec: ArrayData, cands: Array[Array[Double]],
       isFloat: Boolean): GenericInternalRow = {

@@ -79,8 +79,8 @@ object Layout {
     * operator runs first (`distinct` over (src, dst), the out-degree
     * `groupBy(src)`, the degree join) plans with ZERO exchanges — the
     * one-time layout cost moves from every job to the write
-    * (PlanSpec-pinned; the Stress `graph_layout_roundtrip` stage proves
-    * the layout survives write → read → iterate at volume).
+    * (PlanSpec-pinned; `GraphSpec` iterates PageRank's no-broadcast loop
+    * over a table written here and read back).
     *
     * Bucket metadata lives in the session catalog (`saveAsTable` — plain
     * parquet files carry no bucket spec), so `table` is a table name,

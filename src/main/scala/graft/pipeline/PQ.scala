@@ -419,8 +419,8 @@ object PQ {
     * codebooks spend their resolution spanning the whole corpus spread;
     * residual codebooks quantize only the within-cell displacement, which
     * is what separates two nearby vectors once the IVF layer has already
-    * localized them (measured in Stress: planted near-twins are
-    * inseparable by raw-vector ADC under code collision). Residuals are
+    * localized them (planted near-twins are inseparable by raw-vector ADC
+    * under code collision; `PQSpec` pins the cut in score error). Residuals are
     * derived declaratively (cell assignment expression + one `zip_with`);
     * training is [[pqCodebooks]] on the residual frame — sampled by
     * default, k-means‖ with `sampleSize = None`.

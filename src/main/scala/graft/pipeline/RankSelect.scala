@@ -50,11 +50,6 @@ object RankSelect {
     */
   private[pipeline] val fallbackCount = new java.util.concurrent.atomic.AtomicLong
 
-  /** Read-only view of the fallback counter for harnesses outside the
-    * package (Stress pins that a 100k-key run never pays the sort).
-    */
-  def fallbacks: Long = fallbackCount.get()
-
   /** Exact discrete quantile grid per key: for each key with ≥1 non-null
     * value, the deduped sorted array of the values at ranks
     * `⌈p·n_key⌉` for `p` in `ps`.

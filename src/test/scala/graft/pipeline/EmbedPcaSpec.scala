@@ -101,4 +101,34 @@ class EmbedPcaSpec extends SparkTestBase {
     assert(l1.toSeq == l2.toSeq)
     assert(v1.map(_.toSeq).toSeq == v2.map(_.toSeq).toSeq)
   }
+
+  test("rankGrid + rankTransform: ascending grids, every row bucketed, no bucket over a quarter") {
+    // 8 trained dims over 3000 vectors with ties (1000 distinct values):
+    // the discrete grids ascend, every (row, dim) lands in a non-null
+    // bucket, and bucket occupancy follows the quantile ladder
+    val n = 3000L
+    val dim = 8
+    val vecs = spark.range(n).select($"id".as("vec_id"),
+      transform(sequence(lit(0), lit(dim - 1)),
+        i => pmod(xxhash64($"id", i), lit(1000L)).cast("double") / 1000.0).as("embedding"))
+    val grid = EmbedStats.rankGrid(vecs, "embedding")
+    assert(grid.keySet == (0 until dim).toSet)
+    grid.foreach { case (d, g) =>
+      assert(g.length >= 2 && g.length <= 19, s"dim $d grid size ${g.length}")
+      assert(g.zip(g.tail).forall { case (x, y) => x < y }, s"dim $d grid not ascending")
+    }
+    val cells = EmbedStats.rankTransform(vecs, "vec_id", "embedding", grid)
+      .groupBy($"dim_idx", $"q_bucket")
+      .agg(count(lit(1)).as("c"), avg($"qscore").as("qs"))
+      .collect().map(r => (r.getInt(0), Option(r.get(1)), r.getLong(2), Option(r.get(3))))
+    assert(!cells.exists(_._2.isEmpty), "NULL bucket on a trained dim")
+    assert(cells.map(_._3).sum == n * dim, "bucket counts don't cover rows")
+    for (d <- 0 until dim) {
+      val cs = cells.filter(_._1 == d)
+      assert(cs.length >= grid(d).length, s"dim $d: ${cs.length} buckets")
+      assert(cs.map(_._3).max <= n / 4, s"dim $d: a bucket holds >25%")
+      val meanQs = cs.map(c => c._4.get.asInstanceOf[Double] * c._3).sum / n
+      assert(meanQs > 0.35 && meanQs < 0.65, s"dim $d mean qscore $meanQs")
+    }
+  }
 }

@@ -132,6 +132,28 @@ class PipelineSpec extends SparkTestBase {
     }
   }
 
+  test("hammingNearDups: planted one-bit flips pair exactly, in a batch and against a prior") {
+    // every id % 100 == 99 flips one bit of id - 1's signature: nh / 100
+    // pairs at hamming 1; xxhash64's fixed outputs put no other pair
+    // within 2 bits
+    val nh = 20000L
+    val sigs = spark.range(nh).selectExpr("id",
+      """CASE WHEN id % 100 = 99
+        |  THEN xxhash64(id - 1) ^ shiftleft(CAST(1 AS BIGINT), CAST(id % 64 AS INT))
+        |  ELSE xxhash64(id) END AS sig""".stripMargin)
+    val pairs = Dedup.withMaterialized {
+      Dedup.hammingNearDups(sigs, "id", "sig", maxHamming = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    }
+    assert(pairs == (99L until nh by 100L).map(b => (b - 1, b, 1L)).toSet)
+    // incremental face: even ids are the prior artifact, odd ids the new
+    // batch; every planted pair is odd against even
+    val incr = Dedup.hammingNearDupsAgainstPrior(
+        sigs.filter("id % 2 = 1"), sigs.filter("id % 2 = 0"), "id", "sig", maxHamming = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(incr == (99L until nh by 100L).map(b => (b, b - 1, 1L)).toSet)
+  }
+
   test("withMaterialized releases every checkpoint the bracket created") {
     // compare persisted-RDD ID SETS, not counts: the ContextCleaner may
     // concurrently drop unreferenced RDDs from earlier tests
@@ -359,6 +381,46 @@ class PipelineSpec extends SparkTestBase {
     // all of cluster 0's members quantize together: rank-1 neighbor must be
     // a same-cluster vector (id ≡ 0 mod 4)
     assert(top.nonEmpty && top(0).getLong(1) % 4 == 0L, top.mkString(","))
+  }
+
+  test("k-means‖ on a uniform corpus fits at least as well as a thin sample") {
+    // structureless vectors, 32 cells: a 512-row sample gives each cell 16
+    // rows. The coreset trainer sees the whole corpus cost-weighted, so its
+    // training objective (mean angular misfit) must be no worse, with no
+    // dead or skewed cells. Recall at nProbe = 8 is a parity band only: on
+    // structureless vectors it is not monotone in quantizer quality
+    val uVecs = spark.range(4000).select($"id".as("vec_id"),
+      transform(sequence(lit(0), lit(7)),
+        i => (pmod(xxhash64($"id", i), lit(2000L)).cast("double") - 1000.0) / 1000.0)
+        .as("embedding"))
+    val normed = uVecs.select(transform($"embedding", x => x / sqrt(aggregate(
+      $"embedding", lit(0.0), (a, b) => a + b * b))).as("nv"))
+    val queries = uVecs.filter(pmod($"vec_id", lit(199L)) === 5L)
+    val truth = Similarity.bruteForceTopK(queries, uVecs, "vec_id", "embedding", k = 5)
+      .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
+    def fit(cents: Array[(Long, Array[Double])]): (Double, Double) = {
+      val occ = Similarity.ivfAssign(uVecs, "embedding", cents)
+        .groupBy("cell_id").count().collect().map(_.getLong(1))
+      assert(occ.length == cents.length, s"dead cells: ${occ.length} of ${cents.length}")
+      assert(occ.max <= 2 * (occ.sum / occ.length), s"skewed cells: ${occ.toSeq}")
+      val units = cents.map { case (_, v) =>
+        val nm = math.sqrt(v.map(x => x * x).sum); v.map(_ / nm)
+      }
+      val obj = normed.select((graft.functions.NearestCentroid.nearestCentroid($"nv", units)
+          .getField("d2") / 2.0).as("ad"))
+        .agg(avg($"ad")).head.getDouble(0)
+      val hits = Similarity.ivfTopK(uVecs, queries, "vec_id", "embedding", k = 5,
+          centroids = cents, nProbe = 8)
+        .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
+        .count(truth.contains)
+      (obj, hits.toDouble / truth.size)
+    }
+    val (sObj, sRec) = fit(Similarity.ivfCentroids(uVecs, "vec_id", "embedding",
+      nCells = 32, sampleSize = Some(512)))
+    val (dObj, dRec) = fit(Similarity.ivfCentroids(uVecs, "vec_id", "embedding",
+      nCells = 32, sampleSize = None, oversample = 128, rounds = 4))
+    assert(dObj <= sObj + 1e-4, s"coreset objective $dObj vs sampled $sObj")
+    assert(dRec >= 0.6 && dRec >= sRec - 0.12, s"coreset recall $dRec vs sampled $sRec")
   }
 
   test("PII scrub replaces emails and URLs, counts redactions") {
