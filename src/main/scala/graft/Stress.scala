@@ -5,7 +5,7 @@ import graft.core.Fuser.{FuseOptions, TimestampCol}
 import graft.ops.{AsOfJoin, RangeJoin, Resampler}
 import graft.ops.Resampler.ResampleOptions
 import graft.sources.FrameSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale smoke of the paper's path: fuse → resample → forward fill, the
@@ -93,20 +93,31 @@ object Stress {
     val filledRows = timed("ffill", filled)
 
     // 4. As-of join: n trades × n quotes on 100k keys (one shuffle each side,
-    // per-key windows).
+    // per-key windows). Every trade is kept, matched or not.
     val asof = AsOfJoin.asof(
       a.select(col("ts").as(TimestampCol), col("id"), col("user_id"), col("price")),
       b.select(col("ts").as(TimestampCol), col("user_id"), col("quote")),
       keyCols = Seq("user_id"), tsCol = TimestampCol, rightCols = Seq("quote"))
-    timed("asof_join", asof)
+    val asofRows = timed("asof_join", asof)
 
-    // 5. Range join with a 2s window (bounded fan-out equi-join).
-    val rj = RangeJoin.timeRange(
-      a.select(col("ts").as(TimestampCol), col("id"), col("user_id")),
-      b.select(col("ts").as(TimestampCol), col("user_id"), col("quote")),
-      keyCols = Seq("user_id"), tsCol = TimestampCol,
+    // 5. Range join with a 2s window (bounded fan-out equi-join) on 10
+    // symbols, at whole-second times: the window holds pairs at any `n`,
+    // and two in three of them lie on its bounds (|Δt| = 1000 ms).
+    def bySecond(df: DataFrame, cols: String*): DataFrame =
+      df.select((col("ts") - pmod(col("ts"), lit(1000L))).as(TimestampCol) +:
+        pmod(col("user_id"), lit(10L)).as("sym") +: cols.map(col): _*)
+    val (secTrades, secQuotes) = (bySecond(a, "id"), bySecond(b, "quote"))
+    val rj = RangeJoin.timeRange(secTrades, secQuotes, keyCols = Seq("sym"), tsCol = TimestampCol,
       lookbackMs = 1000L, lookaheadMs = 1000L, rightCols = Seq("quote"))
-    timed("range_join_2s", rj)
+    val rangeRows = timed("range_join_2s", rj)
+    // the same pairs counted apart from `RangeJoin`'s 2s buckets: each quote
+    // joins the trades of its own second and of the seconds either side
+    val sec = (ts: Column) => (ts / 1000L).cast("long")
+    val rangePairs = secTrades.withColumn("sec", sec(col(TimestampCol)))
+      .join(secQuotes.select(col("sym"), col(TimestampCol).as("qts"),
+        explode(sequence(sec(col(TimestampCol)) - 1L, sec(col(TimestampCol)) + 1L)).as("sec")),
+        Seq("sym", "sec"))
+      .filter(abs(col(TimestampCol) - col("qts")) <= 1000L).count()
 
     // ---- the reference's de-facto large workload, reproduced in shape: a
     // single ~30M-row 8-column trade source (the 600 MB Binance BTC-USDT
@@ -152,5 +163,7 @@ object Stress {
     assert(fusedRows == 2 * n, "fuse must preserve rows")
     assert(gridRows == expectedGrid, s"grid $gridRows vs $expectedGrid")
     assert(filledRows == 2 * n, "ffill must preserve rows")
+    assert(asofRows == n, s"as-of join $asofRows vs $n trades")
+    assert(rangeRows == rangePairs, s"range join $rangeRows vs $rangePairs pairs")
   }
 }

@@ -35,7 +35,9 @@ import org.apache.spark.sql.internal.SQLConf
   *    A [[SortedScan]] result (`ForwardFill.partitioned`, the global
   *    `Resampler.resample`) is such a leaf too, so the final actions of
   *    `q_ffill`, `q_resample_1h`, `q_resample_1d` and `q_resample_window`
-  *    are gate-exempt; their sort already ran while the frame was built.
+  *    are gate-exempt; their sort either ran while the frame was built, or,
+  *    unsliced under the coalescing floor, was planned then with adaptive
+  *    execution off and runs inside that action.
   *  - Each [[Generate]] multiplies the size estimate by 8 (explodes grow
   *    rows past the leaf estimate; conservative, so expansion near the
   *    threshold errs toward keeping AQE on).

@@ -80,11 +80,13 @@ object ForwardFill {
     *
     * Jobs: the [[SortedScan]]'s. An input that adaptive execution would
     * coalesce into one partition is sorted as one partition whose fill
-    * starts from no carry, with no job but the sort's, and stays one
+    * starts from no carry: no job runs while the result is built, and the
+    * sort's map stage runs inside the result's first action. It stays one
     * partition (not sliced: a `toLocalIterator` over it, as in
-    * [[graft.ops.Replay]], runs one job per partition); a range sort's
-    * summary job returns at most one row per partition. The fill itself
-    * runs lazily in the result's actions.
+    * [[graft.ops.Replay]], runs one job per partition). A range sort runs
+    * its jobs while the result is built; its summary job returns at most
+    * one row per partition. The fill itself runs lazily in the result's
+    * actions.
     */
   def partitioned(
       df: DataFrame,

@@ -113,13 +113,19 @@ object Fuser {
     * `NOVALIDFILESTOPROCESS`). Under `dedupOverlaps` every file is read,
     * since which duplicate survives may depend on out-of-window rows.
     *
-    * Sources are read in scan groups: sources that `spark.read` reads the
+    * Sources are read in scan groups: sources whose files are read the
     * same way (equal `SourceLoader.FileRead`s), with the same raw timestamp
     * column, no `tsConvert` and no file in common, share one scan over all
     * their kept files, and each row's source id comes from its
     * `_metadata.file_path`. A source with its own read path (see
     * `SourceLoader`) is a group of one. So the fuse plans one file scan per
     * read shape, not one per source.
+    *
+    * The call runs no Spark job when the fused input is under the
+    * coalescing floor (`AdaptiveGate.coalescesToOne`), with forward fill or
+    * without: the fill's one-partition sort runs in the result's first
+    * action (see `SortedScan`). A larger input's fill runs its range sort's
+    * jobs here.
     *
     * Parquet sources without a declared `secondarySortCol` get a
     * recompute-stable file-order row id (see `SourceLoader.parquetRowId`)
@@ -152,7 +158,7 @@ object Fuser {
             else Some(SourceLoader.parquetRowId(ids.map(i => specs(i).path -> listed(i).files)))
           val df = read.scan(spark, ids.flatMap(listed(_).scanned))
           val byPath = if (ids.size == 1) None else Some(SourceLoader.byFile(
-            ids.flatMap(i => listed(i).scanned.map(_ -> i)), ids.map(specs(_).path).mkString(", ")))
+            ids.flatMap(i => listed(i).scanned.map(_.getPath.toString -> i)), ids.map(specs(_).path).mkString(", ")))
           // the reader's columns, in each source's own order
           Part(df, members, byPath, rowId, Some(read.columns))
       }

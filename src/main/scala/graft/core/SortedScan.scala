@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.GraftExecution
 import org.apache.spark.sql.graftbridge.Bridge
 
 import scala.reflect.ClassTag
@@ -36,11 +37,16 @@ import scala.reflect.ClassTag
   * on the same keys is free, and declares the columns in `nullable`
   * nullable.
   *
-  * Jobs, run as one SQL execution `name`: for a one-partition sort, sliced
-  * or not, the shuffle map stage under adaptive execution, which scans the
-  * input once; otherwise the sort's range sampling, its shuffle map stage
-  * under adaptive execution, and the summary job unless one partition is
-  * left.
+  * Jobs: none for an unsliced one-partition sort. One partition has no
+  * carry from an earlier one, so nothing needs to run before the result is
+  * read: its physical plan is prepared without adaptive execution
+  * (`GraftExecution.staticRows`), and the sort's shuffle map stage, which
+  * scans the input once, runs as the first stage of the result's first
+  * action; later actions read its shuffle output. Otherwise, run as one SQL
+  * execution `name`: for a sliced one-partition sort, the shuffle map stage
+  * under adaptive execution, which observes the extent; for a range sort,
+  * its range sampling, its shuffle map stage under adaptive execution, and
+  * the summary job unless one partition is left.
   */
 object SortedScan {
 
@@ -71,14 +77,18 @@ object SortedScan {
       if (oneSort) sliced.fold(df)(s => Bridge.observeUnsorted(df, observation, s.extent))
         .repartition(1).sortWithinPartitions(order: _*)
       else df.orderBy(order: _*)
-    val (rows, summaries) = Bridge.withSqlExecution(sorted, name) {
-      val rows = sorted.queryExecution.toRdd
-      (rows,
-        if (rows.getNumPartitions <= 1) Array.empty[S]
-        else rows.mapPartitions(it => Iterator.single(summarize(it))).collect())
-    }
-    // the map stage has run (a one-partition sort runs only under adaptive
-    // execution); an input the optimizer found empty observes nothing
+    val (rows, summaries) =
+      // one partition, no carry to fold: nothing to run before the result's
+      // first action, whose job runs the sort's map stage
+      if (oneSort && sliced.isEmpty) (GraftExecution.staticRows(sorted), Array.empty[S])
+      else Bridge.withSqlExecution(sorted, name) {
+        val rows = sorted.queryExecution.toRdd
+        (rows,
+          if (rows.getNumPartitions <= 1) Array.empty[S]
+          else rows.mapPartitions(it => Iterator.single(summarize(it))).collect())
+      }
+    // a sliced sort's map stage has run (under adaptive execution); an input
+    // the optimizer found empty observes nothing
     val slices = sliced.toSeq.flatMap(s =>
       sorted.queryExecution.observedMetrics.get(observation).toSeq
         .flatMap(s.slices(_, rows.sparkContext.defaultParallelism)))

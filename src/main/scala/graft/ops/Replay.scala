@@ -43,7 +43,9 @@ object Replay {
   /** Replay `df` (already ordered) into `process(ts, row)`. Returns the final
     * status. `tsCol` must be epoch-ms Long. Runs one job per partition of
     * `df`: one for a [[graft.core.ForwardFill]] result under the coalescing
-    * floor, but one per grid slice for a [[Resampler.resample]] result
+    * floor, whose two stages are the fill's sort (its map stage, which
+    * scans the sources, ran in no earlier job) and the walk of its one
+    * partition; but one per grid slice for a [[Resampler.resample]] result
     * there (up to the default parallelism), each re-reading the resample's
     * sort.
     */

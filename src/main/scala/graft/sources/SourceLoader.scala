@@ -1,14 +1,15 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.GraftExecution
 import org.apache.spark.sql.execution.datasources.parquet.GraftFooters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import java.io.{BufferedReader, InputStreamReader}
+import java.io.{BufferedReader, FileNotFoundException, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import scala.reflect.ClassTag
 
@@ -22,7 +23,7 @@ final class NoValidFilesException(what: String)
 /** Plans and loads a [[SourceSpec]].
   *
   * Spark-first reimagining of the reference's `CSVSrc`/`ParquetSrc`
-  * (datasources.py:215-440): one `spark.read` over the source's file list
+  * (datasources.py:215-440): one file scan over the source's file list
   * replaces the per-file loop; Hadoop codecs replace the gzip magic-byte
   * sniffing. File enumeration order (datasources.py:189-212) is irrelevant to
   * correctness here because the fused stream is globally sorted.
@@ -34,7 +35,9 @@ final class NoValidFilesException(what: String)
   * inferred CSV or JSON schema). `Fuser.fuse` reads the kept files of all
   * sources with equal `FileRead`s through one scan, telling their rows
   * apart by `_metadata.file_path` ([[byFile]]); [[load]] reads one source
-  * alone.
+  * alone. A `FileRead`'s scan is built from the `FileStatus`es of the
+  * source's one listing (`GraftExecution.fileScan`), not through
+  * `spark.read`: no data source lookup, and the files are not listed again.
   *
   * Driver-side work is bounded by the FILE COUNT, never row count: the
   * listing, the CSV header-and-first-row probes and the parquet footer
@@ -61,46 +64,56 @@ object SourceLoader {
     case other                      => throw new IllegalArgumentException(s"Unknown type: $other")
   }
 
-  /** Enumerate a source's data files (S6/S7). Errors mirror the reference's
-    * compression scan (`_check_compression`, datasources.py:320-337): zip is
-    * unsupported, and one directory must not mix plain and gzip CSV. An empty
-    * or missing directory raises [[NoValidFilesException]].
+  /** Enumerate a source's data files (S6/S7), as paths in path order.
+    * Errors mirror the reference's compression scan (`_check_compression`,
+    * datasources.py:320-337): zip is unsupported, and one directory must not
+    * mix plain and gzip CSV. An empty or missing directory raises
+    * [[NoValidFilesException]].
     */
-  def listSourceFiles(spark: SparkSession, path: String, format: String): Seq[String] = {
+  def listSourceFiles(spark: SparkSession, path: String, format: String): Seq[String] =
+    listSourceStatuses(spark, path, format).map(_.getPath.toString)
+
+  /** [[listSourceFiles]], as the `FileStatus`es of the one listing of
+    * `path`: a directory (or a file, which lists as itself) is listed once;
+    * a glob, or a path that does not exist, goes through `globStatus`.
+    */
+  private[graft] def listSourceStatuses(spark: SparkSession, path: String, format: String)
+      : Seq[FileStatus] = {
     val p  = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val statuses =
-      if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.listStatus(p)
-      else Option(fs.globStatus(p)).getOrElse(Array.empty)
-    val files = statuses.filter(_.isFile).map(_.getPath).toSeq
-    val names = files.map(_.getName)
-    format match {
+      try fs.listStatus(p)
+      catch { case _: FileNotFoundException => Option(fs.globStatus(p)).getOrElse(Array.empty) }
+    val files = statuses.filter(_.isFile).toSeq
+    def named(suffixes: String*): Seq[FileStatus] =
+      files.filter(f => suffixes.exists(f.getPath.getName.endsWith))
+    val kept = format match {
       case "parquet" =>
-        val pq = files.filter(_.getName.endsWith(".parquet"))
+        val pq = named(".parquet")
         if (pq.isEmpty) throw new NoValidFilesException(s"$path (no .parquet files)")
-        pq.map(_.toString).sorted
+        pq
       case "csv" =>
-        if (names.exists(_.endsWith(".zip")))
+        if (named(".zip").nonEmpty)
           throw new IllegalArgumentException(
             s"zip-compressed sources are not supported: $path (reference datasources.py:330-333)")
-        val plain = files.filter(_.getName.endsWith(".csv"))
-        val gz    = files.filter(_.getName.endsWith(".csv.gz"))
+        val plain = named(".csv")
+        val gz    = named(".csv.gz")
         if (plain.nonEmpty && gz.nonEmpty)
           throw new IllegalArgumentException(
             s"source dir mixes .csv and .csv.gz files: $path (reference datasources.py:320-337)")
         val all = plain ++ gz
         if (all.isEmpty) throw new NoValidFilesException(s"$path (no .csv/.csv.gz files)")
-        all.map(_.toString).sorted
+        all
       case "jsonl" =>
         // beyond-reference format (the LLM-corpus staple); gz transparent
         // via Hadoop codecs, plain/gz mixing allowed (no reference rule to
         // honor here)
-        val jl = files.filter(f => f.getName.endsWith(".jsonl") ||
-          f.getName.endsWith(".jsonl.gz") || f.getName.endsWith(".json"))
+        val jl = named(".jsonl", ".jsonl.gz", ".json")
         if (jl.isEmpty) throw new NoValidFilesException(s"$path (no .jsonl/.jsonl.gz/.json files)")
-        jl.map(_.toString).sorted
+        jl
       case other => throw new IllegalArgumentException(s"Unknown source format: $other")
     }
+    kept.sortBy(_.getPath.toString)
   }
 
   /** Read one file's actual first line (gzip-aware via the Hadoop codec
@@ -181,9 +194,9 @@ object SourceLoader {
     listed.read.fold(identity, _.frame(spark, listed.scanned))
   }
 
-  /** How `spark.read` reads a source's files: the format, the schema handed
-    * to the reader (a CSV's in its files' column order), the reader options
-    * and a per-file row cap (a parquet `numRows`, a `_metadata.row_index`
+  /** How a plain file scan reads a source's files: the format, the read
+    * schema (a CSV's in its files' column order), the reader options and a
+    * per-file row cap (a parquet `numRows`, a `_metadata.row_index`
     * filter). `columns` is the source's column order. Sources whose reads
     * agree on all but `columns` ([[sharesScanWith]]) read each file the
     * same way, so one scan can serve them all.
@@ -198,14 +211,18 @@ object SourceLoader {
     def sharesScanWith(o: FileRead): Boolean =
       format == o.format && schema == o.schema && options == o.options && rowCap == o.rowCap
 
-    /** One scan of `files`, in the reader's column order. */
-    def scan(spark: SparkSession, files: Seq[String]): DataFrame = {
-      val df = spark.read.format(format).schema(schema).options(options).load(files: _*)
+    /** One scan of `files`, in the reader's column order: the relation
+      * `spark.read.format(format).schema(schema).options(options).load`
+      * resolves to, built from the driver's listing with no data source
+      * lookup and no second listing (`GraftExecution.fileScan`).
+      */
+    def scan(spark: SparkSession, files: Seq[FileStatus]): DataFrame = {
+      val df = GraftExecution.fileScan(spark, format, files, schema, options)
       rowCap.fold(df)(n => df.filter(col("_metadata.row_index") < n))
     }
 
     /** [[scan]], in the source's column order. */
-    def frame(spark: SparkSession, files: Seq[String]): DataFrame = {
+    def frame(spark: SparkSession, files: Seq[FileStatus]): DataFrame = {
       val df = scan(spark, files)
       if (schema.fieldNames.toSeq == columns) df else df.select(columns.map(column): _*)
     }
@@ -215,13 +232,14 @@ object SourceLoader {
   private[graft] def column(name: String): Column = col(s"`${name.replace("`", "``")}`")
 
   /** A planned source: its ordered file list from the one listing of the
-    * source, the files of that list to scan, and how to read them: a
-    * [[FileRead]], or the source's own frame where it needs a per-file read
-    * path or schema inference. Both lists are empty for a partitioned
-    * parquet layout, which Spark's partition discovery reads instead.
+    * source, the listed statuses of the files of that list to scan, and how
+    * to read them: a [[FileRead]], or the source's own frame where it needs
+    * a per-file read path or schema inference. Both lists are empty for a
+    * partitioned parquet layout, which Spark's partition discovery reads
+    * instead.
     */
   private[graft] final case class Listed(
-      files: Seq[String], scanned: Seq[String], read: Either[DataFrame, FileRead]) {
+      files: Seq[String], scanned: Seq[FileStatus], read: Either[DataFrame, FileRead]) {
 
     /** True when the listing has files but none can hold a row in the window. */
     def outOfWindow: Boolean = files.nonEmpty && scanned.isEmpty
@@ -235,7 +253,7 @@ object SourceLoader {
     */
   private[graft] def loadListed(
       spark: SparkSession, spec: SourceSpec, window: Span = Span.All): Listed = {
-    val listed = scala.util.Try(listSourceFiles(spark, spec.path, spec.format))
+    val listed = scala.util.Try(listSourceStatuses(spark, spec.path, spec.format))
     if (spec.format == "parquet" && spec.schema.isEmpty && !spec.forceSchema &&
         listed.isFailure && hasSubdirs(spark, spec.path))
       // Partitioned/nested layout (e.g. date=.../part-*.parquet): delegate to
@@ -243,11 +261,12 @@ object SourceLoader {
       // row id don't apply here.
       Listed(Nil, Nil, Left(perFileCap(spark.read.parquet(spec.path), spec)))
     else {
-      val files = specFiles(spec, listed.get)
+      val status = listed.get.map(f => f.getPath.toString -> f).toMap
+      val files = specFiles(spec, listed.get.map(_.getPath.toString))
       // a converted timestamp's window says nothing about the raw column
-      val (read, scanned) = readFiles(spark, spec, files,
+      val (read, scanned) = readFiles(spark, spec, files, status,
         if (spec.tsConvert.isDefined) Span.All else window)
-      Listed(files, scanned, read)
+      Listed(files, scanned.map(status), read)
     }
   }
 
@@ -278,15 +297,20 @@ object SourceLoader {
   private def hasSubdirs(spark: SparkSession, path: String): Boolean = {
     val p  = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.getFileStatus(p).isDirectory &&
-      fs.listStatus(p).exists(_.isDirectory)
+    try fs.listStatus(p).exists(_.isDirectory)
+    catch { case _: FileNotFoundException => false }
   }
 
-  /** How to read `files` (in order) as the spec's frame, and those of them
-    * that may hold a row in `window`, the files to scan.
+  /** How to read `files` (in order, each listed as `status`) as the spec's
+    * frame, and those of them that may hold a row in `window`, the files to
+    * scan.
     */
-  private def readFiles(spark: SparkSession, spec: SourceSpec, files: Seq[String], window: Span)
-      : (Either[DataFrame, FileRead], Seq[String]) = spec.format match {
+  private def readFiles(
+      spark: SparkSession,
+      spec: SourceSpec,
+      files: Seq[String],
+      status: String => FileStatus,
+      window: Span): (Either[DataFrame, FileRead], Seq[String]) = spec.format match {
     case "parquet" =>
       // Schemas come from footers read on the driver, never from Spark's
       // inference job; the same footers bound the files when pruning.
@@ -371,7 +395,7 @@ object SourceLoader {
       }
       // No declared types: infer (reference warns, classes.py:137-143).
       def readCsv(fs: Seq[String]): DataFrame = declared.fold(
-        spark.read.options(options).option("inferSchema", "true").csv(fs: _*))(_.frame(spark, fs))
+        spark.read.options(options).option("inferSchema", "true").csv(fs: _*))(_.frame(spark, fs.map(status)))
       val read = (declared, spec.numRows) match {
         case (Some(r), None) => Right(r)
         // per-file cap: CSV has no physical row index, so read each file

@@ -472,6 +472,74 @@ class FuserSpec extends SparkTestBase {
     }
   }
 
+  // ---- scans from the driver's listing and the unrun fill sort -------------
+
+  test("forward fill under the coalescing floor: the fuse runs no job; one job per action") {
+    val opts = groupWindow.copy(forwardFillData = true)
+    val byMode = Seq.newBuilder[Seq[org.apache.spark.sql.Row]]
+    inEachMode {
+      val (res, jobs) = jobsRun(Fuser.fuse(spark, benchShaped, opts))
+      val (rows, actionJobs) = jobsRun(res.df.collect().toSeq)
+      if (gatedMode) {
+        assert(jobs == 0, "the fill's sort runs in the first action's job")
+        assert(actionJobs == 1)
+      }
+      assert(rows.length == Fuser.fuse(spark, benchShaped, groupWindow).df.count())
+      byMode += rows
+    }
+    assert(byMode.result().distinct.length == 1, "every partition mode fills the same rows")
+  }
+
+  test("fuse scans read the driver's listing: inputFiles, size and rows as spark.read gives them") {
+    import org.apache.spark.sql.execution.GraftExecution.ListedFileIndex
+    val df = Fuser.fuse(spark, benchShaped, groupWindow).df
+    val scans = fileScans(df)
+    assert(scans.length == 2)
+    assert(scans.forall(_.relation.location.isInstanceOf[ListedFileIndex]),
+      scans.map(_.relation.location.getClass.getSimpleName))
+    val viaReader = benchShaped.map { spec =>
+      val listed = graft.sources.SourceLoader.loadListed(spark, spec, graft.sources.Span(1200L, 2250L))
+      val read = listed.read.toOption.get
+      val ours = read.scan(spark, listed.scanned)
+      val theirs = spark.read.format(read.format).schema(read.schema).options(read.options)
+        .load(listed.scanned.map(_.getPath.toString): _*)
+      def relation(d: org.apache.spark.sql.DataFrame) = d.queryExecution.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+      }.get
+      withClue(spec.descriptor) {
+        assert(relation(theirs).asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+          .location.isInstanceOf[org.apache.spark.sql.execution.datasources.InMemoryFileIndex])
+        assert(ours.inputFiles.sorted.toSeq == theirs.inputFiles.sorted.toSeq)
+        assert(relation(ours).sizeInBytes == relation(theirs).sizeInBytes)
+        assert(ours.schema == theirs.schema)
+        // parquet scans also carry each row's position in its file
+        val meta = col("_metadata.file_path") +: (if (read.format == "parquet") Seq(col("_metadata.row_index")) else Nil)
+        val withMeta = (d: org.apache.spark.sql.DataFrame) =>
+          d.select(col("*") +: meta: _*).collect().map(_.toString).sorted.toSeq
+        assert(withMeta(ours) == withMeta(theirs))
+        assert(AdaptiveGate.coalescesToOne(ours) == AdaptiveGate.coalescesToOne(theirs))
+      }
+      theirs
+    }
+    assert(df.inputFiles.sorted.toSeq == viaReader.flatMap(_.inputFiles).sorted)
+  }
+
+  test("a file deleted after the fuse fails the action and names the file") {
+    val root = java.nio.file.Files.createTempDirectory("graft_deleted")
+    for (d <- 1 to 2)
+      writeParquetFile(fuseRows(0, d).toDF("ts", "symbol", "price", "size"), root.resolve(s"s/s_$d.parquet"))
+    val spec = graft.sources.SourceSpec(root.resolve("s").toString, "parquet", "s", "ts")
+    val gone = root.resolve("s/s_2.parquet")
+    val filled = Fuser.fuse(spark, Seq(spec), FuseOptions(forwardFillData = true)).df
+    val plain = Fuser.fuse(spark, Seq(spec), FuseOptions()).df
+    java.nio.file.Files.delete(gone)
+    for (df <- Seq(filled, plain)) {
+      val e = intercept[org.apache.spark.SparkException](df.collect())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(messages.exists(m => m != null && m.contains("s_2.parquet")), e.getMessage)
+    }
+  }
+
   test("a window on a stored timestamp is pushed to the parquet scan") {
     import java.time.Instant
     val s = Instant.parse("2024-01-01T00:00:00Z")

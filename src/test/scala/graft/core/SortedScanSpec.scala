@@ -11,11 +11,13 @@ import org.apache.spark.sql.functions._
 /** The jobs [[SortedScan]] runs while a frame is built, and the order it
   * declares. An input adaptive execution would coalesce into one partition
   * (under the coalescing floor, 1 MB by default) is sorted as one
-  * partition: only the shuffle map stage runs, scanning the source once.
-  * Any other input is range-sorted: the sampling job, map stage and
-  * summary job run; no summary job runs for a sort that ends up with one
-  * partition. A sliced one-partition sort observes its extent in the same
-  * map stage, and its k slices each read the sort's shuffle.
+  * partition, planned without adaptive execution: no job runs until the
+  * result's first action, whose one job runs the sort's map stage,
+  * scanning the source once. Any other input is range-sorted: the sampling
+  * job, map stage and summary job run; no summary job runs for a sort that
+  * ends up with one partition. A sliced one-partition sort runs its map
+  * stage under adaptive execution while it is built, observing its extent
+  * there, and its k slices each read the sort's shuffle.
   */
 class SortedScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
@@ -45,17 +47,19 @@ class SortedScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def sortedRows: Seq[Row] = source.orderBy("ts").collect().toSeq
 
+  // the one job is the first action's: building the frame runs none
   test("input under the coalescing floor: one job, and the source is scanned once") {
     withConf(Map("spark.sql.adaptive.enabled" -> "true")) {
       assert(AdaptiveGate.coalescesToOne(source))
-      val ((out, summaries), jobs, read) = jobsAndInputRecords(scan())
-      assert(jobs == 1, "the shuffle map stage only")
-      assert(read == rows)
+      val ((out, summaries), jobs, _) = jobsAndInputRecords(scan())
+      assert(jobs == 0, "the sort's map stage runs in the first action's job")
       assert(summaries == 0)
-      assert(partitionSizes(out) == Seq(rows))
       val (collected, actionJobs, actionRead) = jobsAndInputRecords(out.collect().toSeq)
       assert(collected == sortedRows)
-      assert(actionJobs == 1 && actionRead == 0, "the action reads the shuffle, not the source")
+      assert(actionJobs == 1 && actionRead == rows, "one job: the map stage and the result stage")
+      val (sizes, againJobs, againRead) = jobsAndInputRecords(partitionSizes(out))
+      assert(sizes == Seq(rows))
+      assert(againJobs == 1 && againRead == 0, "a later action reads the shuffle, not the source")
     }
   }
 

@@ -133,6 +133,20 @@ class SourceLoaderSpec extends SparkTestBase {
     assert(e.getMessage.contains("mixes"), e.getMessage)
   }
 
+  test("listing: a directory, a single file and a glob list their files; a missing path or a zip fails") {
+    val files = Seq(s"$dir/part-1.csv", s"$dir/part-2.csv").map(f => new Path(f).toUri.toString)
+    val uris = (p: String) => SourceLoader.listSourceFiles(spark, p, "csv").map(new Path(_).toUri.toString)
+    assert(uris(dir).map(_.stripPrefix("file:")) == files.map(_.stripPrefix("file:")))
+    assert(uris(s"$dir/part-2.csv").map(_.stripPrefix("file:")) == files.drop(1).map(_.stripPrefix("file:")))
+    assert(uris(s"$dir/part-*.csv").map(_.stripPrefix("file:")) == files.map(_.stripPrefix("file:")))
+    intercept[NoValidFilesException](SourceLoader.listSourceFiles(spark, s"$dir/missing", "csv"))
+    val zipped = Files.createTempDirectory("graft_zip").toString
+    Files.writeString(Paths.get(zipped, "a.csv"), "T,V\n1,2\n")
+    Files.write(Paths.get(zipped, "b.zip"), Array[Byte](80, 75, 5, 6))
+    val e = intercept[IllegalArgumentException](SourceLoader.listSourceFiles(spark, zipped, "csv"))
+    assert(e.getMessage.contains("zip-compressed"), e.getMessage)
+  }
+
   test("empty source dir surfaces NOVALIDFILESTOPROCESS (classes.py:690-705)") {
     val empty = Files.createTempDirectory("graft_empty").toString
     intercept[NoValidFilesException] {
