@@ -1,17 +1,46 @@
 package graft.ops
 
+import graft.core.SizeGates
+import graft.functions.{HopDistanceAgg, KCoreAgg, PageRankAgg, PairComponents, WalkAgg}
 import graft.pipeline.Dedup
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-/** Link-graph analytics over an edge list.
+/** Link-graph analytics over an edge list: PageRank (plain, warm-started
+  * and personalized), connected components (batch and incremental),
+  * triangles, hop distance, link prediction, k-core and random walks.
   *
-  * The one operator here is PageRank, the canonical iterative fixed-point
-  * a single-pass SQL engine cannot express without replaying the whole
-  * recursion as N chained scans — on Spark each iteration is ONE
-  * broadcast-joined aggregation over a checkpointed edge table.
+  * Every operator reads its edges through [[edgeList]]. The iterative ones
+  * share two regimes: below an edge budget the whole fixpoint runs inside
+  * ONE aggregation ([[onePass]]); past it, each round is one checkpointed
+  * plan over a checkpointed edge table — the recursion a single-pass SQL
+  * engine can only replay as N chained scans.
   */
 object Graph {
+
+  /** The edge prelude of every operator here: (src, dst) cast to long,
+    * self-loops dropped (a null endpoint drops with them).
+    */
+  private def edgeList(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .filter(col("src") =!= col("dst"))
+
+  /** The one-pass regime of a graph fixpoint: when `raw` holds at least one
+    * and at most `edgeBufferLimit` edges (one count of the pre-dedup edges,
+    * a conservative upper bound) and `fits` holds, `agg` runs over `raw` as
+    * ONE aggregation, exploded to the fields of its result struct. None
+    * sends the caller to its loop. A map-side partial holds only its task's
+    * edge rows; only the final merged buffer sees the graph.
+    */
+  private def onePass(raw: DataFrame, edgeBufferLimit: Long, fits: => Boolean)(
+      agg: => Column): Option[DataFrame] =
+    if (edgeBufferLimit > 0 && { val c = raw.count(); c > 0 && c <= edgeBufferLimit } && fits)
+      Some(raw.agg(agg.as("__a")).select(explode(col("__a")).as("__p")).select(col("__p.*")))
+    else None
+
+  /** Distinct seed ids, sorted: the seed set a one-pass aggregate carries. */
+  private def seedArray(seeds: DataFrame, seedCol: String): Array[Long] =
+    seeds.select(col(seedCol).cast("long")).distinct().collect().map(_.getLong(0)).sorted
 
   /** Standard damped PageRank over a directed edge list, `iterations`
     * synchronous Jacobi steps from the uniform vector:
@@ -27,10 +56,12 @@ object Graph {
     *    planted graphs used by the query inventory every node has an
     *    out-edge, so the two formulations coincide there.
     *
-    * Scale shape: the out-degree-annotated edge table is checkpointed
-    * ONCE — PRE-PARTITIONED on `src` — and every iteration re-reads it
-    * from executor memory; the rank vector (n rows, two columns) is the
-    * ONLY thing that moves per iteration. While n stays under
+    * Scale shape: below `edgeBufferLimit` raw edges all `iterations` steps
+    * run inside ONE [[graft.functions.PageRankAgg]] aggregation. Past it,
+    * the out-degree-annotated edge table is checkpointed ONCE —
+    * PRE-PARTITIONED on `src` — and every iteration re-reads it from
+    * executor memory; the rank vector (n rows, two columns) is the ONLY
+    * thing that moves per iteration. While n stays under
     * `broadcastNodeLimit` the per-iteration joins get explicit broadcast
     * hints (nothing shuffles at all — right for small graphs where
     * per-stage shuffle latency dominates). Beyond the gate the joins run
@@ -40,15 +71,12 @@ object Graph {
     * contribution aggregate — is all that moves. (Measured at 500k
     * nodes / 1.5M edges: the broadcast path rebuilds two 500k-row
     * broadcast relations per iteration and runs ~3× slower than the
-    * co-partitioned layout.) The iteration recurrence is a LINEAR chain
-    * (round i+1 references round i exactly once), so `checkpointEvery`
-    * can fuse a block of rounds into one multi-stage job — but the
-    * measured default is 1: AQE executes the chained shuffle stages
-    * sequentially either way and pays re-planning on the growing chain
-    * (fusing 5 rounds at 500k nodes REGRESSED 8.4 → 13.5 s), so
-    * per-round checkpoints win; the knob stays for other regimes.
-    * `localCheckpoint` preserves the partitioning, so the layout
-    * survives across iterations.
+    * co-partitioned layout.) Every round is checkpointed: fusing 5 rounds
+    * of the linear chain into one multi-stage job at 500k nodes REGRESSED
+    * 8.4 → 13.5 s, because AQE executes the chained shuffle stages
+    * sequentially either way and re-plans the growing chain.
+    * `localCheckpoint` preserves the partitioning, so the layout survives
+    * across iterations.
     */
   def pageRank(
       edges: DataFrame,
@@ -56,78 +84,10 @@ object Graph {
       dstCol: String,
       iterations: Int = 10,
       damping: Double = 0.85,
-      broadcastNodeLimit: Long = 65536,
-      checkpointEvery: Int = 1,
-      edgeBufferLimit: Long = 8L << 20): DataFrame = {
-    require(iterations >= 1, s"iterations must be positive: $iterations")
-    require(damping > 0 && damping < 1, s"damping must be in (0, 1): $damping")
-    require(checkpointEvery >= 1, s"checkpointEvery must be >= 1: $checkpointEvery")
-    val raw = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // SIZE-GATED one-pass path (the connectedComponents/PairComponents
-    // argument applied to the numeric fixed-point): below the edge
-    // budget — probed on the RAW pre-dedup count, one scan, a
-    // conservative upper bound — all `iterations` Jacobi steps run
-    // inside ONE PageRankAgg aggregation instead of N checkpointed
-    // shuffle rounds. A map-side partial holds only its task's edge
-    // rows; only the final merged buffer sees the graph (~16 B/edge).
-    if (edgeBufferLimit > 0 && { val c = raw.count(); c > 0 && c <= edgeBufferLimit }) {
-      return raw
-        .agg(graft.functions.PageRankAgg.pageRankAgg(
-          col("src"), col("dst"), iterations, damping, null).as("__pr"))
-        .select(explode(col("__pr")).as("__p"))
-        .select(col("__p.node").as("node"), col("__p.r").as("r"))
-    }
-    val simple = raw.distinct()
-    val deg = simple.groupBy(col("src"))
-      .agg(count(lit(1)).cast("double").as("__od"))
-    // pre-partition the iteration-invariant tables ONCE and STAMP the
-    // layout (materializeOnceKeyed): under AQE a bare checkpoint reports
-    // UnknownPartitioning, so every round would re-exchange tables that
-    // are already laid out — with the stamp, a non-broadcast iteration's
-    // only planned exchanges are the contribution aggregate and the
-    // rank-vector re-layout
-    val P = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val ed = Dedup.materializeOnceKeyed(simple.join(deg, "src"), Seq("src"), P)
-    val nodes = Dedup.materializeOnceKeyed(
-      ed.select(col("src").as("node"))
-        .union(ed.select(col("dst").as("node"))).distinct(), Seq("node"), P)
-    val n = nodes.count()
-    require(n > 0, "pageRank: empty graph")
-    val hint = n <= broadcastNodeLimit
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("r"))
-    for (i <- 1 to iterations) {
-      val next = prStep(ed, nodes, ranks, damping, n, hint)
-      // the broadcast path materializes EVERY round: broadcast of an
-      // unmaterialized chain would recompute the whole block per round
-      ranks =
-        if (hint) Dedup.materializeOnceLoop(next)
-        else if (i % checkpointEvery == 0 || i == iterations)
-          Dedup.materializeOnceKeyed(next, Seq("node"), P)
-        else next
-    }
-    ranks
-  }
-
-  /** One PageRank Jacobi step as a PLAN (no materialization) — factored
-    * out so PlanSpec can pin the iteration's physical shape: with `ed`
-    * laid out by `src` and `nodes`/`ranks` by `node`, the ONLY exchange
-    * in the step is the map-side-combined contribution aggregate.
-    */
-  private[graft] def prStep(ed: DataFrame, nodes: DataFrame,
-      ranks: DataFrame, damping: Double, n: Long, hint: Boolean): DataFrame = {
-    val rs = if (hint) broadcast(ranks) else ranks
-    val contribs = ed.join(rs, ed("src") === rs("node"))
-      .groupBy(ed("dst").as("node"))
-      .agg(sum(col("r") / col("__od")).as("__c"))
-    nodes.as("nd")
-      .join(if (hint) broadcast(contribs.as("c")) else contribs.as("c"),
-        col("nd.node") === col("c.node"), "left")
-      .select(col("nd.node").as("node"),
-        (lit((1.0 - damping) / n) +
-          lit(damping) * coalesce(col("__c"), lit(0.0))).as("r"))
-  }
+      broadcastNodeLimit: Long = SizeGates.BroadcastNodes,
+      edgeBufferLimit: Long = SizeGates.EdgeBuffer): DataFrame =
+    ranks(edges, srcCol, dstCol, Uniform, iterations, damping, broadcastNodeLimit,
+      edgeBufferLimit, "pageRank")
 
   /** WARM-STARTED PageRank — the incremental-maintenance face
     * ([[componentsIncrement]]'s contract generalized to the numeric
@@ -149,8 +109,8 @@ object Graph {
     * rounds) is the whole point of the warm start.
     *
     * Scale shape: identical machinery to [[pageRank]] — below the edge
-    * budget (and `priorLimit` on the prior vector, which rides the task
-    * binary as a reference object) the whole fold is ONE
+    * budget (and [[SizeGates.TaskArrayRows]] rows of prior, which rides
+    * the task binary as a reference object) the whole fold is ONE
     * [[graft.functions.PageRankAgg]] aggregation; beyond, the stamped
     * co-partitioned loop with the prior joined in as r₀.
     */
@@ -161,50 +121,11 @@ object Graph {
       prior: DataFrame,
       iterations: Int = 3,
       damping: Double = 0.85,
-      broadcastNodeLimit: Long = 65536,
-      checkpointEvery: Int = 1,
-      edgeBufferLimit: Long = 8L << 20,
-      priorLimit: Long = 1L << 20): DataFrame = {
-    require(iterations >= 1, s"iterations must be positive: $iterations")
-    require(damping > 0 && damping < 1, s"damping must be in (0, 1): $damping")
-    val raw = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val pr = prior.select(col("node").cast("long").as("node"),
-      col("r").cast("double").as("r"))
-    if (edgeBufferLimit > 0 && priorLimit > 0 &&
-        { val c = raw.count(); c > 0 && c <= edgeBufferLimit } &&
-        pr.count() <= priorLimit) {
-      val init = pr.collect().map(r => r.getLong(0) -> r.getDouble(1))
-      return raw
-        .agg(graft.functions.PageRankAgg.pageRankAggWarm(
-          col("src"), col("dst"), iterations, damping, init).as("__pr"))
-        .select(explode(col("__pr")).as("__p"))
-        .select(col("__p.node").as("node"), col("__p.r").as("r"))
-    }
-    val simple = raw.distinct()
-    val deg = simple.groupBy(col("src"))
-      .agg(count(lit(1)).cast("double").as("__od"))
-    val P = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val ed = Dedup.materializeOnceKeyed(simple.join(deg, "src"), Seq("src"), P)
-    val nodes = Dedup.materializeOnceKeyed(
-      ed.select(col("src").as("node"))
-        .union(ed.select(col("dst").as("node"))).distinct(), Seq("node"), P)
-    val n = nodes.count()
-    require(n > 0, "pageRankWarmStart: empty graph")
-    val hint = n <= broadcastNodeLimit
-    var ranks = nodes.join(pr.withColumnRenamed("r", "__prior"), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__prior"), lit(1.0 / n)).as("r"))
-    for (i <- 1 to iterations) {
-      val next = prStep(ed, nodes, ranks, damping, n, hint)
-      ranks =
-        if (hint) Dedup.materializeOnceLoop(next)
-        else if (i % checkpointEvery == 0 || i == iterations)
-          Dedup.materializeOnceKeyed(next, Seq("node"), P)
-        else next
-    }
-    ranks
-  }
+      broadcastNodeLimit: Long = SizeGates.BroadcastNodes,
+      edgeBufferLimit: Long = SizeGates.EdgeBuffer): DataFrame =
+    ranks(edges, srcCol, dstCol,
+      Prior(prior.select(col("node").cast("long").as("node"), col("r").cast("double").as("r"))),
+      iterations, damping, broadcastNodeLimit, edgeBufferLimit, "pageRankWarmStart")
 
   /** Personalized PageRank: the teleport mass lands ONLY on `seeds`
     * (uniformly split across the seed nodes present in the graph)
@@ -215,12 +136,12 @@ object Graph {
     * with w the seed indicator / |seeds ∩ nodes| and r₀ = w. Ranks then
     * measure proximity to the seed set — the contamination-tracing /
     * related-content primitive. Same simple-graph normalization, scale
-    * shape and iteration machinery as [[pageRank]] (including the
-    * `checkpointEvery`-fused linear iteration chain): the teleport
-    * vector is one more (node, w) column riding the checkpointed node
-    * table, so an iteration still moves nothing but the rank vector.
-    * Seeds not present in the graph are ignored (they could receive no
-    * mass).
+    * shape and iteration machinery as [[pageRank]]: the teleport vector
+    * is one more (node, w) column riding the checkpointed node table, so
+    * an iteration still moves nothing but the rank vector. The one-pass
+    * aggregate carries the distinct seed set, so a seed frame larger than
+    * the edge budget takes the loop. Seeds not present in the graph are
+    * ignored (they could receive no mass).
     */
   def personalizedPageRank(
       edges: DataFrame,
@@ -230,74 +151,111 @@ object Graph {
       seedCol: String,
       iterations: Int = 10,
       damping: Double = 0.85,
-      broadcastNodeLimit: Long = 65536,
-      checkpointEvery: Int = 1,
-      edgeBufferLimit: Long = 8L << 20): DataFrame = {
+      broadcastNodeLimit: Long = SizeGates.BroadcastNodes,
+      edgeBufferLimit: Long = SizeGates.EdgeBuffer): DataFrame =
+    ranks(edges, srcCol, dstCol, Seeded(seeds, seedCol), iterations, damping,
+      broadcastNodeLimit, edgeBufferLimit, "personalizedPageRank")
+
+  /** Where a PageRank face starts and teleports to: uniformly, from a prior
+    * `(node, r)` vector with a uniform teleport, or onto a seed set.
+    */
+  private sealed trait Start
+  private case object Uniform extends Start
+  private final case class Prior(vector: DataFrame) extends Start
+  private final case class Seeded(seeds: DataFrame, seedCol: String) extends Start
+
+  /** The PageRank of all three faces, which differ only in their [[Start]]:
+    * the one-pass aggregate while the edges (and a prior or seed set,
+    * which rides its task binary) fit, else the co-partitioned loop of
+    * [[prStep]]s.
+    */
+  private def ranks(edges: DataFrame, srcCol: String, dstCol: String, start: Start,
+      iterations: Int, damping: Double, broadcastNodeLimit: Long,
+      edgeBufferLimit: Long, face: String): DataFrame = {
     require(iterations >= 1, s"iterations must be positive: $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0, 1): $damping")
-    require(checkpointEvery >= 1, s"checkpointEvery must be >= 1: $checkpointEvery")
-    val raw = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // same size-gated one-pass path as [[pageRank]]; the seed set rides
-    // the model (collected DISTINCT — bounded by the seed frame, which
-    // is small by contract; a seed frame larger than the edge budget
-    // falls through to the iterative path)
-    if (edgeBufferLimit > 0 &&
-        { val c = raw.count(); c > 0 && c <= edgeBufferLimit } &&
-        seeds.count() <= edgeBufferLimit) {
-      val seedArr = seeds.select(col(seedCol).cast("long")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      return raw
-        .agg(graft.functions.PageRankAgg.pageRankAgg(
-          col("src"), col("dst"), iterations, damping, seedArr).as("__pr"))
-        .select(explode(col("__pr")).as("__p"))
-        .select(col("__p.node").as("node"), col("__p.r").as("r"))
+    val raw = edgeList(edges, srcCol, dstCol)
+    def fits = start match {
+      case Uniform => true
+      case Prior(pr) => pr.count() <= SizeGates.TaskArrayRows
+      case Seeded(seeds, _) => seeds.count() <= edgeBufferLimit
     }
+    def agg = start match {
+      case Uniform => PageRankAgg.pageRankAgg(col("src"), col("dst"), iterations, damping, null)
+      case Prior(pr) => PageRankAgg.pageRankAggWarm(col("src"), col("dst"), iterations, damping,
+        pr.collect().map(r => r.getLong(0) -> r.getDouble(1)))
+      case Seeded(seeds, seedCol) => PageRankAgg.pageRankAgg(col("src"), col("dst"),
+        iterations, damping, seedArray(seeds, seedCol))
+    }
+    val onePassed = onePass(raw, edgeBufferLimit, fits)(agg)
+    if (onePassed.nonEmpty) return onePassed.get
     val simple = raw.distinct()
     val deg = simple.groupBy(col("src"))
       .agg(count(lit(1)).cast("double").as("__od"))
-    // same stamped iteration-invariant layout as [[pageRank]]: edges by
-    // src, the teleport/node vector by node
+    // pre-partition the iteration-invariant tables ONCE and STAMP the
+    // layout (materializeOnceKeyed): under AQE a bare checkpoint reports
+    // UnknownPartitioning, so every round would re-exchange tables that
+    // are already laid out — with the stamp, a non-broadcast iteration's
+    // only planned exchanges are the contribution aggregate and the
+    // rank-vector re-layout
     val P = edges.sparkSession.sessionState.conf.numShufflePartitions
     val ed = Dedup.materializeOnceKeyed(simple.join(deg, "src"), Seq("src"), P)
-    val nodes =
-      ed.select(col("src").as("node"))
-        .union(ed.select(col("dst").as("node"))).distinct()
-    val seedNodes = Dedup.materializeOnce(
-      nodes.join(seeds.select(col(seedCol).cast("long").as("node")).distinct(),
-        Seq("node"), "left_semi"))
-    val k = seedNodes.count()
-    require(k > 0, "personalizedPageRank: no seed is a node of the graph")
-    val tele = Dedup.materializeOnceKeyed(
-      nodes.as("nd")
-        .join(seedNodes.select(col("node"), lit(true).as("__is")).as("s"),
-          Seq("node"), "left")
-        .select(col("node"),
-          when(col("__is"), lit(1.0 / k)).otherwise(lit(0.0)).as("__w")),
-      Seq("node"), P)
-    val n = tele.count()
-    val hint = n <= broadcastNodeLimit
-    var ranks = tele.select(col("node"), col("__w").as("r"))
-    for (i <- 1 to iterations) {
-      val rs = if (hint) broadcast(ranks) else ranks
-      val contribs = ed.join(rs, ed("src") === rs("node"))
-        .groupBy(ed("dst").as("node"))
-        .agg(sum(col("r") / col("__od")).as("__c"))
-      val next = tele.as("t")
-        .join(if (hint) broadcast(contribs.as("c")) else contribs.as("c"),
-          col("t.node") === col("c.node"), "left")
-        .select(col("t.node").as("node"),
-          (lit(1.0 - damping) * col("__w") +
-            lit(damping) * coalesce(col("__c"), lit(0.0))).as("r"))
-      // same broadcast-path rule as [[pageRank]]
-      ranks =
-        if (hint) Dedup.materializeOnceLoop(next)
-        else if (i % checkpointEvery == 0 || i == iterations)
-          Dedup.materializeOnceKeyed(next, Seq("node"), P)
-        else next
+    val nodes = ed.select(col("src").as("node"))
+      .union(ed.select(col("dst").as("node"))).distinct()
+    // the step's base table: the node set, plus the teleport weight __w
+    // when the teleport is seeded
+    val base = Dedup.materializeOnceKeyed(start match {
+      case Seeded(seeds, seedCol) =>
+        val seedNodes = Dedup.materializeOnce(nodes.join(
+          seeds.select(col(seedCol).cast("long").as("node")).distinct(),
+          Seq("node"), "left_semi"))
+        val k = seedNodes.count()
+        require(k > 0, s"$face: no seed is a node of the graph")
+        nodes.join(seedNodes.select(col("node"), lit(true).as("__is")), Seq("node"), "left")
+          .select(col("node"),
+            when(col("__is"), lit(1.0 / k)).otherwise(lit(0.0)).as("__w"))
+      case _ => nodes
+    }, Seq("node"), P)
+    val n = base.count()
+    require(n > 0, s"$face: empty graph")
+    val (r0, teleport) = start match {
+      case Uniform =>
+        (base.select(col("node"), lit(1.0 / n).as("r")), lit((1.0 - damping) / n))
+      case Prior(pr) =>
+        (base.join(pr.withColumnRenamed("r", "__prior"), Seq("node"), "left")
+          .select(col("node"), coalesce(col("__prior"), lit(1.0 / n)).as("r")),
+          lit((1.0 - damping) / n))
+      case Seeded(_, _) =>
+        (base.select(col("node"), col("__w").as("r")), lit(1.0 - damping) * col("__w"))
     }
-    ranks
+    val hint = n <= broadcastNodeLimit
+    // every round is checkpointed (see [[pageRank]]); on the broadcast path
+    // a broadcast of an unmaterialized chain would also recompute the whole
+    // chain per round
+    (1 to iterations).foldLeft(r0) { (r, _) =>
+      val next = prStep(ed, base, r, damping, teleport, hint)
+      if (hint) Dedup.materializeOnceLoop(next)
+      else Dedup.materializeOnceKeyed(next, Seq("node"), P)
+    }
+  }
+
+  /** One PageRank Jacobi step as a PLAN (no materialization) — factored
+    * out so PlanSpec can pin the iteration's physical shape: with `ed`
+    * laid out by `src` and `base`/`ranks` by `node`, the ONLY exchange
+    * in the step is the map-side-combined contribution aggregate.
+    * `teleport` is the step's (1 - d) term over `base`'s columns.
+    */
+  private[graft] def prStep(ed: DataFrame, base: DataFrame, ranks: DataFrame,
+      damping: Double, teleport: Column, hint: Boolean): DataFrame = {
+    val rs = if (hint) broadcast(ranks) else ranks
+    val contribs = ed.join(rs, ed("src") === rs("node"))
+      .groupBy(ed("dst").as("node"))
+      .agg(sum(col("r") / col("__od")).as("__c"))
+    base.as("nd")
+      .join(if (hint) broadcast(contribs.as("c")) else contribs.as("c"),
+        col("nd.node") === col("c.node"), "left")
+      .select(col("nd.node").as("node"),
+        (teleport + lit(damping) * coalesce(col("__c"), lit(0.0))).as("r"))
   }
 
   /** INCREMENTAL connected components: fold a NEW batch of edges into a
@@ -331,9 +289,7 @@ object Graph {
       srcCol: String,
       dstCol: String,
       prior: DataFrame): DataFrame = {
-    val e = Dedup.materializeOnce(newEdges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")))
+    val e = Dedup.materializeOnce(edgeList(newEdges, srcCol, dstCol))
     val pr = prior.select(col("node"), col("comp"))
     // endpoints -> prior labels (own id when the node is new)
     val resolved = e
@@ -346,8 +302,7 @@ object Graph {
       .filter(col("ca") =!= col("cb"))
     // contraction: components of the touched-label graph, batch-bounded
     val remap = Dedup.materializeOnce(resolved
-      .agg(graft.functions.PairComponents.pairComponents(
-        col("ca"), col("cb")).as("__cs"))
+      .agg(PairComponents.pairComponents(col("ca"), col("cb")).as("__cs"))
       .select(explode(col("__cs")).as("__c"))
       .select(col("__c.id").as("__lbl"), col("__c.comp").as("__root"))
       .filter(col("__lbl") =!= col("__root")))
@@ -392,9 +347,7 @@ object Graph {
       edges: DataFrame,
       srcCol: String,
       dstCol: String): DataFrame = {
-    val directed = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
+    val directed = edgeList(edges, srcCol, dstCol)
     // canonical undirected simple edges (u < v)
     val und = Dedup.materializeOnce(
       directed.select(least(col("src"), col("dst")).as("u"),
@@ -441,14 +394,18 @@ object Graph {
     * contamination blast-radius tracing). Returns (node, hop) for every
     * node reachable within `maxHops`; unreached nodes are absent.
     *
-    * Scale shape: classic frontier iteration — hop h's NEW nodes are the
-    * out-neighbors of hop h−1's frontier minus everything already
-    * labeled (one join + one left-anti join per round against the
-    * size-gated broadcast label set); the edge table checkpoints once
-    * and never moves. Exactly `maxHops` rounds, data-independent — the
-    * horizon is the semantics, so a pathological diameter cannot stall
-    * the job. The frontier (not the full label table) drives each join,
-    * so a converged region stops costing anything.
+    * Scale shape: the same size-gated one-pass path as [[pageRank]]:
+    * below the edge budget all maxHops frontier rounds run inside ONE
+    * [[graft.functions.HopDistanceAgg]] aggregation (BFS touches each edge
+    * once — strictly linear eval). Past it, classic frontier iteration —
+    * hop h's NEW nodes are the out-neighbors of hop h−1's frontier minus
+    * everything already labeled (one join + one left-anti join per round
+    * against the size-gated broadcast label set); the edge table
+    * checkpoints once and never moves. Exactly `maxHops` rounds,
+    * data-independent — the horizon is the semantics, so a pathological
+    * diameter cannot stall the job. The frontier (not the full label
+    * table) drives each join, so a converged region stops costing
+    * anything.
     */
   def hopDistance(
       edges: DataFrame,
@@ -457,26 +414,13 @@ object Graph {
       seeds: DataFrame,
       seedCol: String,
       maxHops: Int,
-      broadcastNodeLimit: Long = 65536,
-      edgeBufferLimit: Long = 8L << 20): DataFrame = {
+      broadcastNodeLimit: Long = SizeGates.BroadcastNodes,
+      edgeBufferLimit: Long = SizeGates.EdgeBuffer): DataFrame = {
     require(maxHops >= 0, s"maxHops must be non-negative: $maxHops")
-    val raw = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // same size-gated one-pass path as [[pageRank]]: below the edge
-    // budget all maxHops frontier rounds run inside ONE HopDistanceAgg
-    // aggregation (BFS touches each edge once — strictly linear eval)
-    if (edgeBufferLimit > 0 &&
-        { val c = raw.count(); c > 0 && c <= edgeBufferLimit } &&
-        seeds.count() <= edgeBufferLimit) {
-      val seedArr = seeds.select(col(seedCol).cast("long")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      return raw
-        .agg(graft.functions.HopDistanceAgg.hopDistanceAgg(
-          col("src"), col("dst"), seedArr, maxHops).as("__h"))
-        .select(explode(col("__h")).as("__p"))
-        .select(col("__p.node").as("node"), col("__p.hop").as("hop"))
-    }
+    val raw = edgeList(edges, srcCol, dstCol)
+    val onePassed = onePass(raw, edgeBufferLimit, seeds.count() <= edgeBufferLimit)(
+      HopDistanceAgg.hopDistanceAgg(col("src"), col("dst"), seedArray(seeds, seedCol), maxHops))
+    if (onePassed.nonEmpty) return onePassed.get
     val simple = raw.distinct()
     val ed = Dedup.materializeOnceKeyed(simple, Seq("src"),
       edges.sparkSession.sessionState.conf.numShufflePartitions)
@@ -508,66 +452,82 @@ object Graph {
     Dedup.materializeOnce(labels)
   }
 
-  /** Connected components of the UNDIRECTED view of an edge list:
-    * min-label propagation to fixpoint (each node's component is the
-    * smallest node id it can reach), the Pregel formulation. Returns
-    * (node, comp).
-    *
-    * Scale shape: the symmetrized edge table checkpoints once,
-    * pre-partitioned on `src`; round 0 seeds every node with
-    * `min(node, min(neighbor))` (a plain aggregate — a whole propagation
-    * hop before any join is paid). Each later round is then ONE fused
-    * plan — the neighbor-min aggregate, the monotone merge with the
-    * current label, and TWO POINTER JUMPS (`comp := comp(comp)`, the
-    * Shiloach–Vishkin shortcut) chained through the PREVIOUS round's
-    * label vector — materialized with a single checkpoint job; the
-    * convergence probe is a COUNT over the already-checkpointed blocks.
-    * Jumping through the one-round-stale vector keeps the round a single
-    * job and is still EXACT: labels are monotone-decreasing node ids of
-    * the same component (`prev(c) ≤ c`, and every comp value has a row),
-    * so a stale jump is just a weaker contraction — at fixpoint the jump
-    * is the identity, and a min-label fixpoint over a symmetrized edge
-    * set labels every component by its minimum node id. Rounds needed =
-    * O(log diameter); a pathological graph bounded by `maxRounds` fails
-    * loudly rather than silently returning a half-propagated labeling.
-    * SIZE-GATED one-pass path: below `unionFindNodeLimit` nodes the whole
-    * problem fits the [[graft.functions.PairComponents]] union-find
-    * aggregate (the dedup-clustering engine) — connected components in
-    * ONE map-side-combinable aggregation, zero driver-synchronized
-    * rounds, any diameter. The buffer is an (id → root) map over the ids
-    * a partial sees (~16-32 bytes/id; at the 2²⁰ default a partial tops
-    * out around 32 MB and the final merge holds one such map), so the
-    * gate is a memory measurement, not a guess — the same philosophy as
-    * `broadcastNodeLimit`. The node count is probed with one
-    * approx_count_distinct scan of the edge list (a resource decision
-    * needs no exactness). Beyond the gate, the pointer-jump loop above
-    * never materializes more than (node, comp) rows anywhere — the
-    * web-scale path.
+  /** Connected components of the UNDIRECTED view of an edge list: each
+    * node's component is the smallest node id it can reach. Returns
+    * (node, comp). Self-loops are dropped with the rest of
+    * [[edgeList]]'s prelude, so a node whose only edge is a self-loop is
+    * absent. The engine is [[minLabelComponents]], shared with
+    * [[graft.pipeline.Dedup.clusters]]; `maxRounds` bounds its loop, which
+    * fails with "no fixpoint" past it.
     */
   def connectedComponents(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       maxRounds: Int = 64,
-      broadcastNodeLimit: Long = 65536,
-      unionFindNodeLimit: Long = 1L << 20): DataFrame = {
-    val directed = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val nApprox = directed
-      .select(explode(array(col("src"), col("dst"))).as("node"))
-      .agg(approx_count_distinct(col("node")).as("n")).head().getLong(0)
-    if (nApprox <= unionFindNodeLimit) {
-      return directed
-        .agg(graft.functions.PairComponents.pairComponents(
-          col("src"), col("dst")).as("__cs"))
+      broadcastNodeLimit: Long = SizeGates.BroadcastNodes,
+      unionFindNodeLimit: Long = SizeGates.UnionFindNodes): DataFrame =
+    minLabelComponents(edgeList(edges, srcCol, dstCol), maxRounds, "maxRounds",
+      broadcastNodeLimit, unionFindNodeLimit)
+
+  /** Min-label connected components of an undirected (src, dst) long pair
+    * set without null endpoints: (node, comp) for every id in a pair, comp
+    * the smallest id it reaches. Each caller filters its own input (the
+    * self-loop and null rules are theirs); a self-pair registers its id.
+    *
+    * Regime: the pairs are checkpointed FIRST (a near-dup pair lineage —
+    * shingle joins, banded LSH — is the expensive part, and the probe must
+    * not re-run it), and a distinct-id estimate observed in the
+    * checkpoint's own job (the union of one HLL sketch per endpoint column;
+    * a resource decision needs no exactness) picks it. Up to
+    * `unionFindNodeLimit` ids the whole problem is one
+    * [[graft.functions.PairComponents]] union-find aggregate — ONE
+    * map-side-combinable aggregation, zero driver-synchronized rounds, any
+    * diameter. Its buffer is an (id → root) map over the ids a partial sees
+    * (~16-32 bytes/id; at the 2²⁰ default a partial tops out around 32 MB
+    * and the final merge holds one such map), so the gate is a memory
+    * measurement, not a guess.
+    *
+    * Past it, min-label propagation to fixpoint, the Pregel formulation.
+    * The symmetrized edge table checkpoints once, pre-partitioned on
+    * `src`; round 0 seeds every node with `min(node, min(neighbor))` (a
+    * plain aggregate — a whole propagation hop before any join is paid).
+    * Each later round is then ONE fused plan — the neighbor-min aggregate,
+    * the monotone merge with the current label, and TWO POINTER JUMPS
+    * (`comp := comp(comp)`, the Shiloach–Vishkin shortcut) chained through
+    * the PREVIOUS round's label vector — materialized with a single
+    * checkpoint job; the convergence probe is a COUNT over the
+    * already-checkpointed blocks, and the superseded round's checkpoint is
+    * released, so storage holds the edges and one label table whatever
+    * the round count. Jumping through the one-round-stale vector keeps the
+    * round a single job and is still EXACT: labels are monotone-decreasing
+    * node ids of the same component (`prev(c) ≤ c`, and every comp value
+    * has a row), so a stale jump is just a weaker contraction — at
+    * fixpoint the jump is the identity, and a min-label fixpoint over a
+    * symmetrized edge set labels every component by its minimum node id.
+    * Rounds needed = O(log diameter) (5 on a 64-node path); a pathological
+    * graph past `maxRounds` fails loudly, naming `boundName`, rather than
+    * silently returning a half-propagated labeling. The loop never
+    * materializes more than (node, comp) rows anywhere — the web-scale
+    * path.
+    */
+  private[graft] def minLabelComponents(pairs: DataFrame, maxRounds: Int,
+      boundName: String, broadcastNodeLimit: Long,
+      unionFindNodeLimit: Long): DataFrame = {
+    val probe = Observation()
+    val half = Dedup.materializeOnce(pairs.observe(probe, hll_sketch_estimate(hll_union(
+      hll_sketch_agg(col("src")), hll_sketch_agg(col("dst")))).as("n")))
+    if (probe.get("n").asInstanceOf[Long] <= unionFindNodeLimit) {
+      return half
+        .agg(PairComponents.pairComponents(col("src"), col("dst")).as("__cs"))
         .select(explode(col("__cs")).as("__c"))
         .select(col("__c.id").as("node"), col("__c.comp").as("comp"))
     }
-    val P = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val P = pairs.sparkSession.sessionState.conf.numShufflePartitions
     val und = Dedup.materializeOnceKeyed(
-      directed.union(directed.select(col("dst").as("src"), col("src").as("dst")))
+      half.union(half.select(col("dst").as("src"), col("src").as("dst")))
         .distinct(), Seq("src"), P)
+    Dedup.releaseCheckpoint(half)
     // round-0 seed: comp = min(node, min(neighbor)). The symmetrized table
     // gives every node an incoming edge, so one aggregate covers the whole
     // node set — this IS the first propagation round, minus the label join
@@ -577,22 +537,21 @@ object Graph {
         .agg(min(col("src")).as("__m"))
         .select(col("node"), least(col("node"), col("__m")).as("comp")),
       Seq("node"), P)
-    val n = labels.count()
-    val hint = n <= broadcastNodeLimit
+    val hint = labels.count() <= broadcastNodeLimit
+    def bc(df: DataFrame): DataFrame = if (hint) broadcast(df) else df
     var round = 0
     var changed = 1L
     while (changed > 0) {
       round += 1
       require(round <= maxRounds,
-        s"connectedComponents: no fixpoint after $maxRounds rounds " +
-          "(graph diameter exceeds the bound; raise maxRounds)")
-      val ls = if (hint) broadcast(labels) else labels
+        s"no fixpoint after $maxRounds rounds of label propagation " +
+          s"(graph diameter exceeds the bound; raise $boundName)")
+      val ls = bc(labels)
       val cand = und.join(ls, und("src") === ls("node"))
         .groupBy(und("dst").as("node"))
         .agg(min(col("comp")).as("__c"))
       val stepped = labels.as("l")
-        .join(if (hint) broadcast(cand.as("c")) else cand.as("c"),
-          col("l.node") === col("c.node"), "left")
+        .join(bc(cand.as("c")), col("l.node") === col("c.node"), "left")
         .select(col("l.node").as("node"),
           least(col("l.comp"), coalesce(col("__c"), col("l.comp"))).as("__s"),
           col("l.comp").as("__old"))
@@ -603,14 +562,15 @@ object Graph {
       val j1 = labels.select(col("node").as("__j1n"), col("comp").as("__j1c"))
       val j2 = labels.select(col("node").as("__j2n"), col("comp").as("__j2c"))
       val chained = stepped
-        .join(if (hint) broadcast(j1) else j1, col("__s") === col("__j1n"))
-        .join(if (hint) broadcast(j2) else j2, col("__j1c") === col("__j2n"))
+        .join(bc(j1), col("__s") === col("__j1n"))
+        .join(bc(j2), col("__j1c") === col("__j2n"))
         .select(col("node"), col("__j2c").as("comp"),
           (col("__j2c") < col("__old")).as("__chg"))
       val next =
         if (hint) Dedup.materializeOnceLoop(chained)
         else Dedup.materializeOnceKeyed(chained, Seq("node"), P)
       changed = next.filter(col("__chg")).count()
+      Dedup.releaseCheckpoint(labels)
       labels = next.select(col("node"), col("comp"))
     }
     labels
@@ -646,11 +606,9 @@ object Graph {
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      maxCenterDegree: Long = 1L << 16,
-      broadcastEdgeLimit: Long = 4L << 20): DataFrame = {
-    val directed = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
+      maxCenterDegree: Long = SizeGates.MaxCenterDegree,
+      broadcastEdgeLimit: Long = SizeGates.BroadcastRows): DataFrame = {
+    val directed = edgeList(edges, srcCol, dstCol)
     val und = Dedup.materializeOnce(
       directed.select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
@@ -707,14 +665,13 @@ object Graph {
     * semantics). Round count = peel depth of the graph, data-dependent:
     * `maxRounds` fails loudly rather than looping silently.
     *
-    * SIZE-GATED one-pass path (the [[pageRank]]/[[connectedComponents]]
-    * shape): below `edgeBufferLimit` raw edges — probed with one count,
-    * a conservative upper bound on the simple-graph size — the whole
-    * data-dependent peel cascade runs inside ONE
-    * [[graft.functions.KCoreAgg]] aggregation (a linear-time queue peel;
-    * the k-core is unique regardless of peel order, so the output is
-    * identical to the loop's synchronous rounds, spec-pinned). A map-side
-    * partial holds only its task's edge rows (~16 B/edge).
+    * SIZE-GATED one-pass path ([[onePass]], the [[pageRank]] shape): below
+    * `edgeBufferLimit` raw edges the whole data-dependent peel cascade
+    * runs inside ONE [[graft.functions.KCoreAgg]] aggregation (a
+    * linear-time queue peel; the k-core is unique regardless of peel
+    * order, so the output is identical to the loop's synchronous rounds,
+    * spec-pinned). A map-side partial holds only its task's edge rows
+    * (~16 B/edge).
     */
   def kCore(
       edges: DataFrame,
@@ -722,13 +679,11 @@ object Graph {
       dstCol: String,
       k: Int,
       maxRounds: Int = 64,
-      broadcastDeadLimit: Long = 4L << 20,
-      edgeBufferLimit: Long = 8L << 20): DataFrame = {
+      broadcastDeadLimit: Long = SizeGates.BroadcastRows,
+      edgeBufferLimit: Long = SizeGates.EdgeBuffer): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     val P = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val directedRaw = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
+    val directedRaw = edgeList(edges, srcCol, dstCol)
     // Checkpoint BEFORE the gate probe (the Dedup.clusters convention): the
     // count() must not re-execute the caller's edge derivation — whichever
     // path runs afterwards consumes the materialized blocks, so the lineage
@@ -738,13 +693,9 @@ object Graph {
     // consumer is the adjacency build, which materializes on its own.
     val directed =
       if (edgeBufferLimit > 0) Dedup.materializeOnce(directedRaw) else directedRaw
-    if (edgeBufferLimit > 0 &&
-        { val c = directed.count(); c > 0 && c <= edgeBufferLimit }) {
-      return directed
-        .agg(graft.functions.KCoreAgg.kCoreAgg(col("src"), col("dst"), k).as("__kc"))
-        .select(explode(col("__kc")).as("__c"))
-        .select(col("__c.node").as("node"), col("__c.degree").as("degree"))
-    }
+    val onePassed = onePass(directed, edgeBufferLimit, fits = true)(
+      KCoreAgg.kCoreAgg(col("src"), col("dst"), k))
+    if (onePassed.nonEmpty) return onePassed.get
     val und = directed.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .distinct()
@@ -799,13 +750,16 @@ object Graph {
     * trajectory runs inside ONE [[graft.functions.WalkAgg]] aggregation
     * (hash work is frontier-proportional: |seeds|·steps·out-degree
     * digests, never |edges|·steps) instead of `steps` driver-synchronized
-    * join rounds. Beyond the gate: duplicate edges cannot change an
-    * argmin, so the edge table skips the distinct — and its corpus-wide
-    * exchange — and materializes once with a narrow self-loop filter;
-    * each step is then one hash join of the edge table against the
-    * broadcast frontier (the frontier never grows — it only shrinks as
-    * walks die; past `broadcastFrontierLimit` the join degrades to a
-    * frontier shuffle, never an edge shuffle) plus a map-side-combined
+    * join rounds. The gate has TWO resources: the edge buffer inside the
+    * aggregate, and the seed array, which rides to the driver AND into
+    * the task binary — so it gets its own, much smaller cap (`seedLimit`)
+    * instead of borrowing the edge budget. Beyond the gate: duplicate
+    * edges cannot change an argmin, so the edge table skips the distinct —
+    * and its corpus-wide exchange — and materializes once with a narrow
+    * self-loop filter; each step is then one hash join of the edge table
+    * against the broadcast frontier (the frontier never grows — it only
+    * shrinks as walks die; past `broadcastFrontierLimit` the join degrades
+    * to a frontier shuffle, never an edge shuffle) plus a map-side-combined
     * min(struct) argmin, so a hub's million candidate out-edges collapse
     * inside the scan. Every step's frontier materializes: later steps and
     * downstream consumers (skip-gram extraction self-joins the trajectory
@@ -820,29 +774,14 @@ object Graph {
       seeds: DataFrame,
       seedCol: String,
       steps: Int,
-      broadcastFrontierLimit: Long = 4L << 20,
-      edgeBufferLimit: Long = 8L << 20,
-      seedLimit: Long = 1L << 20): DataFrame = {
+      broadcastFrontierLimit: Long = SizeGates.BroadcastRows,
+      edgeBufferLimit: Long = SizeGates.EdgeBuffer,
+      seedLimit: Long = SizeGates.TaskArrayRows): DataFrame = {
     require(steps >= 1, s"randomWalks: steps must be >= 1, got $steps")
-    val ed0 = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // the one-pass gate has TWO resources: the edge buffer inside the
-    // aggregate (edgeBufferLimit) and the seed array, which rides to the
-    // driver AND into the task binary — so it gets its own, much smaller
-    // cap (1M seeds ≈ 8 MB) instead of borrowing the 8M edge budget
-    if (edgeBufferLimit > 0 && seedLimit > 0 &&
-        { val c = ed0.count(); c > 0 && c <= edgeBufferLimit } &&
-        seeds.count() <= seedLimit) {
-      val seedArr = seeds.select(col(seedCol).cast("long")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      return ed0
-        .agg(graft.functions.WalkAgg.walkAgg(
-          col("src"), col("dst"), seedArr, steps).as("__w"))
-        .select(explode(col("__w")).as("__p"))
-        .select(col("__p.walk_id").as("walk_id"), col("__p.step").as("step"),
-          col("__p.node").as("node"))
-    }
+    val ed0 = edgeList(edges, srcCol, dstCol)
+    val onePassed = onePass(ed0, edgeBufferLimit, seedLimit > 0 && seeds.count() <= seedLimit)(
+      WalkAgg.walkAgg(col("src"), col("dst"), seedArray(seeds, seedCol), steps))
+    if (onePassed.nonEmpty) return onePassed.get
     val ed = Dedup.materializeOnce(ed0)
     var cur = Dedup.materializeOnceLoop(
       seeds.select(col(seedCol).cast("long").as("walk_id"),

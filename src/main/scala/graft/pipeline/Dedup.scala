@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import graft.core.SizeGates
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators: exact, n-gram Jaccard, MinHash+LSH and SimHash.
@@ -103,15 +104,19 @@ object Dedup {
     try body
     finally {
       stack.pop()
-      scope.foreach { df =>
-        df.queryExecution.analyzed.collectLeaves().foreach {
-          case r: org.apache.spark.sql.execution.LogicalRDD =>
-            r.rdd.unpersist(blocking = false)
-          case _ =>
-        }
-      }
+      scope.foreach(releaseCheckpoint)
     }
   }
+
+  /** Unpersist the checkpointed blocks under `df` (its `LogicalRDD`
+    * leaves). Nothing may read `df` afterwards.
+    */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectLeaves().foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Exact dedup: keep the lowest-id row per distinct text digest.
     * Returns (idCol, digest, dupCount).
@@ -770,13 +775,6 @@ object Dedup {
       .select(col("__cid").as(idCol), col("bench_id"), col("n_shared"))
   }
 
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
-
   /** Connected-component cluster ids over a near-dup pair set: every id
     * that appears in a pair with two non-null endpoints gets `cluster_id`
     * = the SMALLEST id reachable through the pair graph — the step that
@@ -784,55 +782,29 @@ object Dedup {
     * [[minhashLshPairs]], [[simhashNearDups]],
     * [[graft.pipeline.Similarity.lshPairs]]) into dedup decisions. Ids
     * with no pair are absent here (their cluster is trivially themselves);
-    * [[dedupByClusters]] handles them. Pairs with a null (or uncastable)
-    * endpoint are dropped — no pair, no row, identical on both regimes.
+    * [[dedupByClusters]] handles them. A self-pair keeps its id as its own
+    * cluster. Pairs with a null (or uncastable) endpoint are dropped — no
+    * pair, no row, identical on both regimes.
     *
-    * Algorithm: hash-min label propagation with POINTER JUMPING from the
-    * third round on — each round every node adopts the minimum label in
-    * its closed neighborhood; once a graph has survived two rounds
-    * without converging (i.e. it is genuinely deep, not the common
-    * shallow near-dup clique), each subsequent round also shortcuts every
-    * node to its label's label (`l := l(l)`, the classic Shiloach–Vishkin
-    * halving step). Labels only ever decrease toward each component's
-    * minimum id, so the jump preserves the fixpoint while doubling how
-    * far information travels per round: deep graphs converge in
-    * O(log diameter) driver-synchronized rounds, not O(diameter) — and
-    * shallow graphs (dup groups are cliques, done in 2 rounds) never pay
-    * the jump's extra per-round join (measured ~1.5x a round on the
-    * 2-clique stress fixture). `maxIters` is a safety valve and
-    * non-convergence throws rather than returning partial labels.
-    *
-    * Scale shape: per round, one (dst-keyed) equi-join of the edge table
-    * against the label table + a min-aggregate, plus (jump rounds only)
-    * one id-keyed self-join of the label table — all hash-partitioned,
-    * map-side combined, O(E + V) per round. The edge and label tables
-    * hold only ids (never text or vectors), are materialized once per
-    * round ([[materializeOnce]]), and superseded rounds release their
-    * blocks immediately, so peak storage is 2 label tables + the edges.
-    *
-    * SIZE-GATED one-pass path (the [[graft.ops.Graph.connectedComponents]]
-    * shape brought home to the dedup family): below `unionFindNodeLimit`
-    * nodes the whole problem fits the [[graft.functions.PairComponents]]
-    * union-find aggregate — components in ONE map-side-combinable
-    * aggregation, zero driver-synchronized rounds, any diameter. The pair
-    * set is checkpointed FIRST (near-dup pair lineages — shingle joins,
-    * banded LSH — are the expensive part; the probe must not re-run
-    * them), and a distinct-id estimate observed in the checkpoint's own
-    * job (the union of one HLL sketch per endpoint column) decides the
-    * regime (a resource decision needs no exactness; same gate value
-    * and memory math as Graph: ~16-32 B/id in the merged buffer, ≈32 MB
-    * at the 2²⁰ default). Union-by-min roots every component at its
-    * minimum member, so the output CONTRACT — every paired id labeled
-    * with the smallest reachable id — is identical on both paths
-    * (spec-pinned against the loop on randomized graphs).
+    * The engine is [[graft.ops.Graph.minLabelComponents]], shared with
+    * [[graft.ops.Graph.connectedComponents]]: the pair set is checkpointed
+    * first with its distinct-id estimate observed in the same job; up to
+    * `unionFindNodeLimit` ids one [[graft.functions.PairComponents]]
+    * union-find aggregate labels it, and past that a min-label loop whose
+    * every round is one checkpoint job with two pointer jumps converges in
+    * O(log diameter) rounds, releasing each superseded round's blocks.
+    * Union-by-min roots every component at its minimum member, so the
+    * output CONTRACT is identical on both regimes (spec-pinned against a
+    * driver union-find on randomized graphs). `maxIters` bounds the loop;
+    * past it the call fails rather than returning partial labels.
     */
   def clusters(
       pairs: DataFrame,
       idACol: String = "id_a",
       idBCol: String = "id_b",
       maxIters: Int = 25,
-      broadcastNodeLimit: Long = 65536,
-      unionFindNodeLimit: Long = 1L << 20): DataFrame = {
+      broadcastNodeLimit: Long = SizeGates.BroadcastNodes,
+      unionFindNodeLimit: Long = SizeGates.UnionFindNodes): DataFrame =
     // Null-endpoint pairs are dropped BEFORE the regime split (after the
     // cast, so an uncastable id counts as null too): the two paths used to
     // disagree on them — PairComponents skips a null edge entirely while
@@ -840,80 +812,11 @@ object Dedup {
     // the output regime-dependent, against the identical-on-both-paths
     // contract. No near-dup pair producer emits null endpoints; a caller
     // feeding them gets the one defensible reading (no pair, no row).
-    // the regime probe is observed in the checkpoint's own job: one HLL
-    // sketch per endpoint column, unioned (no second execution)
-    val probe = Observation()
-    val half = materializeOnce(pairs.select(col(idACol).cast("long").as("src"),
-      col(idBCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .observe(probe, hll_sketch_estimate(hll_union(
-        hll_sketch_agg(col("src")), hll_sketch_agg(col("dst")))).as("n")))
-    val nApprox = probe.get("n").asInstanceOf[Long]
-    if (nApprox <= unionFindNodeLimit) {
-      return half
-        .agg(graft.functions.PairComponents.pairComponents(
-          col("src"), col("dst")).as("__cs"))
-        .select(explode(col("__cs")).as("__c"))
-        .select(col("__c.id").as("id"), col("__c.comp").as("cluster_id"))
-    }
-    val edges = materializeOnce(
-      half.union(half.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
-    var labels = materializeOnceLoop(
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("cluster_id", col("id")))
-    // the loop checkpoints carry NO origin stats (the squaring hazard —
-    // see materializeOnceLoop), so the planner would never auto-broadcast
-    // the label table again: hint it explicitly while the node count is
-    // under the gate (one count on the already-materialized frame)
-    val hint = labels.count() <= broadcastNodeLimit
-    def bc(df: DataFrame): DataFrame = if (hint) broadcast(df) else df
-    var changed = 1L
-    var iters   = 0
-    while (changed > 0 && iters < maxIters) {
-      val neighborMin = edges
-        .join(bc(labels.select(col("id").as("dst"), col("cluster_id").as("__nl"))),
-          Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min(col("__nl")).as("__nmin"))
-      // propagation step: min over the closed 1-hop neighborhood
-      val propPlan = labels.join(bc(neighborMin), Seq("id"), "left")
-        .select(col("id"),
-          least(col("cluster_id"), coalesce(col("__nmin"), col("cluster_id")))
-            .as("cluster_id"),
-          col("cluster_id").as("__old"))
-      val next =
-        if (iters < 2) {
-          // shallow-graph fast path: one materialization, no jump join
-          materializeOnceLoop(propPlan.select(col("id"), col("cluster_id"),
-            (col("__old") > col("cluster_id")).cast("long").as("__chg")))
-        } else {
-          // deep graph: jump step — adopt the label OF the label. Every
-          // label value is a node id (labels start as ids and only take
-          // mins of other labels), so the lookup always resolves;
-          // `coalesce` is belt-and-braces.
-          val prop = materializeOnceLoop(propPlan)
-          val jumped = materializeOnceLoop(
-            prop
-              .join(bc(prop.select(col("id").as("__jid"), col("cluster_id").as("__jl"))),
-                col("cluster_id") === col("__jid"), "left")
-              .select(col("id"),
-                coalesce(col("__jl"), col("cluster_id")).as("cluster_id"),
-                (col("__old") > coalesce(col("__jl"), col("cluster_id")))
-                  .cast("long").as("__chg")))
-          releaseCheckpoint(prop)
-          jumped
-        }
-      changed = next.agg(coalesce(sum(col("__chg")), lit(0L))).head().getLong(0)
-      releaseCheckpoint(labels)
-      labels = next.drop("__chg")
-      iters += 1
-    }
-    require(changed == 0L,
-      s"label propagation did not converge in $maxIters rounds " +
-        "(pathologically deep pair graph — raise maxIters)")
-    labels
-  }
+    graft.ops.Graph.minLabelComponents(
+        pairs.select(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst"))
+          .filter(col("src").isNotNull && col("dst").isNotNull),
+        maxIters, "maxIters", broadcastNodeLimit, unionFindNodeLimit)
+      .select(col("node").as("id"), col("comp").as("cluster_id"))
 
   /** Near-dup dedup materialization: keep the smallest-id representative
     * of every [[clusters]] component plus every unpaired document. One

@@ -169,7 +169,7 @@ object Privacy {
       numCol: String,
       width: Long,
       k: Int,
-      broadcastGroupLimit: Long = 1000000L,
+      broadcastGroupLimit: Long = graft.core.SizeGates.BroadcastGroups,
       outputOrder: Option[String] = None): DataFrame = {
     require(width > 0, s"generalize: width must be positive, got $width")
     require(k >= 2, s"generalize: k must be >= 2, got $k")

@@ -49,7 +49,7 @@ object StreamingGeneralize {
       numCol: String,
       widths: Seq[Long],
       k: Int,
-      broadcastGroupLimit: Long = 1000000L)(
+      broadcastGroupLimit: Long = graft.core.SizeGates.BroadcastGroups)(
       batch: DataFrame, batchId: Long): Unit = {
     require(widths.nonEmpty && widths.forall(_ > 0),
       s"StreamingGeneralize: widths must be positive, got $widths")

@@ -673,10 +673,22 @@ class PlanSpec extends SparkTestBase {
             .distinct(), Seq("node"), P)
         val n = nodes.count()
         val ranks = nodes.select($"node", lit(1.0 / n).as("r"))
-        val step = graft.ops.Graph.prStep(ed, nodes, ranks, 0.85, n, hint = false)
+        val step = graft.ops.Graph.prStep(ed, nodes, ranks, 0.85, lit(0.15 / n), hint = false)
         val plan = step.queryExecution.executedPlan.toString
         val exch = "(?<!Reused)Exchange ".r.findAllIn(plan).length
         assert(exch <= 1, s"$exch exchanges in the iteration step:\n$plan")
+        // personalizedPageRank's step: the same join over the node table
+        // carrying the seed weight __w, laid out by node, with the seeded
+        // teleport (1 - d)·w(v)
+        val tele = graft.pipeline.Dedup.materializeOnceKeyed(
+          nodes.select($"node",
+            when(pmod($"node", lit(97L)) === 0, lit(1.0 / 21)).otherwise(lit(0.0)).as("__w")),
+          Seq("node"), P)
+        val pprStep = graft.ops.Graph.prStep(ed, tele, tele.select($"node", $"__w".as("r")),
+          0.85, lit(0.15) * col("__w"), hint = false)
+        val pprPlan = pprStep.queryExecution.executedPlan.toString
+        val pprExch = "(?<!Reused)Exchange ".r.findAllIn(pprPlan).length
+        assert(pprExch <= 1, s"$pprExch exchanges in the personalized step:\n$pprPlan")
       } finally {
         spark.conf.set(coalesceKey, prevCoalesce)
         spark.conf.set(bcastKey, prevBcast)

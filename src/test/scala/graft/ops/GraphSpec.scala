@@ -313,6 +313,75 @@ class GraphSpec extends SparkTestBase {
       compsOf(edges, bcastLimit = 0L, ufLimit = 0L))
   }
 
+  test("connectedComponents and Dedup.clusters match a driver union-find in both regimes") {
+    // seeded random graphs with self-loops, duplicate edges and null
+    // endpoints, through both faces of the one components engine. Each
+    // face keeps its own contract: a node whose only edge is a self-loop is
+    // absent from connectedComponents and its own cluster in clusters; a
+    // pair with a null endpoint yields no row in either
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val nNodes = 20 + rnd.nextInt(40)
+      def id(): Option[Long] =
+        if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(nNodes).toLong)
+      val drawn = Seq.fill(nNodes)((id(), id()))
+      val loopOnly = (1000L until 1003L).map(v => (Option(v), Option(v)))
+      val loops = drawn.collect { case (Some(a), _) => (Option(a), Option(a)) }.take(4)
+      val pairs = drawn ++ drawn.take(6) ++ loops ++ loopOnly
+      val complete = pairs.collect { case (Some(a), Some(b)) => (a, b) }
+      val wantComps = referenceComps(complete.filter(e => e._1 != e._2))
+      val wantClusters = referenceComps(complete)
+      assert(loopOnly.forall(p => !wantComps.contains(p._1.get) &&
+        wantClusters(p._1.get) == p._1.get))
+      val df = pairs.toDF("src", "dst")
+      for ((uf, bc) <- Seq((1L << 20, 65536L), (0L, 65536L), (0L, 0L))) {
+        val clue = s"seed $seed, unionFindNodeLimit $uf, broadcastNodeLimit $bc"
+        val comps = Dedup.withMaterialized {
+          Graph.connectedComponents(df, "src", "dst", broadcastNodeLimit = bc,
+              unionFindNodeLimit = uf)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        }
+        assert(comps === wantComps, clue)
+        val clusters = Dedup.withMaterialized {
+          Dedup.clusters(df, "src", "dst", broadcastNodeLimit = bc, unionFindNodeLimit = uf)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        }
+        assert(clusters === wantClusters, clue)
+      }
+    }
+  }
+
+  test("connectedComponents: the union-find regime builds its frame in one job") {
+    // the checkpoint of the edge list, which observes the regime probe
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("src", "dst")
+    Dedup.withMaterialized {
+      val (cc, jobs) = jobsRun(Graph.connectedComponents(edges, "src", "dst"))
+      assert(jobs == 1, "the checkpoint only")
+      assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
+    }
+  }
+
+  test("connectedComponents: the loop regime's storage does not grow with its rounds") {
+    // a 2-node path converges in one round and a 64-node path in five; each
+    // superseded round's checkpoint is released, so both leave at most the
+    // symmetrized edge table and the final labels stored (the count is taken
+    // over RDDs created here, so cleanup of older ones cannot skew it)
+    val sc = spark.sparkContext
+    def stored(n: Long, maxRounds: Int = 64): Int = Dedup.withMaterialized {
+      val before = sc.getPersistentRDDs.keySet
+      val path = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
+      val cc = Graph.connectedComponents(path, "src", "dst", maxRounds,
+        unionFindNodeLimit = 0L)
+      assert(cc.collect().map(_.getLong(1)).toSet === Set(0L))
+      (sc.getPersistentRDDs.keySet -- before).size
+    }
+    assert(stored(2) <= 2)
+    assert(stored(64) <= 2)
+    val e = intercept[IllegalArgumentException](stored(64, maxRounds = 4))
+    assert(e.getMessage.contains("fixpoint") && e.getMessage.contains("maxRounds"))
+  }
+
   test("componentsIncrement: folding batches equals batch components on the union") {
     val rnd = new scala.util.Random(91L)
     val edges = Seq.fill(150)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong))
