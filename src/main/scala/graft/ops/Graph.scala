@@ -76,7 +76,9 @@ object Graph {
     * 8.4 → 13.5 s, because AQE executes the chained shuffle stages
     * sequentially either way and re-plans the growing chain.
     * `localCheckpoint` preserves the partitioning, so the layout survives
-    * across iterations.
+    * across iterations. A round's checkpoint is released once the next is
+    * stored, so the loop holds the edge table, the node table and one rank
+    * vector however many rounds it runs.
     */
   def pageRank(
       edges: DataFrame,
@@ -231,11 +233,15 @@ object Graph {
     val hint = n <= broadcastNodeLimit
     // every round is checkpointed (see [[pageRank]]); on the broadcast path
     // a broadcast of an unmaterialized chain would also recompute the whole
-    // chain per round
-    (1 to iterations).foldLeft(r0) { (r, _) =>
+    // chain per round. Once a round is stored the one before it is released,
+    // except r0, whose leaves are the node table and the caller's prior.
+    (1 to iterations).foldLeft(r0) { (r, i) =>
       val next = prStep(ed, base, r, damping, teleport, hint)
-      if (hint) Dedup.materializeOnceLoop(next)
-      else Dedup.materializeOnceKeyed(next, Seq("node"), P)
+      val stored =
+        if (hint) Dedup.materializeOnceLoop(next)
+        else Dedup.materializeOnceKeyed(next, Seq("node"), P)
+      if (i > 1) Dedup.releaseCheckpoint(r)
+      stored
     }
   }
 
@@ -405,7 +411,7 @@ object Graph {
     * data-independent — the horizon is the semantics, so a pathological
     * diameter cannot stall the job. The frontier (not the full label
     * table) drives each join, so a converged region stops costing
-    * anything.
+    * anything. The frontiers are released once the labels are stored.
     */
   def hopDistance(
       edges: DataFrame,
@@ -433,6 +439,7 @@ object Graph {
     var frontierSize = frontier.count()
     var labeled = frontierSize
     var labels = frontier.select(col("node"), lit(0).as("hop"))
+    val frontiers = scala.collection.mutable.Buffer(frontier)
     var h = 0
     while (h < maxHops && frontierSize > 0) {
       h += 1
@@ -443,13 +450,17 @@ object Graph {
         ed.join(frontier.select(col("node").as("src")), Seq("src"), "left_semi")
           .select(col("dst").as("node")).distinct()
           .join(seen.select(col("node")), Seq("node"), "left_anti"))
+      frontiers += frontier
       frontierSize = frontier.count()
       if (frontierSize > 0) {
         labels = labels.union(frontier.select(col("node"), lit(h).as("hop")))
         labeled += frontierSize
       }
     }
-    Dedup.materializeOnce(labels)
+    // the stored labels no longer read the frontiers they were unioned from
+    val stored = Dedup.materializeOnce(labels)
+    frontiers.foreach(Dedup.releaseCheckpoint)
+    stored
   }
 
   /** Connected components of the UNDIRECTED view of an edge list: each

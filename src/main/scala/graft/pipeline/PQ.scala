@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ) for embedding columns — the compression half
@@ -26,9 +25,9 @@ import org.apache.spark.sql.functions._
   * normalized vectors IS cosine; the operator does not normalize
   * implicitly, so the caller's notion of "distance" stays explicit.
   *
-  * Scale shape: training is the same bounded driver-side sample as
-  * [[Similarity.ivfCentroids]] (≤ `sampleSize` vectors, seeded,
-  * reproducible). Encoding is one narrow codegen'd map over the corpus
+  * Scale shape: training is the driver-side [[KMeans]] trainer that also
+  * trains [[Similarity.ivfCentroids]], on a bounded ordered sample or a
+  * k-means‖ coreset. Encoding is one narrow codegen'd map over the corpus
   * (no shuffle, no UDF). ADC top-k broadcasts the (small) query side and
   * linearly scans the coded corpus — compose with IVF cell pruning
   * ([[Similarity.ivfAssign]]) to scan only probed cells at scale; the two
@@ -36,7 +35,8 @@ import org.apache.spark.sql.functions._
   * `cell_id` and a code array.
   *
   * Determinism contract (what makes the relational oracles possible):
-  * every argmin/ranking compares ROUNDED (6-decimal) distances with the
+  * every argmin/ranking compares ROUNDED
+  * ([[Similarity.ScoreDecimals]]-decimal) distances with the
   * smallest centroid/neighbor id breaking ties, exactly like the IVF
   * family — an unrounded argmin would let another engine's float
   * summation order flip knife-edge assignments.
@@ -46,16 +46,15 @@ object PQ {
   /** codebooks(s)(c) = centroid `c` of subspace `s` (length `dim/nSubq`). */
   type Codebooks = Array[Array[Array[Double]]]
 
-  /** Train per-subspace Euclidean k-means codebooks on a bounded,
-    * deterministic driver-side sample (same sampling scheme as
-    * [[Similarity.ivfCentroids]]: ordered by `xxhash64(id)`, k-means++
-    * seeding, `iters` Lloyd rounds, empty cells reseeded to the
-    * worst-fit sample point, lowest-index tie-breaks everywhere) — or,
-    * with `sampleSize = None`, on a k-means‖ distributed coreset per
-    * subspace ([[Similarity.kmeansParCoreset]]): the full corpus votes
-    * cost-weighted candidates, the driver only ever holds ~ℓ·rounds of
-    * them, and the weighted Lloyd runs on that coreset — the trainer
-    * shape for corpora whose diversity a fixed 4096-row sample under-fits.
+  /** Train per-subspace Euclidean k-means codebooks ([[KMeans]], subspace
+    * `s` seeded `KMeans.Seed + s`). With `sampleSize` set, on a bounded,
+    * deterministic driver-side sample (the first `sampleSize` vectors in
+    * `xxhash64(id)` order, as [[Similarity.ivfCentroids]] samples). With
+    * `None`, on a k-means‖ coreset per subspace ([[KMeans.coreset]]): the
+    * full corpus votes cost-weighted candidates, the driver only ever holds
+    * ~ℓ·rounds of them, and the weighted trainer runs on that coreset — the
+    * trainer shape for corpora whose diversity a fixed 4096-row sample
+    * under-fits.
     */
   def pqCodebooks(
       df: DataFrame,
@@ -65,126 +64,33 @@ object PQ {
       nCentroids: Int = 16,
       sampleSize: Option[Int] = Some(4096),
       iters: Int = 8,
-      seed: Long = 42L,
       oversample: Int = 2048,
       rounds: Int = 5): Codebooks = {
     require(nSubq > 0, s"nSubq must be positive: $nSubq")
     require(nCentroids > 1, s"nCentroids must be > 1: $nCentroids")
-    val prepared = df
-      .select(col(idCol).cast("long").as("__id"),
-        col(vecCol).cast("array<double>").as("__v"))
-      .filter(col("__v").isNotNull &&
-        !exists(col("__v"), e => e.isNull) && size(col("__v")) > 0)
-    if (sampleSize.isEmpty) {
-      // distributed path: one k-means‖ coreset PER SUBSPACE over the sliced
-      // column (Similarity.kmeansParCoreset — driver sees only ~ℓ·rounds
-      // weighted candidates per subspace, never a corpus sample), then the
-      // weighted Euclidean Lloyd on each coreset. The full-width frame is
-      // materialized once; every subspace pass reads the cached slices.
-      val cached = Dedup.materializeOnce(prepared)
-      val headRow = cached.select(size(col("__v"))).head()
-      val dim     = headRow.getInt(0)
+    def subDim(dim: Int): Int = {
       require(dim % nSubq == 0, s"dim $dim not divisible by nSubq $nSubq")
-      val dsub = dim / nSubq
-      return Array.tabulate(nSubq) { s =>
-        val sub = cached.select(col("__id"),
-          slice(col("__v"), s * dsub + 1, dsub).as("__v"))
-        val (cands, wts) =
-          Similarity.kmeansParCoreset(sub, oversample, rounds, seed + s)
-        weightedKmeansL2(cands, wts, math.min(nCentroids, cands.length),
-          iters, seed + s)
-      }
+      dim / nSubq
     }
-    val sample = prepared
-      .orderBy(xxhash64(col("__id")), col("__id"))
-      .limit(math.max(sampleSize.get, nCentroids))
-      .collect()
-      .map(r => r.getSeq[Double](1).toArray)
-    require(sample.nonEmpty, "cannot train PQ codebooks on an empty corpus")
-    val dim = sample.head.length
-    require(dim % nSubq == 0, s"dim $dim not divisible by nSubq $nSubq")
-    val dsub = dim / nSubq
-    Array.tabulate(nSubq) { s =>
-      val pts = sample.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
-      kmeansL2(pts, math.min(nCentroids, pts.length), iters, seed + s)
-    }
-  }
-
-  /** Weighted Euclidean k-means on a coreset — the weighted mirror of
-    * [[kmeansL2]] for the distributed training path: k-means++ seeding
-    * with probability ∝ w·d², weight-scaled mean updates, empty cells
-    * reseeded to the largest weighted misfit, zero-weight candidates
-    * dropped. Seeded + order-stable → reproducible.
-    */
-  private def weightedKmeansL2(
-      cands: Array[Array[Double]],
-      wts: Array[Long],
-      k: Int,
-      iters: Int,
-      seed: Long): Array[Array[Double]] = {
-    val keep = cands.indices.filter(i => wts(i) > 0).toArray
-    val pts  = keep.map(cands(_))
-    val w    = keep.map(wts(_).toDouble)
-    require(pts.nonEmpty, "coreset has no weighted candidates")
-    val kk  = math.min(k, pts.length)
-    val rnd = new scala.util.Random(seed)
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    val centroids = new Array[Array[Double]](kk)
-    centroids(0) = pts(rnd.nextInt(pts.length)).clone()
-    val bestD = pts.map(d2(_, centroids(0)))
-    for (c <- 1 until kk) {
-      val scores = Array.tabulate(pts.length)(i => w(i) * bestD(i))
-      val total  = scores.sum
-      val pick =
-        if (total <= 0) rnd.nextInt(pts.length)
-        else {
-          var r = rnd.nextDouble() * total; var i = 0
-          while (i < pts.length - 1 && r > scores(i)) { r -= scores(i); i += 1 }
-          i
+    KMeans.input(df, idCol, vecCol, sampleSize, nCentroids, "PQ codebooks") match {
+      case Left(sample) =>
+        val dsub = subDim(sample.head.length)
+        Array.tabulate(nSubq) { s =>
+          val pts = sample.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
+          KMeans.train(pts, Array.fill(pts.length)(1L), nCentroids, iters, KMeans.Seed + s,
+            KMeans.L2)
         }
-      centroids(c) = pts(pick).clone()
-      var i = 0
-      while (i < pts.length) {
-        val d = d2(pts(i), centroids(c))
-        if (d < bestD(i)) bestD(i) = d
-        i += 1
-      }
-    }
-    val assign = new Array[Int](pts.length)
-    for (_ <- 0 until iters) {
-      var i = 0
-      while (i < pts.length) {
-        var best = 0; var bd = d2(pts(i), centroids(0)); var c = 1
-        while (c < kk) {
-          val d = d2(pts(i), centroids(c))
-          if (d < bd) { bd = d; best = c }
-          c += 1
+      case Right(prepared) =>
+        // the full-width frame is materialized once; every subspace's
+        // coreset reads its slice of the cached rows
+        val cached = Dedup.materializeOnce(prepared)
+        val dsub = subDim(cached.select(size(col("__v"))).head().getInt(0))
+        Array.tabulate(nSubq) { s =>
+          val sub = cached.select(col("__id"), slice(col("__v"), s * dsub + 1, dsub).as("__v"))
+          val (cands, wts) = KMeans.coreset(sub, oversample, rounds, KMeans.Seed + s)
+          KMeans.train(cands, wts, nCentroids, iters, KMeans.Seed + s, KMeans.L2)
         }
-        assign(i) = best
-        i += 1
-      }
-      val sums   = Array.fill(kk)(new Array[Double](pts.head.length))
-      val counts = new Array[Double](kk)
-      i = 0
-      while (i < pts.length) {
-        val c = assign(i); counts(c) += w(i)
-        var j = 0
-        while (j < pts(i).length) { sums(c)(j) += w(i) * pts(i)(j); j += 1 }
-        i += 1
-      }
-      for (c <- 0 until kk) {
-        if (counts(c) > 0) centroids(c) = sums(c).map(_ / counts(c))
-        else {
-          val worst = pts.indices.maxBy(i => w(i) * d2(pts(i), centroids(assign(i))))
-          centroids(c) = pts(worst).clone()
-        }
-      }
     }
-    centroids
   }
 
   /** Persist trained codebooks as a small parquet artifact — (subq,
@@ -230,72 +136,6 @@ object PQ {
     require(books.forall(_.forall(_.forall(!_.isNaN))),
       s"PQ codebook artifact at $path is not a dense (subq, centroid, dim) grid")
     books
-  }
-
-  /** Plain Euclidean k-means (the subspace trainer): k-means++ seeding,
-    * Lloyd with mean updates, empty cells reseeded to the point farthest
-    * from its assigned centroid. Seeded + deterministic sample order →
-    * reproducible codebooks.
-    */
-  private def kmeansL2(
-      pts: Array[Array[Double]], k: Int, iters: Int, seed: Long): Array[Array[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    val centroids = new Array[Array[Double]](k)
-    centroids(0) = pts(rnd.nextInt(pts.length)).clone()
-    val bestD = pts.map(d2(_, centroids(0)))
-    for (c <- 1 until k) {
-      val total = bestD.sum
-      val pick =
-        if (total <= 0) rnd.nextInt(pts.length)
-        else {
-          var r = rnd.nextDouble() * total; var i = 0
-          while (i < pts.length - 1 && r > bestD(i)) { r -= bestD(i); i += 1 }
-          i
-        }
-      centroids(c) = pts(pick).clone()
-      var i = 0
-      while (i < pts.length) {
-        val d = d2(pts(i), centroids(c))
-        if (d < bestD(i)) bestD(i) = d
-        i += 1
-      }
-    }
-    val assign = new Array[Int](pts.length)
-    for (_ <- 0 until iters) {
-      var i = 0
-      while (i < pts.length) {
-        var best = 0; var bd = d2(pts(i), centroids(0)); var c = 1
-        while (c < k) {
-          val d = d2(pts(i), centroids(c))
-          if (d < bd) { bd = d; best = c }
-          c += 1
-        }
-        assign(i) = best
-        i += 1
-      }
-      val sums   = Array.fill(k)(new Array[Double](pts.head.length))
-      val counts = new Array[Int](k)
-      i = 0
-      while (i < pts.length) {
-        val c = assign(i); counts(c) += 1
-        var j = 0
-        while (j < pts(i).length) { sums(c)(j) += pts(i)(j); j += 1 }
-        i += 1
-      }
-      for (c <- 0 until k) {
-        if (counts(c) > 0) centroids(c) = sums(c).map(_ / counts(c))
-        else {
-          val worst = pts.indices.maxBy(i => d2(pts(i), centroids(assign(i))))
-          centroids(c) = pts(worst).clone()
-        }
-      }
-    }
-    centroids
   }
 
   /** Code array (one `0..nCentroids-1` code per subspace) for `vec`:
@@ -390,9 +230,7 @@ object PQ {
       k: Int,
       centroids: Array[(Long, Array[Double])],
       nProbe: Int,
-      codebooks: Codebooks,
-      roundTo: Int = 6): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
+      codebooks: Codebooks): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1: $nProbe")
     val coded = corpus
       .withColumn("cell_id", Similarity.ivfCellExpr(vecCol, centroids))
@@ -402,16 +240,9 @@ object PQ {
       .withColumn("cell_id",
         explode(Similarity.ivfProbeCellsExpr(vecCol, centroids, nProbe)))
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"), col("cell_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    coded.join(broadcast(q), Seq("cell_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score",
-        round(adcScoreExpr(col("__qv"), col("pq_codes"), codebooks), roundTo))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"),
-        col("rank").cast("long").as("rank"))
+    Similarity.rankedTopK(coded.join(broadcast(q), Seq("cell_id"))
+        .filter(col("query_id") =!= col("neighbor_id")),
+      "score", adcScoreExpr(col("__qv"), col("pq_codes"), codebooks), k)
   }
 
   /** Train per-subspace codebooks on the RESIDUALS `x − centroid(cell(x))`
@@ -433,14 +264,13 @@ object PQ {
       nSubq: Int,
       nCentroids: Int = 16,
       sampleSize: Option[Int] = Some(4096),
-      iters: Int = 8,
-      seed: Long = 42L): Codebooks = {
+      iters: Int = 8): Codebooks = {
     val cell  = Similarity.ivfCellExpr(vecCol, centroids)
     val resid = zip_with(col(vecCol).cast("array<double>"),
       graft.functions.PQKernels.cellVector(cell, centroids.sortBy(_._1).map(_._2)),
       (a, b) => a - b)
     pqCodebooks(df.select(col(idCol), resid.as("__resid")), idCol, "__resid",
-      nSubq, nCentroids, sampleSize, iters, seed)
+      nSubq, nCentroids, sampleSize, iters)
   }
 
   /** Adds `cell_id` and `pqr_codes` (residual code array — the native
@@ -473,11 +303,10 @@ object PQ {
       k: Int,
       centroids: Array[(Long, Array[Double])],
       nProbe: Int,
-      codebooks: Codebooks,
-      roundTo: Int = 6): DataFrame =
+      codebooks: Codebooks): DataFrame =
     ivfPqResidualTopKCoded(
       residualCodedFrame(corpus, idCol, vecCol, centroids, codebooks),
-      queries, idCol, vecCol, k, centroids, nProbe, codebooks, roundTo)
+      queries, idCol, vecCol, k, centroids, nProbe, codebooks)
 
   /** The corpus in its PERSISTABLE coded form — `(idCol, cell_id,
     * pqr_codes)`, the IndexIVFPQ inverted-list payload. ENCODE ONCE per
@@ -514,9 +343,7 @@ object PQ {
       k: Int,
       centroids: Array[(Long, Array[Double])],
       nProbe: Int,
-      codebooks: Codebooks,
-      roundTo: Int = 6): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
+      codebooks: Codebooks): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1: $nProbe")
     val q = queries.select(col(idCol), col(vecCol))
       .withColumn("cell_id",
@@ -531,16 +358,9 @@ object PQ {
           centroids.sortBy(_._1).map(_._2))))
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
         col("cell_id"), col("__cent_ip"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    coded.join(broadcast(q), Seq("cell_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(col("__cent_ip") +
-        adcScoreExpr(col("__qv"), col("pqr_codes"), codebooks), roundTo))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"),
-        col("rank").cast("long").as("rank"))
+    Similarity.rankedTopK(coded.join(broadcast(q), Seq("cell_id"))
+        .filter(col("query_id") =!= col("neighbor_id")),
+      "score", col("__cent_ip") + adcScoreExpr(col("__qv"), col("pqr_codes"), codebooks), k)
   }
 
   /** The PRODUCTION retrieval composition the recall evidence certifies
@@ -552,8 +372,10 @@ object PQ {
     * cannot order same-cell members; the exact pass restores the true
     * order for every candidate generated.
     *
-    * Scale shape: the ADC stage is [[ivfPqResidualTopK]] (queries
-    * broadcast, coded corpus streams, probed-cell pruning); the re-rank
+    * Scale shape: the ADC stage is [[ivfPqResidualTopKCoded]] over `coded`,
+    * the persisted [[residualCodedFrame]] of `corpus` (queries broadcast,
+    * coded corpus streams, probed-cell pruning, no per-search re-encode);
+    * the re-rank
     * touches only queries × nCandidates rows — one broadcast-joined
     * projection + a bounded per-query window, never a corpus pass.
     * Output: (query_id, neighbor_id, score = exact IP rounded, rank).
@@ -567,34 +389,19 @@ object PQ {
       centroids: Array[(Long, Array[Double])],
       nProbe: Int,
       codebooks: Codebooks,
-      nCandidates: Int = 100,
-      roundTo: Int = 6,
-      coded: DataFrame = null): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
+      coded: DataFrame,
+      nCandidates: Int = 100): DataFrame = {
     require(nCandidates >= k,
       s"nCandidates=$nCandidates must cover k=$k")
-    // pass the persisted [[residualCodedFrame]] artifact as `coded` to
-    // skip the per-search corpus re-encode (the production regime)
-    val cand =
-      if (coded != null)
-        ivfPqResidualTopKCoded(coded, queries, idCol, vecCol,
-          nCandidates, centroids, nProbe, codebooks, roundTo)
-      else ivfPqResidualTopK(corpus, queries, idCol, vecCol,
-        nCandidates, centroids, nProbe, codebooks, roundTo)
+    val cand = ivfPqResidualTopKCoded(coded, queries, idCol, vecCol,
+      nCandidates, centroids, nProbe, codebooks)
     val rq = queries.select(col(idCol).as("query_id"), col(vecCol).as("__rq"))
     val rc = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__rc"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    cand.select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(rq), Seq("query_id"))
-      .join(rc, Seq("neighbor_id"))
-      .withColumn("score", round(graft.functions.VectorDot.vectorDot(
-        col("__rq").cast("array<double>"), col("__rc").cast("array<double>")),
-        roundTo))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"),
-        col("rank").cast("long").as("rank"))
+    Similarity.rankedTopK(cand.select(col("query_id"), col("neighbor_id"))
+        .join(broadcast(rq), Seq("query_id"))
+        .join(rc, Seq("neighbor_id")),
+      "score", graft.functions.VectorDot.vectorDot(
+        col("__rq").cast("array<double>"), col("__rc").cast("array<double>")), k)
   }
 
   /** ADC top-k: for every query row, the `k` coded corpus rows with the
@@ -609,14 +416,11 @@ object PQ {
       idCol: String,
       vecCol: String,
       k: Int,
-      codebooks: Codebooks,
-      roundTo: Int = 6): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
+      codebooks: Codebooks): DataFrame =
     pqTopKCoded(
       pqEncode(corpus, vecCol, codebooks)
         .select(col(idCol).as("neighbor_id"), col("pq_codes")),
-      queries, idCol, vecCol, k, codebooks, roundTo)
-  }
+      queries, idCol, vecCol, k, codebooks)
 
   /** [[pqTopK]] over an ALREADY-CODED corpus `(neighbor_id, pq_codes)` —
     * the artifact face: encoding is a train-time pass persisted next to
@@ -629,21 +433,10 @@ object PQ {
       idCol: String,
       vecCol: String,
       k: Int,
-      codebooks: Codebooks,
-      roundTo: Int = 6): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
+      codebooks: Codebooks): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    coded.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score",
-        round(adcScoreExpr(col("__qv"), col("pq_codes"), codebooks), roundTo))
-      // rank predicate on the raw row_number: WindowGroupLimit keeps the
-      // per-query top-k BEFORE the exchange
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("score"),
-        col("rank").cast("long").as("rank"))
+    Similarity.rankedTopK(coded.crossJoin(broadcast(q))
+        .filter(col("query_id") =!= col("neighbor_id")),
+      "score", adcScoreExpr(col("__qv"), col("pq_codes"), codebooks), k)
   }
 }

@@ -35,6 +35,32 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSim.cosineSim(a, b)
 
+  /** The decimals every score and similarity here is rounded to before it
+    * is ranked or compared, the rounding the relational oracles mirror: an
+    * unrounded ranking would let another engine's float summation order
+    * flip knife-edge ties.
+    */
+  private[pipeline] val ScoreDecimals = 6
+
+  /** Each query's `k` best pairs: `scoreCol` is `score` rounded to
+    * [[ScoreDecimals]], ranked by (score desc, neighbor id asc). `pairs`
+    * holds `query_id` and `neighbor_id`; the result is (query_id,
+    * neighbor_id, scoreCol, rank). The rank predicate is on the raw
+    * `row_number`, so a WindowGroupLimit keeps the per-query top-k before
+    * the exchange.
+    */
+  private[pipeline] def rankedTopK(pairs: DataFrame, scoreCol: String, score: Column,
+      k: Int): DataFrame = {
+    require(k > 0, s"k must be positive: $k")
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(scoreCol).desc, col("neighbor_id").asc)
+    pairs.withColumn(scoreCol, round(score, ScoreDecimals))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col(scoreCol),
+        col("rank").cast("long").as("rank"))
+  }
+
   /** Exact brute-force top-k by cosine: for every row of `queries`, the `k`
     * nearest rows of `corpus` (excluding self-matches by id). Rank by
     * (rounded cosine desc, corpus id asc) so ordering is stable across
@@ -45,18 +71,11 @@ object Similarity {
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int,
-      roundTo: Int = 6): DataFrame = {
+      k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(cosine(col("__qv"), col("__cv")), roundTo))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank").cast("long").as("rank"))
+    rankedTopK(c.crossJoin(broadcast(q)).filter(col("query_id") =!= col("neighbor_id")),
+      "cosine", cosine(col("__qv"), col("__cv")), k)
   }
 
   /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998):
@@ -73,14 +92,14 @@ object Similarity {
     * is whatever bounded top-k produced `candidates`, and the pairwise
     * similarity matrix is computed IN SPARK (one bounded self-join over
     * the ≤`maxCandidates` rows, broadcast both sides) and rounded to
-    * `roundTo` BEFORE the walk, so an independent engine replaying the
+    * [[ScoreDecimals]] BEFORE the walk, so an independent engine replaying the
     * same rounded inputs makes bit-identical picks (the raw greedy
     * arithmetic is then the same IEEE ops on the same doubles). The
     * candidate set is bounded BY CONTRACT; `maxCandidates` fails loudly
     * if a caller points this at a corpus.
     *
     * Returns (rank, id, rel, mmr) for the k selected candidates in pick
-    * order, `mmr` rounded to `roundTo` (signed zero normalized).
+    * order, `mmr` rounded to [[ScoreDecimals]] (signed zero normalized).
     */
   def mmrRerank(
       candidates: DataFrame,
@@ -89,8 +108,7 @@ object Similarity {
       vecCol: String,
       k: Int,
       lambda: Double,
-      maxCandidates: Int = 4096,
-      roundTo: Int = 6): DataFrame = {
+      maxCandidates: Int = 4096): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda out of [0, 1]: $lambda")
     val spark = candidates.sparkSession
@@ -113,7 +131,7 @@ object Similarity {
     val sims = cv.as("x")
       .join(broadcast(cv.as("y")), col("x.id") =!= col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
-        round(cosine(col("x.__v"), col("y.__v")), roundTo).as("sim"))
+        round(cosine(col("x.__v"), col("y.__v")), ScoreDecimals).as("sim"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     sims.find(s => !java.lang.Double.isFinite(s._2)).foreach { case ((a, b), s) =>
       throw new IllegalArgumentException(
@@ -137,7 +155,7 @@ object Similarity {
       remaining -= bestId
       selected += bestId
       picks += ((step, bestId, relOf(bestId),
-        graft.functions.Num.roundHalfUp(bestScore, roundTo)))
+        graft.functions.Num.roundHalfUp(bestScore, ScoreDecimals)))
     }
     picks.toSeq.toDF("rank", "id", "rel", "mmr")
   }
@@ -149,12 +167,11 @@ object Similarity {
       df: DataFrame,
       idCol: String,
       vecCol: String,
-      threshold: Double,
-      roundTo: Int = 6): DataFrame = {
+      threshold: Double): DataFrame = {
     val a = df.select(col(idCol).as("id_a"), col(vecCol).as("__va"))
     val b = df.select(col(idCol).as("id_b"), col(vecCol).as("__vb"))
     a.crossJoin(b).filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(cosine(col("__va"), col("__vb")), roundTo))
+      .withColumn("cosine", round(cosine(col("__va"), col("__vb")), ScoreDecimals))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }
@@ -234,271 +251,47 @@ object Similarity {
     cands
       .join(vecs.select(col(idCol).as("id_a"), col(vecCol).as("__va")), Seq("id_a"))
       .join(vecs.select(col(idCol).as("id_b"), col(vecCol).as("__vb")), Seq("id_b"))
-      .withColumn("cosine", round(cosine(col("__va"), col("__vb")), 6))
+      .withColumn("cosine", round(cosine(col("__va"), col("__vb")), ScoreDecimals))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }
 
-  /** IVF index: train `nCells` centroids, assign every vector to its nearest
-    * centroid with a single codegen'd `array_max` over per-centroid
-    * similarity structs: no crossJoin, no shuffle, no window — one narrow
-    * map over the corpus.
-    */
-  /** Train centroids with spherical k-means on a bounded driver-side sample:
-    * a deterministic pseudo-random sample (ordered by `xxhash64(id)` — a
-    * top-K job, not a full sort), k-means++ seeding, then `iters` Lloyd
-    * iterations with cosine assignment (mean-then-normalize updates). Empty
-    * cells are reseeded to the point farthest from its centroid, so all
-    * `nCells` cells stay live — balanced cells are what keep the per-cell
-    * probe join sub-quadratic at corpus scale. Everything is seeded and the
-    * sample order is data-determined, so centroids are reproducible across
-    * runs. Returned cell ids are 0..nCells-1.
+  /** Train `nCells` IVF centroids with spherical k-means ([[KMeans]]) on
+    * L2-normalized vectors. Returned cell ids are 0..nCells-1.
+    *
+    * With `sampleSize` set, training runs on a bounded, deterministic
+    * driver-side sample: the first `sampleSize` vectors in `xxhash64(id)`
+    * order. With `None`, it runs on a k-means‖ coreset drawn from the full
+    * corpus ([[KMeans.coreset]]): the corpus votes cost-weighted
+    * candidates, the driver only ever holds ~`oversample`·`rounds` of them,
+    * and the weighted trainer runs on that coreset — the trainer shape for
+    * corpora whose diversity a fixed 4096-row sample under-fits.
+    *
+    * Empty cells are reseeded to the worst-fit point, so all `nCells` cells
+    * stay live: balanced cells are what keep the per-cell probe join
+    * sub-quadratic at corpus scale. Everything is seeded and the sample
+    * order is data-determined, so centroids are reproducible across runs.
     */
   def ivfCentroids(df: DataFrame, idCol: String, vecCol: String,
       nCells: Int, sampleSize: Option[Int] = Some(4096), iters: Int = 8,
-      seed: Long = 42L, oversample: Int = 2048, rounds: Int = 5): Array[(Long, Array[Double])] = {
+      oversample: Int = 2048, rounds: Int = 5): Array[(Long, Array[Double])] = {
     require(nCells > 0, "nCells must be positive")
-    val prepared = df
-      .select(col(idCol).cast("long").as("__id"), col(vecCol).cast("array<double>").as("__v"))
-      // null / null-element vectors are excluded BEFORE sampling (a null
-      // cell would NPE at extraction and could not vote a centroid anyway)
-      .filter(col("__v").isNotNull &&
-        !exists(col("__v"), e => e.isNull) && size(col("__v")) > 0)
-    if (sampleSize.isEmpty) {
-      // distributed path: k-means‖ coreset on L2-NORMALIZED vectors —
-      // Euclidean d² on the unit sphere is 2(1−cos), so the oversampling
-      // is exactly the angular-distance version and the weighted spherical
-      // Lloyd below optimizes the same objective as the sampled trainer
-      val sq   = aggregate(transform(col("__v"), x => x * x), lit(0.0), (a, b) => a + b)
-      val normed = Dedup.materializeOnce(prepared.withColumn("__v",
-        when(sq === 0.0, col("__v"))
-          .otherwise(transform(col("__v"), x => x / sqrt(sq)))))
-      val (cands, wts) = kmeansParCoreset(normed, oversample, rounds, seed)
-      val cents = weightedSphericalKmeans(cands, wts, nCells, iters = iters, seed = seed)
-      return cents.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+    val cents = KMeans.input(df, idCol, vecCol, sampleSize, nCells, "IVF centroids") match {
+      case Left(sample) =>
+        KMeans.train(sample.map(KMeans.normalize), Array.fill(sample.length)(1L), nCells,
+          iters, KMeans.Seed, KMeans.Cosine)
+      case Right(prepared) =>
+        // the coreset is drawn on the normalized vectors: Euclidean d² on the
+        // unit sphere is 2(1−cos), so the oversampling is exactly the
+        // angular-distance version of the spherical objective
+        val sq = aggregate(transform(col("__v"), x => x * x), lit(0.0), (a, b) => a + b)
+        val normed = Dedup.materializeOnce(prepared.withColumn("__v",
+          when(sq === 0.0, col("__v"))
+            .otherwise(transform(col("__v"), x => x / sqrt(sq)))))
+        val (cands, wts) = KMeans.coreset(normed, oversample, rounds, KMeans.Seed)
+        KMeans.train(cands, wts, nCells, iters, KMeans.Seed, KMeans.Cosine)
     }
-    val sample = prepared
-      .orderBy(xxhash64(col("__id")), col("__id"))
-      .limit(math.max(sampleSize.get, nCells))
-      .collect()
-      .map(r => r.getSeq[Double](1).toArray)
-    require(sample.nonEmpty, "cannot train IVF centroids on an empty corpus")
-
-    def normalize(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0) v.clone() else v.map(_ / n)
-    }
-    val pts = sample.map(normalize)
-    val k   = math.min(nCells, pts.length)
-    val rnd = new scala.util.Random(seed)
-
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    // k-means++ seeding on angular distance (1 - cosine)
-    val centroids = new Array[Array[Double]](k)
-    centroids(0) = pts(rnd.nextInt(pts.length)).clone()
-    val bestD = pts.map(p => 1.0 - dot(p, centroids(0)))
-    for (c <- 1 until k) {
-      val total = bestD.sum
-      val pick =
-        if (total <= 0) rnd.nextInt(pts.length)
-        else {
-          var r = rnd.nextDouble() * total; var i = 0
-          while (i < pts.length - 1 && r > bestD(i)) { r -= bestD(i); i += 1 }
-          i
-        }
-      centroids(c) = pts(pick).clone()
-      var i = 0
-      while (i < pts.length) {
-        val d = 1.0 - dot(pts(i), centroids(c))
-        if (d < bestD(i)) bestD(i) = d
-        i += 1
-      }
-    }
-    // Lloyd: assign to max-cosine centroid (lowest index on ties), update to
-    // the normalized mean, reseed empty cells to the globally worst-fit point
-    val assign = new Array[Int](pts.length)
-    for (_ <- 0 until iters) {
-      var i = 0
-      while (i < pts.length) {
-        var best = 0; var bestSim = dot(pts(i), centroids(0)); var c = 1
-        while (c < k) {
-          val s = dot(pts(i), centroids(c))
-          if (s > bestSim) { bestSim = s; best = c }
-          c += 1
-        }
-        assign(i) = best
-        i += 1
-      }
-      val sums   = Array.fill(k)(new Array[Double](pts.head.length))
-      val counts = new Array[Int](k)
-      i = 0
-      while (i < pts.length) {
-        val c = assign(i); counts(c) += 1
-        var j = 0
-        while (j < pts(i).length) { sums(c)(j) += pts(i)(j); j += 1 }
-        i += 1
-      }
-      for (c <- 0 until k) {
-        if (counts(c) > 0) centroids(c) = normalize(sums(c))
-        else {
-          val worst = pts.indices.maxBy(i => 1.0 - dot(pts(i), centroids(assign(i))))
-          centroids(c) = pts(worst).clone()
-        }
-      }
-    }
-    centroids.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-  }
-
-  /** k-means‖ distributed oversampling (Bahmani, Moseley, Vattani, Kumar &
-    * Vassilvitskii, "Scalable K-Means++", VLDB 2012): a few rounds, each
-    * sampling every point independently with probability
-    * `min(1, ℓ·d²(x,C)/φ)` against the CURRENT candidate set, give an
-    * O(ℓ·rounds)-point coreset whose weighted k-means solution matches
-    * k-means++ quality — while the driver only ever sees the coreset, not
-    * a fixed-size corpus sample. This is the 100 TB trainer: a 4096-row
-    * sample under-fits 1024 cells on a diverse corpus; the coreset's
-    * candidates are drawn from the FULL corpus, cost-weighted.
-    *
-    * Determinism: the per-point coin is `xxhash64(id, seed+round)` mapped
-    * to [0,1) — no RNG state, so the same corpus + seed always selects the
-    * same candidates; collects are ordered by id. Each round's distance
-    * update is incremental (`d²' = min(d², d² to the NEW candidates)`, one
-    * narrow [[graft.functions.NearestCentroid]] map over a re-materialized
-    * frame), so a round costs O(ℓ·dim) per row, not O(|C|·dim).
-    *
-    * Returns (candidates, weights): weight = number of corpus points whose
-    * nearest candidate it is (the one O(|C|·dim) pass, at the end).
-    */
-  private[pipeline] def kmeansParCoreset(
-      prepared: DataFrame,
-      ell: Int,
-      rounds: Int,
-      seed: Long): (Array[Array[Double]], Array[Long]) = {
-    require(ell > 0 && rounds > 0, s"bad coreset params: ell=$ell rounds=$rounds")
-    import graft.functions.NearestCentroid.nearestCentroid
-    val firstRows = prepared.orderBy(xxhash64(col("__id"), lit(seed)), col("__id"))
-      .limit(1).select(col("__v")).collect()
-    require(firstRows.nonEmpty, "cannot build a coreset from an empty corpus")
-    val first = firstRows(0).getSeq[Double](0).toArray
-    val cands = scala.collection.mutable.ArrayBuffer[Array[Double]](first)
-    var state = Dedup.materializeOnce(prepared.withColumn("__d2",
-      nearestCentroid(col("__v"), Array(first)).getField("d2")))
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val phiRow = state.agg(sum(col("__d2"))).head()
-      val phi    = if (phiRow.isNullAt(0)) 0.0 else phiRow.getDouble(0)
-      if (phi <= 0) exhausted = true // every point IS a candidate already
-      else {
-        // u in [0,1) from a per-(id, round) hash; select iff u < ℓ·d²/φ
-        val u = (xxhash64(col("__id"), lit(seed + r)).bitwiseAND(lit(Long.MaxValue)))
-          .cast("double") / 9.223372036854776e18
-        val picked = state.filter(u * lit(phi) < col("__d2") * lit(ell.toDouble))
-          .orderBy(col("__id")).select(col("__v")).collect()
-          .map(_.getSeq[Double](0).toArray)
-        if (picked.isEmpty) exhausted = true
-        else {
-          cands ++= picked
-          state = Dedup.materializeOnce(state.withColumn("__d2",
-            least(col("__d2"), nearestCentroid(col("__v"), picked).getField("d2"))))
-        }
-      }
-      r += 1
-    }
-    val all = cands.toArray
-    val wRows = state
-      .select(nearestCentroid(col("__v"), all).getField("idx").as("__idx"))
-      .groupBy(col("__idx")).agg(count(lit(1)).as("__w"))
-      .collect()
-    val weights = new Array[Long](all.length)
-    wRows.foreach(r => weights(r.getInt(0)) = r.getLong(1))
-    (all, weights)
-  }
-
-  /** Weighted spherical k-means on a coreset (driver-side, coreset-sized):
-    * the weighted mirror of the sampled trainer — k-means++ seeding with
-    * probability ∝ w·(1−cos), Lloyd with weight-scaled sums then
-    * normalization, empty cells reseeded to the point with the largest
-    * weighted misfit. Zero-weight candidates are dropped up front (no
-    * corpus point elected them). Seeded and order-stable → reproducible.
-    */
-  private def weightedSphericalKmeans(
-      cands: Array[Array[Double]],
-      wts: Array[Long],
-      k: Int,
-      iters: Int,
-      seed: Long): Array[Array[Double]] = {
-    val keep = cands.indices.filter(i => wts(i) > 0).toArray
-    val pts  = keep.map(cands(_))
-    val w    = keep.map(wts(_).toDouble)
-    require(pts.nonEmpty, "coreset has no weighted candidates")
-    val kk  = math.min(k, pts.length)
-    val rnd = new scala.util.Random(seed)
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    def normalize(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0) v.clone() else v.map(_ / n)
-    }
-    val centroids = new Array[Array[Double]](kk)
-    centroids(0) = pts(rnd.nextInt(pts.length)).clone()
-    val bestD = Array.tabulate(pts.length)(i => 1.0 - dot(pts(i), centroids(0)))
-    for (c <- 1 until kk) {
-      val scores = Array.tabulate(pts.length)(i => w(i) * bestD(i))
-      val total  = scores.sum
-      val pick =
-        if (total <= 0) rnd.nextInt(pts.length)
-        else {
-          var r = rnd.nextDouble() * total; var i = 0
-          while (i < pts.length - 1 && r > scores(i)) { r -= scores(i); i += 1 }
-          i
-        }
-      centroids(c) = pts(pick).clone()
-      var i = 0
-      while (i < pts.length) {
-        val d = 1.0 - dot(pts(i), centroids(c))
-        if (d < bestD(i)) bestD(i) = d
-        i += 1
-      }
-    }
-    val assign = new Array[Int](pts.length)
-    for (_ <- 0 until iters) {
-      var i = 0
-      while (i < pts.length) {
-        var best = 0; var bestSim = dot(pts(i), centroids(0)); var c = 1
-        while (c < kk) {
-          val s = dot(pts(i), centroids(c))
-          if (s > bestSim) { bestSim = s; best = c }
-          c += 1
-        }
-        assign(i) = best
-        i += 1
-      }
-      val sums   = Array.fill(kk)(new Array[Double](pts.head.length))
-      val counts = new Array[Double](kk)
-      i = 0
-      while (i < pts.length) {
-        val c = assign(i); counts(c) += w(i)
-        var j = 0
-        while (j < pts(i).length) { sums(c)(j) += w(i) * pts(i)(j); j += 1 }
-        i += 1
-      }
-      for (c <- 0 until kk) {
-        if (counts(c) > 0) centroids(c) = normalize(sums(c))
-        else {
-          val worst = pts.indices.maxBy(i => w(i) * (1.0 - dot(pts(i), centroids(assign(i)))))
-          centroids(c) = pts(worst).clone()
-        }
-      }
-    }
-    centroids
+    cents.zipWithIndex.map { case (v, i) => (i.toLong, v) }
   }
 
   /** Persist trained IVF centroids as a small parquet artifact — (cell_id,
@@ -554,16 +347,10 @@ object Similarity {
     graft.functions.NearestCell.nearestCell(col(vecCol), centroids)
       .getField("cell_id")
 
-  def ivfAssign(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nCells: Int): DataFrame =
-    ivfAssign(df, vecCol, ivfCentroids(df, idCol, vecCol, nCells))
-
-  /** Assignment against ALREADY-TRAINED centroids (training is a separate,
-    * deterministic step — callers deriving several frames from one index
-    * should train once and thread the centroids through).
+  /** Adds `cell_id`, the nearest of the trained `centroids` ([[ivfCellExpr]]).
+    * Training is a separate, deterministic step ([[ivfCentroids]]): callers
+    * deriving several frames from one index train once and thread the
+    * centroids through.
     */
   def ivfAssign(
       df: DataFrame,
@@ -603,29 +390,8 @@ object Similarity {
     // (rounded sim desc, smallest id) is unchanged and spec-pinned
     graft.functions.ProbeCells.probeCells(col(vecCol), centroids, nProbe)
 
-  /** IVF top-k: search only within the query vector's own cell(s). */
-  def ivfTopK(
-      df: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nCells: Int,
-      k: Int,
-      nProbe: Int = 1): DataFrame =
-    ivfTopK(df, queries, idCol, vecCol, k,
-      ivfCentroids(df, idCol, vecCol, nCells), nProbe)
-
-  /** IVF top-k against already-trained centroids (single-probe). */
-  def ivfTopK(
-      df: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      centroids: Array[(Long, Array[Double])]): DataFrame =
-    ivfTopK(df, queries, idCol, vecCol, k, centroids, nProbe = 1)
-
-  /** IVF top-k against already-trained centroids.
+  /** IVF top-k against trained centroids: each query searches only the
+    * corpus rows of its `nProbe` nearest cells.
     *
     * `nProbe` is the standard recall lever: the query searches its
     * `nProbe` nearest cells instead of only its own (corpus vectors stay
@@ -640,7 +406,7 @@ object Similarity {
       vecCol: String,
       k: Int,
       centroids: Array[(Long, Array[Double])],
-      nProbe: Int): DataFrame = {
+      nProbe: Int = 1): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1: $nProbe")
     // Centroids trained/collected once; the corpus-wide assignment
     // expression runs in exactly one pass. Queries are assigned from their
@@ -654,27 +420,11 @@ object Similarity {
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"), col("cell_id"))
     val c = df.withColumn("cell_id", cellOf)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"), col("cell_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    c.join(broadcast(qAssigned), Seq("cell_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(cosine(col("__qv"), col("__cv")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank").cast("long").as("rank"))
+    rankedTopK(c.join(broadcast(qAssigned), Seq("cell_id"))
+        .filter(col("query_id") =!= col("neighbor_id")),
+      "cosine", cosine(col("__qv"), col("__cv")), k)
   }
 
-  /** Mutual k-NN graph: the undirected edge (a, b) exists iff b is in a's
-    * cosine top-k AND a is in b's — the standard sparsification before
-    * density-based clustering (mutual edges drop the hub/antihub
-    * asymmetry that plain k-NN graphs suffer in high dimension). Emits
-    * canonical (id_a < id_b) pairs with the rounded cosine.
-    *
-    * The top-k arm is pluggable: pass [[bruteForceTopK]] output for an
-    * exact graph (as the oracle-checked query does, on a bounded sample)
-    * or [[ivfTopK]]'s for the approximate scale path — mutuality is the
-    * same self-join either way, on the (query, neighbor) pair key.
-    */
   /** Hard-negative mining for contrastive training: for each query, the
     * top-k most cosine-similar corpus rows whose `labelCol` DIFFERS from
     * the query's — maximally confusable negatives, the pairs that
@@ -692,24 +442,27 @@ object Similarity {
       idCol: String,
       vecCol: String,
       labelCol: String,
-      k: Int,
-      roundTo: Int = 6): DataFrame = {
+      k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
       col(labelCol).as("__ql"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
       col(labelCol).as("__cl"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id") &&
-        !(col("__ql") <=> col("__cl")))
-      .withColumn("cosine", round(cosine(col("__qv"), col("__cv")), roundTo))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("rank").cast("long").as("rank"))
+    rankedTopK(c.crossJoin(broadcast(q))
+        .filter(col("query_id") =!= col("neighbor_id") && !(col("__ql") <=> col("__cl"))),
+      "cosine", cosine(col("__qv"), col("__cv")), k)
   }
 
+  /** Mutual k-NN graph: the undirected edge (a, b) exists iff b is in a's
+    * cosine top-k AND a is in b's — the standard sparsification before
+    * density-based clustering (mutual edges drop the hub/antihub
+    * asymmetry that plain k-NN graphs suffer in high dimension). Emits
+    * canonical (id_a < id_b) pairs with the rounded cosine.
+    *
+    * The top-k arm is pluggable: pass [[bruteForceTopK]] output for an
+    * exact graph (as the oracle-checked query does, on a bounded sample)
+    * or [[ivfTopK]]'s for the approximate scale path — mutuality is the
+    * same self-join either way, on the (query, neighbor) pair key.
+    */
   def mutualKnnGraph(topk: DataFrame): DataFrame = {
     val fwd = topk.select(col("query_id").as("a"), col("neighbor_id").as("b"),
       col("cosine"))

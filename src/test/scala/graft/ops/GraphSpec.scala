@@ -1,7 +1,9 @@
 package graft.ops
 
 import graft.SparkTestBase
+import graft.core.SizeGates
 import graft.pipeline.Dedup
+import org.apache.spark.sql.DataFrame
 
 class GraphSpec extends SparkTestBase {
 
@@ -380,6 +382,38 @@ class GraphSpec extends SparkTestBase {
     assert(stored(64) <= 2)
     val e = intercept[IllegalArgumentException](stored(64, maxRounds = 4))
     assert(e.getMessage.contains("fixpoint") && e.getMessage.contains("maxRounds"))
+  }
+
+  test("pageRank and hopDistance: the loop regimes' storage does not grow with their rounds") {
+    // a 40-node graph forced into the loops (edgeBufferLimit = 0), in the
+    // broadcast and the co-partitioned layout; a superseded round or
+    // frontier is released once its successor is stored
+    val sc = spark.sparkContext
+    val rnd = new scala.util.Random(13L)
+    val edges = (Seq.tabulate(40)(i => (i.toLong, ((i + 1) % 40).toLong)) ++
+      Seq.fill(60)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))).toDF("src", "dst")
+    def stored(run: => DataFrame): Int = Dedup.withMaterialized {
+      val before = sc.getPersistentRDDs.keySet
+      assert(run.collect().nonEmpty)
+      (sc.getPersistentRDDs.keySet -- before).size
+    }
+    for (bc <- Seq(SizeGates.BroadcastNodes, 0L)) {
+      def pr(n: Int) = stored(Graph.pageRank(edges, "src", "dst", iterations = n,
+        broadcastNodeLimit = bc, edgeBufferLimit = 0L))
+      assert(pr(2) <= 3 && pr(10) == pr(2), s"pageRank, broadcastNodeLimit $bc")
+      val prior = Seq.tabulate(40)(i => (i.toLong, 1.0 / 40)).toDF("node", "r")
+      def warm(n: Int) = stored(Graph.pageRankWarmStart(edges, "src", "dst", prior,
+        iterations = n, broadcastNodeLimit = bc, edgeBufferLimit = 0L))
+      assert(warm(10) == warm(2), s"pageRankWarmStart, broadcastNodeLimit $bc")
+      def ppr(n: Int) = stored(Graph.personalizedPageRank(edges, "src", "dst",
+        Seq(0L, 7L).toDF("s"), "s", iterations = n, broadcastNodeLimit = bc,
+        edgeBufferLimit = 0L))
+      assert(ppr(10) == ppr(2), s"personalizedPageRank, broadcastNodeLimit $bc")
+      def hops(n: Int) = stored(Graph.hopDistance(edges, "src", "dst",
+        Seq(0L).toDF("s"), "s", maxHops = n, broadcastNodeLimit = bc,
+        edgeBufferLimit = 0L))
+      assert(hops(10) == hops(2), s"hopDistance, broadcastNodeLimit $bc")
+    }
   }
 
   test("componentsIncrement: folding batches equals batch components on the union") {

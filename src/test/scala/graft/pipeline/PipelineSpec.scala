@@ -279,7 +279,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("IVF top-k returns ranked neighbors from the query cell") {
     val out = Similarity.ivfTopK(vecs, vecs.filter($"vec_id" < 5), "vec_id",
-      "embedding", nCells = 4, k = 3).collect()
+      "embedding", k = 3, Similarity.ivfCentroids(vecs, "vec_id", "embedding", 4)).collect()
     val byQ = out.groupBy(_.getAs[Long]("query_id"))
     assert(byQ.keySet == Set(0L, 1L, 2L, 3L, 4L))
     byQ.foreach { case (q, rs) =>
@@ -297,15 +297,16 @@ class PipelineSpec extends SparkTestBase {
 
     val exact = asSet(Similarity.bruteForceTopK(queries, vecs, "vec_id",
       "embedding", k = 3))
+    val cents = Similarity.ivfCentroids(vecs, "vec_id", "embedding", nCells = 4)
     val all = asSet(Similarity.ivfTopK(vecs, queries, "vec_id", "embedding",
-      nCells = 4, k = 3, nProbe = 4))
+      k = 3, cents, nProbe = 4))
     assert(all == exact, "nProbe = nCells must equal brute force exactly")
 
     // recall is monotone in nProbe (candidates only grow)
     val r1 = asSet(Similarity.ivfTopK(vecs, queries, "vec_id", "embedding",
-      nCells = 4, k = 3, nProbe = 1))
+      k = 3, cents, nProbe = 1))
     val r2 = asSet(Similarity.ivfTopK(vecs, queries, "vec_id", "embedding",
-      nCells = 4, k = 3, nProbe = 2))
+      k = 3, cents, nProbe = 2))
     assert((r1 & exact).size <= (r2 & exact).size)
   }
 
@@ -322,7 +323,7 @@ class PipelineSpec extends SparkTestBase {
     val cents = Similarity.ivfCentroids(clustered, "vec_id", "embedding", nCells = 4)
     assert(cents.length == 4 && cents.map(_._1).toSeq == Seq(0L, 1L, 2L, 3L))
     // occupancy balance: no trained cell may hold more than 2x the mean
-    val occ = Similarity.ivfAssign(clustered, "vec_id", "embedding", 4)
+    val occ = Similarity.ivfAssign(clustered, "embedding", cents)
       .groupBy("cell_id").count().collect().map(_.getAs[Long]("count"))
     assert(occ.length == 4, s"empty cells: ${occ.toSeq}")
     assert(occ.max <= 2 * (occ.sum / occ.length), s"skewed cells: ${occ.toSeq}")
@@ -332,7 +333,7 @@ class PipelineSpec extends SparkTestBase {
     val exact = Similarity.bruteForceTopK(queries, clustered, "vec_id", "embedding", k = 5)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
     val ivf = Similarity.ivfTopK(clustered, queries, "vec_id", "embedding",
-      nCells = 4, k = 5)
+      k = 5, cents)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
     val recall = (exact & ivf).size.toDouble / exact.size
     assert(recall >= 0.9, s"IVF recall $recall < 0.9")
